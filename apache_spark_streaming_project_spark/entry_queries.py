@@ -16,6 +16,7 @@ Conventions (driver contract):
 
 from __future__ import annotations
 
+import logging
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -32,6 +33,8 @@ from apache_spark_streaming_project_spark.functions.exact import (
 )
 from apache_spark_streaming_project_spark.operators import enrich
 from apache_spark_streaming_project_spark.schemas import load_table
+
+_log = logging.getLogger(__name__)
 
 
 @dataclass
@@ -3860,8 +3863,9 @@ def m10_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     with _stream_shuffle_partitions(spark):
         drained = 0
-        failures = 0
+        failures = []
         for _ in range(rows // batch + 5):  # bounded restart loop
+            q = None
             try:
                 q = (
                     spark.readStream.format("synthetic_corpus")
@@ -3875,19 +3879,25 @@ def m10_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .start()
                 )
                 q.awaitTermination()
-            except Exception:
+            except Exception as err:
                 # A restart attempt that dies (e.g. the Python source worker
                 # missing the JVM's connect-back window under CPU contention
                 # — observed once at local[8]) is EXACTLY the crash the
                 # lifecycle is built to recover from: the next restart
                 # resumes from the last committed offset, so retrying is the
                 # production response, not masking. Bounded: a persistent
-                # fault still surfaces loudly.
-                failures += 1
-                if failures > 2:
-                    raise
-                for aq in spark.streams.active:
-                    aq.stop()
+                # fault still surfaces loudly, chained to the first one.
+                failures.append(err)
+                if len(failures) > 2:
+                    raise err from failures[0]
+                _log.warning(
+                    "m10 restart %d failed, retrying: %s: %s",
+                    len(failures),
+                    type(err).__name__,
+                    err,
+                )
+                if q is not None:
+                    q.stop()
                 continue
             n = spark.read.parquet(out).count()
             if n == drained == rows:

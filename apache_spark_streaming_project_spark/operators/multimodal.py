@@ -11,15 +11,13 @@ whole Arrow pipeline is hash-verifiable; ``fake_decode=False`` (real mode)
 decodes actual media — WAV audio via the stdlib ``wave`` module (always
 available), PNG images via a stdlib ``zlib`` decoder (always available:
 chunk walk + inflate + the five scanline filters, 8-bit gray/RGB/RGBA/
-palette, plain or Adam7 interlaced — see ``_decode_png_stdlib``), 24-bit BMP and
-baseline + progressive JPEG and GIF via stdlib+numpy codecs
-(``functions/mediacodec.py``), and Motion-JPEG AVI (plus animated GIF)
-video via the stdlib RIFF walk + the same decoders.
-Other image formats go through PIL and other video containers/codecs
-through PyAV WHEN IMPORTABLE (import-guarded: environments without the
-libraries raise ``NotImplementedError`` with a clear message, and the
-corresponding tests skip). The Spark-side plumbing — schema, batch
-iteration, partition layout, UDF signatures — is identical in all modes.
+palette, plain or Adam7 interlaced — see ``_decode_png_stdlib``) and
+uncompressed 24-bit BMP via a stdlib+numpy decoder. Other image formats
+go through PIL and every video container through PyAV WHEN IMPORTABLE
+(import-guarded: environments without the libraries raise
+``NotImplementedError`` with a clear message, and the corresponding tests
+skip). The Spark-side plumbing — schema, batch iteration, partition
+layout, UDF signatures — is identical in all modes.
 
 Scale notes: media payloads dominate row size, so the pre-UDF plan must
 column-prune down to (key, payload) before the Python exchange
@@ -89,6 +87,11 @@ except ImportError:
 
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
+
+# Decompression-bomb guard, following PIL's public MAX_IMAGE_PIXELS
+# precedent: a corrupt/hostile header can declare 65535x65535 and drive a
+# multi-GB allocation from a few hundred payload bytes.
+MAX_IMAGE_PIXELS = 89_478_485
 
 
 def _gray_from_rgb(px: "np.ndarray") -> "np.ndarray":
@@ -214,8 +217,6 @@ def _decode_png_pixels(payload: bytes) -> "np.ndarray":
     if ihdr is None:
         raise ValueError("PNG missing IHDR")
     w, h, depth, color, _comp, _filt, interlace = ihdr
-    from ..functions.mediacodec import MAX_IMAGE_PIXELS
-
     if h * w > MAX_IMAGE_PIXELS:
         # decompression-bomb guard (PIL MAX_IMAGE_PIXELS precedent): a
         # corrupt header must not drive a multi-GB allocation
@@ -319,6 +320,87 @@ def _decode_png_stdlib(payload: bytes) -> bytes:
     return _gray_from_rgb(px).tobytes()
 
 
+def _filter_png_rows(flat: "np.ndarray", ch: int, filter_type: int) -> bytes:
+    """Apply one PNG filter to every row of a (nrows, rowbytes) byte
+    array, prefixing each row with its filter byte. Supports filters
+    0 (None), 1 (Sub), 2 (Up) — enough to differential-test the
+    decoder's vectorized de-filter branches from the encoder side."""
+    import numpy as np
+
+    out = bytearray()
+    prev = np.zeros(flat.shape[1], dtype=np.uint8)
+    for line in flat:
+        if filter_type == 0:
+            enc = line
+        elif filter_type == 1:  # Sub: subtract the left neighbor per lane
+            left = np.zeros_like(line)
+            left[ch:] = line[:-ch]
+            enc = line - left
+        elif filter_type == 2:  # Up
+            enc = line - prev
+        else:
+            raise ValueError(f"unsupported PNG write filter {filter_type}")
+        out += bytes([filter_type]) + enc.tobytes()
+        prev = line
+    return bytes(out)
+
+
+def encode_png(
+    img: "np.ndarray", interlace: bool = False, filter_type: int = 0
+) -> bytes:
+    """Encode uint8 pixels — (h, w) grayscale or (h, w, 3) RGB — as an
+    8-bit PNG, plain or Adam7-interlaced, with one filter applied to
+    every scanline (0/1/2). Exactly the shapes ``_decode_png_pixels``
+    reads back, so resize output is verifiable in a closed loop without
+    PIL — and the interlace/filter knobs exist to differential-test the
+    decoder's pass-reassembly and de-filter paths from an independent
+    direction."""
+    import struct
+    import zlib
+
+    import numpy as np
+
+    img = np.asarray(img, dtype=np.uint8)
+    if img.ndim == 2:
+        color = 0
+    elif img.ndim == 3 and img.shape[2] == 3:
+        color = 2
+    else:
+        raise ValueError(f"expected (h,w) or (h,w,3) uint8, got {img.shape}")
+    h, w = img.shape[:2]
+    ch = 1 if color == 0 else 3
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
+        return struct.pack(">I", len(data)) + ctype + data + struct.pack(">I", crc)
+
+    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 1 if interlace else 0)
+    full = img.reshape(h, w, ch)
+    if not interlace:
+        raw = _filter_png_rows(full.reshape(h, w * ch), ch, filter_type)
+    else:
+        parts = []
+        for row0, col0, rstep, cstep in _ADAM7_PASSES:
+            sub = full[row0::rstep, col0::cstep]
+            if sub.size == 0:
+                continue  # empty pass contributes no bytes
+            ph, pw = sub.shape[:2]
+            parts.append(
+                _filter_png_rows(
+                    np.ascontiguousarray(sub).reshape(ph, pw * ch),
+                    ch,
+                    filter_type,
+                )
+            )
+        raw = b"".join(parts)
+    return (
+        _PNG_SIG
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", zlib.compress(raw, 6))
+        + chunk(b"IEND", b"")
+    )
+
+
 def _decode_bmp_pixels(payload: bytes) -> "np.ndarray":
     """REAL BMP decode, stdlib + numpy: the uncompressed 24-bit BI_RGB
     shape (the overwhelmingly common one). Pixel rows are bottom-up,
@@ -385,14 +467,9 @@ def _decode_image_bytes(payload: bytes, fake: bool) -> list[int]:
     Arrow pipeline; the normalized float 'feature' is derived from it).
     Real mode: PIL when importable (any format); otherwise PNG/BMP
     payloads decode via the stdlib decoders (real pixels, zero
-    third-party deps) and baseline/progressive JPEG via
-    :func:`..functions.mediacodec.decode_jpeg`; otherwise raises. All
-    real paths produce the same grayscale pixel-intensity histogram in
-    the same 8 bins. PNG/BMP stdlib pixels are bit-identical to PIL's;
-    the stdlib JPEG path (used only when PIL is ABSENT) may differ from
-    libjpeg by +/-1 per sample (exact float IDCT vs libjpeg's
-    fixed-point islow) — stable with itself everywhere, documented in
-    decode_jpeg."""
+    third-party deps) and every other format raises. Both real paths
+    produce the same grayscale pixel-intensity histogram in the same 8
+    bins: the stdlib PNG/BMP pixels are bit-identical to PIL's."""
     if not fake:
         if _HAS_PIL:
             import io
@@ -403,24 +480,12 @@ def _decode_image_bytes(payload: bytes, fake: bool) -> list[int]:
             pixels = _decode_png_stdlib(payload)
         elif payload[:2] == b"BM":
             pixels = _decode_bmp_stdlib(payload)
-        elif payload[:2] == b"\xff\xd8":
-            from ..functions.mediacodec import decode_jpeg
-
-            px = decode_jpeg(payload)
-            pixels = (
-                px.tobytes() if px.ndim == 2 else _gray_from_rgb(px).tobytes()
-            )
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
-            from ..functions.mediacodec import decode_gif
-
-            pixels = _gray_from_rgb(decode_gif(payload)).tobytes()
         else:
             raise NotImplementedError(
                 "real image decode needs PIL for formats other than "
-                "PNG/BMP/JPEG/GIF (not installed in this "
-                "environment); those decode via the stdlib paths, "
-                "or run with fake_decode=True for the deterministic "
-                "oracle kernel"
+                "PNG/BMP (not installed in this environment); those "
+                "decode via the stdlib paths, or run with "
+                "fake_decode=True for the deterministic oracle kernel"
             )
         src = pixels
     else:
@@ -597,29 +662,21 @@ def _resize_nearest(px: "np.ndarray", width: int, height: int) -> "np.ndarray":
 
 
 def _resize_real_stdlib(payload: bytes, width: int, height: int) -> bytes:
-    """PIL-free real resize: decode PNG/BMP/JPEG via the stdlib
-    decoders, nearest-neighbor resize, re-encode as PNG (gray payloads
-    stay gray, color stays RGB; PNG alpha is dropped — our PNG writer
-    emits gray/RGB)."""
-    from ..functions.mediacodec import decode_jpeg, encode_png
-
+    """PIL-free real resize: decode PNG/BMP via the stdlib decoders,
+    nearest-neighbor resize, re-encode as PNG (gray payloads stay gray,
+    color stays RGB; PNG alpha is dropped — :func:`encode_png` emits
+    gray/RGB)."""
     if payload[:8] == _PNG_SIG:
         px = _decode_png_pixels(payload)
         if px.ndim == 3 and px.shape[2] == 4:
             px = px[..., :3]
     elif payload[:2] == b"BM":
         px = _decode_bmp_pixels(payload)
-    elif payload[:2] == b"\xff\xd8":
-        px = decode_jpeg(payload)
-    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-        from ..functions.mediacodec import decode_gif
-
-        px = decode_gif(payload)
     else:
         raise NotImplementedError(
-            "real image resize without PIL handles PNG/BMP/JPEG/GIF "
-            "payloads; install PIL for other formats or run with "
-            "fake_decode=True for the pass-through kernel"
+            "real image resize without PIL handles PNG/BMP payloads; "
+            "install PIL for other formats or run with fake_decode=True "
+            "for the pass-through kernel"
         )
     return encode_png(_resize_nearest(px, width, height))
 
@@ -629,7 +686,7 @@ def resize_images(df: DataFrame, width: int, height: int, fake_decode: bool = Tr
     re-encode transform). Fake mode passes the payload through (the
     deterministic oracle path); real mode decodes with PIL when
     importable (keeping PIL's bicubic resampling), otherwise falls back
-    to the stdlib decode + nearest-neighbor path for PNG/BMP/JPEG
+    to the stdlib decode + nearest-neighbor path for PNG/BMP
     (:func:`_resize_real_stdlib`); both re-encode as PNG."""
     if width <= 0 or height <= 0:
         # validate at plan-build time, like every_ms in frame sampling:
@@ -707,13 +764,11 @@ def sample_video_frames(
     inside mapInPandas — output rows != input rows, the shape built-in UDFs
     can't express). Fake mode emits one 'frame' per ``every_ms`` of
     meta.duration_ms (deterministic oracle path); real mode decodes the
-    container with PyAV when importable — otherwise Motion-JPEG AVI
-    payloads decode via the stdlib RIFF+JPEG path — grabbing the first
-    frame at or after each ``every_ms`` boundary and re-encoding it as
-    PNG. NULL
-    payloads produce no frames in EITHER mode (missing media has no frames
-    to sample — fake mode must not invent rows the real decoder cannot
-    emit)."""
+    container with PyAV (and raises ``NotImplementedError`` without it),
+    grabbing the first frame at or after each ``every_ms`` boundary and
+    re-encoding it as PNG. NULL payloads produce no frames in EITHER mode
+    (missing media has no frames to sample — fake mode must not invent
+    rows the real decoder cannot emit)."""
     if every_ms <= 0:
         # validate at plan-build time: in the fake kernel a zero would be
         # an executor-side ZeroDivisionError, in the real kernel it would
@@ -730,54 +785,29 @@ def sample_video_frames(
     )
 
     def _frames_real(payload):
-        """[(ts_ms, png_bytes)] for the first frame at/after each boundary:
-        PyAV when importable (any container/codec); otherwise the stdlib
-        Motion-JPEG AVI path (RIFF walk + JPEG decode + PNG
-        re-encode, zero third-party deps — see functions/mediacodec.py).
-        Only SELECTED frames are decoded/re-encoded in either path."""
+        """[(ts_ms, png_bytes)] for the first frame at/after each boundary,
+        decoded with PyAV (any container/codec). Only SELECTED frames are
+        re-encoded."""
         import io
 
-        payload = bytes(payload)
+        if not _HAS_AV:
+            raise NotImplementedError(
+                "real frame extraction needs PyAV (not installed in this "
+                "environment); run with fake_decode=True for the "
+                "deterministic oracle kernel"
+            )
         take = _frame_selector(every_ms)
         out = []
-        if _HAS_AV:
-            with _av.open(io.BytesIO(payload)) as container:
-                stream = container.streams.video[0]
-                # streamed decode: only SELECTED frames are re-encoded/held
-                for frame in container.decode(stream):
-                    ts_ms = int((frame.time or 0.0) * 1000)
-                    if take(ts_ms):
-                        buf = io.BytesIO()
-                        frame.to_image().save(buf, format="PNG")
-                        out.append((ts_ms, buf.getvalue()))
-            return out
-        if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
-            from ..functions.mediacodec import (
-                decode_avi_mjpeg,
-                decode_jpeg,
-                encode_png,
-            )
-
-            for ts_ms, jpg in decode_avi_mjpeg(payload):
+        with _av.open(io.BytesIO(bytes(payload))) as container:
+            stream = container.streams.video[0]
+            # streamed decode: only SELECTED frames are re-encoded/held
+            for frame in container.decode(stream):
+                ts_ms = int((frame.time or 0.0) * 1000)
                 if take(ts_ms):
-                    out.append((ts_ms, encode_png(decode_jpeg(jpg))))
-            return out
-        if payload[:6] in (b"GIF87a", b"GIF89a"):
-            # animated GIF: composited frames carry their own cumulative
-            # timestamps; the GENERATOR form holds one frame at a time,
-            # so only boundary-selected frames are ever retained
-            from ..functions.mediacodec import _iter_gif_frames, encode_png
-
-            for ts_ms, rgb in _iter_gif_frames(payload):
-                if take(ts_ms):
-                    out.append((ts_ms, encode_png(rgb)))
-            return out
-        raise NotImplementedError(
-            "real frame extraction without PyAV handles Motion-JPEG AVI "
-            "and animated GIF payloads; install PyAV for other "
-            "containers/codecs, or run with fake_decode=True for the "
-            "deterministic oracle kernel"
-        )
+                    buf = io.BytesIO()
+                    frame.to_image().save(buf, format="PNG")
+                    out.append((ts_ms, buf.getvalue()))
+        return out
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -1,9 +1,9 @@
 """Real-mode decode tests for X5 multimodal kernels.
 
-Audio real mode uses the stdlib ``wave`` module, so it runs everywhere;
-image/video real modes are import-guarded (PIL / PyAV) and their tests
-skip cleanly when the libraries are absent — the same contract as the
-kernels themselves.
+WAV audio, PNG and BMP decode (and the PNG writer) use the standard
+library plus numpy, so they run everywhere; other image formats (PIL)
+and video (PyAV) are import-guarded and their tests skip cleanly when
+the libraries are absent — the same contract as the kernels themselves.
 """
 
 from __future__ import annotations
@@ -11,7 +11,9 @@ from __future__ import annotations
 import io
 import wave
 
+import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from apache_spark_streaming_project_spark.operators import multimodal as mm
 
@@ -89,9 +91,8 @@ def test_real_image_mode_guarded(spark):
 
 
 def test_real_video_mode_guarded(spark):
-    """PyAV-backed frame extraction for arbitrary containers; without
-    PyAV, non-AVI payloads raise the documented error (Motion-JPEG AVI
-    decodes via the stdlib path, tested in test_mediacodec.py)."""
+    """PyAV-backed frame extraction for every container; without PyAV,
+    real mode raises the documented error."""
     df = _media_df(spark, [b"\x00" * 16], "video")
     if not mm._HAS_AV:
         with pytest.raises(Exception, match="PyAV"):
@@ -436,52 +437,6 @@ def test_frame_selector_snaps_past_gaps():
     assert got == [0, 1000, 2100, 3000]
 
 
-def test_real_image_features_via_progressive_jpeg(spark):
-    """extract_image_features(fake_decode=False) handles PROGRESSIVE
-    JPEG payloads without PIL, end to end through the Arrow kernel, and
-    reports the identical histogram as the baseline encoding of the
-    same image (the codec-level differential carried into the Spark
-    path)."""
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
-    img = (np.add.outer(np.arange(24) * 5, np.arange(40) * 3) % 256).astype(
-        np.uint8
-    )
-    prog = mc.encode_jpeg_progressive(img, quality=90)
-    base = mc.encode_jpeg(img, quality=90)
-    df = _media_df(spark, [prog, base], media_type="image")
-    out = mm.extract_image_features(df, fake_decode=False).collect()
-    assert out[0].hist == out[1].hist
-    assert sum(out[0].hist) == img.size
-    assert out[0].n_bytes == len(prog)
-    assert sum(out[0].feature) == pytest.approx(1.0)
-
-
-def test_real_frame_sampling_with_progressive_frames(spark):
-    """sample_video_frames(fake_decode=False) decodes an MJPEG-AVI whose
-    frames are PROGRESSIVE JPEGs — the stdlib video path composes with
-    the progressive decoder (only boundary-selected frames decode)."""
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
-    frames = [
-        mc.encode_jpeg_progressive(np.full((8, 8), v, np.uint8), quality=100)
-        for v in (10, 120, 240)
-    ]
-    avi = mc.encode_avi_mjpeg(frames, fps_rate=2, fps_scale=1, width=8, height=8)
-    rows = [(0, avi, ("video", "avi", 8, 8, 1500, None))]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA).coalesce(1)
-    out = mm.sample_video_frames(df, every_ms=1000, fake_decode=False).collect()
-    # frames at 0/500/1000 ms; boundaries at 0 and 1000 select #0 and #2
-    assert [(r.frame_idx, r.ts_ms) for r in out] == [(0, 0), (1, 1000)]
-    # q100 flat frames decode exactly; the PNG re-encode is lossless
-    px = mm._decode_png_pixels(bytes(out[1].frame_payload))
-    assert px.shape == (8, 8) and (px == 240).all()
-
-
 def test_palette_png_decodes_via_plte():
     """Color-type-3 (palette) PNGs — common on the web — resolve through
     the PLTE chunk to RGB, bit-identical to the equivalent truecolor
@@ -489,10 +444,6 @@ def test_palette_png_decodes_via_plte():
     loudly."""
     import struct
     import zlib
-
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
 
     def palette_png(indices, palette, include_plte=True):
         h, w = len(indices), len(indices[0])
@@ -517,7 +468,7 @@ def test_palette_png_decodes_via_plte():
     want = np.array([[pal[i] for i in row] for row in idx], dtype=np.uint8)
     assert px.shape == (2, 3, 3) and (px == want).all()
     # truecolor equivalence: same pixels through the RGB writer
-    truecolor = mm._decode_png_pixels(mc.encode_png(want))
+    truecolor = mm._decode_png_pixels(mm.encode_png(want))
     assert (px == truecolor).all()
     with pytest.raises(ValueError, match="PLTE"):
         mm._decode_png_pixels(palette_png(idx, pal, include_plte=False))
@@ -530,16 +481,12 @@ def test_adam7_interlaced_png_roundtrip():
     sub-8x8 and off-grid dims (empty passes contribute no bytes), with
     Sub/Up filters inside passes — the writer's interlacer is the
     independent direction that pins the decoder's pass reassembly."""
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
     rng = np.random.RandomState(9)
     for shape in [(1, 1), (7, 5), (9, 13), (8, 1), (33, 47, 3)]:
         img = rng.randint(0, 256, shape).astype(np.uint8)
         for ft in (0, 1, 2):
             got = mm._decode_png_pixels(
-                mc.encode_png(img, interlace=True, filter_type=ft)
+                mm.encode_png(img, interlace=True, filter_type=ft)
             )
             assert got.shape == img.shape and (got == img).all(), (
                 shape,
@@ -548,8 +495,8 @@ def test_adam7_interlaced_png_roundtrip():
     # interlaced and plain encodings of the same image agree end to end
     img = rng.randint(0, 256, (17, 19, 3)).astype(np.uint8)
     assert (
-        mm._decode_png_stdlib(mc.encode_png(img, interlace=True))
-        == mm._decode_png_stdlib(mc.encode_png(img))
+        mm._decode_png_stdlib(mm.encode_png(img, interlace=True))
+        == mm._decode_png_stdlib(mm.encode_png(img))
     )
 
 
@@ -582,77 +529,12 @@ def test_wav_mutations_stay_inside_the_error_contract():
             pass
 
 
-def test_animated_gif_frame_sampling(spark):
-    """sample_video_frames(fake_decode=False) samples an ANIMATED GIF
-    through the stdlib path: composited frames carry cumulative
-    graphic-control delays; only boundary-selected frames re-encode."""
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
-    pal = np.array([[0, 0, 0], [255, 255, 255], [128, 128, 128]], np.uint8)
-    frames = [np.full((6, 6), i, np.uint8) for i in (0, 1, 2)]
-    # delays 50cs=500ms each: frames at 0 / 500 / 1000 ms
-    gif = mc.encode_gif(frames, pal, delays_cs=[50, 50, 50])
-    rows = [(0, gif, ("video", "gif", 6, 6, 1500, None))]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA).coalesce(1)
-    out = mm.sample_video_frames(df, every_ms=1000, fake_decode=False).collect()
-    assert [(r.frame_idx, r.ts_ms) for r in out] == [(0, 0), (1, 1000)]
-    px = mm._decode_png_pixels(bytes(out[1].frame_payload))
-    assert (px == pal[2]).all()
-
-
-def test_gif_image_features_real_mode(spark):
-    """extract_image_features(fake_decode=False) decodes GIF payloads
-    stdlib-only: the luma histogram comes from the composited first
-    frame's palette colors."""
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
-    pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
-    img = np.array([[0, 1], [1, 1]], np.uint8)
-    gif = mc.encode_gif([img], pal)
-    df = _media_df(spark, [gif], media_type="image")
-    out = mm.extract_image_features(df, fake_decode=False).collect()[0]
-    assert out.hist == [1, 0, 0, 0, 0, 0, 0, 3]
-    assert sum(out.feature) == pytest.approx(1.0)
-
-
-@pytest.mark.skipif(not mm._HAS_PIL, reason="PIL not installed")
-def test_palette_adam7_gif_parity_with_pil():  # pragma: no cover
-    """When PIL exists, its decode of our palette / Adam7 / GIF writers'
-    output must match our stdlib decoders bit-for-bit (pixel data is
-    lossless in all three containers)."""
-    import io
-
-    import numpy as np
-    from PIL import Image
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
-    rng = np.random.RandomState(12)
-    rgb = rng.randint(0, 256, (19, 23, 3)).astype(np.uint8)
-    for il in (False, True):
-        data = mc.encode_png(rgb, interlace=il, filter_type=1)
-        pil = np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
-        ours = mm._decode_png_pixels(data)
-        assert (pil == ours).all(), f"interlace={il}"
-    pal = rng.randint(0, 256, (5, 3)).astype(np.uint8)
-    idx = rng.randint(0, 5, (9, 14)).astype(np.uint8)
-    gif = mc.encode_gif([idx], pal)
-    pil = np.asarray(Image.open(io.BytesIO(gif)).convert("RGB"))
-    assert (pil == mc.decode_gif(gif)).all()
-
-
 def test_16bit_png_decodes_to_high_bytes():
     """16-bit PNGs (gray and RGB, plain / Up-filtered / Adam7) decode
     with PNG's byte-level filters at the 16-bit pixel offset and
     downconvert to the high byte — PIL's 16->8 conversion."""
     import struct
     import zlib
-
-    import numpy as np
 
     def chunk(ctype, data):
         crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
@@ -711,122 +593,225 @@ def test_16bit_png_decodes_to_high_bytes():
 
 
 def test_mixed_format_corpus_single_kernel(spark):
-    """The realistic crawl shape: ONE media table mixing PNG, BMP,
-    baseline JPEG, progressive JPEG, and GIF payloads through one
-    real-mode mapInPandas run — per-row format dispatch inside the
-    kernel, every histogram over real pixels, NULL payload passed
-    through."""
-    import numpy as np
-
-    from apache_spark_streaming_project_spark.functions import mediacodec as mc
-
+    """The realistic crawl shape: ONE media table mixing PNG and BMP
+    payloads through one real-mode mapInPandas run — per-row format
+    dispatch inside the kernel, every histogram over real pixels, NULL
+    payload passed through."""
     img = (np.add.outer(np.arange(16) * 9, np.arange(16) * 5) % 256).astype(
         np.uint8
     )
-    pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
     payloads = [
-        mc.encode_png(img),
+        mm.encode_png(img),
         _bmp_encode([[(v, v, v) for v in row] for row in img.tolist()]),
-        mc.encode_jpeg(img, quality=95),
-        mc.encode_jpeg_progressive(img, quality=95),
-        mc.encode_gif([(img > 127).astype(np.uint8)], pal),
         None,
     ]
     df = _media_df(spark, payloads, media_type="image")
     out = {r.media_id: r for r in mm.extract_image_features(
         df, fake_decode=False
     ).collect()}
-    assert len(out) == 6
+    assert len(out) == 3
     # lossless containers agree exactly with the source pixels
     want = np.bincount(img.ravel() >> 5, minlength=8).tolist()
     assert out[0].hist == want  # PNG
     assert out[1].hist == want  # BMP
-    # JPEG is lossy but both encodings decode the same content shape
-    assert sum(out[2].hist) == img.size and sum(out[3].hist) == img.size
-    # GIF: two-tone palette -> only the extreme bins
-    assert sum(out[4].hist) == img.size
-    assert out[4].hist[1:7] == [0] * 6
-    assert out[5].hist is None  # NULL payload row survives as NULLs
+    assert out[2].hist is None  # NULL payload row survives as NULLs
 
 
-_REAL_BASELINE_JPEG = (
-    "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/share/doc/"
-    "rust/html/embedded-book/assets/verify.jpeg"
+# ---------------------------------------------------------------------------
+# PNG writer, PIL-free resize and the malformed-input contract
+# ---------------------------------------------------------------------------
+
+
+def _gradient_gray(h: int = 24, w: int = 40) -> np.ndarray:
+    return (np.add.outer(np.arange(h) * 3, np.arange(w) * 2) % 256).astype(
+        np.uint8
+    )
+
+
+def _smooth_rgb(h: int = 33, w: int = 47) -> np.ndarray:
+    y, x = np.mgrid[0:h, 0:w]
+    return np.stack(
+        [(x * 3) % 256, (y * 4) % 256, ((x + y) * 2) % 256], axis=-1
+    ).astype(np.uint8)
+
+
+class TestPngEncode:
+    def test_gray_round_trip_through_stdlib_decoder(self):
+        img = _gradient_gray(9, 13)
+        got = np.frombuffer(
+            mm._decode_png_stdlib(mm.encode_png(img)), np.uint8
+        ).reshape(9, 13)
+        assert (got == img).all()
+
+    def test_rgb_round_trip_matches_exact_luma(self):
+        img = _smooth_rgb(7, 11)
+        got = mm._decode_png_stdlib(mm.encode_png(img))
+        assert got == mm._gray_from_rgb(img).tobytes()
+
+    def test_rgb_pixels_round_trip_exactly(self):
+        img = _smooth_rgb(7, 11)
+        got = mm._decode_png_pixels(mm.encode_png(img))
+        assert got.shape == img.shape and (got == img).all()
+
+    def test_rejects_bad_shapes(self):
+        with pytest.raises(ValueError, match="expected"):
+            mm.encode_png(np.zeros((4, 4, 2), np.uint8))
+
+
+class TestCodecProperties:
+    """Randomized differentials with ANALYTIC error bounds (no Spark —
+    the codecs are pure functions)."""
+
+    @settings(max_examples=20, deadline=None, derandomize=True)
+    @given(st.integers(1, 16), st.integers(1, 16), st.integers(0, 2**32 - 1), st.booleans())
+    def test_png_roundtrip_exact(self, h, w, seed, color):
+        """PNG is lossless: encode_png -> _decode_png_pixels is the
+        identity for any uint8 gray/RGB array."""
+        rng = np.random.RandomState(seed)
+        shape = (h, w, 3) if color else (h, w)
+        img = rng.randint(0, 256, shape).astype(np.uint8)
+        got = mm._decode_png_pixels(mm.encode_png(img))
+        assert got.shape == img.shape and (got == img).all()
+
+
+@given(
+    st.integers(min_value=1, max_value=40),
+    st.integers(min_value=1, max_value=40),
+    st.booleans(),
+    st.booleans(),
+    st.sampled_from([0, 1, 2]),
+    st.integers(min_value=0, max_value=2**32 - 1),
 )
-_REAL_PROGRESSIVE_JPEG = (
-    "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/share/doc/"
-    "rust/html/embedded-book/assets/f3.jpg"
-)
-_HAVE_REAL_PHOTOS = __import__("os").path.exists(
-    _REAL_BASELINE_JPEG
-) and __import__("os").path.exists(_REAL_PROGRESSIVE_JPEG)
+@settings(max_examples=30, deadline=None)
+def test_property_png_roundtrip(h, w, rgb, interlace, filt, seed):
+    """Random shapes x gray/RGB x plain/Adam7 x filters 0/1/2: encode ->
+    stdlib decode recovers the pixels bit-exactly (the interlace pass
+    geometry is boundary-sensitive)."""
+    rng = np.random.RandomState(seed)
+    shape = (h, w, 3) if rgb else (h, w)
+    img = rng.randint(0, 256, shape).astype(np.uint8)
+    got = mm._decode_png_pixels(
+        mm.encode_png(img, interlace=interlace, filter_type=filt)
+    )
+    assert got.shape == img.shape and (got == img).all()
 
 
-@pytest.mark.skipif(
-    not _HAVE_REAL_PHOTOS, reason="no real-encoder photos on this host"
-)
-class TestRealPhotoEndToEnd:
-    """REAL-ENCODER streams driven through the full Spark operators
-    (not just the codec functions): resize and frame-sampling outputs
-    are sha256-PINNED, so a codec regression on externally produced
-    JPEGs cannot hide behind the self-round-trip tests (round-9 item:
-    the previous real-photo pins covered decode_jpeg only)."""
+def test_resize_rejects_degenerate_target():
+    """Plan-build validation, like every_ms in frame sampling: a zero
+    target must raise here, not as an opaque executor error."""
+    with pytest.raises(ValueError, match="resize target"):
+        mm.resize_images(None, 0, 4)
+    with pytest.raises(ValueError, match="resize target"):
+        mm.resize_images(None, 4, -1)
 
-    _RESIZE_PINS = {
-        0: "cfe29e2a616653b5aab0ce1c8124a559c0a3ffaaf52385291267c5478837e82c",
-        1: "d2bdfa7da639aada9e8e7b56d7e462097aebaec4231638e61bcfbce60716ddf4",
-    }
-    _DECODE_PINS = {
-        0: "7f50039ba4f4f5a920fd2007f5bb2f5a6731624e778e4c77eef13ab31bd319db",
-        1: "5158c38d6e8df942c7c3188daf3bddb7c2116bd330a5b6f07a3031ff650f0d94",
-    }
 
-    def _payloads(self):
-        return [
-            open(_REAL_BASELINE_JPEG, "rb").read(),
-            open(_REAL_PROGRESSIVE_JPEG, "rb").read(),
-        ]
+@pytest.mark.skipif(mm._HAS_PIL, reason="pins the PIL-absent stdlib path")
+def test_resize_real_mode_without_pil(spark):
+    """Real-mode resize works PIL-free: decode BMP, nearest resize, PNG
+    re-encode — verified by decoding the output PNG."""
+    img = _smooth_rgb(16, 16)
+    payload = _bmp_encode(img.tolist())
+    df = spark.createDataFrame(
+        [(1, payload, ("image", "bmp", 16, 16, None, None))],
+        mm.MEDIA_SCHEMA,
+    ).coalesce(1)
+    row = mm.resize_images(df, 8, 4, fake_decode=False).collect()[0]
+    assert (row.width, row.height) == (8, 4)
+    out = mm._decode_png_pixels(bytes(row.payload))
+    assert out.shape == (4, 8, 3)
+    # nearest-neighbor center sampling of the (losslessly stored) source
+    assert (out == mm._resize_nearest(img, 8, 4)).all()
 
-    def test_resize_pins_real_photos(self, spark):
-        import hashlib
 
-        if mm._HAS_PIL:
-            pytest.skip("pins are for the stdlib nearest-neighbor path")
-        df = _media_df(spark, self._payloads(), "image")
-        out = {
-            r.media_id: r
-            for r in mm.resize_images(df, 64, 48, fake_decode=False).collect()
-        }
-        for i, want in self._RESIZE_PINS.items():
-            px = mm._decode_png_pixels(bytes(out[i].payload))
-            assert px.shape == (48, 64, 3)
-            got = hashlib.sha256(px.tobytes()).hexdigest()
-            assert got == want, f"media {i}: {got}"
+class TestMalformedInputFuzz:
+    """Mutated and hostile inputs to the stdlib decoders must decode,
+    raise ValueError, or raise NotImplementedError — never leak
+    struct.error, zlib.error, IndexError, or an unbounded allocation."""
 
-    def test_frame_sampling_pins_real_photo_frames(self, spark):
-        import hashlib
+    def test_bmp_mutations_stay_inside_the_contract(self):
+        import random
+        import struct
 
-        if mm._HAS_AV:
-            pytest.skip("pins are for the stdlib MJPEG-AVI path")
-        from apache_spark_streaming_project_spark.functions.mediacodec import (
-            encode_avi_mjpeg,
+        stride = (16 * 3 + 3) & ~3
+        pb = bytearray()
+        for r in range(8):
+            line = bytes([r, 2 * r, 3 * r] * 16)
+            pb += line + b"\x00" * (stride - len(line))
+        info = struct.pack(
+            "<IiiHHIIiiII", 40, 16, 8, 1, 24, 0, len(pb), 2835, 2835, 0, 0
         )
-
-        # the AVI container is ours, but the frame STREAMS inside it are
-        # real-encoder JPEGs — the co-design-breaking part
-        avi = encode_avi_mjpeg(self._payloads(), fps_rate=1, fps_scale=1)
-        df = _media_df(spark, [avi], "video")
-        rows = sorted(
-            mm.sample_video_frames(
-                df, every_ms=1000, fake_decode=False
-            ).collect(),
-            key=lambda r: r.frame_idx,
+        off = 14 + len(info)
+        bmp = (
+            b"BM" + struct.pack("<IHHI", off + len(pb), 0, 0, off)
+            + info + bytes(pb)
         )
-        assert [(r.frame_idx, r.ts_ms) for r in rows] == [(0, 0), (1, 1000)]
-        for r in rows:
-            px = mm._decode_png_pixels(bytes(r.frame_payload))
-            assert px.shape == (477, 720, 3)
-            got = hashlib.sha256(px.tobytes()).hexdigest()
-            assert got == self._DECODE_PINS[r.frame_idx], (
-                f"frame {r.frame_idx}: {got}"
+        rng = random.Random(7)
+        for _ in range(200):
+            b = bytearray(bmp)
+            if rng.randrange(2):
+                b = b[: rng.randrange(1, len(b))]
+            else:
+                for _ in range(rng.randrange(1, 5)):
+                    b[rng.randrange(len(b))] = rng.randrange(256)
+            try:
+                mm._decode_bmp_pixels(bytes(b))
+            except (ValueError, NotImplementedError):
+                pass
+
+    def test_decompression_bomb_guard(self):
+        """A few dozen payload bytes declaring 2^30 x 2^30 pixels must
+        refuse up front (PIL MAX_IMAGE_PIXELS precedent), not attempt the
+        allocation."""
+        import struct
+        import zlib
+
+        def chunk(ctype, data):
+            crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
+            return (
+                struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", crc)
             )
+
+        bomb = (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(
+                b"IHDR", struct.pack(">IIBBBBB", 2**30, 2**30, 8, 0, 0, 0, 0)
+            )
+            + chunk(b"IDAT", zlib.compress(b"\x00"))
+            + chunk(b"IEND", b"")
+        )
+        with pytest.raises(ValueError, match="cap"):
+            mm._decode_png_pixels(bomb)
+
+    def test_png_overinflating_stream_refuses_bounded(self):
+        """An HONEST small header with a deflate stream that inflates to
+        ~50 MB: the bounded decompressobj must stop at the declared raw
+        size + 1 and refuse, never materializing the full inflate output
+        (the pixel cap alone doesn't stop this)."""
+        import struct
+        import tracemalloc
+        import zlib
+
+        def chunk(ctype, data):
+            crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
+            return (
+                struct.pack(">I", len(data)) + ctype + data
+                + struct.pack(">I", crc)
+            )
+
+        payload = (
+            b"\x89PNG\r\n\x1a\n"
+            + chunk(b"IHDR", struct.pack(">IIBBBBB", 4, 4, 8, 0, 0, 0, 0))
+            + chunk(b"IDAT", zlib.compress(b"\x00" * 50_000_000, 9))
+            + chunk(b"IEND", b"")
+        )
+        tracemalloc.start()
+        try:
+            with pytest.raises(ValueError, match="inflates past"):
+                mm._decode_png_pixels(payload)
+            _, peak = tracemalloc.get_traced_memory()
+        finally:
+            tracemalloc.stop()
+        # declared raw size is 4*(4+1)=20 bytes; the inflate output must
+        # be bounded near that, not the 50 MB the stream encodes
+        assert peak < 5_000_000, f"peak allocation {peak} bytes"

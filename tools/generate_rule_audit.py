@@ -120,6 +120,9 @@ def main() -> None:
                 except Exception:
                     pass
         finally:
+            # an include-side explain that raised must not leave the rule
+            # enabled for the next query's fixture jobs
+            spark.conf.set("spark.sql.optimizer.excludedRules", RULE)
             spark.catalog.clearCache()
     print(json.dumps({"summary": summary}))
 

@@ -130,7 +130,7 @@ def main() -> int:
             print(f"FAIL  {name}: {'; '.join(problems)} [{dt:.1f}s]")
             failures += 1
         else:
-            print(f"OK    {name}: {len(srows)} rows [{dt:.1f}s]")
+            print(f"OK    {name}: {len(srows)} rows hash={sh} [{dt:.1f}s]")
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
     return 1 if failures else 0
 
