@@ -1,9 +1,7 @@
-"""Stdlib media codecs (functions/mediacodec.py) and the X5 real-mode
-paths they unlock: baseline JPEG decode/encode, PNG encode, Motion-JPEG
-AVI read/write — all dependency-free, so every test here runs without
-PIL or PyAV and closes the loop end-to-end (encode with our encoder,
-run the real-mode Spark kernel, decode the kernel's output with our
-decoder, compare pixels)."""
+"""Stdlib media codecs in ``operators/multimodal``: the PNG writer, the
+malformed-input contract of the PNG/BMP decoders, and the GIF codec
+(LZW, palettes, interlace, animation). All dependency-free, so every
+test here runs without PIL or PyAV."""
 
 from __future__ import annotations
 
@@ -11,7 +9,6 @@ import numpy as np
 import pytest
 from hypothesis import example, given, settings, strategies as st
 
-from apache_spark_streaming_project_spark.functions import mediacodec as mc
 from apache_spark_streaming_project_spark.operators import multimodal as mm
 
 
@@ -28,273 +25,32 @@ def _smooth_rgb(h: int = 33, w: int = 47) -> np.ndarray:
     ).astype(np.uint8)
 
 
-class TestJpegRoundTrip:
-    def test_flat_gray_quality100_is_exact(self):
-        """quality=100 puts every quantizer at 1; a flat block is pure DC,
-        so the decode is bit-exact — the strongest self-consistency pin
-        the codec admits without an external reference decoder."""
-        for v in (0, 77, 128, 255):
-            img = np.full((16, 24), v, np.uint8)
-            out = mc.decode_jpeg(mc.encode_jpeg(img, quality=100))
-            assert out.shape == img.shape
-            assert (out == img).all(), f"flat {v} not exact"
-
-    def test_flat_rgb_quality100_within_color_rounding(self):
-        """Flat RGB at q100: the only loss is the YCbCr round trip's
-        per-sample rounding — within +/-1 of the source everywhere."""
-        img = np.full((16, 16, 3), (200, 30, 90), np.uint8)
-        out = mc.decode_jpeg(mc.encode_jpeg(img, quality=100))
-        assert out.shape == img.shape
-        assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 1
-
-    def test_gradient_gray_q90_small_error(self):
-        img = _gradient_gray()
-        out = mc.decode_jpeg(mc.encode_jpeg(img, quality=90))
-        assert out.shape == img.shape
-        assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 4
-
-    def test_smooth_rgb_444_and_420_odd_dims(self):
-        """Odd dimensions exercise MCU padding + cropping; 4:2:0
-        exercises subsampled planes and the decoder's upsampler."""
-        img = _smooth_rgb()
-        for sub, tol in (("444", 6), ("420", 12)):
-            out = mc.decode_jpeg(mc.encode_jpeg(img, quality=95, subsample=sub))
-            assert out.shape == img.shape, sub
-            err = int(np.abs(out.astype(int) - img.astype(int)).max())
-            assert err <= tol, f"{sub}: max err {err}"
-
-    def test_restart_interval_decodes_identically(self):
-        """DRI + RSTn markers change the byte stream but not the pixels:
-        pins both the encoder's restart emission and the decoder's
-        byte-align + predictor-reset path."""
-        img = _gradient_gray(24, 32)
-        plain = mc.decode_jpeg(mc.encode_jpeg(img, quality=80))
-        with_rst = mc.decode_jpeg(
-            mc.encode_jpeg(img, quality=80, restart_interval=2)
-        )
-        assert (plain == with_rst).all()
-
-    def test_rgb_restart_interval(self):
-        img = _smooth_rgb(16, 24)
-        plain = mc.decode_jpeg(mc.encode_jpeg(img, quality=85))
-        with_rst = mc.decode_jpeg(
-            mc.encode_jpeg(img, quality=85, restart_interval=1)
-        )
-        assert (plain == with_rst).all()
-
-    def test_single_pixel_and_tiny_images(self):
-        """Sub-block images: the encoder edge-pads to the MCU grid, the
-        decoder crops back — dims must survive exactly."""
-        for shape in ((1, 1), (3, 5), (8, 9)):
-            img = _gradient_gray(*shape)
-            out = mc.decode_jpeg(mc.encode_jpeg(img, quality=100))
-            assert out.shape == shape
-
-    def test_noise_bounded_by_quantization(self):
-        """Deterministic high-frequency content at q50 stays within a
-        loose but honest bound (quantization error, not corruption)."""
-        rng = np.random.RandomState(7)
-        img = rng.randint(0, 256, (32, 32), dtype=np.uint8).astype(np.uint8)
-        out = mc.decode_jpeg(mc.encode_jpeg(img, quality=50))
-        # worst-case per-pixel error for Annex-K-at-50 is large; the pin
-        # is that the MEAN error is modest and nothing is unclipped junk
-        assert float(np.abs(out.astype(int) - img.astype(int)).mean()) < 40.0
-
-    def test_decoder_refuses_unsupported_shapes(self):
-        with pytest.raises(ValueError, match="SOI"):
-            mc.decode_jpeg(b"not a jpeg")
-        # a zero-length segment must raise, not spin the marker walk
-        # forever (the walk advances by the declared segment length)
-        with pytest.raises(ValueError, match="segment length"):
-            mc.decode_jpeg(b"\xff\xd8\xff\xfe\x00\x00")
-        # arithmetic coding: SOI + minimal SOF9 segment
-        sof9 = b"\xff\xd8\xff\xc9\x00\x0b\x08\x00\x10\x00\x10\x01\x01\x11\x00"
-        with pytest.raises(NotImplementedError, match="arithmetic"):
-            mc.decode_jpeg(sof9)
-        with pytest.raises(ValueError, match="quality"):
-            mc.encode_jpeg(np.zeros((8, 8), np.uint8), quality=0)
-        with pytest.raises(ValueError, match="subsample"):
-            mc.encode_jpeg(np.zeros((8, 8, 3), np.uint8), subsample="422")
-        with pytest.raises(ValueError, match="empty"):
-            mc.encode_jpeg(np.zeros((0, 8), np.uint8))
-
-    @pytest.mark.skipif(not mm._HAS_PIL, reason="PIL not installed")
-    def test_parity_with_pil_when_available(self):  # pragma: no cover
-        """When PIL exists, its libjpeg decode of OUR encoder's output
-        must agree within the documented +/-1 IDCT rounding spread."""
-        import io
-
-        from PIL import Image
-
-        img = _gradient_gray()
-        pil = np.asarray(
-            Image.open(io.BytesIO(mc.encode_jpeg(img, quality=90))).convert("L")
-        )
-        ours = mc.decode_jpeg(mc.encode_jpeg(img, quality=90))
-        assert int(np.abs(pil.astype(int) - ours.astype(int)).max()) <= 1
-
-
 class TestPngEncode:
     def test_gray_round_trip_through_stdlib_decoder(self):
         img = _gradient_gray(9, 13)
         got = np.frombuffer(
-            mm._decode_png_stdlib(mc.encode_png(img)), np.uint8
+            mm._decode_png_stdlib(mm.encode_png(img)), np.uint8
         ).reshape(9, 13)
         assert (got == img).all()
 
     def test_rgb_round_trip_matches_exact_luma(self):
         img = _smooth_rgb(7, 11)
-        got = mm._decode_png_stdlib(mc.encode_png(img))
+        got = mm._decode_png_stdlib(mm.encode_png(img))
         assert got == mm._gray_from_rgb(img).tobytes()
 
     def test_rgb_pixels_round_trip_exactly(self):
         img = _smooth_rgb(7, 11)
-        got = mm._decode_png_pixels(mc.encode_png(img))
+        got = mm._decode_png_pixels(mm.encode_png(img))
         assert got.shape == img.shape and (got == img).all()
 
     def test_rejects_bad_shapes(self):
         with pytest.raises(ValueError, match="expected"):
-            mc.encode_png(np.zeros((4, 4, 2), np.uint8))
-
-
-class TestAviMjpeg:
-    def test_round_trip_frames_and_timestamps(self):
-        frames = [
-            mc.encode_jpeg(np.full((8, 8), v, np.uint8), quality=100)
-            for v in (10, 120, 240)
-        ]
-        avi = mc.encode_avi_mjpeg(frames, fps_rate=4, fps_scale=1, width=8, height=8)
-        dec = mc.decode_avi_mjpeg(avi)
-        assert [ts for ts, _ in dec] == [0, 250, 500]
-        assert [f for _, f in dec] == frames
-
-    def test_rational_fps(self):
-        """NTSC-style 30000/1001 exercises the integer-floor timestamp."""
-        frames = [mc.encode_jpeg(np.zeros((8, 8), np.uint8))] * 3
-        dec = mc.decode_avi_mjpeg(
-            mc.encode_avi_mjpeg(frames, fps_rate=30000, fps_scale=1001)
-        )
-        assert [ts for ts, _ in dec] == [0, 33, 66]
-
-    def test_lying_riff_size_clamps_to_real_payload(self):
-        """A RIFF size field claiming bytes past the payload end must not
-        leak struct.error from a short header slice — the walk clamps to
-        the real length and still recovers the frames that exist."""
-        avi = bytearray(mc.encode_avi_mjpeg([b"frame"], fps_rate=10))
-        avi[4:8] = (len(avi) * 4).to_bytes(4, "little")
-        dec = mc.decode_avi_mjpeg(bytes(avi))
-        assert [f for _, f in dec] == [b"frame"]
-
-    def test_rejects_non_avi_and_non_mjpeg(self):
-        with pytest.raises(ValueError, match="AVI"):
-            mc.decode_avi_mjpeg(b"RIFF\x04\x00\x00\x00WAVE")
-        frames = [b"xx"]
-        avi = bytearray(mc.encode_avi_mjpeg(frames))
-        i = avi.find(b"MJPG")  # strh handler is the first occurrence
-        avi[i : i + 4] = b"H264"
-        with pytest.raises(NotImplementedError, match="Motion-JPEG"):
-            mc.decode_avi_mjpeg(bytes(avi))
-        with pytest.raises(ValueError, match="at least one"):
-            mc.encode_avi_mjpeg([])
-
-
-class TestSpecPins:
-    """Pins against the PUBLISHED standard, not our own round trip — a
-    consistent encoder+decoder bug (transposed IDCT, LSB-first bits,
-    shifted zigzag) would round-trip cleanly here while misreading every
-    externally-produced JPEG; these tests break that cancellation."""
-
-    def test_idct_matches_t81_definition(self):
-        """The einsum IDCT must equal T.81 A.3.3 evaluated literally:
-        f(x,y) = 1/4 sum_u sum_v C(u)C(v) F(u,v) cos((2x+1)u*pi/16)
-        cos((2y+1)v*pi/16)."""
-        rng = np.random.RandomState(3)
-        F_ = rng.randint(-512, 512, (8, 8)).astype(np.float64)
-        got = mc._DCT_M @ F_ @ mc._DCT_M.T
-        want = np.zeros((8, 8))
-        for x in range(8):
-            for y in range(8):
-                s = 0.0
-                for u in range(8):
-                    for v in range(8):
-                        cu = 1 / np.sqrt(2) if u == 0 else 1.0
-                        cv = 1 / np.sqrt(2) if v == 0 else 1.0
-                        s += (
-                            cu * cv * F_[u, v]
-                            * np.cos((2 * x + 1) * u * np.pi / 16)
-                            * np.cos((2 * y + 1) * v * np.pi / 16)
-                        )
-                want[x, y] = s / 4.0
-        assert np.abs(got - want).max() < 1e-9
-
-    def test_zigzag_table_matches_generated_walk(self):
-        """ZIGZAG must equal the programmatic diagonal walk (up-right on
-        even anti-diagonals, down-left on odd), T.81 figure A.6."""
-        order = sorted(
-            ((r, c) for r in range(8) for c in range(8)),
-            key=lambda rc: (
-                rc[0] + rc[1],
-                rc[1] if (rc[0] + rc[1]) % 2 == 0 else rc[0],
-            ),
-        )
-        assert mc.ZIGZAG == [r * 8 + c for r, c in order]
-
-    def test_golden_entropy_bytes_flat_block(self):
-        """Hand-computed stream for a flat 8x8 gray 130 at q100: DC coef
-        = 8*(130-128) = 16 -> category 5 (Annex K DC-luma code '110') +
-        magnitude '10000', then EOB ('1010'), padded with 1-bits:
-        11010000 10101111 = D0 AF. Pins MSB-first packing, canonical
-        code assignment, the DC scale, and the 1-bit pad in one shot."""
-        img = np.full((8, 8), 130, np.uint8)
-        payload = mc.encode_jpeg(img, quality=100)
-        sos = payload.find(b"\xff\xda")
-        assert sos > 0
-        (seglen,) = __import__("struct").unpack(">H", payload[sos + 2 : sos + 4])
-        entropy = payload[sos + 2 + seglen : -2]  # up to EOI
-        assert entropy == b"\xd0\xaf"
+            mm.encode_png(np.zeros((4, 4, 2), np.uint8))
 
 
 class TestCodecProperties:
     """Randomized differentials with ANALYTIC error bounds (no Spark —
     the codecs are pure functions)."""
-
-    @settings(max_examples=25, deadline=None, derandomize=True)
-    @given(
-        st.integers(1, 24), st.integers(1, 24), st.integers(0, 2**32 - 1)
-    )
-    def test_gray_q100_roundtrip_error_bound(self, h, w, seed):
-        """At quality 100 every quantizer is 1, so the ONLY loss is
-        rounding DCT coefficients to integers (<=0.5 each) plus the final
-        pixel rint (<=0.5). Per-pixel that is bounded by
-        0.5 * (max_x sum_u |M[x,u]|)^2 + 0.5 ~= 3.99 — so ANY uint8 image
-        must round-trip within 4 levels, arbitrary content included."""
-        img = np.random.RandomState(seed).randint(0, 256, (h, w)).astype(np.uint8)
-        out = mc.decode_jpeg(mc.encode_jpeg(img, quality=100))
-        assert out.shape == img.shape
-        assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 4
-
-    @settings(max_examples=20, deadline=None, derandomize=True)
-    @given(
-        st.integers(1, 20),
-        st.integers(1, 20),
-        st.integers(0, 2**32 - 1),
-        st.sampled_from([30, 60, 90, 100]),
-        st.integers(1, 5),
-        st.booleans(),
-    )
-    def test_restart_markers_never_change_pixels(
-        self, h, w, seed, quality, interval, color
-    ):
-        """DRI/RSTn re-frame the entropy stream without touching the
-        coefficients: decode must be bit-identical with and without."""
-        rng = np.random.RandomState(seed)
-        shape = (h, w, 3) if color else (h, w)
-        img = rng.randint(0, 256, shape).astype(np.uint8)
-        plain = mc.decode_jpeg(mc.encode_jpeg(img, quality=quality))
-        rst = mc.decode_jpeg(
-            mc.encode_jpeg(img, quality=quality, restart_interval=interval)
-        )
-        assert (plain == rst).all()
 
     @settings(max_examples=20, deadline=None, derandomize=True)
     @given(st.integers(1, 16), st.integers(1, 16), st.integers(0, 2**32 - 1), st.booleans())
@@ -304,389 +60,17 @@ class TestCodecProperties:
         rng = np.random.RandomState(seed)
         shape = (h, w, 3) if color else (h, w)
         img = rng.randint(0, 256, shape).astype(np.uint8)
-        got = mm._decode_png_pixels(mc.encode_png(img))
+        got = mm._decode_png_pixels(mm.encode_png(img))
         assert got.shape == img.shape and (got == img).all()
-
-    @settings(max_examples=15, deadline=None, derandomize=True)
-    @given(
-        st.lists(st.binary(min_size=1, max_size=64), min_size=1, max_size=8),
-        st.integers(1, 120),
-        st.integers(1, 4),
-    )
-    def test_avi_roundtrip_any_payloads(self, frames, rate, scale):
-        """The RIFF walk recovers frame bytes verbatim (including
-        odd-length frames, which pad to even on disk) and floor-rational
-        timestamps, for any payloads and any positive fps."""
-        dec = mc.decode_avi_mjpeg(
-            mc.encode_avi_mjpeg(frames, fps_rate=rate, fps_scale=scale)
-        )
-        assert [f for _, f in dec] == frames
-        assert [ts for ts, _ in dec] == [
-            i * 1000 * scale // rate for i in range(len(frames))
-        ]
-
-
-@pytest.mark.skipif(mm._HAS_PIL, reason="pins the PIL-absent stdlib path")
-class TestRealModeJpegOnSpark:
-    """End-to-end: real-mode kernels over JPEG/AVI payloads with NO
-    optional libraries — the gap VERDICT r7 'What's missing #2' named."""
-
-    def test_image_features_on_real_jpeg(self, spark):
-        """A flat q100 JPEG decodes exactly, so the real-mode histogram
-        is fully concentrated and the feature invariants hold."""
-        img = np.full((16, 16), 200, np.uint8)  # 200 >> 5 == bin 6
-        payload = mc.encode_jpeg(img, quality=100)
-        df = spark.createDataFrame(
-            [(1, payload, ("image", "jpeg", 16, 16, None, None))],
-            mm.MEDIA_SCHEMA,
-        ).coalesce(1)
-        row = mm.extract_image_features(df, fake_decode=False).collect()[0]
-        assert row.n_bytes == len(payload)  # container bytes, not pixels
-        assert row.hist == [0, 0, 0, 0, 0, 0, 256, 0]
-        assert sum(row.feature) == pytest.approx(1.0)
-
-    def test_color_jpeg_histogram_uses_exact_luma(self, spark):
-        """RGB JPEGs go through the same _gray_from_rgb fixed-point luma
-        as the PNG/BMP paths — pinned against a host-side reference."""
-        img = _smooth_rgb(16, 16)
-        payload = mc.encode_jpeg(img, quality=100)
-        want = np.bincount(
-            mm._gray_from_rgb(mc.decode_jpeg(payload)).ravel() >> 5, minlength=8
-        ).tolist()
-        df = spark.createDataFrame(
-            [(1, payload, ("image", "jpeg", 16, 16, None, None))],
-            mm.MEDIA_SCHEMA,
-        ).coalesce(1)
-        row = mm.extract_image_features(df, fake_decode=False).collect()[0]
-        assert row.hist == want
-
-    def test_resize_rejects_degenerate_target(self, spark):
-        """Plan-build validation, like every_ms in frame sampling: a zero
-        target must raise here, not as an opaque executor error."""
-        with pytest.raises(ValueError, match="resize target"):
-            mm.resize_images(None, 0, 4)
-        with pytest.raises(ValueError, match="resize target"):
-            mm.resize_images(None, 4, -1)
-
-    def test_resize_real_mode_without_pil(self, spark):
-        """Real-mode resize now works PIL-free: decode JPEG, nearest
-        resize, PNG re-encode — verified by decoding the output PNG."""
-        img = _gradient_gray(16, 16)
-        payload = mc.encode_jpeg(img, quality=100)
-        df = spark.createDataFrame(
-            [(1, payload, ("image", "jpeg", 16, 16, None, None))],
-            mm.MEDIA_SCHEMA,
-        ).coalesce(1)
-        row = mm.resize_images(df, 8, 4, fake_decode=False).collect()[0]
-        assert (row.width, row.height) == (8, 4)
-        out = mm._decode_png_pixels(bytes(row.payload))
-        assert out.shape == (4, 8)
-        # nearest-neighbor center sampling of the (exactly decoded) source
-        want = mm._resize_nearest(mc.decode_jpeg(payload), 8, 4)
-        assert (out == want).all()
-
-    def test_frame_sampling_on_real_mjpeg_avi(self, spark):
-        """Real-mode video without PyAV: MJPEG AVI at 4 fps sampled at
-        every_ms=500 keeps frames 0 and 2 (ts 0, 500); the emitted PNGs
-        decode back to the planted flat frames bit-exactly (q100)."""
-        vals = (10, 120, 240)
-        frames = [
-            mc.encode_jpeg(np.full((8, 8), v, np.uint8), quality=100)
-            for v in vals
-        ]
-        avi = mc.encode_avi_mjpeg(frames, fps_rate=4, fps_scale=1, width=8, height=8)
-        df = spark.createDataFrame(
-            [(1, avi, ("video", "avi", 8, 8, 750, None))], mm.MEDIA_SCHEMA
-        ).coalesce(1)
-        rows = sorted(
-            mm.sample_video_frames(df, every_ms=500, fake_decode=False).collect(),
-            key=lambda r: r.frame_idx,
-        )
-        assert [(r.frame_idx, r.ts_ms) for r in rows] == [(0, 0), (1, 500)]
-        for r, v in zip(rows, (vals[0], vals[2])):
-            px = np.frombuffer(
-                mm._decode_png_stdlib(bytes(r.frame_payload)), np.uint8
-            )
-            assert (px == v).all() and px.size == 64
-
-
-def _strip_segments(jpeg: bytes, marker: int) -> bytes:
-    """Remove every segment with the given marker id from a JPEG stream
-    (copying the scan and everything after it verbatim)."""
-    out = bytearray(jpeg[:2])
-    pos = 2
-    while pos + 2 <= len(jpeg):
-        assert jpeg[pos] == 0xFF
-        m = jpeg[pos + 1]
-        if m == 0xDA:
-            out += jpeg[pos:]
-            break
-        seglen = int.from_bytes(jpeg[pos + 2 : pos + 4], "big")
-        seg = jpeg[pos : pos + 2 + seglen]
-        if m != marker:
-            out += seg
-        pos += 2 + seglen
-    return bytes(out)
-
-
-class TestMalformedInputContract:
-    """Ninth-pass pins: every malformed-media path must surface as the
-    module's documented error classes (ValueError / NotImplementedError),
-    never a bare Exception, KeyError, or a silent wrong answer."""
-
-    def test_truncated_entropy_data_is_a_value_error(self):
-        """A JPEG cut off mid-scan used to escape as the internal
-        _EntropyEnd (bare Exception subclass); it must be a ValueError."""
-        enc = mc.encode_jpeg(_gradient_gray(64, 64), quality=95)
-        cut = enc[:-40]  # well inside the entropy-coded scan
-        with pytest.raises(ValueError, match="entropy|truncated"):
-            mc.decode_jpeg(cut)
-
-    def test_scan_referencing_missing_huffman_table_is_a_value_error(self):
-        enc = mc.encode_jpeg(_gradient_gray(), quality=85)
-        with pytest.raises(ValueError, match="undefined Huffman"):
-            mc.decode_jpeg(_strip_segments(enc, 0xC4))
-
-    def test_scan_referencing_missing_quant_table_is_a_value_error(self):
-        enc = mc.encode_jpeg(_gradient_gray(), quality=85)
-        with pytest.raises(ValueError, match="undefined quantization"):
-            mc.decode_jpeg(_strip_segments(enc, 0xDB))
-
-    def test_fill_bytes_before_markers_decode_identically(self):
-        """T.81 B.1.1.2 allows 0xFF fill bytes before any marker; the
-        walk must skip them instead of misreading the marker id as a
-        segment length."""
-        enc = mc.encode_jpeg(_gradient_gray(), quality=90)
-        filled = enc[:2] + b"\xff\xff" + enc[2:]
-        assert (mc.decode_jpeg(filled) == mc.decode_jpeg(enc)).all()
-
-    def test_dnl_deferred_height_refuses_loudly(self):
-        """SOF lines=0 means the height arrives in a DNL marker after the
-        scan (T.81 B.2.2) — unsupported, and returning an empty image
-        would be a silent wrong answer."""
-        sof_h0 = (
-            b"\xff\xd8\xff\xc0\x00\x0b\x08\x00\x00\x00\x10\x01\x01\x11\x00"
-        )
-        with pytest.raises(NotImplementedError, match="DNL"):
-            mc.decode_jpeg(sof_h0)
-
-    def test_zero_sampling_factor_is_a_value_error(self):
-        """An h or v factor of 0 would divide-by-zero the upsampling
-        ratio; T.81 bounds factors to 1..4."""
-        sof_bad = (
-            b"\xff\xd8\xff\xc0\x00\x0b\x08\x00\x10\x00\x10\x01\x01\x01\x00"
-        )
-        with pytest.raises(ValueError, match="sampling factors"):
-            mc.decode_jpeg(sof_bad)
-
-    def test_two_video_streams_refuse_instead_of_interleaving(self):
-        """The stdlib AVI walk keys frame chunks on the '##dc' fourcc
-        suffix without demuxing by stream id, so a second video stream
-        must refuse loudly rather than silently interleave frames."""
-        import struct
-
-        avi = bytearray(mc.encode_avi_mjpeg([b"xx"], fps_rate=10))
-        i = avi.find(b"strl") - 8  # LIST header precedes the type
-        (strl_size,) = struct.unpack("<I", avi[i + 4 : i + 8])
-        strl = bytes(avi[i : i + 8 + strl_size + (strl_size % 2)])
-        j = avi.find(b"hdrl") - 8
-        (hdrl_size,) = struct.unpack("<I", avi[j + 4 : j + 8])
-        avi[j + 4 : j + 8] = struct.pack("<I", hdrl_size + len(strl))
-        (riff_size,) = struct.unpack("<I", avi[4:8])
-        avi[4:8] = struct.pack("<I", riff_size + len(strl))
-        avi[i + 8 + strl_size + (strl_size % 2) : i + 8 + strl_size + (strl_size % 2)] = strl
-        with pytest.raises(NotImplementedError, match="multiple video"):
-            mc.decode_avi_mjpeg(bytes(avi))
-
-
-class TestProgressiveJpeg:
-    """Progressive (SOF2) decode, pinned DIFFERENTIALLY: the progressive
-    encoder shares the baseline encoder's front half, so it emits the
-    IDENTICAL quantized coefficients — decode of the progressive stream
-    must therefore be bit-identical to decode of the baseline stream for
-    the same image. A co-designed scan-packing bug cannot cancel out here
-    because the baseline pipeline never touches the progressive scan
-    coders; the real-encoder fixture test below breaks any remaining
-    shared-misreading cancellation."""
-
-    def _assert_exact(self, img, **kw):
-        base = mc.decode_jpeg(mc.encode_jpeg(img, **kw))
-        prog = mc.decode_jpeg(mc.encode_jpeg_progressive(img, **kw))
-        assert base.shape == prog.shape
-        assert (base == prog).all()
-
-    def test_gray_matches_baseline_exactly(self):
-        self._assert_exact(_gradient_gray(24, 40))
-        self._assert_exact(_gradient_gray(64, 64), quality=50)
-
-    def test_subblock_and_offgrid_dims(self):
-        """8x9 is the regression fixture for the ZRL/correction-bit
-        ordering bug: ZRLs must flush at every non-skipped position
-        (history coefficients included) so buffered correction bits stay
-        aligned with the run window the decoder replays them in."""
-        for shape in ((1, 1), (8, 9), (17, 17)):
-            self._assert_exact(_gradient_gray(*shape), quality=80)
-
-    def test_color_444_and_420(self):
-        img = _smooth_rgb(33, 47)
-        self._assert_exact(img, quality=85, subsample="444")
-        self._assert_exact(img, quality=85, subsample="420")
-
-    def test_restart_intervals(self):
-        """Restart markers inside progressive scans: DC scans restart in
-        MCU units, AC scans in block units; EOB runs must flush before
-        each RSTn."""
-        img = _gradient_gray(48, 56)
-        base = mc.decode_jpeg(mc.encode_jpeg(img, quality=85))
-        for ri in (1, 3, 7):
-            prog = mc.decode_jpeg(
-                mc.encode_jpeg_progressive(img, quality=85, restart_interval=ri)
-            )
-            assert (base == prog).all(), f"restart_interval={ri}"
-
-    def test_noise_stress_all_qualities(self):
-        rng = np.random.RandomState(11)
-        for q in (25, 60, 95):
-            img = rng.randint(0, 256, (40, 40)).astype(np.uint8)
-            self._assert_exact(img, quality=q)
-
-    @given(
-        st.integers(min_value=1, max_value=40),
-        st.integers(min_value=1, max_value=40),
-        st.integers(min_value=0, max_value=2**32 - 1),
-        st.integers(min_value=5, max_value=100),
-    )
-    @settings(max_examples=25, deadline=None)
-    def test_property_progressive_equals_baseline(self, h, w, seed, quality):
-        img = np.random.RandomState(seed).randint(0, 256, (h, w)).astype(
-            np.uint8
-        )
-        self._assert_exact(img, quality=quality)
-
-    def test_ac_scan_must_be_single_component(self):
-        """Hand-built SOS with Ss>0 and ns=3 inside a progressive frame
-        must refuse (T.81 G.1.1.1)."""
-        img = _smooth_rgb(16, 16)
-        enc = bytearray(mc.encode_jpeg_progressive(img, quality=90))
-        # splice a 3-component AC SOS where the first single-comp AC SOS
-        # sits: find the second SOS (first is the DC scan)
-        first = enc.find(b"\xff\xda")
-        second = enc.find(b"\xff\xda", first + 2)
-        bad_sos = (
-            b"\xff\xda\x00\x0c\x03"
-            b"\x01\x00\x02\x00\x03\x00"
-            b"\x01\x3f\x00"
-        )
-        seglen = int.from_bytes(enc[second + 2 : second + 4], "big")
-        enc[second : second + 2 + seglen] = bad_sos
-        with pytest.raises(ValueError, match="single-component"):
-            mc.decode_jpeg(bytes(enc))
-
-    def test_progressive_dc_scan_with_band_refuses(self):
-        img = _gradient_gray(16, 16)
-        enc = bytearray(mc.encode_jpeg_progressive(img, quality=90))
-        first = enc.find(b"\xff\xda")
-        seglen = int.from_bytes(enc[first + 2 : first + 4], "big")
-        # DC scan header is ...Ss Se AhAl at the segment tail
-        enc[first + seglen] = 5  # Se = 5 on an Ss=0 scan
-        with pytest.raises(ValueError, match="Se=0"):
-            mc.decode_jpeg(bytes(enc))
-
-
-_REAL_PROGRESSIVE = (
-    "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/share/doc/"
-    "rust/html/embedded-book/assets/f3.jpg"
-)
-_REAL_BASELINE = (
-    "/root/.rustup/toolchains/stable-x86_64-unknown-linux-gnu/share/doc/"
-    "rust/html/embedded-book/assets/verify.jpeg"
-)
-
-
-class TestRealEncoderFixtures:
-    """Decode JPEGs produced by REAL encoders (photos shipped with local
-    tool documentation, found at runtime and skipped when absent): these
-    break encoder/decoder co-design — a consistent misreading of the
-    spec round-trips our own files cleanly but scrambles externally
-    produced ones. The hash pins are self-stability pins (the decoder's
-    rounding model is documented as bit-stable with itself); the
-    statistics assert photo-plausibility rather than block scrambling."""
-
-    @pytest.mark.skipif(
-        not __import__("os").path.exists(_REAL_PROGRESSIVE),
-        reason="no real progressive JPEG on this host",
-    )
-    def test_real_progressive_photo(self):
-        import hashlib
-
-        px = mc.decode_jpeg(open(_REAL_PROGRESSIVE, "rb").read())
-        assert px.shape == (477, 720, 3)
-        # photo-like: moderate mean, smooth horizontal gradients (a
-        # scan-packing bug produces near-uniform noise, |dx| ~ 85)
-        assert 40 < float(px.mean()) < 200
-        assert float(np.abs(np.diff(px[..., 0].astype(int), axis=1)).mean()) < 25
-        assert (
-            hashlib.sha256(px.tobytes()).hexdigest()
-            == "5158c38d6e8df942c7c3188daf3bddb7c2116bd330a5b6f07a3031ff650f0d94"
-        )
-
-    @pytest.mark.skipif(
-        not __import__("os").path.exists(_REAL_BASELINE),
-        reason="no real baseline JPEG on this host",
-    )
-    def test_real_baseline_photo(self):
-        px = mc.decode_jpeg(open(_REAL_BASELINE, "rb").read())
-        assert px.shape == (477, 720, 3)
-        assert float(np.abs(np.diff(px[..., 0].astype(int), axis=1)).mean()) < 25
-
-
-class TestScanStructureHardening:
-    """Post-progressive self-review pins: malformed scan structure must
-    refuse loudly, not silently mis-decode."""
-
-    def test_duplicate_component_in_sos_refuses(self):
-        enc = bytearray(mc.encode_jpeg(_smooth_rgb(16, 16), quality=90))
-        i = enc.find(b"\xff\xda")
-        # components are (cid, tabs) pairs at body offset 1: make all
-        # three pairs reference component 1
-        base = i + 5
-        enc[base + 2] = 1
-        enc[base + 4] = 1
-        with pytest.raises(ValueError, match="more than once"):
-            mc.decode_jpeg(bytes(enc))
-
-    def test_reordered_sos_components_refuse(self):
-        """T.81 B.2.3: scan component order must match SOF order. The
-        entropy decoder walks SOF order, so a reordered SOS would silently
-        decode wrong pixels — it must refuse instead (advisor finding)."""
-        enc = bytearray(mc.encode_jpeg(_smooth_rgb(16, 16), quality=90))
-        i = enc.find(b"\xff\xda")
-        base = i + 5  # (cid, tabs) pairs; swap the Cb and Cr entries
-        pair2 = bytes(enc[base + 2 : base + 4])
-        pair3 = bytes(enc[base + 4 : base + 6])
-        enc[base + 2 : base + 4] = pair3
-        enc[base + 4 : base + 6] = pair2
-        with pytest.raises(ValueError, match="SOF order"):
-            mc.decode_jpeg(bytes(enc))
-
-    def test_second_sof_refuses(self):
-        enc = bytearray(mc.encode_jpeg(_gradient_gray(8, 8), quality=90))
-        i = enc.find(b"\xff\xc0")
-        seglen = int.from_bytes(enc[i + 2 : i + 4], "big")
-        sof_seg = bytes(enc[i : i + 2 + seglen])
-        enc[i:i] = sof_seg  # duplicate the SOF segment
-        with pytest.raises(ValueError, match="more than one SOF"):
-            mc.decode_jpeg(bytes(enc))
 
 
 class TestMalformedInputFuzz:
-    """Deterministic mutation fuzz over every stdlib codec: byte flips,
-    truncations, and junk splices of valid files must decode, raise
-    ValueError, or raise NotImplementedError — never leak struct.error,
-    zlib.error, IndexError, or OverflowError (all four escaped before
-    this test existed: truncated headers hit short unpacks, corrupt IDAT
-    leaked zlib.error, and a corrupt DHT could declare a DC size symbol
-    of 200 and push 2^200 into the int64 coefficient array)."""
+    """Deterministic mutation fuzz over the stdlib decoders: byte flips,
+    truncations, and junk splices of valid files, and hostile headers,
+    must decode, raise ValueError, or raise NotImplementedError — never
+    leak struct.error, zlib.error, IndexError, or an unbounded
+    allocation (truncated headers once hit short unpacks and corrupt
+    IDAT once leaked zlib.error)."""
 
     def _fixtures(self):
         import struct
@@ -716,17 +100,9 @@ class TestMalformedInputFuzz:
             + chunk(b"IEND", b"")
         )
         return [
-            (mc.encode_jpeg(img, quality=85, restart_interval=2), mc.decode_jpeg),
-            (mc.encode_jpeg_progressive(rgb, quality=85), mc.decode_jpeg),
-            (mc.encode_png(rgb), mm._decode_png_pixels),
-            (mc.encode_png(img, interlace=True, filter_type=2), mm._decode_png_pixels),
+            (mm.encode_png(rgb), mm._decode_png_pixels),
+            (mm.encode_png(img, interlace=True, filter_type=2), mm._decode_png_pixels),
             (plte_png, mm._decode_png_pixels),
-            (
-                mc.encode_avi_mjpeg(
-                    [mc.encode_jpeg(img, quality=90)] * 3, fps_rate=10
-                ),
-                mc.decode_avi_mjpeg,
-            ),
         ]
 
     def test_mutations_stay_inside_the_error_contract(self):
@@ -783,17 +159,11 @@ class TestMalformedInputFuzz:
                 pass
 
     def test_decompression_bomb_guard(self):
-        """A few hundred payload bytes declaring 65535x65535 must refuse
-        up front (PIL MAX_IMAGE_PIXELS precedent), not attempt a 34 GB
-        coefficient allocation."""
+        """A few dozen payload bytes declaring 2^30 x 2^30 pixels must
+        refuse up front (PIL MAX_IMAGE_PIXELS precedent), not attempt the
+        allocation."""
         import struct
         import zlib
-
-        enc = bytearray(mc.encode_jpeg(_gradient_gray(8, 8), quality=90))
-        i = enc.find(b"\xff\xc0")
-        enc[i + 5 : i + 9] = struct.pack(">HH", 65535, 65535)
-        with pytest.raises(ValueError, match="max_pixels"):
-            mc.decode_jpeg(bytes(enc))
 
         def chunk(ctype, data):
             crc = zlib.crc32(ctype + data) & 0xFFFFFFFF
@@ -817,7 +187,7 @@ class TestMalformedInputFuzz:
         """An HONEST small header with a deflate stream that inflates to
         ~50 MB: the bounded decompressobj must stop at the declared raw
         size + 1 and refuse, never materializing the full inflate output
-        (advisor-verified gap: the pixel cap alone doesn't stop this)."""
+        (the pixel cap alone doesn't stop this)."""
         import struct
         import tracemalloc
         import zlib
@@ -849,9 +219,9 @@ class TestMalformedInputFuzz:
 
 class TestGif:
     """GIF87a/89a: LZW + palettes + interlace + animation, pinned by
-    round-trip through our own encoder AND by real GIFs from the host's
-    Python installation (idlelib icons — real-encoder streams, skipped
-    when absent)."""
+    round-trip through our own encoder AND by real GIFs from the
+    running Python's standard library (idlelib icons — real-encoder
+    streams, skipped when absent)."""
 
     def _pal(self):
         rng = np.random.RandomState(4)
@@ -863,15 +233,15 @@ class TestGif:
         for shape in ((1, 1), (13, 17), (8, 8), (3, 31)):
             img = rng.randint(0, 7, shape).astype(np.uint8)
             for il in (False, True):
-                px = mc.decode_gif(mc.encode_gif([img], pal, interlace=il))
+                px = mm.decode_gif(mm.encode_gif([img], pal, interlace=il))
                 assert (px == pal[img]).all(), (shape, il)
 
     def test_animation_timestamps_and_content(self):
         rng = np.random.RandomState(5)
         pal = self._pal()
         frames = [rng.randint(0, 7, (9, 11)).astype(np.uint8) for _ in range(3)]
-        g = mc.encode_gif(frames, pal, delays_cs=[10, 5, 20])
-        out = mc.decode_gif_frames(g)
+        g = mm.encode_gif(frames, pal, delays_cs=[10, 5, 20])
+        out = mm.decode_gif_frames(g)
         assert [t for t, _ in out] == [0, 100, 150]
         for (_, got), src in zip(out, frames):
             assert (got == pal[src]).all()
@@ -885,7 +255,7 @@ class TestGif:
 
         pal = np.array([[10, 10, 10], [200, 0, 0], [0, 200, 0]], np.uint8)
         f1 = np.array([[1, 1], [1, 1]], np.uint8)
-        g = bytearray(mc.encode_gif([f1], pal))
+        g = bytearray(mm.encode_gif([f1], pal))
         assert g[-1] == 0x3B
         g.pop()  # drop the trailer, append a hand-built second frame
         # GCE: disposal already applied to frame 1? Rebuild: set frame 1's
@@ -896,9 +266,9 @@ class TestGif:
         g += bytes([0x21, 0xF9, 4]) + struct.pack("<BHB", (0 << 2) | 1, 0, 2) + b"\x00"
         g += bytes([0x2C]) + struct.pack("<HHHHB", 0, 0, 1, 1, 0)
         g += bytes([2])  # LZW min code size
-        lzw = mc._lzw_encode_gif(2, bytes([2]))  # one transparent pixel
+        lzw = mm._lzw_encode_gif(2, bytes([2]))  # one transparent pixel
         g += bytes([len(lzw)]) + lzw + b"\x00" + b"\x3B"
-        frames = mc.decode_gif_frames(bytes(g))
+        frames = mm.decode_gif_frames(bytes(g))
         assert len(frames) == 2
         # frame 1 canvas: all red
         assert (frames[0][1] == pal[1]).all()
@@ -910,17 +280,17 @@ class TestGif:
     def test_malformed_gifs_refuse(self):
         pal = self._pal()
         img = np.zeros((4, 4), np.uint8)
-        g = mc.encode_gif([img], pal)
+        g = mm.encode_gif([img], pal)
         with pytest.raises(ValueError, match="GIF"):
-            mc.decode_gif(b"GIF89a" + b"\x00" * 4)  # truncated header
+            mm.decode_gif(b"GIF89a" + b"\x00" * 4)  # truncated header
         with pytest.raises(ValueError, match="trailer|truncated"):
-            mc.decode_gif(g[:-2])
+            mm.decode_gif(g[:-2])
         with pytest.raises(ValueError, match="max_pixels"):
             bomb = bytearray(g)
             bomb[6:10] = (60000).to_bytes(2, "little") + (60000).to_bytes(2, "little")
-            mc.decode_gif(bytes(bomb))
+            mm.decode_gif(bytes(bomb))
         with pytest.raises(ValueError, match="palette"):
-            mc.encode_gif([img], np.zeros((300, 3), np.uint8))
+            mm.encode_gif([img], np.zeros((300, 3), np.uint8))
 
     def test_lzw_dictionary_growth_and_clear(self):
         """A low-entropy megapixel-ish stream forces the LZW dictionary
@@ -929,10 +299,14 @@ class TestGif:
         rng = np.random.RandomState(6)
         img = (rng.randint(0, 4, (200, 300)) ** 2 % 4).astype(np.uint8)
         pal = self._pal()[:4]
-        px = mc.decode_gif(mc.encode_gif([img], pal))
+        px = mm.decode_gif(mm.encode_gif([img], pal))
         assert (px == pal[img]).all()
 
-    _ICONS = "/root/.pyenv/versions/3.11.7/lib/python3.11/idlelib/Icons"
+    _ICONS = __import__("os").path.join(
+        __import__("os").path.dirname(__import__("os").__file__),
+        "idlelib",
+        "Icons",
+    )
 
     @pytest.mark.skipif(
         not __import__("os").path.isdir(_ICONS),
@@ -944,7 +318,7 @@ class TestGif:
         paths = sorted(glob.glob(f"{self._ICONS}/*.gif"))
         assert paths, "icon dir exists but holds no gifs"
         for p in paths[:8]:
-            frames = mc.decode_gif_frames(open(p, "rb").read())
+            frames = mm.decode_gif_frames(open(p, "rb").read())
             h, w, c = frames[0][1].shape
             assert c == 3 and 1 <= h <= 64 and 1 <= w <= 64, p
 
@@ -954,7 +328,7 @@ class TestGif:
         pal = self._pal()
         rng0 = np.random.RandomState(8)
         img = rng0.randint(0, 7, (16, 16)).astype(np.uint8)
-        payload = mc.encode_gif([img, img.T.copy()], pal, delays_cs=[5, 5])
+        payload = mm.encode_gif([img, img.T.copy()], pal, delays_cs=[5, 5])
         rng = random.Random(99)
         for _ in range(200):
             b = bytearray(payload)
@@ -968,7 +342,7 @@ class TestGif:
                 i = rng.randrange(len(b))
                 b[i:i] = bytes(rng.randrange(256) for _ in range(rng.randrange(1, 12)))
             try:
-                mc.decode_gif_frames(bytes(b))
+                mm.decode_gif_frames(bytes(b))
             except (ValueError, NotImplementedError):
                 pass
 
@@ -981,7 +355,7 @@ def test_gif_composite_bytes_cap():
     import struct
 
     pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
-    base = bytearray(mc.encode_gif([np.zeros((1, 1), np.uint8)], pal))
+    base = bytearray(mm.encode_gif([np.zeros((1, 1), np.uint8)], pal))
     # rewrite the logical screen to 2000x2000 and repeat the 1x1 frame
     # descriptor+data block 200 times: 200 * 2000*2000*3 = 2.4 GB of
     # composited copies if materialized
@@ -990,8 +364,8 @@ def test_gif_composite_bytes_cap():
     frame_block = bytes(base[i:-1])  # image descriptor .. before trailer
     payload = bytes(base[:i]) + frame_block * 200 + b"\x3b"
     with pytest.raises(ValueError, match="composite-bytes cap"):
-        mc.decode_gif_frames(payload)
-    n = sum(1 for _ in mc._iter_gif_frames(payload))
+        mm.decode_gif_frames(payload)
+    n = sum(1 for _ in mm._iter_gif_frames(payload))
     assert n == 200  # the streaming form walks all frames in O(1 frame)
 
 
@@ -1012,7 +386,7 @@ def test_property_gif_roundtrip(h, w, n_pal, seed, interlace):
     rng = np.random.RandomState(seed)
     pal = rng.randint(0, 256, (n_pal, 3)).astype(np.uint8)
     idx = rng.randint(0, n_pal, (h, w)).astype(np.uint8)
-    px = mc.decode_gif(mc.encode_gif([idx], pal, interlace=interlace))
+    px = mm.decode_gif(mm.encode_gif([idx], pal, interlace=interlace))
     assert px.shape == (h, w, 3)
     assert (px == pal[idx]).all()
 
@@ -1029,29 +403,11 @@ def test_property_gif_roundtrip(h, w, n_pal, seed, interlace):
 def test_property_png_roundtrip(h, w, rgb, interlace, filt, seed):
     """Random shapes x gray/RGB x plain/Adam7 x filters 0/1/2: encode ->
     stdlib decode recovers the pixels bit-exactly (the interlace pass
-    geometry has the same boundary-sensitivity class as the LZW widths
-    the GIF property caught)."""
+    geometry is boundary-sensitive)."""
     rng = np.random.RandomState(seed)
     shape = (h, w, 3) if rgb else (h, w)
     img = rng.randint(0, 256, shape).astype(np.uint8)
     got = mm._decode_png_pixels(
-        mc.encode_png(img, interlace=interlace, filter_type=filt)
+        mm.encode_png(img, interlace=interlace, filter_type=filt)
     )
     assert got.shape == img.shape and (got == img).all()
-
-
-@given(
-    st.lists(st.binary(min_size=1, max_size=300), min_size=1, max_size=8),
-    st.integers(min_value=1, max_value=60),
-    st.integers(min_value=1, max_value=1001),
-)
-@settings(max_examples=30, deadline=None)
-def test_property_avi_roundtrip(frames, rate, scale):
-    """Arbitrary frame payloads and rational frame rates round-trip the
-    RIFF container with floor-exact timestamps."""
-    avi = mc.encode_avi_mjpeg(frames, fps_rate=rate, fps_scale=scale)
-    dec = mc.decode_avi_mjpeg(avi)
-    assert [f for _, f in dec] == frames
-    assert [t for t, _ in dec] == [
-        i * 1000 * scale // rate for i in range(len(frames))
-    ]
