@@ -106,9 +106,9 @@ def _pin_wave_mtime(wave_dir: str, wave: int) -> None:
     discovered files by modification time with contractually-undefined
     tie order; on coarse-mtime filesystems several tiny sequential wave
     writes can share a tick, so any registration whose oracle depends on
-    wave DRAIN order (m14/m14b keep-first arrival, m15 epoch routing)
-    must pin the order explicitly rather than ride on write latency
-    (round-12 ADVICE).
+    wave DRAIN order (m12's sentinel wave last, m14/m14b keep-first
+    arrival, m15 epoch routing) must pin the order explicitly rather
+    than ride on write latency (round-12 ADVICE).
 
     The base is the wave's own just-written max mtime (i.e. "now"), NOT
     a fixed past epoch: FileStreamSource silently ignores files older
@@ -132,28 +132,55 @@ def _pin_wave_mtime(wave_dir: str, wave: int) -> None:
         os.utime(fp, (wave_ts, wave_ts))
 
 
-def _drain_waves(spark, in_dir: str, ckpt: str, body, schema) -> None:
-    """The standard wave-drain lifecycle every foreachBatch registration
-    uses: file stream over ``in_dir/wave*`` (one file per micro-batch),
-    ``body(batch_df, batch_id)`` per batch, checkpointed availableNow,
-    scoped shuffle partitions. Factored once (round-12 review: the block
-    was copy-pasted five times; any lifecycle change — a new option, the
-    partition scoping, the mtime-pinning interplay — now edits here)."""
-    import os
+def _write_waves(waves: list[DataFrame], in_dir: str) -> None:
+    """Write each DataFrame as one file in ``in_dir/wave<i>`` and pin its
+    mtime (``_pin_wave_mtime``), so the drain order of ``_wave_stream`` is
+    the list order, not an accident of write latency."""
+    for i, w in enumerate(waves):
+        wave_dir = os.path.join(in_dir, f"wave{i}")
+        w.coalesce(1).write.mode("overwrite").parquet(wave_dir)
+        _pin_wave_mtime(wave_dir, i)
 
-    stream = (
+
+def _wave_stream(spark: SparkSession, in_dir: str, schema) -> DataFrame:
+    """File stream over ``in_dir/wave*``, one file per micro-batch, so
+    each wave written by ``_write_waves``/``_write_epoch_waves`` is its
+    own batch, in wave order."""
+    return (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(os.path.join(in_dir, "wave*"))
     )
+
+
+def _drain(spark: SparkSession, writer, ckpt: str) -> None:
+    """Run one streaming query to completion: the single lifecycle every
+    registration's stream goes through. It owns the checkpoint location
+    (``ckpt``), the availableNow trigger, the scoped shuffle partitions
+    (``_stream_shuffle_partitions``) around start and wait, the unbounded
+    wait (a bounded one could return while the sink is still being
+    written), and the handle: on any exception it stops the query it
+    started and re-raises. The caller owns the source, the plan and the
+    sink (``writer`` is a configured, unstarted DataStreamWriter)."""
     with _stream_shuffle_partitions(spark):
         q = (
-            stream.writeStream.foreachBatch(body)
-            .option("checkpointLocation", ckpt)
+            writer.option("checkpointLocation", ckpt)
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
+        try:
+            q.awaitTermination()
+        except BaseException:
+            q.stop()
+            raise
+
+
+def _drain_waves(spark, in_dir: str, ckpt: str, body, schema) -> None:
+    """The standard wave-drain lifecycle every foreachBatch registration
+    uses: ``_wave_stream`` over ``in_dir``, ``body(batch_df, batch_id)``
+    per batch, run through ``_drain``."""
+    stream = _wave_stream(spark, in_dir, schema)
+    _drain(spark, stream.writeStream.foreachBatch(body), ckpt)
 
 
 def _par(spark: SparkSession) -> int:
@@ -3861,52 +3888,46 @@ def m10_python_stream_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     rows, batch = 500, 250  # 2 data restarts + 1 empty confirm batch
 
-    with _stream_shuffle_partitions(spark):
-        drained = 0
-        failures = []
-        for _ in range(rows // batch + 5):  # bounded restart loop
-            q = None
-            try:
-                q = (
-                    spark.readStream.format("synthetic_corpus")
-                    .option("rows", rows)
-                    .option("batchsize", batch)
-                    .load()
-                    .writeStream.format("parquet")
-                    .option("path", out)
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)  # single-batch fallback
-                    .start()
-                )
-                q.awaitTermination()
-            except Exception as err:
-                # A restart attempt that dies (e.g. the Python source worker
-                # missing the JVM's connect-back window under CPU contention
-                # — observed once at local[8]) is EXACTLY the crash the
-                # lifecycle is built to recover from: the next restart
-                # resumes from the last committed offset, so retrying is the
-                # production response, not masking. Bounded: a persistent
-                # fault still surfaces loudly, chained to the first one.
-                failures.append(err)
-                if len(failures) > 2:
-                    raise err from failures[0]
-                _log.warning(
-                    "m10 restart %d failed, retrying: %s: %s",
-                    len(failures),
-                    type(err).__name__,
-                    err,
-                )
-                if q is not None:
-                    q.stop()
-                continue
-            n = spark.read.parquet(out).count()
-            if n == drained == rows:
-                break
-            drained = n
-        else:
-            raise RuntimeError(
-                f"stream did not drain: {drained}/{rows} rows after restarts"
+    drained = 0
+    failures = []
+    for _ in range(rows // batch + 5):  # bounded restart loop
+        try:
+            # availableNow falls back to a single batch per restart
+            writer = (
+                spark.readStream.format("synthetic_corpus")
+                .option("rows", rows)
+                .option("batchsize", batch)
+                .load()
+                .writeStream.format("parquet")
+                .option("path", out)
             )
+            _drain(spark, writer, ckpt)
+        except Exception as err:
+            # A restart attempt that dies (e.g. the Python source worker
+            # missing the JVM's connect-back window under CPU contention
+            # — observed once at local[8]) is EXACTLY the crash the
+            # lifecycle is built to recover from: the next restart
+            # resumes from the last committed offset, so retrying is the
+            # production response, not masking. Bounded: a persistent
+            # fault still surfaces loudly, chained to the first one.
+            failures.append(err)
+            if len(failures) > 2:
+                raise err from failures[0]
+            _log.warning(
+                "m10 restart %d failed, retrying: %s: %s",
+                len(failures),
+                type(err).__name__,
+                err,
+            )
+            continue
+        n = spark.read.parquet(out).count()
+        if n == drained == rows:
+            break
+        drained = n
+    else:
+        raise RuntimeError(
+            f"stream did not drain: {drained}/{rows} rows after restarts"
+        )
     return (
         spark.read.parquet(out)
         .groupBy("lang")
@@ -5723,17 +5744,14 @@ def m4_stateful_running_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame
     import uuid
 
     sink = f"m4_stateful_out_{uuid.uuid4().hex[:8]}"
-    q = (
+    writer = (
         running_stats_anomalies(stream, min_n=10)
         .filter(F.col("is_anomaly"))
         .writeStream.format("memory")
         .queryName(sink)
         .outputMode("append")
-        .option("checkpointLocation", _scratch_dir("stateful_ckpt_"))
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
+    _drain(session, writer, _scratch_dir("stateful_ckpt_"))
     # memory-sink tables register in the owning session's catalog
     return (
         session.table(sink)
@@ -5797,6 +5815,30 @@ def d17_gap_filled_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _click_purchase_streams(
+    spark: SparkSession, sf_dir: str, base: str
+) -> tuple[DataFrame, DataFrame]:
+    """The two m5 join inputs: the events' clicks (``a_*`` columns) and
+    purchases (``b_*``), each staged as two parquet files under
+    ``base/a`` and ``base/b`` and returned as a file stream over its dir.
+    withWatermark requires TIMESTAMP (LTZ); the testdata ts is NTZ, and
+    the NTZ->LTZ cast is an identity instant in this UTC session."""
+    ev = _t(spark, sf_dir, "events")
+    streams = []
+    for side, event_type in (("a", "click"), ("b", "purchase")):
+        staged = ev.filter(F.col("event_type") == event_type).select(
+            "user_id",
+            F.col("event_id").alias(f"{side}_event_id"),
+            F.col("ts").cast("timestamp").alias(f"{side}_ts"),
+        )
+        side_dir = os.path.join(base, side)
+        staged.repartition(2).write.mode("overwrite").parquet(side_dir)
+        streams.append(
+            spark.readStream.schema(staged.schema).parquet(side_dir)
+        )
+    return streams[0], streams[1]
+
+
 @register(
     "m5_stream_stream_join",
     """
@@ -5819,49 +5861,22 @@ def m5_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving no pair is dropped or duplicated across micro-batches. The
     test watermark exceeds the fixture span so eviction can't race the
     drain (production uses a tight one — the state bound is the point)."""
-    import os
-
     from apache_spark_streaming_project_spark.streaming.joins import (
         interval_join,
     )
 
     base = _scratch_dir("m5_ssj_")
-    a_dir = os.path.join(base, "a")
-    b_dir = os.path.join(base, "b")
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-
-    # withWatermark requires TIMESTAMP (LTZ); the testdata ts is NTZ, and
-    # the NTZ->LTZ cast is an identity instant in this UTC session
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("a_event_id"),
-        F.col("ts").cast("timestamp").alias("a_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("b_event_id"),
-        F.col("ts").cast("timestamp").alias("b_ts"),
-    )
-    clicks.repartition(2).write.mode("overwrite").parquet(a_dir)
-    purchases.repartition(2).write.mode("overwrite").parquet(b_dir)
-
-    sa = spark.readStream.schema(clicks.schema).parquet(a_dir)
-    sb = spark.readStream.schema(purchases.schema).parquet(b_dir)
+    sa, sb = _click_purchase_streams(spark, sf_dir, base)
     joined = interval_join(
         sa, sb, "user_id", "a_ts", "b_ts", "6 hours", watermark="3650 days"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            joined.select("user_id", "a_event_id", "b_event_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = (
+        joined.select("user_id", "a_event_id", "b_event_id")
+        .writeStream.format("parquet")
+        .option("path", out)
+    )
+    _drain(spark, writer, os.path.join(base, "ckpt"))
     return spark.read.parquet(out).orderBy("a_event_id", "b_event_id")
 
 
@@ -5906,50 +5921,23 @@ def m5_stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     clicks under the final watermark (streaming/joins.py:44 documents
     the emission rule). State per side stays bounded by
     watermark + interval (probed in BASELINE.md)."""
-    import os
-
     from apache_spark_streaming_project_spark.streaming.joins import (
         interval_join,
     )
 
     base = _scratch_dir("m5_lo_")
-    a_dir = os.path.join(base, "a")
-    b_dir = os.path.join(base, "b")
     out = os.path.join(base, "out")
-    ckpt = os.path.join(base, "ckpt")
-
-    # withWatermark requires TIMESTAMP (LTZ); NTZ->LTZ is an identity
-    # instant in this UTC session (see m5_stream_stream_join)
-    ev = _t(spark, sf_dir, "events")
-    clicks = ev.filter(F.col("event_type") == "click").select(
-        "user_id",
-        F.col("event_id").alias("a_event_id"),
-        F.col("ts").cast("timestamp").alias("a_ts"),
-    )
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        F.col("event_id").alias("b_event_id"),
-        F.col("ts").cast("timestamp").alias("b_ts"),
-    )
-    clicks.repartition(2).write.mode("overwrite").parquet(a_dir)
-    purchases.repartition(2).write.mode("overwrite").parquet(b_dir)
-
-    sa = spark.readStream.schema(clicks.schema).parquet(a_dir)
-    sb = spark.readStream.schema(purchases.schema).parquet(b_dir)
+    sa, sb = _click_purchase_streams(spark, sf_dir, base)
     joined = interval_join(
         sa, sb, "user_id", "a_ts", "b_ts", "6 hours",
         watermark="1 hour", how="leftOuter",
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            joined.select("user_id", "a_event_id", "b_event_id")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = (
+        joined.select("user_id", "a_event_id", "b_event_id")
+        .writeStream.format("parquet")
+        .option("path", out)
+    )
+    _drain(spark, writer, os.path.join(base, "ckpt"))
     return spark.read.parquet(out).orderBy("a_event_id", "b_event_id")
 
 
@@ -6688,16 +6676,12 @@ def m6_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dd = streaming_dedup_within_watermark(
         stream, ["event_id"], "ts", "10 minutes"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            dd.select("event_id", "user_id", "event_type")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = (
+        dd.select("event_id", "user_id", "event_type")
+        .writeStream.format("parquet")
+        .option("path", out)
+    )
+    _drain(spark, writer, ckpt)
     return spark.read.parquet(out).orderBy("event_id")
 
 
@@ -7310,15 +7294,7 @@ def m7_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     sess = session_windows(
         stream, "ts", ["user_id"], gap="1 day", watermark="1 hour"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, sess.writeStream.format("parquet").option("path", out), ckpt)
     return (
         spark.read.parquet(out)
         .select("user_id", "session_start", "session_end", "count")
@@ -7449,15 +7425,7 @@ def m8_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = windowed_counts(
         stream, "ts", ["event_type"], "1 day", watermark="1 hour"
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            agg.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, agg.writeStream.format("parquet").option("path", out), ckpt)
     return (
         spark.read.parquet(out)
         .select("window_start", "window_end", "event_type", "count")
@@ -7757,7 +7725,6 @@ def m9_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir = os.path.join(base, "in")
     table = os.path.join(base, "table")
     ckpt = os.path.join(base, "ckpt")
-    os.makedirs(in_dir)
 
     d = _t(spark, sf_dir, "documents").select("doc_id", "text")
     waves = [
@@ -7773,26 +7740,12 @@ def m9_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("U3: "), F.col("text")).alias("text"),
         ),
     ]
-    for i, w in enumerate(waves):
-        w.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(in_dir, f"wave{i}")
-        )
-
-    schema = waves[0].schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(in_dir, "wave*"))
+    _write_waves(waves, in_dir)
+    stream = _wave_stream(spark, in_dir, waves[0].schema)
+    writer = streaming_merge_upsert(
+        stream, table, ["doc_id"], "version", ckpt, n_buckets=16
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            streaming_merge_upsert(
-                stream, table, ["doc_id"], "version", ckpt, n_buckets=16
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, writer, ckpt)
     return (
         spark.read.parquet(table)
         .select("doc_id", "version", "text")
@@ -8837,15 +8790,8 @@ def m11_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.floor(F.col("value") * 100).cast("bigint").alias("cents"),
         )
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            enriched.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    writer = enriched.writeStream.format("parquet").option("path", out)
+    _drain(spark, writer, ckpt)
     return (
         spark.read.parquet(out)
         .groupBy("event_type", "segment")
@@ -10842,10 +10788,11 @@ def m12_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark past every real session's end so append mode flushes
     them all (the standard finite-input session-flush recipe — without
     it the final sessions would sit unemitted in state when availableNow
-    terminates). Wave subdirs are written sequentially, so the file
-    source's (mtime, path) ordering processes them in event-time order —
-    the same ordering contract m9's waves rely on; the 1-hour watermark
-    never drops anything because waves do not overlap in time. The
+    terminates). ``_write_waves`` pins strictly increasing wave mtimes,
+    so the file source drains the waves in event-time order with the
+    sentinel last (drained early, it would jump the watermark and drop
+    the real waves as late); the 1-hour watermark never drops anything
+    because waves do not overlap in time. The
     drained result must equal the batch gaps-and-islands sessionization
     the oracle computes (lag + running-sum session ids, end = last event
     + gap). State is bounded by the watermark. The sentinel's own
@@ -10879,15 +10826,8 @@ def m12_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit("2024-04-15 00:00:00").cast("timestamp").alias("ts"),
         ),
     ]
-    for i, w in enumerate(waves):
-        w.coalesce(1).write.mode("overwrite").parquet(
-            os.path.join(in_dir, f"wave{i}")
-        )
-    stream = (
-        spark.readStream.schema(waves[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(in_dir, "wave*"))
-    )
+    _write_waves(waves, in_dir)
+    stream = _wave_stream(spark, in_dir, waves[0].schema)
     sess = (
         stream.withWatermark("ts", "1 hour")
         .groupBy(
@@ -10907,15 +10847,7 @@ def m12_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "last_event",
         )
     )
-    with _stream_shuffle_partitions(spark):
-        q = (
-            sess.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _drain(spark, sess.writeStream.format("parquet").option("path", out), ckpt)
     return (
         spark.read.parquet(out)
         .filter(F.col("user_id") >= 0)
@@ -11166,11 +11098,10 @@ def m13_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # set-merge contract is only actually exercised when the merge sees
     # duplicates — the round-10 mutation audit found that with disjoint
     # waves, dropping kmv_merge's distinct() was a fixture no-op.
-    for i in range(3):
-        m = F.col("doc_id") % 3
-        d.filter((m == i) | (m == (i + 1) % 3)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(in_dir, f"wave{i}"))
+    m = F.col("doc_id") % 3
+    _write_waves(
+        [d.filter((m == i) | (m == (i + 1) % 3)) for i in range(3)], in_dir
+    )
 
     def upsert_sketch(batch_df, batch_id):
         batch_sk = kmv_sketch(
@@ -12363,15 +12294,9 @@ def m15_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).repartition(1).write.mode("overwrite").parquet(lam_dir)
     # candidates arrive in three waves
     cands = d.filter(F.col("lang") != F.lit("en")).select("doc_id", "text")
-    for i in range(3):
-        wave_dir = os.path.join(in_dir, f"wave{i}")
-        cands.filter(F.col("doc_id") % 3 == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(wave_dir)
-        # pin strictly increasing mtimes so wave drain order — which the
-        # oracle's epoch = doc_id % 3 expectation rides on — is explicit,
-        # not an accident of write latency (round-12 ADVICE)
-        _pin_wave_mtime(wave_dir, i)
+    _write_waves(
+        [cands.filter(F.col("doc_id") % 3 == i) for i in range(3)], in_dir
+    )
 
     def score_batch(batch_df, batch_id):
         # idempotent batch-keyed publish — the helper is importable so
@@ -12386,7 +12311,7 @@ def m15_streaming_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ROUTING end-to-end instead of restating the formula (round-11
     # code-review finding: the re-derived column was tautological).
     # Wave order is deterministic: each wave's part files carry an
-    # explicitly pinned, strictly increasing mtime (os.utime above), and
+    # explicitly pinned, strictly increasing mtime (_write_waves), and
     # FileStreamSource with maxFilesPerTrigger=1 drains by mtime — so
     # drain order no longer depends on filesystem timestamp granularity.
     return (
@@ -12891,13 +12816,10 @@ def m23_streaming_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # overlapping waves: every doc is delivered in TWO of the three
     # waves, so the set-merge sees real duplicates (see docstring)
-    for i in range(3):
-        m = F.col("epoch")
-        wave_dir = os.path.join(in_dir, f"wave{i}")
-        d.filter((m == i) | (m == (i + 1) % 3)).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(wave_dir)
-        _pin_wave_mtime(wave_dir, i)
+    m = F.col("epoch")
+    _write_waves(
+        [d.filter((m == i) | (m == (i + 1) % 3)) for i in range(3)], in_dir
+    )
 
     order_key = F.md5(
         F.concat(F.col("doc_id").cast("string"), F.lit(":m23"))

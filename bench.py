@@ -1,7 +1,8 @@
 """Benchmark harness — runs the headline queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+JSON line: {"metric": ..., "value": total_sec, "valid": true, "unit": "sec",
+"queries": {name: sec}, "sf": ...}. If any query errored, "value" is null
+and "valid" false: the surviving queries' sum is not a comparable total.
 
 Each query is executed to completion with the "noop" sink (full plan runs,
 nothing is collected to the driver — measures engine throughput, not driver
@@ -91,10 +92,14 @@ def main() -> None:
         name: (round(statistics.median(ts), 4) if ts else None)
         for name, ts in samples.items()
     }
+    # a run where any query errored has no comparable total: a partial sum
+    # would read as a speedup
+    valid = not errors
     total = round(sum(t for t in timings.values() if t is not None), 4)
     out = {
         "metric": "total_query_runtime",
-        "value": total,
+        "value": total if valid else None,
+        "valid": valid,
         "unit": "sec",
         "queries": timings,
         "sf": sf,
@@ -114,7 +119,7 @@ def main() -> None:
     # for 208 queries makes the full record too long for that window.
     print(json.dumps(out))
     sys.stdout.flush()
-    headline = {k: out[k] for k in ("metric", "value", "unit", "sf")}
+    headline = {k: out[k] for k in ("metric", "value", "valid", "unit", "sf")}
     headline["n_queries"] = len(timings)
     if errors:
         headline["n_errors"] = len(errors)

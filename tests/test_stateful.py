@@ -108,6 +108,9 @@ def test_idle_timeout_evicts_and_restarts(spark, tmp_path):
         r["event_id"]: r
         for r in spark.table("stateful_ttl_out").collect()
     }
+    # with a processing-time state timeout the availableNow query keeps
+    # running no-data batches; stop it so it does not outlive the test
+    q.stop()
     assert rows[5]["n_seen"] == 6          # b1 accumulated normally
     assert rows[102]["n_seen"] == 3        # u2 unaffected
     # u1 was evicted while idle -> statistics restarted cold in b3

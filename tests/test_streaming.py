@@ -982,3 +982,103 @@ def test_session_state_survives_restart(spark, tmp_path):
     assert got == [
         (1, "2024-06-01 10:00:00", "2024-06-01 10:50:00", 3)
     ], got
+
+
+def test_drain_failure_surfaces_and_leaves_no_query(spark, tmp_path):
+    """``entry_queries._drain`` owns the query lifecycle: a failing
+    micro-batch surfaces as the drain's own error, no query it started
+    stays active, and the scoped shuffle-partition override is undone.
+    Queries already active on the shared session (another test's) are
+    not the drain's, so only new ones count."""
+    from apache_spark_streaming_project_spark.entry_queries import _drain
+
+    in_dir = str(tmp_path / "in")
+    spark.range(3).write.parquet(in_dir)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    already_active = {q.id for q in spark.streams.active}
+
+    def body(batch_df, batch_id):
+        raise ValueError("drain body failed")
+
+    stream = spark.readStream.schema("id long").parquet(in_dir)
+    with pytest.raises(Exception, match="drain body failed"):
+        _drain(spark, stream.writeStream.foreachBatch(body), str(tmp_path / "c"))
+    assert {q.id for q in spark.streams.active} <= already_active
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_drain_stops_its_handle_when_the_wait_fails(spark):
+    """If waiting fails while the query still runs (an interrupt, a
+    driver-side error), ``_drain`` stops the handle it started and
+    re-raises, instead of leaving the query running."""
+    from apache_spark_streaming_project_spark.entry_queries import _drain
+
+    class Query:
+        stopped = False
+
+        def awaitTermination(self):
+            raise KeyboardInterrupt
+
+        def stop(self):
+            self.stopped = True
+
+    class Writer:
+        def __init__(self):
+            self.settings = {}
+            self.query = Query()
+
+        def option(self, key, value):
+            self.settings[key] = value
+            return self
+
+        def trigger(self, **kw):
+            self.settings.update(kw)
+            return self
+
+        def start(self):
+            return self.query
+
+    writer = Writer()
+    with pytest.raises(KeyboardInterrupt):
+        _drain(spark, writer, "/ckpt")
+    assert writer.query.stopped
+    assert writer.settings == {"checkpointLocation": "/ckpt", "availableNow": True}
+
+
+def test_write_waves_drains_in_index_order(spark, tmp_path):
+    """``_write_waves`` pins one mtime per wave, strictly increasing
+    with the wave index, so ``_drain_waves`` hands the body one wave per
+    batch, in list order."""
+    import os
+
+    from apache_spark_streaming_project_spark.entry_queries import (
+        _drain_waves,
+        _write_waves,
+    )
+
+    in_dir = str(tmp_path / "in")
+    waves = [spark.range(1).select(F.lit(i).alias("wave")) for i in range(3)]
+    _write_waves(waves, in_dir)
+
+    mtimes = []
+    for i in range(3):
+        wave_dir = os.path.join(in_dir, f"wave{i}")
+        times = {
+            os.path.getmtime(os.path.join(wave_dir, fn))
+            for fn in os.listdir(wave_dir)
+        }
+        assert len(times) == 1, (i, times)
+        mtimes.extend(times)
+    assert mtimes[0] < mtimes[1] < mtimes[2], mtimes
+
+    seen = []
+    _drain_waves(
+        spark,
+        in_dir,
+        str(tmp_path / "ckpt"),
+        lambda batch_df, batch_id: seen.append(
+            [r.wave for r in batch_df.collect()]
+        ),
+        waves[0].schema,
+    )
+    assert seen == [[0], [1], [2]]

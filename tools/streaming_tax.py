@@ -45,30 +45,11 @@ def _timed(fn):
     return time.time() - t0, out
 
 
-def _drain(spark, in_dir: str, ckpt: str, body, schema) -> None:
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(in_dir, "wave*"))
-    )
-    from apache_spark_streaming_project_spark.entry_queries import (
-        _stream_shuffle_partitions,
-    )
-
-    with _stream_shuffle_partitions(spark):
-        q = (
-            stream.writeStream.foreachBatch(body)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-
 def probe_null(spark, sf_dir: str) -> dict:
     """Pure machinery: 3-wave drain with a count-only body vs 3 batch
     counts over the same files."""
     from apache_spark_streaming_project_spark.entry_queries import (
+        _drain_waves,
         _m14_docs,
         _write_epoch_waves,
     )
@@ -81,7 +62,7 @@ def probe_null(spark, sf_dir: str) -> dict:
     seen: list[int] = []
 
     def t_stream():
-        _drain(
+        _drain_waves(
             spark,
             in_dir,
             os.path.join(base, f"ckpt{len(os.listdir(base))}"),
