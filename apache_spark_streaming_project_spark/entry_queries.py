@@ -7743,7 +7743,7 @@ def m9_streaming_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     _write_waves(waves, in_dir)
     stream = _wave_stream(spark, in_dir, waves[0].schema)
     writer = streaming_merge_upsert(
-        stream, table, ["doc_id"], "version", ckpt, n_buckets=16
+        stream, table, ["doc_id"], "version", n_buckets=16
     )
     _drain(spark, writer, ckpt)
     return (

@@ -62,19 +62,3 @@ def occupation_stats(df: DataFrame) -> DataFrame:
         avg_exact("hours_per_week", scale=0, out_alias="avg_hours"),
         F.count("*").alias("count"),
     )
-
-
-def group_multi_agg(
-    df: DataFrame,
-    keys: list[str],
-    measures: list[tuple[str, str, int]],
-    count_alias: str = "count",
-) -> DataFrame:
-    """Generic S25-shaped builder: ``groupBy(keys).agg(avg(m) for m in
-    measures, count(*))`` with exact-decimal averages.
-
-    measures: (column, out_alias, decimal_scale) triples.
-    """
-    aggs = [avg_exact(c, scale=s, out_alias=a) for c, a, s in measures]
-    aggs.append(F.count("*").alias(count_alias))
-    return df.groupBy(*keys).agg(*aggs)

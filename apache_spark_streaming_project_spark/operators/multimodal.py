@@ -11,11 +11,9 @@ whole Arrow pipeline is hash-verifiable; ``fake_decode=False`` (real mode)
 decodes actual media — WAV audio via the stdlib ``wave`` module (always
 available), PNG images via a stdlib ``zlib`` decoder (always available:
 chunk walk + inflate + the five scanline filters, 8-bit gray/RGB/RGBA/
-palette, plain or Adam7 interlaced — see ``_decode_png_stdlib``),
-uncompressed 24-bit BMP and GIF (still and animated: LZW, interlace,
-transparency, disposal — see ``decode_gif_frames``) via stdlib+numpy
-decoders. Other image formats go through PIL and every other video
-container through PyAV WHEN IMPORTABLE
+palette, plain or Adam7 interlaced — see ``_decode_png_stdlib``) and
+uncompressed 24-bit BMP via stdlib+numpy decoders. Other image formats
+go through PIL and video containers through PyAV WHEN IMPORTABLE
 (import-guarded: environments without the libraries raise
 ``NotImplementedError`` with a clear message, and the corresponding tests
 skip). The Spark-side plumbing — schema, batch iteration, partition
@@ -462,390 +460,16 @@ def _decode_bmp_stdlib(payload: bytes) -> bytes:
     return _gray_from_rgb(_decode_bmp_pixels(payload)).tobytes()
 
 
-# GIF (87a/89a): LZW, palettes, interlace, animation with disposal — the
-# stdlib still-image and animation path when PIL / PyAV are absent.
-
-
-def _lzw_decode_gif(min_code_size: int, data: bytes, max_out: int) -> bytearray:
-    """GIF-flavor LZW decode (LSB-first variable-width codes, clear/EOI,
-    12-bit dictionary cap with deferred-clear tolerance). ``max_out``
-    bounds the output so a hostile stream cannot expand past the frame
-    it claims to fill (the LZW analog of the decompression-bomb guard)."""
-    if not 2 <= min_code_size <= 11:
-        raise ValueError(f"GIF LZW min code size {min_code_size} out of range")
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    base = [bytes([i]) for i in range(clear)] + [b"", b""]
-    table = list(base)
-    width = min_code_size + 1
-    out = bytearray()
-    prev: bytes | None = None
-    acc = nbits = 0
-    pos = 0
-    n = len(data)
-    while True:
-        while nbits < width:
-            if pos >= n:
-                raise ValueError("GIF LZW stream truncated (no EOI)")
-            acc |= data[pos] << nbits
-            pos += 1
-            nbits += 8
-        code = acc & ((1 << width) - 1)
-        acc >>= width
-        nbits -= width
-        if code == clear:
-            table = list(base)
-            width = min_code_size + 1
-            prev = None
-            continue
-        if code == eoi:
-            break
-        if code < len(table) and (code < clear or table[code]):
-            entry = table[code]
-        elif code == len(table) and prev is not None:
-            entry = prev + prev[:1]
-        else:
-            raise ValueError(f"invalid GIF LZW code {code}")
-        out += entry
-        if len(out) > max_out:
-            raise ValueError("GIF LZW output exceeds declared frame size")
-        if prev is not None and len(table) < 4096:
-            table.append(prev + entry[:1])
-            if len(table) == (1 << width) and width < 12:
-                width += 1
-        prev = entry
-    return out
-
-
-def _lzw_encode_gif(min_code_size: int, indices: bytes) -> bytes:
-    """GIF-flavor LZW encode, the inverse of :func:`_lzw_decode_gif` —
-    exists so GIF fixtures can be BUILT and differential-tested without
-    PIL. Standard greedy longest-match with clear-on-full.
-
-    Width bookkeeping mirrors the DECODER's table, not the encoder's:
-    the decoder appends one entry for EVERY processed data code after
-    the first in a segment — including the final flush emit, for which
-    the encoder registers nothing — so tracking only registrations
-    emits EOI one bit narrower than the decoder reads it whenever the
-    flush lands exactly on a width boundary (a hypothesis-found
-    desync)."""
-    clear = 1 << min_code_size
-    eoi = clear + 1
-    out = bytearray()
-    acc = nbits = 0
-    width = min_code_size + 1
-    dec_len = eoi + 1  # simulated decoder table length
-    emitted = 0  # data codes emitted since the last clear
-
-    def emit(code: int) -> None:
-        nonlocal acc, nbits
-        acc |= code << nbits
-        nbits += width
-        while nbits >= 8:
-            out.append(acc & 0xFF)
-            acc >>= 8
-            nbits -= 8
-
-    def emit_data(code: int) -> None:
-        # the decoder appends an entry while processing every data code
-        # except the first after a clear, and bumps its read width when
-        # its table size reaches 1 << width — replay that here so the
-        # NEXT emitted code (data, clear, or EOI) uses the width the
-        # decoder will read it at
-        nonlocal dec_len, emitted, width
-        emit(code)
-        emitted += 1
-        if emitted >= 2 and dec_len < 4096:
-            dec_len += 1
-            if dec_len == (1 << width) and width < 12:
-                width += 1
-
-    def emit_clear() -> None:
-        nonlocal dec_len, emitted, width
-        emit(clear)  # read at the current width, then both sides reset
-        width = min_code_size + 1
-        dec_len = eoi + 1
-        emitted = 0
-
-    table = {bytes([i]): i for i in range(clear)}
-    next_code = eoi + 1
-    emit_clear()
-    seq = b""
-    for b in bytes(indices):
-        cand = seq + bytes([b])
-        if cand in table:
-            seq = cand
-            continue
-        emit_data(table[seq])
-        table[cand] = next_code
-        next_code += 1
-        if next_code > 4095:
-            emit_clear()
-            table = {bytes([i]): i for i in range(clear)}
-            next_code = eoi + 1
-        seq = bytes([b])
-    if seq:
-        emit_data(table[seq])
-    emit(eoi)
-    if nbits:
-        out.append(acc & 0xFF)
-    return bytes(out)
-
-
-# GIF interlace passes: (first_row, step)
-_GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))
-
-
-def _gif_subblocks(payload: bytes, pos: int) -> tuple[bytes, int]:
-    """Concatenate a GIF sub-block chain starting at ``pos``; returns
-    (data, position after the 0-length terminator)."""
-    parts = []
-    n = len(payload)
-    while True:
-        if pos >= n:
-            raise ValueError("GIF sub-block chain truncated")
-        ln = payload[pos]
-        pos += 1
-        if ln == 0:
-            return b"".join(parts), pos
-        if pos + ln > n:
-            raise ValueError("GIF sub-block chain truncated")
-        parts.append(payload[pos : pos + ln])
-        pos += ln
-
-
-# materializing every composited frame of an animation is bounded: a
-# hostile 2 MB payload can declare 100k tiny frames on a megapixel
-# screen (~300 GB of canvas copies). The streaming path
-# (_iter_gif_frames, used by frame sampling) holds one frame at a time
-# and is not subject to this cap.
-MAX_GIF_COMPOSITE_BYTES = 1 << 30
-
-
-def decode_gif_frames(
-    payload: bytes, max_pixels: int | None = MAX_IMAGE_PIXELS
-) -> list[tuple[int, "np.ndarray"]]:
-    """Decode a GIF87a/89a — including animations — to
-    ``[(ts_ms, rgb_frame)]``: each entry is the composited logical
-    screen after drawing that frame, timestamped by the cumulative
-    graphic-control delays (frame 0 at 0 ms). Handles global/local
-    color tables, interlace, transparency, and disposal methods
-    0/1 (leave), 2 (restore to background), 3 (restore to previous).
-    Raises ``ValueError`` for malformed streams — same contract as the
-    other stdlib decoders — and for animations whose materialized
-    frames would exceed ``MAX_GIF_COMPOSITE_BYTES`` (stream them with
-    :func:`_iter_gif_frames` instead)."""
-    frames: list[tuple[int, "np.ndarray"]] = []
-    total = 0
-    for ts_ms, frame in _iter_gif_frames(payload, max_pixels):
-        total += frame.nbytes
-        if total > MAX_GIF_COMPOSITE_BYTES:
-            raise ValueError(
-                "GIF animation frames exceed the composite-bytes cap; "
-                "stream them with _iter_gif_frames"
-            )
-        frames.append((ts_ms, frame))
-    return frames
-
-
-def _iter_gif_frames(
-    payload: bytes, max_pixels: int | None = MAX_IMAGE_PIXELS
-):
-    """Generator form of :func:`decode_gif_frames`: yields
-    ``(ts_ms, rgb_frame)`` one composited frame at a time, so consumers
-    that keep only selected frames (video frame sampling) never hold the
-    whole animation."""
-    import struct
-
-    import numpy as np
-
-    if payload[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF payload")
-    if len(payload) < 13:
-        raise ValueError("truncated GIF header")
-    w, h, flags, bg_idx, _aspect = struct.unpack("<HHBBB", payload[6:13])
-    if w == 0 or h == 0:
-        raise ValueError("GIF declares zero dimensions")
-    if max_pixels is not None and w * h > max_pixels:
-        raise ValueError(
-            f"GIF declares {w}x{h} = {w * h} pixels, over the "
-            f"max_pixels cap {max_pixels}"
-        )
-    pos = 13
-    gct = None
-    if flags & 0x80:
-        n = 2 << (flags & 0x07)
-        if pos + 3 * n > len(payload):
-            raise ValueError("truncated GIF global color table")
-        gct = np.frombuffer(payload[pos : pos + 3 * n], np.uint8).reshape(n, 3)
-        pos += 3 * n
-    if gct is not None and bg_idx < gct.shape[0]:
-        background = gct[bg_idx].copy()
-    else:
-        background = np.zeros(3, np.uint8)
-    canvas = np.empty((h, w, 3), np.uint8)
-    canvas[:] = background
-    yielded = 0
-    ts_ms = 0
-    delay_cs = 0
-    transparent: int | None = None
-    disposal = 0
-    while True:
-        if pos >= len(payload):
-            raise ValueError("GIF stream truncated (no trailer)")
-        block = payload[pos]
-        pos += 1
-        if block == 0x3B:  # trailer
-            break
-        if block == 0x21:  # extension
-            if pos >= len(payload):
-                raise ValueError("truncated GIF extension")
-            label = payload[pos]
-            pos += 1
-            data, pos = _gif_subblocks(payload, pos)
-            if label == 0xF9 and len(data) >= 4:  # graphic control
-                gflags = data[0]
-                delay_cs = struct.unpack("<H", data[1:3])[0]
-                transparent = data[3] if gflags & 0x01 else None
-                disposal = (gflags >> 2) & 0x07
-            continue
-        if block != 0x2C:
-            raise ValueError(f"unknown GIF block 0x{block:02x}")
-        if pos + 9 > len(payload):
-            raise ValueError("truncated GIF image descriptor")
-        left, top, fw, fh, iflags = struct.unpack(
-            "<HHHHB", payload[pos : pos + 9]
-        )
-        pos += 9
-        if fw == 0 or fh == 0 or left + fw > w or top + fh > h:
-            raise ValueError("GIF frame rectangle outside the logical screen")
-        pal = gct
-        if iflags & 0x80:  # local color table
-            n = 2 << (iflags & 0x07)
-            if pos + 3 * n > len(payload):
-                raise ValueError("truncated GIF local color table")
-            pal = np.frombuffer(
-                payload[pos : pos + 3 * n], np.uint8
-            ).reshape(n, 3)
-            pos += 3 * n
-        if pal is None:
-            raise ValueError("GIF frame has no color table")
-        if pos >= len(payload):
-            raise ValueError("truncated GIF image data")
-        mcs = payload[pos]
-        pos += 1
-        data, pos = _gif_subblocks(payload, pos)
-        raw = _lzw_decode_gif(mcs, data, fw * fh)
-        if len(raw) < fw * fh:
-            raise ValueError("GIF LZW data shorter than the frame")
-        idx = np.frombuffer(bytes(raw[: fw * fh]), np.uint8)
-        if int(idx.max(initial=0)) >= pal.shape[0]:
-            raise ValueError("GIF pixel index out of color-table range")
-        if iflags & 0x40:  # interlaced: reorder rows into place
-            rows = np.empty((fh, fw), np.uint8)
-            src = idx.reshape(fh, fw)
-            o = 0
-            for first, step in _GIF_INTERLACE:
-                cnt = len(range(first, fh, step))
-                rows[first::step] = src[o : o + cnt]
-                o += cnt
-            idx2d = rows
-        else:
-            idx2d = idx.reshape(fh, fw)
-        saved = canvas.copy() if disposal == 3 else None
-        rect = canvas[top : top + fh, left : left + fw]
-        rgb = pal[idx2d]
-        if transparent is not None:
-            mask = idx2d != transparent
-            rect[mask] = rgb[mask]
-        else:
-            rect[:] = rgb
-        yield ts_ms, canvas.copy()
-        yielded += 1
-        ts_ms += delay_cs * 10
-        if disposal == 2:
-            canvas[top : top + fh, left : left + fw] = background
-        elif disposal == 3 and saved is not None:
-            canvas = saved
-        delay_cs = 0
-        transparent = None
-        disposal = 0
-    if not yielded:
-        raise ValueError("GIF contains no image frames")
-
-
-def decode_gif(payload: bytes) -> "np.ndarray":
-    """First composited frame of a GIF as (h, w, 3) RGB — the still-image
-    view the image-feature kernels use."""
-    return decode_gif_frames(payload)[0][1]
-
-
-def encode_gif(
-    frames: list["np.ndarray"],
-    palette: "np.ndarray",
-    delays_cs: list[int] | None = None,
-    interlace: bool = False,
-) -> bytes:
-    """Minimal GIF89a writer: full-frame index arrays (h, w) uint8 over
-    one global color table, optional per-frame delays (centiseconds) and
-    interlacing. Exists so GIF fixtures can be BUILT and the decoder
-    differential-tested without PIL; output is standard."""
-    import struct
-
-    import numpy as np
-
-    palette = np.asarray(palette, dtype=np.uint8)
-    if palette.ndim != 2 or palette.shape[1] != 3 or not 1 <= palette.shape[0] <= 256:
-        raise ValueError("palette must be (n<=256, 3) uint8")
-    if not frames:
-        raise ValueError("GIF needs at least one frame")
-    h, w = np.asarray(frames[0]).shape[:2]
-    # color table size: power of two >= max(palette size, 2)
-    bits = max((palette.shape[0] - 1).bit_length(), 1)
-    n_pal = 1 << bits
-    pal_full = np.zeros((n_pal, 3), np.uint8)
-    pal_full[: palette.shape[0]] = palette
-    out = bytearray(b"GIF89a")
-    out += struct.pack("<HHBBB", w, h, 0x80 | (bits - 1), 0, 0)
-    out += pal_full.tobytes()
-    mcs = max(bits, 2)
-    for fi, frame in enumerate(frames):
-        frame = np.asarray(frame, dtype=np.uint8)
-        if frame.shape != (h, w):
-            raise ValueError("all frames must be (h, w) index arrays")
-        if int(frame.max(initial=0)) >= palette.shape[0]:
-            raise ValueError("frame index out of palette range")
-        delay = delays_cs[fi] if delays_cs else 0
-        out += bytes([0x21, 0xF9, 4]) + struct.pack("<BHB", 0, delay, 0) + b"\x00"
-        out += bytes([0x2C]) + struct.pack(
-            "<HHHHB", 0, 0, w, h, 0x40 if interlace else 0
-        )
-        if interlace:
-            rows = [frame[first::step] for first, step in _GIF_INTERLACE]
-            body = np.concatenate(rows, axis=0).tobytes()
-        else:
-            body = frame.tobytes()
-        out += bytes([mcs])
-        lzw = _lzw_encode_gif(mcs, body)
-        for i in range(0, len(lzw), 255):
-            blockb = lzw[i : i + 255]
-            out += bytes([len(blockb)]) + blockb
-        out += b"\x00"
-    out += b"\x3B"
-    return bytes(out)
-
-
 def _decode_image_bytes(payload: bytes, fake: bool) -> list[int]:
     """Image decode kernel. Fake mode (the ORACLE path) derives a
     deterministic 8-bin byte histogram from the raw payload (exact integer
     counts — SQL-reproducible, so the oracle gate can hash-verify the whole
     Arrow pipeline; the normalized float 'feature' is derived from it).
-    Real mode: PIL when importable (any format); otherwise PNG/BMP/GIF
+    Real mode: PIL when importable (any format); otherwise PNG/BMP
     payloads decode via the stdlib decoders (real pixels, zero
-    third-party deps; a GIF contributes its first composited frame) and
-    every other format raises. Both real paths produce the same
-    grayscale pixel-intensity histogram in the same 8 bins: the stdlib
-    PNG/BMP/GIF pixels are bit-identical to PIL's."""
+    third-party deps) and every other format raises. Both real paths
+    produce the same grayscale pixel-intensity histogram in the same 8
+    bins: the stdlib PNG/BMP pixels are bit-identical to PIL's."""
     if not fake:
         if _HAS_PIL:
             import io
@@ -856,12 +480,10 @@ def _decode_image_bytes(payload: bytes, fake: bool) -> list[int]:
             pixels = _decode_png_stdlib(payload)
         elif payload[:2] == b"BM":
             pixels = _decode_bmp_stdlib(payload)
-        elif payload[:6] in (b"GIF87a", b"GIF89a"):
-            pixels = _gray_from_rgb(decode_gif(payload)).tobytes()
         else:
             raise NotImplementedError(
                 "real image decode needs PIL for formats other than "
-                "PNG/BMP/GIF (not installed in this environment); those "
+                "PNG/BMP (not installed in this environment); those "
                 "decode via the stdlib paths, or run with "
                 "fake_decode=True for the deterministic oracle kernel"
             )
@@ -1040,7 +662,7 @@ def _resize_nearest(px: "np.ndarray", width: int, height: int) -> "np.ndarray":
 
 
 def _resize_real_stdlib(payload: bytes, width: int, height: int) -> bytes:
-    """PIL-free real resize: decode PNG/BMP/GIF via the stdlib decoders,
+    """PIL-free real resize: decode PNG/BMP via the stdlib decoders,
     nearest-neighbor resize, re-encode as PNG (gray payloads stay gray,
     color stays RGB; PNG alpha is dropped — :func:`encode_png` emits
     gray/RGB)."""
@@ -1050,11 +672,9 @@ def _resize_real_stdlib(payload: bytes, width: int, height: int) -> bytes:
             px = px[..., :3]
     elif payload[:2] == b"BM":
         px = _decode_bmp_pixels(payload)
-    elif payload[:6] in (b"GIF87a", b"GIF89a"):
-        px = decode_gif(payload)
     else:
         raise NotImplementedError(
-            "real image resize without PIL handles PNG/BMP/GIF payloads; "
+            "real image resize without PIL handles PNG/BMP payloads; "
             "install PIL for other formats or run with fake_decode=True "
             "for the pass-through kernel"
         )
@@ -1066,7 +686,7 @@ def resize_images(df: DataFrame, width: int, height: int, fake_decode: bool = Tr
     re-encode transform). Fake mode passes the payload through (the
     deterministic oracle path); real mode decodes with PIL when
     importable (keeping PIL's bicubic resampling), otherwise falls back
-    to the stdlib decode + nearest-neighbor path for PNG/BMP/GIF
+    to the stdlib decode + nearest-neighbor path for PNG/BMP
     (:func:`_resize_real_stdlib`); both re-encode as PNG."""
     if width <= 0 or height <= 0:
         # validate at plan-build time, like every_ms in frame sampling:
@@ -1144,8 +764,7 @@ def sample_video_frames(
     inside mapInPandas — output rows != input rows, the shape built-in UDFs
     can't express). Fake mode emits one 'frame' per ``every_ms`` of
     meta.duration_ms (deterministic oracle path); real mode decodes the
-    container with PyAV, or an animated GIF with the stdlib decoder when
-    PyAV is absent (any other payload then raises ``NotImplementedError``),
+    container with PyAV (without PyAV it raises ``NotImplementedError``),
     grabbing the first frame at or after each ``every_ms`` boundary and
     re-encoding it as PNG. NULL payloads produce no frames in EITHER mode
     (missing media has no frames to sample — fake mode must not invent
@@ -1167,30 +786,19 @@ def sample_video_frames(
 
     def _frames_real(payload):
         """[(ts_ms, png_bytes)] for the first frame at/after each boundary,
-        decoded with PyAV (any container/codec) or, without PyAV, from an
-        animated GIF by the stdlib decoder. Only SELECTED frames are
+        decoded with PyAV (any container/codec). Only SELECTED frames are
         re-encoded."""
         import io
 
-        payload = bytes(payload)
+        if not _HAS_AV:
+            raise NotImplementedError(
+                "real frame extraction needs PyAV (not installed in this "
+                "environment); run with fake_decode=True for the "
+                "deterministic oracle kernel"
+            )
         take = _frame_selector(every_ms)
         out = []
-        if not _HAS_AV:
-            if payload[:6] not in (b"GIF87a", b"GIF89a"):
-                raise NotImplementedError(
-                    "real frame extraction needs PyAV for payloads other "
-                    "than animated GIF (not installed in this "
-                    "environment); run with fake_decode=True for the "
-                    "deterministic oracle kernel"
-                )
-            # composited frames carry their own cumulative timestamps; the
-            # GENERATOR form holds one frame at a time, so only
-            # boundary-selected frames are ever retained
-            for ts_ms, rgb in _iter_gif_frames(payload):
-                if take(ts_ms):
-                    out.append((ts_ms, encode_png(rgb)))
-            return out
-        with _av.open(io.BytesIO(payload)) as container:
+        with _av.open(io.BytesIO(bytes(payload))) as container:
             stream = container.streams.video[0]
             # streamed decode: only SELECTED frames are re-encoded/held
             for frame in container.decode(stream):

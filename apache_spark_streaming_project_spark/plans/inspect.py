@@ -34,9 +34,3 @@ def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters lists from every parquet scan in the plan."""
     plan = physical_plan(df, "formatted")
     return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    plan = physical_plan(df, "simple")
-    ids = set(re.findall(r"WholeStageCodegen \((\d+)\)", plan))
-    return len(ids)

@@ -4,7 +4,6 @@ the custom Python Data Source connector (batch + streaming)."""
 from apache_spark_streaming_project_spark.sources.files import (
     read_census_stream,
     read_file_stream,
-    read_rate_stream,
 )
 from apache_spark_streaming_project_spark.sources.pydatasource import (
     SyntheticCorpusDataSource,
@@ -14,5 +13,4 @@ __all__ = [
     "SyntheticCorpusDataSource",
     "read_census_stream",
     "read_file_stream",
-    "read_rate_stream",
 ]

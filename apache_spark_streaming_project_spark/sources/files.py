@@ -45,19 +45,6 @@ def read_census_stream(
     return read_file_stream(spark, input_dir, CENSUS_SCHEMA, fmt, **kwargs)
 
 
-def read_rate_stream(
-    spark: SparkSession, rows_per_second: int = 100, num_partitions: int | None = None
-) -> DataFrame:
-    """Built-in ``rate`` source — (timestamp, value) rows for throughput and
-    lifecycle tests with no filesystem dependency."""
-    reader = (
-        spark.readStream.format("rate").option("rowsPerSecond", str(rows_per_second))
-    )
-    if num_partitions is not None:
-        reader = reader.option("numPartitions", str(num_partitions))
-    return reader.load()
-
-
 def read_csv_stream_with_quarantine(
     spark: SparkSession,
     path: str,

@@ -25,6 +25,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -139,10 +140,16 @@ def write_batch(
 
         # the 8 sinks are independent reads of the SAME persisted batch —
         # submit them as concurrent jobs (Spark's scheduler interleaves
-        # them) instead of paying 8 sequential job startups per epoch
+        # them) instead of paying 8 sequential job startups per epoch.
+        # Pool threads start with no local properties, so each submission
+        # is wrapped to carry this thread's, including the stream's job
+        # group (q.stop() cancels by it). Each wrap clones the properties
+        # once, and the pool threads must not share one clone, so wrap
+        # per submission.
+        spark = batch_df.sparkSession
         with ThreadPoolExecutor(max_workers=4) as pool:
             for f in [
-                pool.submit(_write, item)
+                pool.submit(inheritable_thread_target(spark)(_write), item)
                 for item in compute_result_tables(
                     enriched, anomaly_threshold
                 ).items()
@@ -193,10 +200,16 @@ def start_pipeline(spark: SparkSession, cfg: PipelineConfig) -> StreamingQuery:
 
 def run_available_now(spark: SparkSession, cfg: PipelineConfig) -> None:
     """Deterministic test mode: drain everything currently in the input dir,
-    then stop (replaces the reference's SIGINT-driven lifecycle for tests)."""
+    then stop (replaces the reference's SIGINT-driven lifecycle for tests).
+    On any exception during the wait it stops the query it started and
+    re-raises, as ``entry_queries._drain`` does."""
     cfg = PipelineConfig(**{**cfg.__dict__, "trigger_seconds": None})
     q = start_pipeline(spark, cfg)
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    except BaseException:
+        q.stop()
+        raise
 
 
 def read_result_table(spark: SparkSession, output_dir: str, name: str) -> DataFrame:

@@ -18,18 +18,20 @@ the version column, so the result is
     ``foreachBatch`` needs for effective exactly-once on top of its
     at-least-once delivery.
 
-Scale notes: ``merge_batch_into_table`` rewrites the whole table per
-merge (O(table + batch) — the honest cost of upsert on FLAT parquet).
-``merge_batch_into_partitioned_table`` is the production path: the table
-lives hash-bucketed by key (``pbucket=k/`` hive directories, via
-sources/partitioned.py), each merge computes the batch's bucket set,
-reads ONLY those partitions (pruned at file-listing time), merges, and
-swaps ONLY those directories — untouched partitions are never listed,
-read, or rewritten (byte-identical after the merge, test-asserted).
-Per-merge cost drops to O(touched partitions + batch), the same
-touched-files-only contract a Delta/Iceberg MERGE INTO provides, and
-this sink remains the drop-in seam for one. Swaps are write-to-staging
-+ directory rename, so readers never observe a half-written partition;
+Layout: ``streaming_merge_upsert`` always runs
+``merge_batch_into_partitioned_table``. The table lives hash-bucketed by
+key (``pbucket=k/`` hive directories, via sources/partitioned.py, with
+the layout pinned in a ``_layout.json`` sidecar); each merge computes
+the batch's bucket set, reads ONLY those partitions (pruned at
+file-listing time), merges, and swaps ONLY those directories —
+untouched partitions are never listed, read, or rewritten
+(byte-identical after the merge, test-asserted). Per-merge cost is
+O(touched partitions + batch), the same touched-files-only contract a
+Delta/Iceberg MERGE INTO provides, and this sink remains the drop-in
+seam for one. ``merge_batch_into_table`` is the flat O(table + batch)
+full-rewrite merge with the same semantics; tests and
+tools/probe_upsert_scale.py use it as the reference the bucketed merge
+must equal. Swaps are write-to-staging + directory rename, so readers never observe a half-written partition;
 a crash between renames leaves the pre-merge state in a ``.retired``
 directory, which the next merge RESTORES before reading (see
 ``_recover_interrupted_swap`` — replay alone is not enough: without the
@@ -48,11 +50,10 @@ a reader sees each partition either pre- or post-swap, never half).
 from __future__ import annotations
 
 import json
-import logging
 import os
 import shutil
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 from pyspark.sql.window import Window
@@ -61,16 +62,7 @@ from apache_spark_streaming_project_spark.operators.dedup import (
     latest_version_dedup,
 )
 
-_log = logging.getLogger(__name__)
-
-# The flat/partitioned crossover from the measured law (tools/
-# probe_upsert_scale.py, BASELINE.md round-5 section): below ~20M rows
-# of the probe schema the partitioned path's fixed per-directory costs
-# (bucket-set job, directory listing, per-bucket files + renames)
-# dominate and the flat O(table) rewrite wins. 256 MiB of parquet is
-# that point's on-disk footprint to the nearest power of two; it is a
-# heuristic default, overridable per table.
-AUTO_FLAT_MAX_BYTES = 256 * 1024 * 1024
+_BUCKET_COL = "pbucket"
 
 
 def _validate_staging_suffix(staging_suffix: str) -> None:
@@ -170,10 +162,7 @@ def merge_batch_into_partitioned_table(
     key_cols: list[str],
     version_col: str,
     n_buckets: int = 64,
-    bucket_col: str = "pbucket",
     staging_suffix: str = ".staging",
-    bucket_expr: Column | None = None,
-    bucket_expr_id: str | None = None,
 ) -> list[int]:
     """Partition-PRUNED merge step: the table is hive-partitioned by
     ``pbucket = pmod(xxhash64(keys), n_buckets)`` and a merge touches only
@@ -200,80 +189,41 @@ def merge_batch_into_partitioned_table(
     B uniformly-hashed distinct keys touches ~min(B, n_buckets) buckets,
     so per-merge cost is O(min(B, n_buckets)/n_buckets x table + batch)
     — the pruning wins exactly when B is small relative to ``n_buckets``
-    (hundreds of keys per micro-batch into a 256-4096-bucket table) and
-    converges to the flat rewrite as B approaches n_buckets. Pick
+    and converges to the flat rewrite as B approaches n_buckets. Pick
     ``n_buckets`` large relative to per-batch key counts while keeping
-    one bucket a few executor tasks' worth of data; for time-clustered
-    keys prefer RANGE bucketing over hash so a batch's updates land in
-    few buckets (hash destroys update locality) — pass ``bucket_expr``
-    with any deterministic integer function of the key columns (e.g.
-    ``F.floor(F.col("event_day") / 30)`` for monthly range buckets; a
-    clustered batch then touches ~1 bucket where the hash layout touches
-    min(B, n_buckets), test-demonstrated). The bucket expression is part
-    of the table layout: use the SAME expr for every merge into a table,
-    and supply a stable ``bucket_expr_id`` string naming it — the id is
-    pinned in the ``_layout.json`` sidecar and checked on every merge.
-    The expression must also be TOTAL over the key domain: a NULL bucket
-    is rejected before any I/O (null rows would land in the hive default
-    partition, which the swap loop does not move).
+    one bucket a few executor tasks' worth of data. ``pmod`` over
+    ``xxhash64`` is total (NULL keys fold into the hash seed), so every
+    row lands in one of the ``n_buckets`` directories.
     Returns the affected bucket ids (for tests / observability)."""
     spark = batch_df.sparkSession
     _validate_staging_suffix(staging_suffix)
-    # Heal a sibling `<table>.retired` left by a crashed FLAT merge or by
-    # convert_flat_table_to_partitioned dying between its two renames —
-    # states the adaptive path makes routine. Without this, a caller
-    # invoking the partitioned merge directly (e.g. a backfill) would see
-    # table_dir absent, build a batch-only table, and a LATER
+    if n_buckets < 1:
+        raise ValueError(f"n_buckets must be >= 1 (got {n_buckets})")
+    # Heal a sibling `<table>.retired` left by a crashed FLAT merge.
+    # Without this, a caller invoking the partitioned merge on that state
+    # would see table_dir absent, build a batch-only table, and a LATER
     # _recover_interrupted_swap would see live+retired and delete the
     # retired copy: silent loss of every pre-crash row. No-op when no
-    # sibling .retired exists (mirrors merge_batch_into_table /
-    # merge_batch_adaptive, which already start with this call).
+    # sibling .retired exists.
     _recover_interrupted_swap(table_dir)
     data_cols = list(batch_df.columns)
-    if bucket_col in data_cols:
-        raise ValueError(f"batch already has a {bucket_col!r} column")
+    if _BUCKET_COL in data_cols:
+        raise ValueError(f"batch already has a {_BUCKET_COL!r} column")
     # The bucket function IS the table layout: merging with a different
     # one silently splits each key's history across directories (old rows
     # under the old bucket, new rows under the new — the newest-version
     # window then never sees both). A `_layout.json` sidecar (underscore
     # prefix: invisible to Spark's reader, like _SUCCESS) pins the layout
     # at first merge and every later merge must match it. The sidecar
-    # stores STRUCTURAL parameters, never `str(Column)` — Column repr is
-    # not a stable serialization across Spark classic/Connect versions,
-    # and a repr change would make every existing table spuriously refuse
-    # merges. The default hash layout is fully described by
-    # (key_cols, n_buckets); a caller-supplied ``bucket_expr`` must come
-    # with an explicit, caller-owned ``bucket_expr_id`` string that the
-    # caller keeps stable across runs (it is the layout's identity).
-    if bucket_expr is None:
-        if bucket_expr_id is not None:
-            raise ValueError(
-                "bucket_expr_id is only meaningful with a custom "
-                "bucket_expr; the default hash layout is identified by "
-                "(key_cols, n_buckets)"
-            )
-        bucket_expr = F.pmod(
-            F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)
-        )
-        layout = {
-            "bucket_col": bucket_col,
-            "kind": "hash",
-            "key_cols": list(key_cols),
-            "n_buckets": int(n_buckets),
-        }
-    else:
-        if bucket_expr_id is None:
-            raise ValueError(
-                "a custom bucket_expr needs a stable bucket_expr_id "
-                "string (e.g. 'event_day div 30'): the expression is part "
-                "of the table layout and Column repr is not a stable "
-                "identity to pin it with"
-            )
-        layout = {
-            "bucket_col": bucket_col,
-            "kind": "expr",
-            "expr_id": str(bucket_expr_id),
-        }
+    # stores the structural parameters (key_cols, n_buckets), never
+    # `str(Column)` — Column repr is not a stable serialization across
+    # Spark classic/Connect versions.
+    layout = {
+        "bucket_col": _BUCKET_COL,
+        "kind": "hash",
+        "key_cols": list(key_cols),
+        "n_buckets": int(n_buckets),
+    }
     layout_path = os.path.join(table_dir, "_layout.json")
     if os.path.exists(layout_path):
         with open(layout_path) as fh:
@@ -285,32 +235,11 @@ def merge_batch_into_partitioned_table(
                 "across layouts would split key histories across "
                 "directories; rebuild the table to change its layout"
             )
-    batch = batch_df.withColumn(bucket_col, bucket_expr.cast("int"))
-    # bounded driver collect: the hash layout caps this at n_buckets by
-    # construction; a caller-supplied bucket_expr must stay layout-sized
-    # too — fail loudly if it degenerates into a per-key partition scheme
-    # (which would mean one directory per key: listing death at scale)
-    _cap = max(int(n_buckets), 4096)
-    affected_rows = (
-        batch.select(bucket_col).distinct().limit(_cap + 1).collect()
+    bucket = F.pmod(F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
+    batch = batch_df.withColumn(_BUCKET_COL, bucket.cast("int"))
+    affected = sorted(
+        r[0] for r in batch.select(_BUCKET_COL).distinct().collect()
     )
-    if len(affected_rows) > _cap:
-        raise ValueError(
-            f"bucket_expr produced more than {_cap} distinct buckets in one "
-            "batch — the bucket function must be layout-sized (coarse), "
-            "not key-sized"
-        )
-    if any(r[0] is None for r in affected_rows):
-        # A nullable bucket expression (e.g. floor(event_day/30) over a
-        # null key) would write rows to __HIVE_DEFAULT_PARTITION__ in
-        # staging while the swap loop moves only pbucket=<int> dirs: the
-        # null rows would be SILENTLY DROPPED. Fail before any I/O.
-        raise ValueError(
-            "bucket_expr produced NULL for some batch rows — a bucket "
-            "function must be total over the key domain (coalesce null "
-            "keys to a sentinel before merging)"
-        )
-    affected = sorted(r[0] for r in affected_rows)
     if not affected:  # empty micro-batch: nothing to merge
         return affected
     # heal any bucket directory a previous crash left mid-swap BEFORE
@@ -328,12 +257,11 @@ def merge_batch_into_partitioned_table(
         # at a flat table) must not be merged into bucketed: the swap
         # would land `pbucket=k/` dirs NEXT TO the flat files and every
         # later read would double-count. Fail before any I/O — the flat
-        # table is intact and the caller picks the right path (flat
-        # merge, or convert_flat_table_to_partitioned first).
+        # table is intact.
         stray = [
             e
             for e in os.listdir(table_dir)
-            if not e.startswith(f"{bucket_col}=")
+            if not e.startswith(f"{_BUCKET_COL}=")
             and not e.startswith("_")
             and not e.startswith(".")
             and not e.endswith(".retired")
@@ -341,9 +269,8 @@ def merge_batch_into_partitioned_table(
         if stray:
             raise ValueError(
                 f"{table_dir} holds non-bucketed entries {stray[:3]} — it "
-                "is a FLAT table; convert it first "
-                "(convert_flat_table_to_partitioned) or use the flat/"
-                "adaptive merge"
+                "is a FLAT table; merge it with merge_batch_into_table or "
+                "rebuild it bucketed"
             )
     _sweep_stale_staging(table_dir)
     # "table exists" = has at least one bucket directory: a crash between
@@ -351,13 +278,15 @@ def merge_batch_into_partitioned_table(
     # replayed batch must treat as no-table (read.parquet on an empty dir
     # errors instead of returning an empty relation)
     has_table = os.path.isdir(table_dir) and any(
-        e.startswith(f"{bucket_col}=") for e in os.listdir(table_dir)
+        e.startswith(f"{_BUCKET_COL}=") for e in os.listdir(table_dir)
     )
     if has_table:
         current = (
             spark.read.parquet(table_dir)
-            .filter(F.col(bucket_col).isin([int(b) for b in affected]))
-            .select(*data_cols, F.col(bucket_col).cast("int").alias(bucket_col))
+            .filter(F.col(_BUCKET_COL).isin([int(b) for b in affected]))
+            .select(
+                *data_cols, F.col(_BUCKET_COL).cast("int").alias(_BUCKET_COL)
+            )
         )
         candidates = current.unionByName(batch)
     else:
@@ -369,11 +298,11 @@ def merge_batch_into_partitioned_table(
     # (plan-asserted in tests). The naive latest_version_dedup-then-
     # repartition shape shuffles the touched data twice, which the scale
     # probe (tools/probe_upsert_scale.py) measured as the dominant cost.
-    w = Window.partitionBy(bucket_col, *key_cols).orderBy(
+    w = Window.partitionBy(_BUCKET_COL, *key_cols).orderBy(
         F.col(version_col).desc()
     )
     merged = (
-        candidates.repartition(F.col(bucket_col))
+        candidates.repartition(F.col(_BUCKET_COL))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
@@ -382,7 +311,7 @@ def merge_batch_into_partitioned_table(
     shutil.rmtree(staging, ignore_errors=True)
     # already partitioned by bucket: one writing task per directory, no
     # small-files explosion (sources/partitioned.py rationale)
-    merged.write.partitionBy(bucket_col).mode("overwrite").parquet(staging)
+    merged.write.partitionBy(_BUCKET_COL).mode("overwrite").parquet(staging)
     # Every affected bucket MUST have a staging dir: `affected` came from
     # the batch's own rows, each of which survives into `merged` (it is
     # either the newest version of its key or superseded by another batch/
@@ -394,7 +323,7 @@ def merge_batch_into_partitioned_table(
     missing = [
         b
         for b in affected
-        if not os.path.isdir(os.path.join(staging, f"{bucket_col}={b}"))
+        if not os.path.isdir(os.path.join(staging, f"{_BUCKET_COL}={b}"))
     ]
     if missing:
         raise RuntimeError(
@@ -414,8 +343,8 @@ def merge_batch_into_partitioned_table(
         with open(layout_path, "w") as fh:
             json.dump(layout, fh)
     for b in affected:
-        src = os.path.join(staging, f"{bucket_col}={b}")
-        dst = os.path.join(table_dir, f"{bucket_col}={b}")
+        src = os.path.join(staging, f"{_BUCKET_COL}={b}")
+        dst = os.path.join(table_dir, f"{_BUCKET_COL}={b}")
         retired = dst + ".retired"
         shutil.rmtree(retired, ignore_errors=True)
         if os.path.exists(dst):
@@ -426,222 +355,25 @@ def merge_batch_into_partitioned_table(
     return affected
 
 
-def _read_layout(table_dir: str) -> dict | None:
-    """The pinned layout from the ``_layout.json`` sidecar, or None if
-    the table is flat / absent (no sidecar)."""
-    layout_path = os.path.join(table_dir, "_layout.json")
-    if not os.path.exists(layout_path):
-        return None
-    with open(layout_path) as fh:
-        return json.load(fh)
-
-
-def _table_data_bytes(table_dir: str) -> int:
-    """On-disk size of the table by FILE LISTING only — never a scan.
-    This is the probe the size-adaptive layout advisor keys off; at any
-    scale it costs one directory walk."""
-    total = 0
-    for root, _dirs, files in os.walk(table_dir):
-        for name in files:
-            try:
-                total += os.path.getsize(os.path.join(root, name))
-            except OSError:  # racing a swap: the file moved, not gone
-                continue
-    return total
-
-
-def convert_flat_table_to_partitioned(
-    spark,
-    table_dir: str,
-    key_cols: list[str],
-    n_buckets: int,
-    bucket_col: str = "pbucket",
-) -> None:
-    """One-time O(table) migration of a FLAT upsert table to the
-    hash-bucketed layout, after which every merge is partition-pruned.
-    Same two-rename swap protocol as the flat merge (write staging,
-    retire live, land staging), so a crash at any point is healed by
-    ``_recover_interrupted_swap`` + the staging sweep; the layout sidecar
-    is written INTO the staging dir before the swap, so the bucketed
-    table is never visible without its pin."""
-    _recover_interrupted_swap(table_dir)
-    current = spark.read.parquet(table_dir)
-    if bucket_col in current.columns:
-        raise ValueError(f"table already has a {bucket_col!r} column")
-    bucket_expr = F.pmod(
-        F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(n_buckets)
-    )
-    staging = table_dir + ".staging-convert"
-    shutil.rmtree(staging, ignore_errors=True)
-    (
-        current.withColumn(bucket_col, bucket_expr.cast("int"))
-        .repartition(F.col(bucket_col))
-        .write.partitionBy(bucket_col)
-        .mode("overwrite")
-        .parquet(staging)
-    )
-    layout = {
-        "bucket_col": bucket_col,
-        "kind": "hash",
-        "key_cols": list(key_cols),
-        "n_buckets": int(n_buckets),
-    }
-    with open(os.path.join(staging, "_layout.json"), "w") as fh:
-        json.dump(layout, fh)
-    retired = table_dir + ".retired"
-    shutil.rmtree(retired, ignore_errors=True)
-    os.rename(table_dir, retired)
-    os.rename(staging, table_dir)
-    shutil.rmtree(retired, ignore_errors=True)
-
-
-def merge_batch_adaptive(
-    batch_df: DataFrame,
-    table_dir: str,
-    key_cols: list[str],
-    version_col: str,
-    staging_suffix: str = ".staging",
-    auto_flat_max_bytes: int = AUTO_FLAT_MAX_BYTES,
-    auto_n_buckets: int = 256,
-) -> None:
-    """Size-adaptive MERGE: pick the flat or the partition-pruned path
-    per the measured crossover law instead of making the caller guess.
-    Small tables never pay the partitioned path's per-directory fixed
-    costs; big tables never pay O(table) rewrites per micro-batch.
-
-      * table absent or flat and under ``auto_flat_max_bytes`` (file
-        listing, no scan) -> flat merge;
-      * flat and at/over the threshold -> one O(table) conversion to the
-        ``auto_n_buckets`` hash layout (amortized: it replaces the flat
-        rewrite that merge would have paid anyway), then partition-pruned
-        merges from there on;
-      * already partitioned -> partition-pruned merge under the PINNED
-        layout (the sidecar's n_buckets wins over ``auto_n_buckets``).
-
-    Only hash layouts are auto-managed: a table pinned to a custom
-    ``bucket_expr`` layout cannot have its expression reconstructed from
-    the sidecar — call :func:`merge_batch_into_partitioned_table` with
-    the expr directly for those."""
-    _validate_staging_suffix(staging_suffix)
-    # The adaptive path PROMISES an eventual hash layout, so its bucket
-    # column is reserved from batch 0: accepting 'pbucket' data while the
-    # table is still flat would poison the later conversion (the
-    # threshold-crossing batch — and every replay of it — would fail
-    # forever against a flat table that already contains the column, and
-    # convert_flat_table_to_partitioned would refuse the table itself).
-    if "pbucket" in batch_df.columns:
-        raise ValueError(
-            "batch has a 'pbucket' column — reserved by the adaptive "
-            "merge's hash layout; rename it or use the flat/explicit "
-            "merge entry points"
-        )
-    _recover_interrupted_swap(table_dir)
-    layout = _read_layout(table_dir)
-    if layout is not None:
-        if layout.get("kind") != "hash":
-            raise ValueError(
-                f"table is pinned to a non-hash layout {layout} — the "
-                "adaptive merge cannot reconstruct a custom bucket_expr; "
-                "call merge_batch_into_partitioned_table with the expr"
-            )
-        merge_batch_into_partitioned_table(
-            batch_df,
-            table_dir,
-            key_cols,
-            version_col,
-            n_buckets=int(layout["n_buckets"]),
-            bucket_col=layout["bucket_col"],
-            staging_suffix=staging_suffix,
-        )
-        return
-    if os.path.isdir(table_dir) and _table_data_bytes(table_dir) >= int(
-        auto_flat_max_bytes
-    ):
-        # (The 'pbucket' collision precondition is enforced at the TOP of
-        # this function — for every regime, not just the threshold-
-        # crossing batch — so the irreversible conversion below can never
-        # be reached by a batch the partitioned merge would then refuse.
-        # Null keys cannot produce a NULL bucket under the hash layout:
-        # xxhash64 is total — null inputs fold into the seed.)
-        _sweep_stale_staging(table_dir)
-        _log.info(
-            "adaptive merge: flat table %s crossed %d bytes — converting "
-            "to %d hash buckets (one-time O(table) rewrite)",
-            table_dir,
-            auto_flat_max_bytes,
-            auto_n_buckets,
-        )
-        convert_flat_table_to_partitioned(
-            batch_df.sparkSession, table_dir, key_cols, n_buckets=auto_n_buckets
-        )
-        merge_batch_into_partitioned_table(
-            batch_df,
-            table_dir,
-            key_cols,
-            version_col,
-            n_buckets=auto_n_buckets,
-            staging_suffix=staging_suffix,
-        )
-        return
-    merge_batch_into_table(
-        batch_df, table_dir, key_cols, version_col, staging_suffix=staging_suffix
-    )
-
-
 def streaming_merge_upsert(
     stream_df: DataFrame,
     table_dir: str,
     key_cols: list[str],
     version_col: str,
-    checkpoint_dir: str,
-    n_buckets: int | str | None = None,
-    auto_flat_max_bytes: int = AUTO_FLAT_MAX_BYTES,
-    auto_n_buckets: int = 256,
+    n_buckets: int,
 ) -> DataStreamWriter:
     """``foreachBatch`` writer that maintains ``table_dir`` as the
-    newest-version-per-key table over the change stream. Caller starts it
-    (typically ``.trigger(availableNow=True).start()``). With
-    ``n_buckets`` set to an int, the table is maintained hash-bucketed
-    and each micro-batch merge rewrites only the partitions containing
-    batch keys (:func:`merge_batch_into_partitioned_table`) — the scale
-    path. With ``n_buckets="auto"``, the layout is chosen per the
-    measured crossover law (:func:`merge_batch_adaptive`): flat while the
-    table is small, converted once to ``auto_n_buckets`` hash buckets
-    when it crosses ``auto_flat_max_bytes``."""
-    # Validate n_buckets at WRITER CONSTRUCTION, not inside the
-    # foreachBatch closure: 'auto' is the only string form, and anything
-    # else ('Auto', a typo) would otherwise surface as an opaque
-    # int() ValueError at batch-0 runtime, after the stream started.
-    if isinstance(n_buckets, str):
-        if n_buckets != "auto":
-            raise ValueError(
-                f"n_buckets must be an int, None, or the exact string "
-                f"'auto' (got {n_buckets!r})"
-            )
-    elif n_buckets is not None:
-        n_buckets = int(n_buckets)
+    newest-version-per-key table over the change stream, hash-bucketed
+    ``n_buckets`` ways: each micro-batch merge rewrites only the
+    partitions containing batch keys
+    (:func:`merge_batch_into_partitioned_table`). The caller sets the
+    checkpoint and trigger and starts it (``entry_queries._drain``)."""
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        if n_buckets == "auto":
-            merge_batch_adaptive(
-                batch_df, table_dir, key_cols, version_col,
-                staging_suffix=f".staging-{batch_id}",
-                auto_flat_max_bytes=auto_flat_max_bytes,
-                auto_n_buckets=auto_n_buckets,
-            )
-        elif n_buckets is not None:
-            merge_batch_into_partitioned_table(
-                batch_df, table_dir, key_cols, version_col,
-                n_buckets=int(n_buckets),
-                staging_suffix=f".staging-{batch_id}",
-            )
-        else:
-            merge_batch_into_table(
-                batch_df, table_dir, key_cols, version_col,
-                staging_suffix=f".staging-{batch_id}",
-            )
+        merge_batch_into_partitioned_table(
+            batch_df, table_dir, key_cols, version_col,
+            n_buckets=n_buckets,
+            staging_suffix=f".staging-{batch_id}",
+        )
 
-    return (
-        stream_df.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-    )
+    return stream_df.writeStream.foreachBatch(_apply)

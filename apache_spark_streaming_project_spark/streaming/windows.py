@@ -7,7 +7,8 @@ These operators provide the idiomatic Structured Streaming equivalents:
 
 * tumbling/sliding window aggregation with watermark (late data handled
   instead of silently joining the next batch),
-* streaming dedup with event-time watermark (bounded state),
+* streaming dedup of re-delivered rows within a watermark (bounded
+  state),
 * session windows (gap-based) for completeness.
 
 All are stateful streaming aggregations backed by the state store; the
@@ -49,20 +50,6 @@ def windowed_counts(
         F.col("window.start").alias("window_start"),
         F.col("window.end").alias("window_end"),
         *[c for c in out.columns if c != "window"],
-    )
-
-
-def streaming_dedup(
-    stream: DataFrame,
-    keys: list[str],
-    event_time_col: str,
-    watermark: str = "1 minute",
-) -> DataFrame:
-    """X1-streaming — exact dedup on an unbounded stream: ``dropDuplicates``
-    over (keys, event-time) with a watermark so the dedup state is evicted
-    once rows are older than the lateness bound (bounded memory forever)."""
-    return stream.withWatermark(event_time_col, watermark).dropDuplicates(
-        [*keys, event_time_col]
     )
 
 

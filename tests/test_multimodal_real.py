@@ -1,10 +1,10 @@
 """Real-mode decode tests for X5 multimodal kernels.
 
-WAV audio, PNG, BMP and GIF decode (and the PNG and GIF writers) use
-the standard library plus numpy, so they run everywhere; other image
-formats (PIL) and other video (PyAV) are import-guarded and their tests
-skip cleanly when the libraries are absent — the same contract as the
-kernels themselves.
+WAV audio, PNG and BMP decode (and the PNG writer) use the standard
+library plus numpy, so they run everywhere; other image formats (PIL)
+and video (PyAV) are import-guarded and their tests skip cleanly when
+the libraries are absent — the same contract as the kernels
+themselves.
 """
 
 from __future__ import annotations
@@ -529,40 +529,10 @@ def test_wav_mutations_stay_inside_the_error_contract():
             pass
 
 
-def test_animated_gif_frame_sampling(spark):
-    """sample_video_frames(fake_decode=False) samples an ANIMATED GIF
-    through the stdlib path: composited frames carry cumulative
-    graphic-control delays; only boundary-selected frames re-encode."""
-    pal = np.array([[0, 0, 0], [255, 255, 255], [128, 128, 128]], np.uint8)
-    frames = [np.full((6, 6), i, np.uint8) for i in (0, 1, 2)]
-    # delays 50cs=500ms each: frames at 0 / 500 / 1000 ms
-    gif = mm.encode_gif(frames, pal, delays_cs=[50, 50, 50])
-    rows = [(0, gif, ("video", "gif", 6, 6, 1500, None))]
-    df = spark.createDataFrame(rows, mm.MEDIA_SCHEMA).coalesce(1)
-    out = mm.sample_video_frames(df, every_ms=1000, fake_decode=False).collect()
-    assert [(r.frame_idx, r.ts_ms) for r in out] == [(0, 0), (1, 1000)]
-    px = mm._decode_png_pixels(bytes(out[1].frame_payload))
-    assert (px == pal[2]).all()
-
-
-def test_gif_image_features_real_mode(spark):
-    """extract_image_features(fake_decode=False) decodes GIF payloads
-    stdlib-only: the luma histogram comes from the composited first
-    frame's palette colors."""
-    pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
-    img = np.array([[0, 1], [1, 1]], np.uint8)
-    gif = mm.encode_gif([img], pal)
-    df = _media_df(spark, [gif], media_type="image")
-    out = mm.extract_image_features(df, fake_decode=False).collect()[0]
-    assert out.hist == [1, 0, 0, 0, 0, 0, 0, 3]
-    assert sum(out.feature) == pytest.approx(1.0)
-
-
 @pytest.mark.skipif(not mm._HAS_PIL, reason="PIL not installed")
-def test_palette_adam7_gif_parity_with_pil():  # pragma: no cover
-    """When PIL exists, its decode of our Adam7 PNG and GIF writers'
-    output must match our stdlib decoders bit-for-bit (pixel data is
-    lossless in both containers)."""
+def test_palette_adam7_parity_with_pil():  # pragma: no cover
+    """When PIL exists, its decode of our Adam7 PNG writer's output must
+    match our stdlib decoder bit-for-bit (PNG pixel data is lossless)."""
     from PIL import Image
 
     rng = np.random.RandomState(12)
@@ -572,11 +542,6 @@ def test_palette_adam7_gif_parity_with_pil():  # pragma: no cover
         pil = np.asarray(Image.open(io.BytesIO(data)).convert("RGB"))
         ours = mm._decode_png_pixels(data)
         assert (pil == ours).all(), f"interlace={il}"
-    pal = rng.randint(0, 256, (5, 3)).astype(np.uint8)
-    idx = rng.randint(0, 5, (9, 14)).astype(np.uint8)
-    gif = mm.encode_gif([idx], pal)
-    pil = np.asarray(Image.open(io.BytesIO(gif)).convert("RGB"))
-    assert (pil == mm.decode_gif(gif)).all()
 
 
 def test_16bit_png_decodes_to_high_bytes():
@@ -643,33 +608,28 @@ def test_16bit_png_decodes_to_high_bytes():
 
 
 def test_mixed_format_corpus_single_kernel(spark):
-    """The realistic crawl shape: ONE media table mixing PNG, BMP and GIF
+    """The realistic crawl shape: ONE media table mixing PNG and BMP
     payloads through one real-mode mapInPandas run — per-row format
     dispatch inside the kernel, every histogram over real pixels, NULL
     payload passed through."""
     img = (np.add.outer(np.arange(16) * 9, np.arange(16) * 5) % 256).astype(
         np.uint8
     )
-    pal = np.array([[0, 0, 0], [255, 255, 255]], np.uint8)
     payloads = [
         mm.encode_png(img),
         _bmp_encode([[(v, v, v) for v in row] for row in img.tolist()]),
-        mm.encode_gif([(img > 127).astype(np.uint8)], pal),
         None,
     ]
     df = _media_df(spark, payloads, media_type="image")
     out = {r.media_id: r for r in mm.extract_image_features(
         df, fake_decode=False
     ).collect()}
-    assert len(out) == 4
+    assert len(out) == 3
     # lossless containers agree exactly with the source pixels
     want = np.bincount(img.ravel() >> 5, minlength=8).tolist()
     assert out[0].hist == want  # PNG
     assert out[1].hist == want  # BMP
-    # GIF: two-tone palette -> only the extreme bins
-    assert sum(out[2].hist) == img.size
-    assert out[2].hist[1:7] == [0] * 6
-    assert out[3].hist is None  # NULL payload row survives as NULLs
+    assert out[2].hist is None  # NULL payload row survives as NULLs
 
 
 # ---------------------------------------------------------------------------

@@ -4,6 +4,8 @@ statistics from ALL prior batches, not just the current one."""
 
 from __future__ import annotations
 
+import time
+
 import pytest
 
 from apache_spark_streaming_project_spark.streaming.stateful import (
@@ -103,14 +105,22 @@ def test_idle_timeout_evicts_and_restarts(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    # with a processing-time state timeout the availableNow query keeps
+    # running no-data batches, so it never terminates and
+    # processAllAvailable never returns: wait for the output of all 11
+    # input rows instead, then stop the query so it does not outlive
+    # the test
+    deadline = time.monotonic() + 120
+    while (
+        spark.table("stateful_ttl_out").count() < 11
+        and time.monotonic() < deadline
+    ):
+        time.sleep(0.1)
+    q.stop()
     rows = {
         r["event_id"]: r
         for r in spark.table("stateful_ttl_out").collect()
     }
-    # with a processing-time state timeout the availableNow query keeps
-    # running no-data batches; stop it so it does not outlive the test
-    q.stop()
     assert rows[5]["n_seen"] == 6          # b1 accumulated normally
     assert rows[102]["n_seen"] == 3        # u2 unaffected
     # u1 was evicted while idle -> statistics restarted cold in b3
@@ -174,3 +184,53 @@ def test_multichunk_group_is_deterministic(spark, tmp_path):
         )
     finally:
         spark.conf.set(conf, old)
+
+
+def test_null_key_upsert_lands_in_a_real_bucket_and_survives_replay(
+    spark, tmp_path
+):
+    """The bucketed upsert sink's hash is total: a NULL key hashes to a
+    real ``pbucket=<int>`` directory (never the hive default partition,
+    which the swap loop would not move), its newest version wins, and
+    replaying the batch leaves the table unchanged."""
+    import os
+
+    from apache_spark_streaming_project_spark.streaming.upsert import (
+        merge_batch_into_partitioned_table,
+    )
+
+    table = str(tmp_path / "t")
+    schema = "k int, version int, payload string"
+    b1 = spark.createDataFrame([(None, 1, "n1"), (1, 1, "a1")], schema)
+    b2 = spark.createDataFrame([(None, 2, "n2"), (2, 1, "b1")], schema)
+
+    def snap():
+        return {
+            (r.k, r.version, r.payload)
+            for r in spark.read.parquet(table)
+            .select("k", "version", "payload")
+            .collect()
+        }
+
+    merge_batch_into_partitioned_table(b1, table, ["k"], "version", n_buckets=4)
+    touched = merge_batch_into_partitioned_table(
+        b2, table, ["k"], "version", n_buckets=4
+    )
+    want = {(None, 2, "n2"), (1, 1, "a1"), (2, 1, "b1")}
+    assert snap() == want
+    entries = [e for e in os.listdir(table) if not e.startswith("_")]
+    assert all(
+        e.startswith("pbucket=") and e.split("=")[1].isdigit() for e in entries
+    ), entries
+    null_bucket = (
+        spark.read.parquet(table).filter("k IS NULL").first()["pbucket"]
+    )
+    assert null_bucket in touched
+    # replay of the batch holding the NULL key: identical table
+    assert (
+        merge_batch_into_partitioned_table(
+            b2, table, ["k"], "version", n_buckets=4
+        )
+        == touched
+    )
+    assert snap() == want

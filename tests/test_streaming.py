@@ -449,6 +449,116 @@ def test_pipeline_reports_observed_metrics(spark, tmp_path):
     assert all(m["total_hours"] > 0 for m in observed)
 
 
+def _census_cfg(tmp_path, total_rows=20):
+    input_dir = str(tmp_path / "in")
+    simulator.generate_batches(input_dir, total_rows=total_rows, seed=3)
+    return PipelineConfig(
+        input_dir=input_dir,
+        output_dir=str(tmp_path / "out"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger_seconds=None,
+    )
+
+
+def test_run_available_now_surfaces_batch_failure(spark, tmp_path, monkeypatch):
+    """A ``write_batch`` that raises surfaces its error from
+    ``run_available_now``, and no query the drain started stays active
+    (queries another test left on the shared session do not count)."""
+    from apache_spark_streaming_project_spark.streaming import pipeline
+
+    def failing_write_batch(*args, **kwargs):
+        raise ValueError("census batch failed")
+
+    monkeypatch.setattr(pipeline, "write_batch", failing_write_batch)
+    already_active = {q.id for q in spark.streams.active}
+    with pytest.raises(Exception, match="census batch failed"):
+        run_available_now(spark, _census_cfg(tmp_path))
+    assert {q.id for q in spark.streams.active} <= already_active
+
+
+def test_run_available_now_stops_its_query_when_the_wait_fails(
+    spark, tmp_path, monkeypatch
+):
+    """If the wait fails while the query still runs (an interrupt, a
+    driver-side error), ``run_available_now`` stops the query it started
+    and re-raises, instead of leaving it running on the session. The
+    batch is held open until the stop, so the query is still running
+    when the wait fails."""
+    import threading
+
+    from apache_spark_streaming_project_spark.streaming import pipeline
+
+    release = threading.Event()
+    monkeypatch.setattr(
+        pipeline, "write_batch", lambda *args, **kwargs: release.wait(60)
+    )
+    started = []
+    real_start = pipeline.start_pipeline
+
+    class InterruptedWait:
+        def __init__(self, q):
+            self.q = q
+
+        def awaitTermination(self):
+            raise KeyboardInterrupt
+
+        def stop(self):
+            release.set()  # let the held batch return so stop() can finish
+            self.q.stop()
+
+    def start(spark, cfg):
+        started.append(real_start(spark, cfg))
+        return InterruptedWait(started[-1])
+
+    monkeypatch.setattr(pipeline, "start_pipeline", start)
+    try:
+        with pytest.raises(KeyboardInterrupt):
+            run_available_now(spark, _census_cfg(tmp_path))
+        assert started
+        assert started[0].id not in {q.id for q in spark.streams.active}
+    finally:
+        release.set()
+        for q in started:
+            q.stop()
+
+
+def test_pooled_sink_writes_keep_the_stream_job_group(
+    spark, tmp_path, monkeypatch
+):
+    """``write_batch`` runs its sink writes on a thread pool. Each pooled
+    write must carry the stream's job group (``spark.jobGroup.id`` is the
+    query's runId), so stopping the query cancels writes in flight."""
+    import threading
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from apache_spark_streaming_project_spark.streaming.pipeline import (
+        start_pipeline,
+    )
+
+    groups = []
+    real_parquet = DataFrameWriter.parquet
+
+    def recording_parquet(self, path, *args, **kwargs):
+        groups.append(
+            (
+                threading.current_thread().name,
+                spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
+            )
+        )
+        return real_parquet(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
+    q = start_pipeline(spark, _census_cfg(tmp_path))
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
+    assert len(groups) >= 8  # the 8 result tables of at least one epoch
+    assert all(name.startswith("ThreadPoolExecutor") for name, _ in groups)
+    assert {group for _, group in groups} == {str(q.runId)}
+
+
 def test_streaming_upsert_replay_idempotent(spark, tmp_path):
     """The foreachBatch MERGE sink's exactly-once story rests on two
     properties, both asserted here: replaying an already-applied batch
@@ -766,79 +876,9 @@ def test_partitioned_merge_plan_is_single_shuffle(spark, tmp_path):
     assert os.path.isdir(table)
 
 
-def test_range_bucket_expr_preserves_update_locality(spark, tmp_path):
-    """Time-clustered keys + a RANGE bucket expr: a batch whose keys fall
-    in one range touches exactly ONE bucket, where the default hash
-    layout scatters the same batch across ~min(B, n_buckets) buckets —
-    the locality argument in the docstring, demonstrated."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_into_partitioned_table,
-    )
-
-    base = spark.createDataFrame(
-        [(i, 1, f"v1-{i}") for i in range(800)], ["k", "version", "payload"]
-    )
-    range_expr = F.col("k") / 100  # 8 range buckets of 100 keys
-    rtab = str(tmp_path / "range")
-    htab = str(tmp_path / "hash")
-    merge_batch_into_partitioned_table(
-        base, rtab, ["k"], "version",
-        bucket_expr=range_expr, bucket_expr_id="k div 100",
-    )
-    merge_batch_into_partitioned_table(base, htab, ["k"], "version", n_buckets=8)
-
-    # a "recent window" batch: 20 clustered keys, all in [700, 720)
-    batch = spark.createDataFrame(
-        [(700 + i, 2, f"v2-{i}") for i in range(20)],
-        ["k", "version", "payload"],
-    )
-    touched_range = merge_batch_into_partitioned_table(
-        batch, rtab, ["k"], "version",
-        bucket_expr=range_expr, bucket_expr_id="k div 100",
-    )
-    touched_hash = merge_batch_into_partitioned_table(
-        batch, htab, ["k"], "version", n_buckets=8
-    )
-    assert touched_range == [7]  # one bucket: the 700..799 range
-    assert len(touched_hash) > 3  # hash scatters the clustered batch
-    # both layouts converge to the same logical table
-    rs = {
-        (r.k, r.version, r.payload)
-        for r in spark.read.parquet(rtab).select("k", "version", "payload").collect()
-    }
-    hs = {
-        (r.k, r.version, r.payload)
-        for r in spark.read.parquet(htab).select("k", "version", "payload").collect()
-    }
-    assert rs == hs
-
-
-def test_degenerate_bucket_expr_rejected(spark, tmp_path):
-    """A per-key bucket expression (one directory per key) must fail
-    loudly instead of building a listing-hostile layout."""
-    import pytest
-
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_into_partitioned_table,
-    )
-
-    batch = spark.createDataFrame(
-        [(i, 1, "x") for i in range(5000)], ["k", "version", "payload"]
-    )
-    with pytest.raises(ValueError, match="layout-sized"):
-        merge_batch_into_partitioned_table(
-            batch,
-            str(tmp_path / "t"),
-            ["k"],
-            "version",
-            bucket_expr=F.col("k"),  # key-sized: 5000 distinct buckets
-            bucket_expr_id="identity",
-        )
-
-
 def test_layout_mismatch_rejected(spark, tmp_path):
     """The bucket function is part of the table layout: merging with a
-    different n_buckets (or bucket_expr) than the table was built with
+    different n_buckets (or key columns) than the table was built with
     must raise — a silent mismatch splits each key's history across
     directories and the newest-version window never sees both."""
     import pytest
@@ -860,14 +900,12 @@ def test_layout_mismatch_rejected(spark, tmp_path):
         )
     with pytest.raises(ValueError, match="layout mismatch"):
         merge_batch_into_partitioned_table(
-            b, table, ["k"], "version",
-            bucket_expr=F.col("k") / 10, bucket_expr_id="k div 10",
+            b, table, ["k", "payload"], "version", n_buckets=8
         )
-    # a custom expr without a stable identity is itself rejected — the
-    # layout pin cannot rely on Column repr
-    with pytest.raises(ValueError, match="bucket_expr_id"):
+    # a zero bucket count would make pmod NULL for every row: refused
+    with pytest.raises(ValueError, match="n_buckets"):
         merge_batch_into_partitioned_table(
-            b, table, ["k"], "version", bucket_expr=F.col("k") / 10
+            b, table, ["k"], "version", n_buckets=0
         )
     # the sidecar holds structural params, not a Column repr
     import json

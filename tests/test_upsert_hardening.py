@@ -11,8 +11,6 @@ not just the hand-enumerated single-bucket states:
   * a real subprocess SIGKILL mid-swap-loop, then replay in the parent;
   * sidecar-first layout pinning (a crash after the first swap can no
     longer leave a populated table with no layout pin);
-  * NULL bucket values rejected before any I/O (they would be silently
-    dropped into the hive default partition otherwise);
   * missing staging dir for an affected bucket fails BEFORE the live
     bucket is retired (no delete-the-only-copy path);
   * stale sibling staging dirs from crashed OTHER batch ids are swept.
@@ -43,26 +41,6 @@ def _snap(spark, path):
         .select("k", "version", "payload")
         .collect()
     }
-
-
-def test_null_bucket_values_rejected_before_io(spark, tmp_path):
-    """A nullable bucket expression must fail loudly: NULL buckets write
-    to __HIVE_DEFAULT_PARTITION__ in staging, which the swap loop never
-    moves — silent row loss. The guard fires before any table I/O."""
-    table = str(tmp_path / "t")
-    batch = spark.createDataFrame(
-        [(1, 1, "a"), (None, 1, "b")], "k int, version int, payload string"
-    )
-    with pytest.raises(ValueError, match="NULL"):
-        merge_batch_into_partitioned_table(
-            batch,
-            table,
-            ["k"],
-            "version",
-            bucket_expr=F.col("k") % 4,  # null key -> null bucket
-            bucket_expr_id="k mod 4",
-        )
-    assert not os.path.exists(table)  # nothing was created
 
 
 def test_missing_staging_dir_fails_before_retiring_live(spark, tmp_path):
@@ -330,182 +308,17 @@ def test_subprocess_sigkill_mid_swap_then_replay(spark, tmp_path):
     assert not os.path.exists(table + ".staging-2")
 
 
-def test_adaptive_merge_small_table_stays_flat(spark, tmp_path):
-    """Under the crossover threshold the adaptive merge takes the flat
-    path: no bucket directories, no layout sidecar, correct results —
-    small tables never pay the partitioned path's per-directory fixed
-    costs (the m9 bench-flag lesson turned into engine behavior)."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
-    table = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [(i, 1, f"v1-{i}") for i in range(30)], ["k", "version", "payload"]
-    )
-    b2 = spark.createDataFrame([(3, 2, "v2-3")], ["k", "version", "payload"])
-    merge_batch_adaptive(b1, table, ["k"], "version", staging_suffix=".staging-0")
-    merge_batch_adaptive(b2, table, ["k"], "version", staging_suffix=".staging-1")
-    entries = os.listdir(table)
-    assert not any(e.startswith("pbucket=") for e in entries)
-    assert "_layout.json" not in entries
-    want = {(i, 1, f"v1-{i}") for i in range(30) if i != 3} | {(3, 2, "v2-3")}
-    assert _snap(spark, table) == want
-
-
-def test_adaptive_merge_converts_past_threshold_then_prunes(spark, tmp_path):
-    """Crossing the threshold triggers the one-time conversion to the
-    hash layout (sidecar pinned to auto_n_buckets), after which merges
-    are partition-pruned: an untouched bucket's files keep their exact
-    mtimes across a later merge."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
-    table = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [(i, 1, f"v1-{i}") for i in range(200)], ["k", "version", "payload"]
-    )
-    # first merge: table absent (0 bytes) -> flat
-    merge_batch_adaptive(
-        b1, table, ["k"], "version",
-        staging_suffix=".staging-0", auto_flat_max_bytes=1024, auto_n_buckets=8,
-    )
-    assert not any(e.startswith("pbucket=") for e in os.listdir(table))
-    # second merge: flat table is now >1 KiB -> convert + pruned merge
-    b2 = spark.createDataFrame([(7, 2, "v2-7")], ["k", "version", "payload"])
-    merge_batch_adaptive(
-        b2, table, ["k"], "version",
-        staging_suffix=".staging-1", auto_flat_max_bytes=1024, auto_n_buckets=8,
-    )
-    entries = os.listdir(table)
-    assert any(e.startswith("pbucket=") for e in entries)
-    with open(os.path.join(table, "_layout.json")) as fh:
-        layout = json.load(fh)
-    assert layout == {
-        "bucket_col": "pbucket",
-        "kind": "hash",
-        "key_cols": ["k"],
-        "n_buckets": 8,
-    }
-    want = {(i, 1, f"v1-{i}") for i in range(200) if i != 7} | {(7, 2, "v2-7")}
-    assert _snap(spark, table) == want
-
-    # third merge: pruned — untouched buckets' files keep their mtimes
-    def mtimes():
-        out = {}
-        for e in os.listdir(table):
-            if e.startswith("pbucket="):
-                d = os.path.join(table, e)
-                out[e] = {f: os.path.getmtime(os.path.join(d, f))
-                          for f in os.listdir(d)}
-        return out
-
-    before = mtimes()
-    b3 = spark.createDataFrame([(11, 2, "v2-11")], ["k", "version", "payload"])
-    merge_batch_adaptive(
-        b3, table, ["k"], "version",
-        staging_suffix=".staging-2", auto_flat_max_bytes=1024, auto_n_buckets=8,
-    )
-    after = mtimes()
-    touched = {e for e in before if before[e] != after.get(e)}
-    untouched = {e for e in before if before[e] == after.get(e)}
-    assert len(touched) == 1  # one key -> one bucket rewritten
-    assert len(untouched) == 7
-    want = {(i, 1, f"v1-{i}") for i in range(200) if i not in (7, 11)}
-    want |= {(7, 2, "v2-7"), (11, 2, "v2-11")}
-    assert _snap(spark, table) == want
-
-
-def test_adaptive_merge_respects_pinned_layout_and_rejects_expr(spark, tmp_path):
-    """An already-bucketed table keeps its PINNED n_buckets (auto_n_buckets
-    is ignored), and a table pinned to a custom expr layout is refused —
-    the adaptive path cannot reconstruct the expression."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
-    b = spark.createDataFrame(
-        [(i, 1, "x") for i in range(50)], ["k", "version", "payload"]
-    )
-    hashed = str(tmp_path / "hashed")
-    merge_batch_into_partitioned_table(b, hashed, ["k"], "version", n_buckets=4)
-    merge_batch_adaptive(
-        b, hashed, ["k"], "version", auto_n_buckets=64  # must NOT re-layout
-    )
-    with open(os.path.join(hashed, "_layout.json")) as fh:
-        assert json.load(fh)["n_buckets"] == 4
-    buckets = {e for e in os.listdir(hashed) if e.startswith("pbucket=")}
-    assert buckets <= {f"pbucket={i}" for i in range(4)}
-
-    expr_tab = str(tmp_path / "expr")
-    merge_batch_into_partitioned_table(
-        b, expr_tab, ["k"], "version",
-        bucket_expr=F.col("k") / 10, bucket_expr_id="k div 10",
-    )
-    with pytest.raises(ValueError, match="non-hash layout"):
-        merge_batch_adaptive(b, expr_tab, ["k"], "version")
-
-
-def test_adaptive_conversion_crash_is_healed(spark, tmp_path):
-    """Kill the flat->partitioned conversion between its two renames: the
-    next adaptive merge restores the flat table, re-converts, and lands
-    the batch — no data loss, no leftovers."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
-    table = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [(i, 1, f"v1-{i}") for i in range(100)], ["k", "version", "payload"]
-    )
-    merge_batch_adaptive(
-        b1, table, ["k"], "version",
-        staging_suffix=".staging-0", auto_flat_max_bytes=10**12,
-    )  # flat
-    b2 = spark.createDataFrame([(5, 2, "v2-5")], ["k", "version", "payload"])
-    real_rename = os.rename
-    n = {"c": 0}
-
-    def dying(src, dst):
-        if n["c"] == 1:  # after live->retired, before staging->live
-            raise RuntimeError("injected mid-conversion crash")
-        n["c"] += 1
-        return real_rename(src, dst)
-
-    os.rename = dying
-    try:
-        with pytest.raises(RuntimeError, match="mid-conversion"):
-            merge_batch_adaptive(
-                b2, table, ["k"], "version",
-                staging_suffix=".staging-1", auto_flat_max_bytes=1024,
-                auto_n_buckets=8,
-            )
-    finally:
-        os.rename = real_rename
-    # replay: heals the half-swap, re-converts, merges
-    merge_batch_adaptive(
-        b2, table, ["k"], "version",
-        staging_suffix=".staging-1", auto_flat_max_bytes=1024, auto_n_buckets=8,
-    )
-    want = {(i, 1, f"v1-{i}") for i in range(100) if i != 5} | {(5, 2, "v2-5")}
-    assert _snap(spark, table) == want
-    assert any(e.startswith("pbucket=") for e in os.listdir(table))
-    parent = os.path.dirname(table)
-    assert not any(".staging" in e or ".retired" in e for e in os.listdir(parent))
-
-
 def test_partitioned_merge_heals_sibling_retired_from_crashed_flat_merge(
     spark, tmp_path
 ):
-    """Round-7 ADVICE (medium): a crashed FLAT merge (or a conversion
-    dying between its two renames) leaves `<table>.retired` with the only
-    copy of the data and `<table>` absent. Invoking the PARTITIONED merge
+    """Round-7 ADVICE (medium): a crashed FLAT merge leaves
+    `<table>.retired` with the only copy of the data and `<table>`
+    absent. Invoking the PARTITIONED merge
     directly on that state used to build a batch-only table, after which
     a later heal saw live+retired and deleted the retired copy — silent
     loss of every pre-crash row. Now the partitioned merge heals the
     sibling first, then refuses to bucket-merge into the restored FLAT
-    table — data intact, caller told to convert."""
+    table — data intact."""
     table = str(tmp_path / "t")
     b1 = spark.createDataFrame(
         [(i, 1, f"v1-{i}") for i in range(20)], ["k", "version", "payload"]
@@ -545,11 +358,7 @@ def test_staging_suffix_outside_namespace_rejected(spark, tmp_path):
     """Round-7 ADVICE (low): the stale-staging sweep reclaims orphans by
     the '.staging' name prefix; a suffix outside that namespace would
     silently escape the cleanup contract (and risk the sweep deleting an
-    unrelated sibling). All three merge entry points validate it."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
+    unrelated sibling). Both merge entry points validate it."""
     table = str(tmp_path / "t")
     batch = spark.createDataFrame([(1, 1, "a")], ["k", "version", "payload"])
     for call in (
@@ -559,90 +368,7 @@ def test_staging_suffix_outside_namespace_rejected(spark, tmp_path):
         lambda: merge_batch_into_partitioned_table(
             batch, table, ["k"], "version", staging_suffix="_tmp"
         ),
-        lambda: merge_batch_adaptive(
-            batch, table, ["k"], "version", staging_suffix="_tmp"
-        ),
     ):
         with pytest.raises(ValueError, match=r"\.staging"):
             call()
     assert not os.path.exists(table)  # nothing was created
-
-
-def test_adaptive_checks_batch_preconditions_before_conversion(
-    spark, tmp_path
-):
-    """Round-7 ADVICE (low): a batch that would make the partitioned
-    merge raise (here: a data column colliding with the bucket column)
-    must fail BEFORE the irreversible flat->partitioned conversion —
-    otherwise the layout flips first, the merge raises, and every replay
-    of the same batch keeps failing against the converted table."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
-    table = str(tmp_path / "t")
-    b1 = spark.createDataFrame(
-        [(i, 1, f"v1-{i}") for i in range(200)], ["k", "version", "payload"]
-    )
-    merge_batch_adaptive(
-        b1, table, ["k"], "version",
-        staging_suffix=".staging-0", auto_flat_max_bytes=1024,
-    )
-    bad = spark.createDataFrame(
-        [(1, 2, "x", 0)], ["k", "version", "payload", "pbucket"]
-    )
-    with pytest.raises(ValueError, match="pbucket"):
-        merge_batch_adaptive(
-            bad, table, ["k"], "version",
-            staging_suffix=".staging-1", auto_flat_max_bytes=1024,
-        )
-    # the table is STILL FLAT — the precondition fired before conversion
-    entries = os.listdir(table)
-    assert not any(e.startswith("pbucket=") for e in entries)
-    assert "_layout.json" not in entries
-    assert _snap(spark, table) == {(i, 1, f"v1-{i}") for i in range(200)}
-
-
-def test_streaming_writer_validates_n_buckets_eagerly(spark, tmp_path):
-    """Round-7 ADVICE (low): n_buckets accepts int | None | the exact
-    string 'auto'; any other string must fail at WRITER CONSTRUCTION,
-    not as an opaque int() ValueError inside batch 0's foreachBatch."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        streaming_merge_upsert,
-    )
-
-    # validation fires before the writer touches the DataFrame, so a
-    # batch frame stands in for the stream
-    df = spark.createDataFrame([(1, 1)], ["k", "version"])
-    for bad in ("Auto", "AUTO", "16", ""):
-        with pytest.raises(ValueError, match="auto"):
-            streaming_merge_upsert(
-                df, str(tmp_path / "t"), ["k"], "version",
-                checkpoint_dir=str(tmp_path / "cp"), n_buckets=bad,
-            )
-
-
-def test_adaptive_merge_reserves_pbucket_in_every_regime(spark, tmp_path):
-    """Round-7 self-review: the 'pbucket' precondition must fire on EVERY
-    adaptive merge, not just the threshold-crossing one — flat merges
-    that accepted the column would poison the promised conversion days
-    later (the crossing batch and all its replays fail forever, and even
-    pbucket-free batches then fail because the flat table already
-    contains the column)."""
-    from apache_spark_streaming_project_spark.streaming.upsert import (
-        merge_batch_adaptive,
-    )
-
-    table = str(tmp_path / "t")
-    bad_first = spark.createDataFrame(
-        [(1, 1, "a", 0)], ["k", "version", "payload", "pbucket"]
-    )
-    # far below any threshold: the flat regime must STILL refuse
-    with pytest.raises(ValueError, match="pbucket"):
-        merge_batch_adaptive(bad_first, table, ["k"], "version")
-    assert not os.path.exists(table)  # nothing was written
-
-    # and a clean batch afterwards works normally
-    ok = spark.createDataFrame([(1, 1, "a")], ["k", "version", "payload"])
-    merge_batch_adaptive(ok, table, ["k"], "version")
-    assert _snap(spark, table) == {(1, 1, "a")}
