@@ -17,7 +17,7 @@ Layout:
     operators/   batch relational operators (enrich, aggregate, anomaly,
                  readside, dedup, similarity, text, multimodal)
     sources/     batch & streaming sources (file, rate, fixture generator)
-    streaming/   the streaming pipeline shell (foreachBatch fan-out,
+    streaming/   the streaming pipeline shell (foreachBatch sinks,
                  event-time windowed variants, reset utility)
     functions/   reusable column-expression helpers (exact decimal aggs,
                  vector math, bucketing)

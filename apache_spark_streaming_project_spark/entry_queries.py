@@ -6001,7 +6001,7 @@ def m3_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
     derive a deterministic census fixture from ``orders`` (pure column
     arithmetic, so the oracle can recompute it in SQL), write it as
     headerless CSV micro-batch files, drain them through the full streaming
-    pipeline (file source -> enrich -> 8 sinks, availableNow, multi-epoch
+    pipeline (file source -> enrich -> 3 sinks, availableNow, multi-epoch
     via maxFilesPerTrigger), then read the ``age_group_distribution`` sink
     back and re-aggregate across epoch snapshots. Equality with the batch
     SQL oracle proves the source/enrich/aggregate/sink path end to end —
@@ -6052,12 +6052,12 @@ def m3_streaming_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 max_files_per_trigger=2,
             ),
         )
-    # Parity across SIX of the eight sinks, not just one (the round-10
-    # mutation audit found a wrong-group-key mutation in the work_hours
-    # sink survived when only age_group_distribution was read back):
-    # the four grouped-count sinks re-aggregate across epoch snapshots,
-    # raw_data pins the passthrough row count, anomalies pins the
-    # z-score path (this uniform-hours fixture has |z| <= ~1.7, so the
+    # Parity across SIX of the eight result tables, not just one (the
+    # round-10 mutation audit found a wrong-group-key mutation in the
+    # work_hours table survived when only age_group_distribution was read
+    # back): the four grouped-count tables re-aggregate across epoch
+    # snapshots, raw_data pins the passthrough row count, anomalies pins
+    # the z-score path (this uniform-hours fixture has |z| <= ~1.7, so the
     # exact expected count is zero — mirrored derivationally in SQL).
     def _counts(table: str, keys: list[str]) -> DataFrame:
         t = read_result_table(spark, out_dir, table)

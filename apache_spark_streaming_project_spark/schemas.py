@@ -38,8 +38,8 @@ CENSUS_SCHEMA = T.StructType(
     ]
 )
 
-# The 8 result tables (parquet directories in this engine; the reference used
-# 8 MongoDB collections — reference reset_database.py:18-27).
+# The 8 result tables (the reference used 8 MongoDB collections — reference
+# reset_database.py:18-27), as served by ``pipeline.read_result_table``.
 RESULT_TABLES = (
     "summary_statistics",
     "anomalies",
@@ -50,6 +50,10 @@ RESULT_TABLES = (
     "occupation_stats",
     "raw_data",
 )
+
+# The parquet directories the pipeline writes them to: the 6 aggregate
+# families share one long ``snapshots`` table, told apart by its ``family``.
+SINK_TABLES = ("snapshots", "anomalies", "raw_data")
 
 TESTDATA_TABLES = (
     "region",

@@ -7,33 +7,31 @@ loops, with no checkpoint. This engine keeps the SEMANTICS (per-batch
 stateless snapshot aggregation, same 8 result families, same column math)
 and fixes the physical plan (SURVEY.md §4.3):
 
-* ONE streaming query; ``foreachBatch`` fans out to all 8 result tables from
-  a single ``persist()``-ed batch (reference re-scanned the batch >= 10x).
+* ONE streaming query; ``foreachBatch`` writes THREE sinks from a single
+  ``persist()``-ed batch (reference re-scanned the batch >= 10x):
+  ``snapshots`` (the 6 aggregate families, from one grouping-sets
+  aggregate), ``anomalies`` and ``raw_data`` — the reference's 8 families.
 * Sinks are partitioned parquet written by executors (``df.write``), not
   driver row loops — bulk columnar I/O instead of 1 RTT per row.
 * ``checkpointLocation`` + epoch-partitioned dynamic-overwrite writes give
   exactly-once per epoch (reference: at-least-once with duplicates).
-* Snapshot tables are long-format (category, count, timestamp) — the
+* Snapshot families are long-format (category, count, timestamp) — the
   reference's dynamic Mongo keys (S17) flattened into proper columns.
-
-At scale each micro-batch's aggregations are ordinary partial+final hash
-aggs; the 8 sinks share one scan of the cached batch.
+  ``read_result_table`` serves each of the 8 families as its own frame.
 """
 
 from __future__ import annotations
 
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from apache_spark_streaming_project_spark.operators.aggregates import (
-    grouped_counts,
-    occupation_stats,
-    summary_statistics,
+    SNAPSHOT_FAMILIES,
+    census_snapshots,
 )
 from apache_spark_streaming_project_spark.operators.anomaly import (
     census_hours_anomalies,
@@ -47,47 +45,20 @@ class PipelineConfig:
     input_dir: str
     output_dir: str
     checkpoint_dir: str
-    source_format: str = "csv"
     trigger_seconds: int | None = 10  # None -> availableNow (drain & stop)
     anomaly_threshold: float = 3.0
     max_files_per_trigger: int | None = None
-    extra_sink_options: dict[str, str] = field(default_factory=dict)
 
 
 def compute_result_tables(
     enriched: DataFrame, anomaly_threshold: float = 3.0
 ) -> dict[str, DataFrame]:
-    """The 8 per-batch result tables (reference reset_database.py:18-27),
-    as pure batch DataFrames over the enriched micro-batch.
-
-    summary_statistics carries the reference's per-income-category counts as
-    two fixed columns (count_high_income / count_low_income) instead of
-    dynamic string keys (S17 anti-pattern -> static schema); a category
-    absent from a micro-batch counts 0, not NULL (pivot emits NULL for a
-    missing explicit value, which would poison downstream arithmetic).
-    """
-    income_counts = (
-        grouped_counts(enriched, "income_category")  # the S20 operator
-        .groupBy()
-        .pivot(
-            "income_category", ["High Income (>50K)", "Low Income (<=50K)"]
-        )
-        .sum("count")
-        .withColumnRenamed("High Income (>50K)", "count_high_income")
-        .withColumnRenamed("Low Income (<=50K)", "count_low_income")
-        .na.fill(0, ["count_high_income", "count_low_income"])
-    )
-    summary = summary_statistics(enriched).crossJoin(
-        F.broadcast(income_counts)
-    )
+    """The 3 per-batch sink tables (``schemas.SINK_TABLES``), as pure batch
+    DataFrames over the enriched micro-batch; together they hold the
+    reference's 8 result families (reference reset_database.py:18-27)."""
     return {
-        "summary_statistics": summary,
+        "snapshots": census_snapshots(enriched),
         "anomalies": census_hours_anomalies(enriched, anomaly_threshold),
-        "age_group_distribution": grouped_counts(enriched, "age_group"),
-        "education_income": grouped_counts(enriched, "education", "income_category"),
-        "gender_income": grouped_counts(enriched, "gender", "income_category"),
-        "work_hours": grouped_counts(enriched, "work_hours_category"),
-        "occupation_stats": occupation_stats(enriched),
         "raw_data": enriched,
     }
 
@@ -97,16 +68,15 @@ def write_batch(
     epoch_id: int,
     output_dir: str,
     anomaly_threshold: float = 3.0,
-    sink_options: dict[str, str] | None = None,
 ) -> None:
-    """foreachBatch body: one persist, 8 bulk parquet writes, unpersist.
+    """foreachBatch body: one persist, 3 bulk parquet writes, unpersist.
 
     Writes are ``partitionBy(epoch_id)`` + dynamic partition overwrite, so a
     replayed epoch (post-crash restart from checkpoint) rewrites its own
     partition instead of appending duplicates — exactly-once per epoch.
+    They run one after another on the stream's thread, so every write
+    carries the stream's job group (q.stop() cancels by it).
     """
-    from concurrent.futures import ThreadPoolExecutor
-
     # the emptiness guard runs on the PERSISTED frame: a pre-persist
     # isEmpty() partially re-executes the source scan, which double-counts
     # rows in the stream's observe() metrics; through the cache every
@@ -116,57 +86,31 @@ def write_batch(
         if enriched.isEmpty():
             return
         snapshot_ts = F.lit(time.time()).cast("double")
-
-        def _write(item: tuple[str, DataFrame]) -> None:
-            name, table = item
-            # aggregate tables carry the batch snapshot time as their
-            # 'timestamp' (the reference's per-insert Mongo timestamp);
-            # tables that already HAVE a timestamp column (raw_data,
-            # anomalies — the S8 per-row processing time) keep it: the
-            # old unconditional withColumn silently replaced that
-            # TimestampType with a double, breaking trailing-window
-            # reads over the result tables
-            out = table
+        for name, table in compute_result_tables(enriched, anomaly_threshold).items():
+            # snapshots carry the batch snapshot time as their 'timestamp'
+            # (the reference's per-insert Mongo timestamp); raw_data and
+            # anomalies keep their own TimestampType column (the S8
+            # per-row processing time) for trailing-window reads
             if "timestamp" not in table.columns:
-                out = out.withColumn("timestamp", snapshot_ts)
-            out = out.withColumn("epoch_id", F.lit(int(epoch_id)))
+                table = table.withColumn("timestamp", snapshot_ts)
             (
-                out.write.mode("overwrite")
+                table.withColumn("epoch_id", F.lit(int(epoch_id)))
+                .write.mode("overwrite")
                 .partitionBy("epoch_id")
                 .option("partitionOverwriteMode", "dynamic")
-                .options(**(sink_options or {}))
                 .parquet(f"{output_dir}/{name}")
             )
-
-        # the 8 sinks are independent reads of the SAME persisted batch —
-        # submit them as concurrent jobs (Spark's scheduler interleaves
-        # them) instead of paying 8 sequential job startups per epoch.
-        # Pool threads start with no local properties, so each submission
-        # is wrapped to carry this thread's, including the stream's job
-        # group (q.stop() cancels by it). Each wrap clones the properties
-        # once, and the pool threads must not share one clone, so wrap
-        # per submission.
-        spark = batch_df.sparkSession
-        with ThreadPoolExecutor(max_workers=4) as pool:
-            for f in [
-                pool.submit(inheritable_thread_target(spark)(_write), item)
-                for item in compute_result_tables(
-                    enriched, anomaly_threshold
-                ).items()
-            ]:
-                f.result()  # propagate the first failure
     finally:
         enriched.unpersist()
 
 
 def start_pipeline(spark: SparkSession, cfg: PipelineConfig) -> StreamingQuery:
-    """S6 — single-query lifecycle: source -> foreachBatch fan-out; update
+    """S6 — single-query lifecycle: source -> foreachBatch sinks; update
     output mode kept for reference fidelity (vacuous under foreachBatch —
     SURVEY.md §2.9), checkpointing on (the reference had none)."""
     stream = read_census_stream(
         spark,
         cfg.input_dir,
-        cfg.source_format,
         max_files_per_trigger=cfg.max_files_per_trigger,
     )
     # per-batch operational metrics via the Observation API: surfaced in
@@ -182,11 +126,7 @@ def start_pipeline(spark: SparkSession, cfg: PipelineConfig) -> StreamingQuery:
         stream.writeStream.outputMode("update")
         .foreachBatch(
             lambda df, epoch: write_batch(
-                df,
-                epoch,
-                cfg.output_dir,
-                anomaly_threshold=cfg.anomaly_threshold,
-                sink_options=cfg.extra_sink_options,
+                df, epoch, cfg.output_dir, anomaly_threshold=cfg.anomaly_threshold
             )
         )
         .option("checkpointLocation", cfg.checkpoint_dir)
@@ -213,4 +153,14 @@ def run_available_now(spark: SparkSession, cfg: PipelineConfig) -> None:
 
 
 def read_result_table(spark: SparkSession, output_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{output_dir}/{name}")
+    """One of the 8 result families (``schemas.RESULT_TABLES``) across all
+    epochs. The 6 aggregate families are the ``family`` rows of the
+    ``snapshots`` sink, with that family's columns."""
+    if name not in SNAPSHOT_FAMILIES:
+        return spark.read.parquet(f"{output_dir}/{name}")
+    keys, values = SNAPSHOT_FAMILIES[name]
+    return (
+        spark.read.parquet(f"{output_dir}/snapshots")
+        .filter(F.col("family") == name)
+        .select(*keys, *values, "timestamp", "epoch_id")
+    )

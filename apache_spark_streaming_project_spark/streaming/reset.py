@@ -1,13 +1,14 @@
 """Sink truncation utility (S7 — reference reset_database.py:9-37 drops the
-8 Mongo collections; here result tables are parquet directories, so reset =
-remove table dirs + the checkpoint so the next run starts from offset zero)."""
+8 Mongo collections; here the 8 result tables live in 3 parquet sink
+directories, so reset = remove the sink dirs + the checkpoint so the next run
+starts from offset zero)."""
 
 from __future__ import annotations
 
 import shutil
 from pathlib import Path
 
-from apache_spark_streaming_project_spark.schemas import RESULT_TABLES
+from apache_spark_streaming_project_spark.schemas import SINK_TABLES
 
 
 def reset_results(
@@ -15,7 +16,7 @@ def reset_results(
     checkpoint_dir: str | None = None,
     keep_checkpoint: bool = False,
 ) -> list[str]:
-    """Delete all result-table directories plus the checkpoint. Returns
+    """Delete all sink directories plus the checkpoint. Returns
     the paths removed.
 
     The checkpoint is part of the reset CONTRACT, not an option: deleting
@@ -34,7 +35,7 @@ def reset_results(
             "keep_checkpoint=True to half-reset deliberately."
         )
     removed = []
-    for name in RESULT_TABLES:
+    for name in SINK_TABLES:
         p = Path(output_dir) / name
         if p.exists():
             shutil.rmtree(p)

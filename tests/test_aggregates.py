@@ -9,33 +9,36 @@ import pytest
 from pyspark.sql import Row
 
 from apache_spark_streaming_project_spark.operators.aggregates import (
-    grouped_counts,
-    occupation_stats,
-    summary_statistics,
+    SNAPSHOT_FAMILIES,
+    census_snapshots,
 )
 from apache_spark_streaming_project_spark.operators.enrich import enrich_census
 from apache_spark_streaming_project_spark.schemas import CENSUS_SCHEMA
 
 
+def _census_row(age, hours, occupation, education="Bachelors"):
+    return Row(
+        age=age,
+        workclass="Private",
+        education=education,
+        marital_status="Never-married",
+        occupation=occupation,
+        relationship="Not-in-family",
+        race="White",
+        gender="Female" if age % 2 else "Male",
+        capital_gain=0,
+        capital_loss=0,
+        hours_per_week=hours,
+        native_country="United-States",
+        income=1 if age > 40 else 0,
+        capital_income=0,
+    )
+
+
 @pytest.fixture(scope="module")
 def census_df(spark):
     rows = [
-        Row(
-            age=a,
-            workclass="Private",
-            education="Bachelors",
-            marital_status="Never-married",
-            occupation=occ,
-            relationship="Not-in-family",
-            race="White",
-            gender="Female" if a % 2 else "Male",
-            capital_gain=0,
-            capital_loss=0,
-            hours_per_week=h,
-            native_country="United-States",
-            income=1 if a > 40 else 0,
-            capital_income=0,
-        )
+        _census_row(a, h, occ)
         for a, h, occ in [
             (25, 40, "Tech-support"),
             (35, 50, "Tech-support"),
@@ -47,8 +50,19 @@ def census_df(spark):
     return spark.createDataFrame(rows, CENSUS_SCHEMA)
 
 
+def _family(df, name):
+    """One family's rows of ``census_snapshots``, with its columns."""
+    keys, values = SNAPSHOT_FAMILIES[name]
+    return (
+        census_snapshots(enrich_census(df))
+        .filter(f"family = '{name}'")
+        .select(*keys, *values)
+        .collect()
+    )
+
+
 def test_summary_statistics_matches_python(census_df):
-    row = summary_statistics(enrich_census(census_df)).collect()[0]
+    (row,) = _family(census_df, "summary_statistics")
     ages = [25, 35, 45, 55, 65]
     hours = [40, 50, 20, 60, 10]
     assert row.avg_age == pytest.approx(statistics.mean(ages), abs=1e-12)
@@ -56,21 +70,50 @@ def test_summary_statistics_matches_python(census_df):
     assert row.avg_hours == pytest.approx(statistics.mean(hours), abs=1e-12)
     assert row.stddev_hours == pytest.approx(statistics.stdev(hours), abs=1e-9)
     assert row.min_age == 25 and row.max_age == 65
+    assert row.count_high_income == 3 and row.count_low_income == 2
 
 
 def test_grouped_counts(census_df):
     out = {
-        r.income_category: r["count"]
-        for r in grouped_counts(enrich_census(census_df), "income_category").collect()
+        (r.gender, r.income_category): r["count"]
+        for r in _family(census_df, "gender_income")
     }
-    assert out == {"High Income (>50K)": 3, "Low Income (<=50K)": 2}
+    assert out == {
+        ("Female", "High Income (>50K)"): 3,
+        ("Female", "Low Income (<=50K)"): 2,
+    }
 
 
 def test_occupation_stats(census_df):
-    out = {r.occupation: r for r in occupation_stats(enrich_census(census_df)).collect()}
+    out = {r.occupation: r for r in _family(census_df, "occupation_stats")}
     assert out["Tech-support"]["count"] == 2
     assert out["Tech-support"]["avg_age"] == pytest.approx(30.0)
     assert out["Sales"]["avg_hours"] == pytest.approx(30.0)
+
+
+def test_null_keys_stay_in_their_family(spark):
+    """A NULL occupation or education is a group of its family, not a
+    grouping-sets total row: ``family`` comes from ``grouping_id()``."""
+    df = spark.createDataFrame(
+        [
+            _census_row(25, 40, "Sales"),
+            _census_row(35, 50, None),
+            _census_row(45, 20, None, education=None),
+        ],
+        CENSUS_SCHEMA,
+    )
+    occupations = {r.occupation: r["count"] for r in _family(df, "occupation_stats")}
+    assert occupations == {"Sales": 1, None: 2}
+    education = {
+        (r.education, r.income_category): r["count"]
+        for r in _family(df, "education_income")
+    }
+    assert education == {
+        ("Bachelors", "Low Income (<=50K)"): 2,
+        (None, "High Income (>50K)"): 1,
+    }
+    (summary,) = _family(df, "summary_statistics")
+    assert summary.min_age == 25 and summary.max_age == 45
 
 
 class TestHeavyHitters:

@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from apache_spark_streaming_project_spark.schemas import RESULT_TABLES
+from apache_spark_streaming_project_spark.schemas import RESULT_TABLES, SINK_TABLES
 from apache_spark_streaming_project_spark.streaming import simulator
 from apache_spark_streaming_project_spark.streaming.pipeline import (
     PipelineConfig,
@@ -137,10 +137,11 @@ def test_reset_utility(spark, tmp_path_factory):
     )
     run_available_now(spark, cfg)
     removed = reset_results(output_dir, ckpt)
-    assert len(removed) == len(RESULT_TABLES) + 1
+    assert len(removed) == len(SINK_TABLES) + 1
     import os
 
     assert not os.path.exists(f"{output_dir}/raw_data")
+    assert not os.path.exists(f"{output_dir}/snapshots")
 
 
 def test_windowed_variant_availablenow(spark, tmp_path_factory):
@@ -522,14 +523,10 @@ def test_run_available_now_stops_its_query_when_the_wait_fails(
             q.stop()
 
 
-def test_pooled_sink_writes_keep_the_stream_job_group(
-    spark, tmp_path, monkeypatch
-):
-    """``write_batch`` runs its sink writes on a thread pool. Each pooled
-    write must carry the stream's job group (``spark.jobGroup.id`` is the
-    query's runId), so stopping the query cancels writes in flight."""
-    import threading
-
+def test_sink_writes_keep_the_stream_job_group(spark, tmp_path, monkeypatch):
+    """Every sink write of an epoch carries the stream's job group
+    (``spark.jobGroup.id`` is the query's runId), so stopping the query
+    cancels writes in flight."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     from apache_spark_streaming_project_spark.streaming.pipeline import (
@@ -540,12 +537,7 @@ def test_pooled_sink_writes_keep_the_stream_job_group(
     real_parquet = DataFrameWriter.parquet
 
     def recording_parquet(self, path, *args, **kwargs):
-        groups.append(
-            (
-                threading.current_thread().name,
-                spark.sparkContext.getLocalProperty("spark.jobGroup.id"),
-            )
-        )
+        groups.append(spark.sparkContext.getLocalProperty("spark.jobGroup.id"))
         return real_parquet(self, path, *args, **kwargs)
 
     monkeypatch.setattr(DataFrameWriter, "parquet", recording_parquet)
@@ -554,9 +546,8 @@ def test_pooled_sink_writes_keep_the_stream_job_group(
         q.awaitTermination()
     finally:
         q.stop()
-    assert len(groups) >= 8  # the 8 result tables of at least one epoch
-    assert all(name.startswith("ThreadPoolExecutor") for name, _ in groups)
-    assert {group for _, group in groups} == {str(q.runId)}
+    assert len(groups) >= 3  # the 3 sinks of at least one epoch
+    assert set(groups) == {str(q.runId)}
 
 
 def test_streaming_upsert_replay_idempotent(spark, tmp_path):

@@ -269,10 +269,10 @@ MUTATIONS = [
 
     # ----- streaming -----
     M("m3_wrong_group_key", "m3_streaming_parity",
-      f"{PKG}/streaming/pipeline.py",
-      '"work_hours": grouped_counts(enriched, "work_hours_category"),',
-      '"work_hours": grouped_counts(enriched, "age_group"),',
-      "wrong-key", "work-hours sink grouped on the wrong column"),
+      f"{PKG}/operators/aggregates.py",
+      '"work_hours": (("work_hours_category",), ("count",)),',
+      '"work_hours": (("age_group",), ("count",)),',
+      "wrong-key", "work-hours grouping set on the wrong column"),
     M("m13_merge_keeps_dups", "m13_streaming_kmv",
       f"{PKG}/operators/mergeable.py",
       'sketches.select(*group_cols, "hv")\n        .distinct()\n        .withColumn("_rk", F.row_number().over(w))',
