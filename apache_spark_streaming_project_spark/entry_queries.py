@@ -33,6 +33,11 @@ from apache_spark_streaming_project_spark.functions.exact import (
 )
 from apache_spark_streaming_project_spark.operators import enrich
 from apache_spark_streaming_project_spark.schemas import load_table
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    compact_store,
+    read_store,
+    replace_state,
+)
 
 _log = logging.getLogger(__name__)
 
@@ -89,15 +94,6 @@ def _scratch_dir(prefix: str) -> str:
     path = tempfile.mkdtemp(prefix=prefix)
     atexit.register(shutil.rmtree, path, ignore_errors=True)
     return path
-
-
-def _read_batch_store(spark: SparkSession, store: str) -> DataFrame:
-    """Recursive-lookup read of a batch-keyed dedup store — the
-    operators/dedup.py:_publish_store_batch layout, where flat compacted
-    part files and ``batch-<id>/`` subdirectories coexist. The single
-    spelling of the read-side contract for every registration tail (a
-    layout change edits here and dedup._read_store, nowhere else)."""
-    return spark.read.option("recursiveFileLookup", "true").parquet(store)
 
 
 def _pin_wave_mtime(wave_dir: str, wave: int) -> None:
@@ -11112,12 +11108,7 @@ def m13_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = kmv_merge(prior.unionByName(batch_sk), ["g"], k)
         else:
             merged = batch_sk
-        # two-phase publish: never read and overwrite the same files in
-        # one job (the upsert.py seam rule)
-        tmp = state + ".next"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        final = batch_df.sparkSession.read.parquet(tmp)
-        final.coalesce(1).write.mode("overwrite").parquet(state)
+        replace_state(merged, state)
 
     _drain_waves(spark, in_dir, ckpt, upsert_sketch, d.schema)
 
@@ -11209,13 +11200,9 @@ def m14_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle-set equality against the persisted kept-corpus texts
     (shingle_sets_equal — re-crawled/reformatted exact copies, the
     case/whitespace-insensitive identity), drops verified duplicates,
-    and publishes the survivors' rows + band rows to the two stores via
-    the idempotent batch-keyed overwrite (each micro-batch owns a
-    ``batch-<id>/`` subdirectory: new files only, never
-    read-and-overwrite of live data — the upsert.py seam rule — and an
-    at-least-once foreachBatch retry republishes identical content
-    instead of double-appending; round-13 close of the round-12 ADVICE
-    medium item, pinned by tests/test_store_compaction.py::
+    and publishes the survivors' rows + band rows to the two stores
+    (streaming/batch_store.py:publish_batch; replay idempotence is
+    pinned by tests/test_store_compaction.py::
     test_streaming_dedup_replay_is_idempotent).
 
     Determinism/oracle story: the drop rule is exact set equality, so
@@ -11266,7 +11253,7 @@ def m14_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
 
     return (
-        _read_batch_store(spark, corpus_store)
+        read_store(spark, corpus_store)
         .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
         .orderBy("doc_id")
     )
@@ -11498,7 +11485,7 @@ def m14b_streaming_threshold_dedup(
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
 
     return (
-        _read_batch_store(spark, text_store)
+        read_store(spark, text_store)
         .filter(F.col("kept"))
         .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
         .orderBy("doc_id")
@@ -11517,7 +11504,7 @@ def m16_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Table MAINTENANCE under a live streaming dedup (S7 x X7 on the
     m14b stores): drive epochs 0-1 through the PRODUCTION threshold-dedup
     batch body, COMPACT both corpus-lifetime stores mid-run
-    (sources/partitioned.py:compact_parquet — coalesce rewrite into
+    (streaming/batch_store.py:compact_store — coalesce rewrite into
     fresh directories, the swap pattern), then ingest epoch 2 against
     the compacted stores and return the kept set.
 
@@ -11538,9 +11525,6 @@ def m16_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from apache_spark_streaming_project_spark.operators.dedup import (
         streaming_threshold_dedup_batch,
-    )
-    from apache_spark_streaming_project_spark.sources.partitioned import (
-        compact_parquet,
     )
 
     base = _scratch_dir("m16_maint_")
@@ -11571,8 +11555,8 @@ def m16_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"maintenance fixture degenerate: band store has {n_frag} "
                 "part files after two publishes — nothing to compact"
             )
-        compact_parquet(spark, band, band_c, 1, recursive=True)
-        compact_parquet(spark, text, text_c, 1, recursive=True)
+        compact_store(spark, band, band_c, 1)
+        compact_store(spark, text, text_c, 1)
         if len(glob.glob(band_c + "/part-*")) != 1:
             raise RuntimeError(
                 "band-store compaction did not produce 1 file"
@@ -11581,7 +11565,7 @@ def m16_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
             d.filter(F.col("epoch") == 2), band_c, text_c, _M14B_T, 2
         )
     return (
-        _read_batch_store(spark, text_c)
+        read_store(spark, text_c)
         .filter(F.col("kept"))
         .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
         .orderBy("doc_id")
@@ -11949,7 +11933,7 @@ def m19_streaming_containment_dedup(
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
 
     return (
-        _read_batch_store(spark, text_store)
+        read_store(spark, text_store)
         .filter(F.col("kept"))
         .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
         .orderBy("doc_id")
@@ -12482,7 +12466,7 @@ def m20_streaming_semantic_dedup(
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
 
     return (
-        _read_batch_store(spark, vec_store)
+        read_store(spark, vec_store)
         .filter(F.col("kept"))
         .select("vec_id", F.col("epoch").cast("bigint").alias("epoch"))
         .orderBy("vec_id")
@@ -12726,7 +12710,7 @@ def m22_streaming_ann_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drain_waves(spark, in_dir, ckpt, ingest_batch, d.schema)
 
-    enc = _read_batch_store(spark, code_store).select("vec_id", "pq_code")
+    enc = read_store(spark, code_store).select("vec_id", "pq_code")
     # claim 1: the streamed index IS the batch-built index, row for row
     full = pq_encode(e, books)
     diff = enc.exceptAll(full).count() + full.exceptAll(enc).count()
@@ -12961,7 +12945,7 @@ def m24_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     _drain_waves(spark, in_dir, ckpt, fold_batch, d.schema)
 
     merged = (
-        _read_batch_store(spark, store)
+        read_store(spark, store)
         .groupBy("event_type", "item")
         .agg(F.sum("partial_count").alias("est_count"))
     )
@@ -13214,7 +13198,7 @@ def m26_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     _drain_waves(spark, in_dir, ckpt, fold_batch, d.schema)
 
-    merged = merge_histograms(_read_batch_store(spark, store))
+    merged = merge_histograms(read_store(spark, store))
     return histogram_quantiles(merged, [0.5, 0.9, 0.99]).select(
         F.col("q").cast("double").alias("q"),
         F.col("bucket").cast("bigint").alias("bucket"),

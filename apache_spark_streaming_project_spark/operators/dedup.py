@@ -14,6 +14,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+    read_store,
+)
+
 # types with a total order usable as a deterministic window tiebreaker
 _ORDERABLE_ATOMIC = (
     T.NumericType,
@@ -1362,35 +1367,6 @@ def embedding_near_dups(
 # a pickled closure).
 
 
-def _read_store(ss, store: str, schema: str):
-    """Read a batch-keyed dedup store (see ``_publish_store_batch``):
-    ``recursiveFileLookup`` picks up every ``batch-<id>/`` subdirectory
-    (and, after compaction, flat part files at the root — mixed layouts
-    are fine because recursive lookup disables partition inference).
-    Falls back to an empty frame before the first publish."""
-    import os
-
-    if os.path.isdir(store):
-        return ss.read.option("recursiveFileLookup", "true").parquet(store)
-    return ss.createDataFrame([], schema)
-
-
-def _publish_store_batch(df, store: str, batch_id: int) -> None:
-    """Idempotent batch-keyed publish for the corpus-lifetime dedup
-    stores: each micro-batch OVERWRITES its own ``batch-<id>/``
-    subdirectory, so an at-least-once foreachBatch retry republishes
-    identical content instead of double-appending (round-12 ADVICE
-    medium item; the m15/m17/m18 seam, here with a plain ``batch-``
-    prefix rather than hive ``batch=`` so a compacted store — flat part
-    files at the root — can keep taking batch publishes under one
-    recursive-lookup read)."""
-    import os
-
-    df.write.mode("overwrite").parquet(
-        os.path.join(store, f"batch-{int(batch_id)}")
-    )
-
-
 def streaming_lsh_dedup_batch(
     batch_df, band_store: str, corpus_store: str, batch_id: int
 ) -> None:
@@ -1398,7 +1374,7 @@ def streaming_lsh_dedup_batch(
     against a persisted band index. See m14_streaming_lsh_dedup
     (entry_queries.py) for the full semantics/scale story; kept-only
     rows are published to both stores via the idempotent batch-keyed
-    overwrite (``_publish_store_batch``)."""
+    overwrite (``publish_batch``)."""
     ss = batch_df.sparkSession
     b = batch_df.select("doc_id", "epoch", "text")
     sig = minhash_signatures_df(b, "doc_id", "text", 32, 3)
@@ -1418,7 +1394,7 @@ def streaming_lsh_dedup_batch(
     bands.count()
     dropped = None
     try:
-        prior = _read_store(
+        prior = read_store(
             ss,
             band_store,
             "band int, band_hash long, rep_epoch long, rep_doc_id long",
@@ -1442,7 +1418,7 @@ def streaming_lsh_dedup_batch(
             .select("doc_id", "rep_doc_id")
             .distinct()
         )
-        kept_corpus = _read_store(
+        kept_corpus = read_store(
             ss, corpus_store, "doc_id long, text string"
         ).select("doc_id", "text")
         rep_texts = kept_corpus.unionByName(b.select("doc_id", "text"))
@@ -1465,8 +1441,8 @@ def streaming_lsh_dedup_batch(
         # candidate+verify pipeline (incl. the corpus-store re-read and
         # shingling) runs twice per micro-batch (round-12 review finding)
         kept = b.join(dropped, "doc_id", "left_anti")
-        _publish_store_batch(kept, corpus_store, batch_id)
-        _publish_store_batch(
+        publish_batch(kept, corpus_store, batch_id)
+        publish_batch(
             bands.join(dropped, "doc_id", "left_anti").select(
                 "band",
                 "band_hash",
@@ -1492,7 +1468,7 @@ def streaming_threshold_dedup_batch(
     """m14b per-batch body: THRESHOLD (exact word-3-gram Jaccard >= t)
     streaming dedup under the pairwise keep-first rule. Both stores index
     EVERY arrival (kept flag on the text store), published via the
-    idempotent batch-keyed overwrite (``_publish_store_batch``); see
+    idempotent batch-keyed overwrite (``publish_batch``); see
     m14b_streaming_threshold_dedup (entry_queries.py)."""
     ss = batch_df.sparkSession
     b = batch_df.select("doc_id", "epoch", "text")
@@ -1512,7 +1488,7 @@ def streaming_threshold_dedup_batch(
     batch_bands.count()
     cand = None
     try:
-        prior_rows = _read_store(
+        prior_rows = read_store(
             ss,
             band_store,
             "band int, band_hash long, rep_epoch long, rep_doc_id long",
@@ -1539,7 +1515,7 @@ def streaming_threshold_dedup_batch(
         # ... and BOTH consumers sit inside ONE publish action, so the lazy
         # persist raced: seed eagerly (one evaluation, then cache reads)
         cand.count()
-        earlier_texts = _read_store(
+        earlier_texts = read_store(
             ss, text_store, "doc_id long, text string"
         ).select("doc_id", "text")
         all_texts = earlier_texts.unionByName(b.select("doc_id", "text"))
@@ -1577,18 +1553,18 @@ def streaming_threshold_dedup_batch(
             dropped.withColumn("_dropped", F.lit(True)), "doc_id", "left"
         )
         # the pair rule indexes EVERY arrival: both stores publish the
-        # whole batch (kept flag on the text store) into their
-        # batch-<id> subdirs — new files only, never read-and-overwrite
+        # whole batch (kept flag on the text store) into their own
+        # batch subdirs — new files only, never read-and-overwrite
         # of live data, and a retried micro-batch overwrites its own
         # subdir (replay is a no-op)
-        _publish_store_batch(
+        publish_batch(
             flagged.withColumn("kept", F.col("_dropped").isNull()).drop(
                 "_dropped"
             ),
             text_store,
             batch_id,
         )
-        _publish_store_batch(batch_reps, band_store, batch_id)
+        publish_batch(batch_reps, band_store, batch_id)
     finally:
         # crash-safe cache release — see tests/test_crash_recovery.py
         if cand is not None:
@@ -1632,7 +1608,7 @@ def streaming_containment_dedup_batch(
 
     Verify reads ONLY matched reps' texts (semi-join narrowed, the m14b
     seam) and recomputes containment on exact shingle arrays. Publish is
-    the idempotent batch-keyed overwrite (``_publish_store_batch``); the
+    the idempotent batch-keyed overwrite (``publish_batch``); the
     pair rule indexes EVERY arrival, so the gram index is bounded by
     corpus x grams-per-doc.
 
@@ -1662,7 +1638,7 @@ def streaming_containment_dedup_batch(
     g.count()
     cand = None
     try:
-        prior = _read_store(
+        prior = read_store(
             ss, gram_store, "gram_hash long, rep_epoch long, rep_doc_id long"
         ).select("gram_hash", "rep_epoch", "rep_doc_id")
         self_reps = g.select(
@@ -1713,7 +1689,7 @@ def streaming_containment_dedup_batch(
         ).persist()  # feeds the reps semi-join AND the verify join
         # both consumers sit inside ONE publish action — seed eagerly
         cand.count()
-        earlier_texts = _read_store(
+        earlier_texts = read_store(
             ss, text_store, "doc_id long, text string"
         ).select("doc_id", "text")
         all_texts = earlier_texts.unionByName(b.select("doc_id", "text"))
@@ -1747,14 +1723,14 @@ def streaming_containment_dedup_batch(
         flagged = b.join(
             dropped.withColumn("_dropped", F.lit(True)), "doc_id", "left"
         )
-        _publish_store_batch(
+        publish_batch(
             flagged.withColumn("kept", F.col("_dropped").isNull()).drop(
                 "_dropped"
             ),
             text_store,
             batch_id,
         )
-        _publish_store_batch(self_reps, gram_store, batch_id)
+        publish_batch(self_reps, gram_store, batch_id)
     finally:
         # crash-safe cache release — see tests/test_crash_recovery.py
         if cand is not None:
@@ -1850,7 +1826,7 @@ def streaming_semantic_dedup_batch(
     # races and the ivf assignment runs twice concurrently
     cells.count()
     try:
-        prior = _read_store(
+        prior = read_store(
             ss,
             cell_store,
             "centroid_id int, rep_epoch long, rep_vec_id long, "
@@ -1913,14 +1889,14 @@ def streaming_semantic_dedup_batch(
         flagged = b.join(
             dropped.withColumn("_dropped", F.lit(True)), "vec_id", "left"
         )
-        _publish_store_batch(
+        publish_batch(
             flagged.withColumn("kept", F.col("_dropped").isNull()).drop(
                 "_dropped"
             ),
             vec_store,
             batch_id,
         )
-        _publish_store_batch(cells, cell_store, batch_id)
+        publish_batch(cells, cell_store, batch_id)
     finally:
         # crash-safe cache release — see tests/test_crash_recovery.py
         cells.unpersist()
@@ -1953,7 +1929,7 @@ def requantize_cell_store(
         ivf_assign,
     )
 
-    arrivals = _read_store(
+    arrivals = read_store(
         spark,
         vec_store,
         "vec_id long, epoch long, embedding array<float>, kept boolean",
@@ -1988,8 +1964,8 @@ def streaming_decontaminate_batch(
     every arriving training document against a STATIC benchmark gram
     table (the decontamination gate run while the corpus is assembled,
     instead of as a batch pass afterwards). Emits one row per doc —
-    ``(doc_id, epoch, n_grams, n_contaminated, kept)`` — via the
-    idempotent batch-keyed overwrite publish (the m15/m17 seam).
+    ``(doc_id, epoch, n_grams, n_contaminated, kept)`` — via
+    ``publish_batch``.
 
     Scale shape: shingling is map-only; the benchmark gram table is
     SMALL by nature (eval suites, not corpora) so the membership probe
@@ -1997,8 +1973,6 @@ def streaming_decontaminate_batch(
     shuffles batch keys only. Exact gram strings here for oracle parity;
     ``cross_split_contamination(hash_grams=True)`` documents the 8-byte
     key trade for corpus-scale runs."""
-    import os
-
     ss = batch_df.sparkSession
     bench = ss.read.parquet(bench_grams_dir).withColumn("_hit", F.lit(1))
     g = batch_df.select(
@@ -2017,9 +1991,7 @@ def streaming_decontaminate_batch(
         )
         .withColumn("kept", F.col("n_contaminated") == F.lit(0))
     )
-    out.write.mode("overwrite").parquet(
-        os.path.join(sink_dir, f"batch={int(batch_id)}")
-    )
+    publish_batch(out, sink_dir, batch_id)
 
 
 def resolve_cc_assignments(
@@ -2051,8 +2023,8 @@ def resolve_cc_assignments(
     — without this, a batch retried after its own publish would see its
     endpoints already merged, project every edge to a self-loop, and
     overwrite its own dirs with EMPTY content (silent state loss)."""
-    assign = _read_store(ss, assign_store, "key long, root long, batch_id long")
-    remap = _read_store(
+    assign = read_store(ss, assign_store, "key long, root long, batch_id long")
+    remap = read_store(
         ss, remap_store, "old_root long, new_root long, batch_id long"
     )
     if exclude_batch is not None:
@@ -2183,8 +2155,8 @@ def streaming_cc_batch(
     # crash-window fault-injection test
     new_assign = new_assign.localCheckpoint()
     remap_entries = remap_entries.localCheckpoint()
-    _publish_store_batch(new_assign, assign_store, batch_id)
-    _publish_store_batch(remap_entries, remap_store, batch_id)
+    publish_batch(new_assign, assign_store, batch_id)
+    publish_batch(remap_entries, remap_store, batch_id)
 
 
 def compact_cc_store(

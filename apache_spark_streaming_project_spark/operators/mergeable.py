@@ -26,6 +26,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+)
+
 
 def partial_stats(
     df: DataFrame, group_cols: list[str], value_col: str, scale: int = 2
@@ -370,11 +374,9 @@ def streaming_heavy_hitters_batch(
     (``partial_heavy_hitters``: <= candidates rows per group per Arrow
     batch, raw rows never shuffle), the partials are summed to one
     summary row per (group, item) within the batch, and the summary is
-    published with the idempotent batch-keyed overwrite (each batch
-    OWNS ``batch-<id>/``; an at-least-once foreachBatch retry
-    republishes identical content — the m22 seam). The store is never
-    read during ingest, so per-epoch cost is O(batch) with NO
-    corpus-lifetime term.
+    published to the store (streaming/batch_store.py:publish_batch).
+    The store is never read during ingest, so per-epoch cost is
+    O(batch) with NO corpus-lifetime term.
 
     The read-side merge is one declarative aggregate over the store:
     summing ``partial_count`` per (group, item) across batches IS a
@@ -390,14 +392,10 @@ def streaming_heavy_hitters_batch(
     cost of candidates x (batch rows / Arrow batch size) rows per
     group per batch — still vanishingly small next to the raw item
     stream."""
-    import os
-
     parts = partial_heavy_hitters(
         batch_df, group_cols, item_col, candidates
     )
     summary = parts.groupBy(*group_cols, item_col).agg(
         F.sum("partial_count").alias("partial_count")
     )
-    summary.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store_dir, f"batch-{int(batch_id)}")
-    )
+    publish_batch(summary, store_dir, batch_id, files=1)

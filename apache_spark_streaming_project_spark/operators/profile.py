@@ -30,6 +30,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+)
+
 
 def _as_string(c: Column, dtype: str) -> Column:
     """Cast a min/max value to a cross-engine-stable string.
@@ -406,8 +410,7 @@ def streaming_drift_batch(
     so the drifted flag is engine-independent (no float division; the
     BM25 symbolic-ratio move). Output per batch: one row per grid
     bucket — (bucket, n_ref, n_cur, abs_cross, drifted) — published
-    with the idempotent hive batch-keyed overwrite (the m15/m17/m18
-    seam; a replayed batch overwrites its own directory).
+    with streaming/batch_store.py:publish_batch.
 
     An EMPTY batch trips the gate BY CONSTRUCTION (N_cur = 0 makes both
     sides 0 and the >= comparator fire) — the right alert semantics: a
@@ -424,8 +427,6 @@ def streaming_drift_batch(
     <= nbins rows — per-batch cost is one scan of the batch, zero
     corpus-sized state. Reference has no profiling at all (extension
     surface, SURVEY §2 X9/S6)."""
-    import os
-
     ss = batch_df.sparkSession
     ref = ss.read.parquet(ref_dir).select("bucket", "n_ref")
     cur = fixed_width_histogram(
@@ -470,9 +471,7 @@ def streaming_drift_batch(
         out = scored.select(
             "bucket", "n_ref", "n_cur", "abs_cross"
         ).crossJoin(F.broadcast(verdict))
-        out.write.mode("overwrite").parquet(
-            os.path.join(sink_dir, f"batch={int(batch_id)}")
-        )
+        publish_batch(out, sink_dir, batch_id)
     finally:
         j.unpersist()
 
@@ -489,12 +488,9 @@ def streaming_histogram_batch(
     """m26 per-batch body: fixed-width-histogram MAINTENANCE under
     ingest — each micro-batch is histogrammed (an nbins-key partial
     agg, the cheapest distribution sketch there is) and the partial is
-    published with the idempotent batch-keyed overwrite (each batch
-    OWNS ``batch-<id>/``; an at-least-once retry republishes identical
-    content — the m22 seam, plain ``batch-`` prefix so a compacted
-    store keeps taking publishes under one recursive-lookup read). The
-    store is never read during ingest: per-epoch cost is O(batch) with
-    no corpus-lifetime term.
+    published with streaming/batch_store.py:publish_batch. The store is
+    never read during ingest: per-epoch cost is O(batch) with no
+    corpus-lifetime term.
 
     Histogram partials are the EXACT mergeable sketch: bucket counts
     sum associatively, so the read-side merge (merge_histograms — one
@@ -506,9 +502,5 @@ def streaming_histogram_batch(
     merged store (histogram_quantiles) are therefore exact to one
     bucket width BY CONSTRUCTION, and the m26 registration hash-checks
     them against the direct-histogram SQL mirror."""
-    import os
-
     h = fixed_width_histogram(batch_df, value_col, lo, hi, nbins)
-    h.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(store, f"batch-{int(batch_id)}")
-    )
+    publish_batch(h, store, batch_id, files=1)

@@ -23,6 +23,11 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+    replace_state,
+)
+
 
 def stratified_sample(
     df: DataFrame,
@@ -639,20 +644,13 @@ def dsir_publish_scored_batch(
 ) -> None:
     """The m15 foreachBatch body, importable so the replay pytest pins
     the PRODUCTION publish (not a test-local copy): score the batch
-    against the frozen lambda parquet, then publish with an IDEMPOTENT
-    batch-keyed overwrite — foreachBatch is at-least-once, and a blind
-    append would double every row the engine re-delivers after a
-    failure between sink write and checkpoint commit. Replaying a batch
-    overwrites its own directory: a no-op."""
-    import os
-
+    against the frozen lambda parquet, then publish it
+    (streaming/batch_store.py:publish_batch)."""
     lam = batch_df.sparkSession.read.parquet(lam_dir)
     out = dsir_score_against(
         batch_df, lam, text_col, id_col, num_buckets
     )
-    out.write.mode("overwrite").parquet(
-        os.path.join(sink_dir, f"batch={int(batch_id)}")
-    )
+    publish_batch(out, sink_dir, batch_id)
 
 
 def streaming_quota_sample_batch(
@@ -681,9 +679,8 @@ def streaming_quota_sample_batch(
     a batch unions rows that are already present — ``distinct()``
     collapses them, so replay is a no-op. Dropping that distinct is
     the classic corruption (duplicate winners crowd real ones out of
-    the quota) and is a mutation-audit kill. Two-phase publish
-    (write ``.next``, then re-write the state) — never read and
-    overwrite the same files in one job (the upsert.py seam rule).
+    the quota) and is a mutation-audit kill. The fold is published
+    with streaming/batch_store.py:replace_state.
 
     Scale shape: the batch ranks with map-side WindowGroupLimit (at
     most n rows per stratum per task cross the exchange), the state
@@ -698,15 +695,10 @@ def streaming_quota_sample_batch(
     )
     if os.path.isdir(state_dir):
         prior = batch_df.sparkSession.read.parquet(state_dir)
-        merged = stratified_sample(
+        winners = stratified_sample(
             prior.unionByName(winners).distinct(),
             strata_cols,
             n_per_stratum,
             order_col,
         )
-        tmp = state_dir + ".next"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        final = batch_df.sparkSession.read.parquet(tmp)
-        final.coalesce(1).write.mode("overwrite").parquet(state_dir)
-    else:
-        winners.coalesce(1).write.mode("overwrite").parquet(state_dir)
+    replace_state(winners, state_dir)

@@ -25,6 +25,9 @@ from pyspark.sql import functions as F
 from apache_spark_streaming_project_spark.functions.vector import (
     cosine_similarity,
 )
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+)
 
 
 def brute_force_top_k(
@@ -1481,12 +1484,8 @@ def streaming_pq_ingest_batch(
     (``pq_train`` once, offline or on a corpus sample; the m20 frozen-
     codebook rule — per-batch retraining would make the code store
     internally inconsistent and every prior code undecodable against
-    the retrieval-side books) and appends the m-byte codes to the
-    persisted index with the idempotent batch-keyed overwrite (each
-    batch OWNS ``batch-<id>/``, so an at-least-once foreachBatch retry
-    republishes identical content; the operators/dedup.py
-    ``_publish_store_batch`` seam, inlined here to keep similarity.py
-    import-acyclic with dedup.py).
+    the retrieval-side books) and publishes the m-byte codes to the
+    persisted index (streaming/batch_store.py:publish_batch).
 
     Scale shape: encode is map-only (one numpy matmul per subspace per
     Arrow batch, zero shuffles), the store is append-only and NEVER
@@ -1497,14 +1496,10 @@ def streaming_pq_ingest_batch(
     deterministic and batch-boundary-independent (pq_encode docstring);
     the m22 registration asserts that equality LOUDLY inside the gate
     run before retrieval."""
-    import os
-
     enc = pq_encode(
         batch_df.select(key_col, vec_col), codebooks, key_col, vec_col
     )
-    enc.write.mode("overwrite").parquet(
-        os.path.join(code_store, f"batch-{int(batch_id)}")
-    )
+    publish_batch(enc, code_store, batch_id)
 
 
 def kmeans_lloyd(

@@ -14,6 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+)
+
 # Tiny per-language stopword inventories for the n-gram/stopword heuristic
 # language ID. Public knowledge (most frequent function words).
 LANG_STOPWORDS: dict[str, tuple[str, ...]] = {
@@ -233,13 +237,13 @@ def streaming_pack_publish(
     (arrival_key, order_col) reproduces the streaming output
     bit-for-bit.
 
-    Exactly-once without a separate state store: the publish is the
-    idempotent batch-keyed overwrite (``batch=<id>`` directory), and the
-    offsets are DERIVED from the sink itself restricted to ``batch <
-    batch_id`` — a replayed batch recomputes identical offsets and
-    overwrites its own directory, a no-op. (Deriving state from earlier
-    output instead of persisting a second table is the same seam rule as
-    m15's publish.)
+    Exactly-once without a separate state store: the publish is
+    streaming/batch_store.py:publish_batch, and the offsets are DERIVED
+    from the sink itself (a hive read, so the ``batch`` column is there)
+    restricted to ``batch < batch_id`` — a replayed batch recomputes
+    identical offsets and overwrites its own directory, a no-op.
+    (Deriving state from earlier output instead of persisting a second
+    table is the same seam rule as m15's publish.)
 
     ARRIVAL-ORDER CONTRACT: pack ids are a deterministic function of the
     arrival sequence, not of any event-time order — replaying shards in
@@ -298,9 +302,7 @@ def streaming_pack_publish(
         )
         .drop("_off")
     )
-    out.write.mode("overwrite").parquet(
-        os.path.join(sink_dir, f"batch={int(batch_id)}")
-    )
+    publish_batch(out, sink_dir, batch_id)
 
 
 def contrast_top_tokens(

@@ -40,7 +40,6 @@ def compact_parquet(
     path: str,
     out_path: str,
     target_files: int,
-    recursive: bool = False,
 ) -> None:
     """Small-files compaction: rewrite a fragmented parquet directory into
     ``target_files`` dense files. Streaming appends, per-trigger writes
@@ -51,18 +50,9 @@ def compact_parquet(
     partitions in place; use repartition only when the file-size skew
     itself is the problem. Production compacts INTO a new directory then
     swaps (as here): rewriting a live path in place races readers.
-
-    ``recursive=True`` reads with ``recursiveFileLookup`` — required for
-    the streaming dedup stores, whose idempotent publish lays each
-    micro-batch down as a ``batch-<id>/`` subdirectory (and disables
-    partition inference, so do NOT use it on hive-partitioned exports
-    whose key columns live in directory names). The compacted output is
-    flat part files; the stores' recursive-lookup readers accept the
-    mixed layout that results once new batches land next to it."""
-    r = spark.read
-    if recursive:
-        r = r.option("recursiveFileLookup", "true")
-    r.parquet(path).coalesce(target_files).write.mode(
+    Batch-keyed streaming stores compact with
+    streaming/batch_store.py:compact_store instead."""
+    spark.read.parquet(path).coalesce(target_files).write.mode(
         "overwrite"
     ).parquet(out_path)
 

@@ -11,6 +11,10 @@ import pytest
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+from apache_spark_streaming_project_spark.streaming.batch_store import (  # noqa: E402
+    read_store,
+)
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -28,19 +32,9 @@ def sf_dir() -> str:
 
 
 def store_rows(spark, store: str):
-    """Recursive-lookup read of a batch-keyed store, as sorted row
-    tuples — the read-side contract of operators/dedup._read_store /
-    entry_queries._read_batch_store, spelled ONCE for every test that
-    compares store contents (store-layout changes edit here, not in
-    each suite)."""
-    return sorted(
-        map(
-            tuple,
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(store)
-            .collect(),
-        )
-    )
+    """A batch-keyed store (streaming/batch_store.py:read_store) as
+    sorted row tuples."""
+    return sorted(map(tuple, read_store(spark, store).collect()))
 
 
 def store_kept(spark, store: str, key: str = "doc_id"):
@@ -50,8 +44,5 @@ def store_kept(spark, store: str, key: str = "doc_id"):
 
     return sorted(
         (r[key], r["epoch"])
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(store)
-        .filter(F.col("kept"))
-        .collect()
+        for r in read_store(spark, store).filter(F.col("kept")).collect()
     )

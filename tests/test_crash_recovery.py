@@ -15,7 +15,7 @@ worth pinning rather than arguing).
 
 The maintenance (m16) counterpart: a crash between the two store
 compactions leaves one store compacted and one fragmented. Because
-compaction is content-preserving and ``compact_parquet`` overwrites its
+compaction is content-preserving and ``compact_store`` overwrites its
 output directory, a restarted maintenance job recovers idempotently, and
 even the torn mixed pair (one compacted, one original) ingests
 identically.
@@ -38,6 +38,9 @@ from apache_spark_streaming_project_spark.operators import dedup
 from apache_spark_streaming_project_spark.sources.partitioned import (
     compact_parquet,
 )
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    compact_store,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -52,29 +55,29 @@ def _kept(spark, text_store):
 
 @contextmanager
 def _crash_between_publishes():
-    """Replace dedup._publish_store_batch so the FIRST publish of the
+    """Replace dedup.publish_batch so the FIRST publish of the
     next batch body lands for real and the SECOND raises before writing
     anything — the exact torn state a mid-batch executor/driver loss
     leaves behind. Yields a state dict recording which store the first
     (surviving) publish went to, so each test can pin the documented
     publish order."""
-    real = dedup._publish_store_batch
+    real = dedup.publish_batch
     state = {"calls": 0, "first_store": None}
 
-    def crashing(df, store, batch_id):
+    def crashing(df, store, batch_id, files=None):
         state["calls"] += 1
         if state["calls"] >= 2:
             raise RuntimeError(
                 "injected crash between the two store publishes"
             )
         state["first_store"] = store
-        real(df, store, batch_id)
+        real(df, store, batch_id, files)
 
-    dedup._publish_store_batch = crashing
+    dedup.publish_batch = crashing
     try:
         yield state
     finally:
-        dedup._publish_store_batch = real
+        dedup.publish_batch = real
 
 
 def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
@@ -90,7 +93,7 @@ def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
             d.filter(F.col("epoch") == i), band, text, _M14B_T, i
         )
 
-    # crash batch 2 between publishes: text/batch-2 lands, band/batch-2
+    # crash batch 2 between publishes: text/batch=2 lands, band/batch=2
     # does not (pins the documented text-then-band publish order)
     with _crash_between_publishes() as state:
         with pytest.raises(RuntimeError, match="injected crash"):
@@ -98,8 +101,8 @@ def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
                 d.filter(F.col("epoch") == 2), band, text, _M14B_T, 2
             )
     assert state["first_store"] == text
-    assert os.path.isdir(os.path.join(text, "batch-2"))
-    assert not os.path.isdir(os.path.join(band, "batch-2"))
+    assert os.path.isdir(os.path.join(text, "batch=2"))
+    assert not os.path.isdir(os.path.join(band, "batch=2"))
 
     # retry (restart re-delivers batch 2). The retry's candidate verify
     # re-reads the text store WITH the torn batch-2 rows present — the
@@ -143,8 +146,8 @@ def test_m14_crash_between_publishes_heals_on_retry(spark, tmp_path):
                 d.filter(F.col("epoch") == 1), band, corpus, 1
             )
     assert state["first_store"] == corpus
-    assert os.path.isdir(os.path.join(corpus, "batch-1"))
-    assert not os.path.isdir(os.path.join(band, "batch-1"))
+    assert os.path.isdir(os.path.join(corpus, "batch=1"))
+    assert not os.path.isdir(os.path.join(band, "batch=1"))
 
     dedup.streaming_lsh_dedup_batch(
         d.filter(F.col("epoch") == 1), band, corpus, 1
@@ -179,8 +182,8 @@ def test_m19_crash_between_publishes_heals_on_retry(spark, tmp_path):
                 d.filter(F.col("epoch") == 2), gram, text, _M19_T, 2
             )
     assert state["first_store"] == text
-    assert os.path.isdir(os.path.join(text, "batch-2"))
-    assert not os.path.isdir(os.path.join(gram, "batch-2"))
+    assert os.path.isdir(os.path.join(text, "batch=2"))
+    assert not os.path.isdir(os.path.join(gram, "batch=2"))
 
     dedup.streaming_containment_dedup_batch(
         d.filter(F.col("epoch") == 2), gram, text, _M19_T, 2
@@ -220,8 +223,8 @@ def test_m20_crash_between_publishes_heals_on_retry(spark, tmp_path):
                 d.filter(F.col("epoch") == 1), cell, vec, centroids, 1
             )
     assert state["first_store"] == vec
-    assert os.path.isdir(os.path.join(vec, "batch-1"))
-    assert not os.path.isdir(os.path.join(cell, "batch-1"))
+    assert os.path.isdir(os.path.join(vec, "batch=1"))
+    assert not os.path.isdir(os.path.join(cell, "batch=1"))
 
     dedup.streaming_semantic_dedup_batch(
         d.filter(F.col("epoch") == 1), cell, vec, centroids, 1
@@ -239,7 +242,7 @@ def test_m20_crash_between_publishes_heals_on_retry(spark, tmp_path):
 def test_maintenance_crash_between_compactions_recovers(spark, tmp_path):
     """m16's maintenance window: compact band, CRASH before compacting
     text. Recovery path 1 — the restarted maintenance job re-runs both
-    compactions (``compact_parquet`` overwrites its output, so the
+    compactions (``compact_store`` overwrites its output, so the
     half-done first compaction is republished idempotently). Recovery
     path 2 — even the torn mixed pair (compacted band + original text)
     ingests identically, because compaction is content-preserving. Both
@@ -258,12 +261,12 @@ def test_maintenance_crash_between_compactions_recovers(spark, tmp_path):
 
     band_c = str(tmp_path / "band_c")
     text_c = str(tmp_path / "text_c")
-    compact_parquet(spark, band, band_c, 1, recursive=True)
+    compact_store(spark, band, band_c, 1)
     # --- injected crash: text never compacted ---
 
     # recovery path 1: restart re-runs the WHOLE maintenance job
-    compact_parquet(spark, band, band_c, 1, recursive=True)
-    compact_parquet(spark, text, text_c, 1, recursive=True)
+    compact_store(spark, band, band_c, 1)
+    compact_store(spark, text, text_c, 1)
     assert _rows(spark, band_c) == _rows(spark, band)
     assert _rows(spark, text_c) == _rows(spark, text)
 
@@ -286,7 +289,7 @@ def test_maintenance_crash_between_compactions_recovers(spark, tmp_path):
     # resumed against the half-maintained stores would still be correct
     band_m = str(tmp_path / "band_m")
     text_m = str(tmp_path / "text_m")
-    compact_parquet(spark, band, band_m, 1, recursive=True)
+    compact_store(spark, band, band_m, 1)
     shutil.copytree(text, text_m, copy_function=os.link)
     dedup.streaming_threshold_dedup_batch(
         wave, band_m, text_m, _M14B_T, 2

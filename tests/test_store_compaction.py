@@ -4,8 +4,8 @@
 m14/m14b's band index and document stores are append-only parquet
 streams: every micro-batch appends its own part files, so a long-lived
 deployment accumulates small files and probe cost grows with file count,
-not data size. The existing table-maintenance primitive
-(sources/partitioned.py:compact_parquet — shuffle-free coalesce rewrite
+not data size. The store maintenance primitive
+(streaming/batch_store.py:compact_store — shuffle-free coalesce rewrite
 into a fresh directory, swap after verification) composes directly onto
 the stores. These tests pin the two invariants a maintenance job must
 guarantee: the kept-set RESULT is unchanged by compaction, and continued
@@ -20,24 +20,19 @@ import shutil
 
 from pyspark.sql import functions as F
 
+from conftest import store_kept as _kept
+from conftest import store_rows as _rows
+
 from apache_spark_streaming_project_spark.operators.dedup import (
     streaming_threshold_dedup_batch,
 )
-from apache_spark_streaming_project_spark.sources.partitioned import (
-    compact_parquet,
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    compact_store,
+    publish_batch,
+    read_store,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-def _kept(spark, text_store):
-    return sorted(
-        (r["doc_id"], r["epoch"])
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(text_store)
-        .filter(F.col("kept"))
-        .collect()
-    )
 
 
 def test_m14b_stores_compaction_preserves_results(spark, tmp_path):
@@ -60,19 +55,15 @@ def test_m14b_stores_compaction_preserves_results(spark, tmp_path):
 
     dense_band = str(tmp_path / "band_c")
     dense_text = str(tmp_path / "text_c")
-    compact_parquet(spark, frag_band, dense_band, 1, recursive=True)
-    compact_parquet(spark, frag_text, dense_text, 1, recursive=True)
+    compact_store(spark, frag_band, dense_band, 1)
+    compact_store(spark, frag_text, dense_text, 1)
     assert len(glob.glob(dense_band + "/part-*")) == 1
     assert len(glob.glob(dense_text + "/part-*")) == 1
 
     # invariant 1: the kept set is byte-identical after compaction
     assert _kept(spark, dense_text) == kept_before
     # and the band index carries exactly the same rows
-    a = sorted(map(tuple, spark.read.option("recursiveFileLookup", "true")
-                   .parquet(frag_band).collect()))
-    b = sorted(map(tuple, spark.read.option("recursiveFileLookup", "true")
-                   .parquet(dense_band).collect()))
-    assert a == b
+    assert _rows(spark, frag_band) == _rows(spark, dense_band)
 
     # invariant 2: continued ingestion on the compacted stores equals
     # continued ingestion on the fragmented ones — same fourth batch
@@ -115,7 +106,7 @@ def test_retention_prunes_only_dropped_rows(spark, tmp_path):
     kept_before = _kept(spark, text)
 
     pruned = str(tmp_path / "text_pruned")
-    spark.read.option("recursiveFileLookup", "true").parquet(text).filter(
+    read_store(spark, text).filter(
         F.col("kept") | (F.col("epoch") > 0)
     ).coalesce(1).write.parquet(pruned)
     assert _kept(spark, pruned) == kept_before
@@ -137,17 +128,6 @@ def test_retention_prunes_only_dropped_rows(spark, tmp_path):
     # epoch-1 re-delivery dedups against epoch-1 originals (kept rows,
     # never pruned) -> identical outcome even after pruning
     assert _kept(spark, pruned) == _kept(spark, text)
-
-
-def _rows(spark, store):
-    return sorted(
-        map(
-            tuple,
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(store)
-            .collect(),
-        )
-    )
 
 
 def test_streaming_dedup_replay_is_idempotent(spark, tmp_path):
@@ -209,3 +189,45 @@ def test_streaming_dedup_replay_is_idempotent(spark, tmp_path):
     )
     assert _rows(spark, eband) == eband_once
     assert _rows(spark, ecorp) == ecorp_once
+
+
+def test_batch_store_layout_contract(spark, tmp_path):
+    """The one store layout every foreachBatch body publishes into
+    (streaming/batch_store.py): flat compacted part files at the root
+    coexist with ``batch=<id>`` subdirectories, a republished batch
+    replaces its own directory, and the recursive read ignores directory
+    names — the union of the rows, no ``batch`` column. A sink never
+    compacted keeps the hive ``batch`` column under a plain read."""
+    schema = "k long, v string"
+
+    def publish(rows, root, batch_id):
+        publish_batch(spark.createDataFrame(rows, schema), root, batch_id)
+
+    frag, store = str(tmp_path / "frag"), str(tmp_path / "store")
+    publish([(1, "a"), (2, "b")], frag, 0)
+    compact_store(spark, frag, store, 1)
+    publish([(3, "c")], store, 1)
+    publish([(3, "c")], store, 1)  # at-least-once redelivery of batch 1
+    publish([], store, 2)
+    entries = os.listdir(store)
+    assert {"batch=1", "batch=2"} <= set(entries)
+    assert any(f.startswith("part-") for f in entries)
+
+    got = read_store(spark, store)
+    assert sorted(got.columns) == ["k", "v"]
+    assert sorted(map(tuple, got.collect())) == [
+        (1, "a"), (2, "b"), (3, "c"),
+    ]
+
+    missing = read_store(spark, str(tmp_path / "missing"), schema)
+    assert missing.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert missing.count() == 0
+
+    sink = str(tmp_path / "sink")
+    publish([(0, "x")], sink, 0)
+    publish([(1, "y")], sink, 1)
+    hive = spark.read.parquet(sink)
+    assert sorted(hive.columns) == ["batch", "k", "v"]
+    assert sorted(map(tuple, hive.select("k", "batch").collect())) == [
+        (0, 0), (1, 1),
+    ]

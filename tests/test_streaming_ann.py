@@ -18,6 +18,9 @@ from apache_spark_streaming_project_spark.operators.similarity import (
     pq_train,
     streaming_pq_ingest_batch,
 )
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    read_store,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -53,11 +56,7 @@ def test_m22_streamed_store_equals_full_encode(spark, tmp_path):
 
 def test_m22_retrieval_equivalence(spark, tmp_path):
     e, books, store = _setup(spark, tmp_path)
-    streamed = (
-        spark.read.option("recursiveFileLookup", "true")
-        .parquet(store)
-        .select("vec_id", "pq_code")
-    )
+    streamed = read_store(spark, store).select("vec_id", "pq_code")
     batch_built = pq_encode(e, books)
     queries = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("query_id"),

@@ -19,6 +19,9 @@ from apache_spark_streaming_project_spark.operators.dedup import (
     resolve_cc_assignments,
     streaming_cc_batch,
 )
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    read_store,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -62,9 +65,7 @@ def test_m25_streamed_resolve_equals_batch_cc(spark, tmp_path):
     # chase-to-fixpoint resolve would be fixture-untested
     remap = {
         r["old_root"]: r["new_root"]
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(f"{base}/remap")
-        .collect()
+        for r in read_store(spark, f"{base}/remap").collect()
     }
     assert any(v in remap for v in remap.values()), (
         "no depth>=2 remap chain in fixture"

@@ -11,6 +11,8 @@ import re
 
 from pyspark.sql import functions as F
 
+from conftest import store_kept, store_rows
+
 from apache_spark_streaming_project_spark.entry_queries import QUERIES
 from apache_spark_streaming_project_spark.operators.dedup import (
     streaming_containment_dedup_batch,
@@ -112,8 +114,8 @@ def test_m19_plant_gram_arithmetic():
 
 def test_m19_replay_is_idempotent(spark, tmp_path):
     """At-least-once retry of a micro-batch republishes identical
-    content into its own batch-<id> subdir (the _publish_store_batch
-    seam) — store contents and kept set unchanged."""
+    content into its own batch=<id> subdir (streaming/batch_store.py:
+    publish_batch) — store contents and kept set unchanged."""
     from apache_spark_streaming_project_spark.entry_queries import (
         _M19_T,
         _m19_docs,
@@ -123,14 +125,7 @@ def test_m19_replay_is_idempotent(spark, tmp_path):
     gram, text = str(tmp_path / "gram"), str(tmp_path / "text")
 
     def rows(store):
-        return sorted(
-            map(
-                tuple,
-                spark.read.option("recursiveFileLookup", "true")
-                .parquet(store)
-                .collect(),
-            )
-        )
+        return store_rows(spark, store)
 
     for i in (0, 1):
         streaming_containment_dedup_batch(
@@ -157,8 +152,8 @@ def test_m19_store_compaction_preserves_results(spark, tmp_path):
         _M19_T,
         _m19_docs,
     )
-    from apache_spark_streaming_project_spark.sources.partitioned import (
-        compact_parquet,
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        compact_store,
     )
 
     d = _m19_docs(spark, SF_DIR)
@@ -171,8 +166,8 @@ def test_m19_store_compaction_preserves_results(spark, tmp_path):
     assert n_frag >= 2
     gram_c = str(tmp_path / "gram_c")
     text_c = str(tmp_path / "text_c")
-    compact_parquet(spark, gram, gram_c, 1, recursive=True)
-    compact_parquet(spark, text, text_c, 1, recursive=True)
+    compact_store(spark, gram, gram_c, 1)
+    compact_store(spark, text, text_c, 1)
     assert len(glob.glob(gram_c + "/part-*")) == 1
 
     streaming_containment_dedup_batch(
@@ -183,13 +178,7 @@ def test_m19_store_compaction_preserves_results(spark, tmp_path):
     )
 
     def kept(store):
-        return sorted(
-            (r["doc_id"], r["epoch"])
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(store)
-            .filter(F.col("kept"))
-            .collect()
-        )
+        return store_kept(spark, store)
 
     assert kept(text_c) == kept(text)
 
@@ -226,13 +215,7 @@ def test_posting_cap_trades_boilerplate_recall_for_skew(spark, tmp_path):
                 d.filter(F.col("epoch") == e), gram, text, 0.6, e,
                 posting_cap=cap,
             )
-        return {
-            r["doc_id"]
-            for r in spark.read.option("recursiveFileLookup", "true")
-            .parquet(text)
-            .filter(F.col("kept"))
-            .collect()
-        }
+        return {doc_id for doc_id, _ in store_kept(spark, text)}
 
     exact = run(None, "exact")
     capped = run(10, "capped")

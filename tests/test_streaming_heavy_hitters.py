@@ -16,6 +16,9 @@ from apache_spark_streaming_project_spark.entry_queries import (
 from apache_spark_streaming_project_spark.operators.mergeable import (
     streaming_heavy_hitters_batch,
 )
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    read_store,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,8 +32,7 @@ def _events(spark):
 def _merged(spark, store):
     return {
         (r["event_type"], r["item"]): r["est"]
-        for r in spark.read.option("recursiveFileLookup", "true")
-        .parquet(store)
+        for r in read_store(spark, store)
         .groupBy("event_type", "item")
         .agg(F.sum("partial_count").alias("est"))
         .collect()

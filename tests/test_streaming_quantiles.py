@@ -13,6 +13,9 @@ from apache_spark_streaming_project_spark.operators.profile import (
     merge_histograms,
     streaming_histogram_batch,
 )
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    read_store,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -27,11 +30,7 @@ def _merged_rows(spark, store):
     return sorted(
         map(
             tuple,
-            merge_histograms(
-                spark.read.option("recursiveFileLookup", "true").parquet(
-                    store
-                )
-            ).collect(),
+            merge_histograms(read_store(spark, store)).collect(),
         )
     )
 

@@ -186,7 +186,7 @@ def test_m20_requantize_equals_fresh_codebook_history(spark, tmp_path):
     assert _rows(spark, cell_re) == _rows(spark, cell_b)
 
     # continued ingestion: the rebuilt index takes batch publishes into
-    # batch-<id> subdirs next to its flat files (mixed layout) and must
+    # batch=<id> subdirs next to its flat files (mixed layout) and must
     # adjudicate epoch 2 exactly like the fresh-codebook twin
     wave = d.filter(F.col("epoch") == 2)
     streaming_semantic_dedup_batch(wave, cell_re, vec_a, cent_b, 2)
@@ -195,8 +195,8 @@ def test_m20_requantize_equals_fresh_codebook_history(spark, tmp_path):
 
 
 def test_m20_store_compaction_preserves_results(spark, tmp_path):
-    from apache_spark_streaming_project_spark.sources.partitioned import (
-        compact_parquet,
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        compact_store,
     )
 
     d = _m20_vecs(spark, SF_DIR)
@@ -207,8 +207,8 @@ def test_m20_store_compaction_preserves_results(spark, tmp_path):
             d.filter(F.col("epoch") == i), cell, vec, centroids, i
         )
     cell_c, vec_c = str(tmp_path / "cell_c"), str(tmp_path / "vec_c")
-    compact_parquet(spark, cell, cell_c, 1, recursive=True)
-    compact_parquet(spark, vec, vec_c, 1, recursive=True)
+    compact_store(spark, cell, cell_c, 1)
+    compact_store(spark, vec, vec_c, 1)
     assert _rows(spark, cell_c) == _rows(spark, cell)
     assert _rows(spark, vec_c) == _rows(spark, vec)
 

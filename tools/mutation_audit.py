@@ -85,6 +85,12 @@ def M(mid, query, file, old, new, kind, note="", probe=False):
     )
 
 
+# The one publish line every foreachBatch body shares: a mutation to it is
+# run once per registration that publishes through it.
+_PUBLISH_KEY = 'os.path.join(root, f"batch={int(batch_id)}")'
+_PUBLISH_KEY_0 = 'os.path.join(root, "batch=0")'
+
+
 # ---------------------------------------------------------------------------
 # The mutation sample. One semantic mutation each; `old` must occur exactly
 # once in `file`. Kinds follow the VERDICT taxonomy: boundary, dropped
@@ -692,10 +698,8 @@ MUTATIONS = [
       "hash kills — pins that the closed-form oracle is load-bearing "
       "on real retrieval, not on the join shape"),
     M("m22_publish_key_collision", "m22_streaming_ann_ingest",
-      f"{PKG}/operators/similarity.py",
-      'os.path.join(code_store, f"batch-{int(batch_id)}")',
-      'os.path.join(code_store, "batch-0")',
-      "wrong-key", "every batch publishes into batch-0: later waves "
+      f"{PKG}/streaming/batch_store.py", _PUBLISH_KEY, _PUBLISH_KEY_0,
+      "wrong-key", "every batch publishes into batch=0: later waves "
       "overwrite earlier codes, the store ends with one wave's rows — "
       "the streamed==re-encode guard raises (loud error kill)"),
     M("oracle_m22_query_set", "m22_streaming_ann_ingest",
@@ -747,10 +751,8 @@ MUTATIONS = [
       "winners the engine never kept (row-count kill — the m23 "
       "mirror-family oracle-side kill)"),
     M("m24_publish_key_collision", "m24_streaming_heavy_hitters",
-      f"{PKG}/operators/mergeable.py",
-      'os.path.join(store_dir, f"batch-{int(batch_id)}")',
-      'os.path.join(store_dir, "batch-0")',
-      "wrong-key", "every batch publishes into batch-0: only the last "
+      f"{PKG}/streaming/batch_store.py", _PUBLISH_KEY, _PUBLISH_KEY_0,
+      "wrong-key", "every batch publishes into batch=0: only the last "
       "micro-batch's summary survives, hot-item estimates collapse to "
       "~1/3 of the true count — far outside the N/9 undercount bound, "
       "bound_ok flips FALSE (value hash kills; pins that the store "
@@ -798,11 +800,9 @@ MUTATIONS = [
       "the per-batch bodies resolve through the same function, so the "
       "corruption compounds (value hash kills)"),
     M("m25_publish_collision", "m25_streaming_cc",
-      f"{PKG}/operators/dedup.py",
-      'os.path.join(store, f"batch-{int(batch_id)}")',
-      'os.path.join(store, "batch-0")',
-      "wrong-key", "the shared _publish_store_batch seam collapses "
-      "every batch onto batch-0: earlier assignments and remaps are "
+      f"{PKG}/streaming/batch_store.py", _PUBLISH_KEY, _PUBLISH_KEY_0,
+      "wrong-key", "the shared publish_batch seam collapses "
+      "every batch onto batch=0: earlier assignments and remaps are "
       "overwritten, only the last wave's state survives the drain "
       "(row-count kill — most keys vanish from the resolve)"),
     M("oracle_m25_bridge", "m25_streaming_cc",
@@ -813,10 +813,8 @@ MUTATIONS = [
       "merges different family pairs than the engine ingested (value "
       "hash kill — the m25 mirror-family oracle-side kill)"),
     M("m26_publish_collision", "m26_streaming_quantiles",
-      f"{PKG}/operators/profile.py",
-      'os.path.join(store, f"batch-{int(batch_id)}")',
-      'os.path.join(store, "batch-0")',
-      "wrong-key", "every histogram partial publishes into batch-0: "
+      f"{PKG}/streaming/batch_store.py", _PUBLISH_KEY, _PUBLISH_KEY_0,
+      "wrong-key", "every histogram partial publishes into batch=0: "
       "only the last wave's counts survive, n_total collapses to a "
       "third of the corpus and every rank shifts (value hash kills)"),
     M("m26_merge_sum_to_max", "m26_streaming_quantiles",
@@ -1036,9 +1034,7 @@ MUTATIONS = [
       "the frozen offline model is replaced by a per-batch "
       "'retrained' lambda — every score shifts (hash kill)"),
     M("m15_sink_overwrite", "m15_streaming_dsir",
-      f"{PKG}/operators/sampling.py",
-      'os.path.join(sink_dir, f"batch={int(batch_id)}")',
-      'os.path.join(sink_dir, "batch=0")',
+      f"{PKG}/streaming/batch_store.py", _PUBLISH_KEY, _PUBLISH_KEY_0,
       "dropped-clause", "idempotent publish path loses its batch key: "
       "every wave overwrites the same directory, only the last "
       "survives (row-count kill) — the non-unique-publish-path bug "

@@ -6,11 +6,16 @@ row-count, schema (sorted column names) and an order-insensitive value hash.
 
 Usage:  python tools/oracle_check.py [sf_dir] [query_name ...]
 Default sf_dir: /root/testdata/sf0.01 (the driver's t2 scale).
+
+A run over every query (no names given) that passes writes
+``ORACLE_MANIFEST.json`` at the repo root: per query its row count, sorted
+column names and value hash. Committed, it makes any hash move a diff.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import math
 import os
 import sys
@@ -84,6 +89,7 @@ def main() -> int:
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     failures = 0
+    manifest = {}
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -131,7 +137,17 @@ def main() -> int:
             failures += 1
         else:
             print(f"OK    {name}: {len(srows)} rows hash={sh} [{dt:.1f}s]")
+            manifest[name] = {
+                "rows": len(srows), "columns": sorted(scols), "hash": sh,
+            }
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
+    if not only and not failures:
+        out = REPO / "ORACLE_MANIFEST.json"
+        out.write_text(json.dumps(
+            {"sf": Path(sf_dir).name, "queries": manifest},
+            indent=1, sort_keys=True,
+        ) + "\n")
+        print(f"wrote {out}")
     return 1 if failures else 0
 
 

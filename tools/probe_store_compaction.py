@@ -7,7 +7,7 @@ probe builds the index over the 10x documents corpus (50k docs) in K
 epochs via the PRODUCTION batch body, then times the read-side work of
 one incoming probe batch — index scan + (band, band_hash) candidate join
 — against the fragmented store and against its compacted rewrite
-(sources/partitioned.py:compact_parquet).
+(streaming/batch_store.py:compact_store).
 
 Usage: python tools/probe_store_compaction.py [docs_parquet] [epochs] [reps]
 Writes tools/probe_store_compaction.json.
@@ -40,8 +40,9 @@ def main() -> None:
     from apache_spark_streaming_project_spark.operators.dedup import (
         streaming_threshold_dedup_batch,
     )
-    from apache_spark_streaming_project_spark.sources.partitioned import (
-        compact_parquet,
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        compact_store,
+        read_store,
     )
 
     spark = get_spark()
@@ -63,7 +64,7 @@ def main() -> None:
 
     dense = f"{base}/band_c"
     t0 = time.time()
-    compact_parquet(spark, band, dense, 8, recursive=True)
+    compact_store(spark, band, dense, 8)
     compact_s = time.time() - t0
     n_dense = len(glob.glob(dense + "/part-*"))
 
@@ -86,7 +87,7 @@ def main() -> None:
 
     def probe(store: str) -> float:
         t0 = time.time()
-        idx = spark.read.option("recursiveFileLookup", "true").parquet(store)
+        idx = read_store(spark, store)
         bands_df.join(idx, ["band", "band_hash"]).select(
             "doc_id", "rep_doc_id"
         ).distinct().count()
@@ -98,8 +99,7 @@ def main() -> None:
         "src": src,
         "epochs": epochs,
         "build_s": round(build_s, 1),
-        "band_rows": spark.read.option("recursiveFileLookup", "true")
-        .parquet(band).count(),
+        "band_rows": read_store(spark, band).count(),
         "files_fragmented": n_frag,
         "files_compacted": n_dense,
         "compact_s": round(compact_s, 2),
