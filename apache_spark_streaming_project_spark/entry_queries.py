@@ -3180,8 +3180,8 @@ def x7_partitioned_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     "S2",
 )
 def x7_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Small-files compaction round-trip (sources/partitioned.py:
-    compact_parquet): documents fragmented into 8 files, compacted to 2
+    """Small-files compaction round-trip (streaming/batch_store.py:
+    compact_store): documents fragmented into 8 files, compacted to 2
     with a shuffle-free coalesce rewrite into a fresh directory, read
     back and compared. The oracle-checked contract: file counts before/
     after are exactly as requested and no row is lost or duplicated —
@@ -3189,15 +3189,11 @@ def x7_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     swapping the compacted directory in."""
     import glob
 
-    from apache_spark_streaming_project_spark.sources.partitioned import (
-        compact_parquet,
-    )
-
     base = _scratch_dir("x7_compact_")
     frag, dense = base + "/frag", base + "/dense"
     d = _t(spark, sf_dir, "documents").select("doc_id", "lang")
     d.repartition(8).write.mode("overwrite").parquet(frag)
-    compact_parquet(spark, frag, dense, 2)
+    compact_store(spark, frag, dense, 2)
     n_frag = len(glob.glob(frag + "/part-*"))
     n_dense = len(glob.glob(dense + "/part-*"))
     rb = spark.read.parquet(dense)

@@ -35,28 +35,6 @@ def write_partitioned(
     ).mode(mode).parquet(path)
 
 
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    out_path: str,
-    target_files: int,
-) -> None:
-    """Small-files compaction: rewrite a fragmented parquet directory into
-    ``target_files`` dense files. Streaming appends, per-trigger writes
-    and over-parallel exports all fragment tables over time; at 100 TB,
-    per-file open/footer costs and listing latency degrade every
-    downstream scan, so compaction is routine table maintenance.
-    ``coalesce`` (not repartition) avoids a shuffle — it merges existing
-    partitions in place; use repartition only when the file-size skew
-    itself is the problem. Production compacts INTO a new directory then
-    swaps (as here): rewriting a live path in place races readers.
-    Batch-keyed streaming stores compact with
-    streaming/batch_store.py:compact_store instead."""
-    spark.read.parquet(path).coalesce(target_files).write.mode(
-        "overwrite"
-    ).parquet(out_path)
-
-
 def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
     """Read a hive-partitioned export; partition keys come back as columns
     recovered from the directory names, and equality/IN filters on them

@@ -35,9 +35,6 @@ from pyspark.sql import functions as F
 from conftest import store_kept, store_rows
 
 from apache_spark_streaming_project_spark.operators import dedup
-from apache_spark_streaming_project_spark.sources.partitioned import (
-    compact_parquet,
-)
 from apache_spark_streaming_project_spark.streaming.batch_store import (
     compact_store,
 )
@@ -299,7 +296,7 @@ def test_maintenance_crash_between_compactions_recovers(spark, tmp_path):
 
 def test_torn_compaction_output_is_overwritten(spark, tmp_path):
     """A crash DURING a compaction write can leave a partial output
-    directory (stray part files, _temporary debris). ``compact_parquet``
+    directory (stray part files, _temporary debris). ``compact_store``
     publishes with mode=overwrite, so the re-run replaces the torn
     directory wholesale instead of merging with it."""
     src = str(tmp_path / "src")
@@ -314,7 +311,7 @@ def test_torn_compaction_output_is_overwritten(spark, tmp_path):
     )
     os.makedirs(os.path.join(out, "_temporary"), exist_ok=True)
 
-    compact_parquet(spark, src, out, 1)
+    compact_store(spark, src, out, 1)
     assert _rows(spark, out) == _rows(spark, src)
     assert len(
         [f for f in os.listdir(out) if f.startswith("part-")]

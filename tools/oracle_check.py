@@ -7,9 +7,12 @@ row-count, schema (sorted column names) and an order-insensitive value hash.
 Usage:  python tools/oracle_check.py [sf_dir] [query_name ...]
 Default sf_dir: /root/testdata/sf0.01 (the driver's t2 scale).
 
-A run over every query (no names given) that passes writes
+A run over every query (no names given) at sf0.01 that passes writes
 ``ORACLE_MANIFEST.json`` at the repo root: per query its row count, sorted
 column names and value hash. Committed, it makes any hash move a diff.
+A passing full run at another scale only prints the manifest path it
+leaves alone, so the committed sf0.01 hashes are never replaced by
+another scale's.
 """
 
 from __future__ import annotations
@@ -25,6 +28,7 @@ from pathlib import Path
 import duckdb
 
 REPO = Path(__file__).resolve().parent.parent
+MANIFEST_SF = "sf0.01"  # the one scale ORACLE_MANIFEST.json records
 sys.path.insert(0, str(REPO))
 
 TABLES = (
@@ -141,10 +145,12 @@ def main() -> int:
                 "rows": len(srows), "columns": sorted(scols), "hash": sh,
             }
     print(f"\n{'ALL OK' if failures == 0 else f'{failures} FAILURES'}")
-    if not only and not failures:
-        out = REPO / "ORACLE_MANIFEST.json"
+    out = REPO / "ORACLE_MANIFEST.json"
+    if not only and not failures and Path(sf_dir).name != MANIFEST_SF:
+        print(f"not writing {out}: it records {MANIFEST_SF}")
+    elif not only and not failures:
         out.write_text(json.dumps(
-            {"sf": Path(sf_dir).name, "queries": manifest},
+            {"sf": MANIFEST_SF, "queries": manifest},
             indent=1, sort_keys=True,
         ) + "\n")
         print(f"wrote {out}")

@@ -36,6 +36,9 @@ def main() -> None:
         pq_train,
         streaming_pq_ingest_batch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -76,11 +79,7 @@ def main() -> None:
             docs.filter(F.col("epoch") == i), books, store, i
         )
         dt = time.time() - t0
-        n = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(store)
-            .count()
-        )
+        n = read_store(spark, store).count()
         rows.append(
             {"epoch": i, "seconds": round(dt, 2), "store_rows_after": n}
         )

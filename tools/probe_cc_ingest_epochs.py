@@ -36,6 +36,9 @@ def main() -> None:
     from apache_spark_streaming_project_spark.operators.dedup import (
         streaming_cc_batch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -82,16 +85,8 @@ def main() -> None:
             i,
         )
         dt = time.time() - t0
-        n_assign = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(assign_store)
-            .count()
-        )
-        n_remap = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(remap_store)
-            .count()
-        )
+        n_assign = read_store(spark, assign_store).count()
+        n_remap = read_store(spark, remap_store).count()
         rows.append(
             {
                 "epoch": i,

@@ -35,6 +35,9 @@ def main() -> None:
     from apache_spark_streaming_project_spark.operators.dedup import (
         streaming_containment_dedup_batch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -52,8 +55,7 @@ def main() -> None:
             docs.filter(F.col("epoch") == i), gram, text, 0.6, i
         )
         dt = time.time() - t0
-        idx_rows = (spark.read.option("recursiveFileLookup", "true")
-                    .parquet(gram).count())
+        idx_rows = read_store(spark, gram).count()
         rows.append({"epoch": i, "seconds": round(dt, 2),
                      "index_rows_after": idx_rows})
         print(rows[-1])

@@ -34,6 +34,9 @@ def main() -> None:
     from apache_spark_streaming_project_spark.operators.mergeable import (
         streaming_heavy_hitters_batch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -81,11 +84,7 @@ def main() -> None:
             candidates=64,
         )
         dt = time.time() - t0
-        n_store = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(store)
-            .count()
-        )
+        n_store = read_store(spark, store).count()
         rows.append(
             {"epoch": i, "seconds": round(dt, 2), "store_rows_after": n_store}
         )

@@ -77,6 +77,9 @@ def _run(spark, docs, epochs: int, k: int, label: str):
     from apache_spark_streaming_project_spark.operators.similarity import (
         _lloyd,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     # frozen codebook from a bounded driver-side sample of epoch 0 (the
     # offline-training stand-in; same Lloyd kernel as ivf_index)
@@ -104,11 +107,7 @@ def _run(spark, docs, epochs: int, k: int, label: str):
             docs.filter(F.col("epoch") == i), cell, vec, centroids, i
         )
         dt = time.time() - t0
-        idx_rows = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(cell)
-            .count()
-        )
+        idx_rows = read_store(spark, cell).count()
         rows.append(
             {
                 "epoch": i,

@@ -138,6 +138,9 @@ def probe_kmv(spark, base: str, rows: int, keys: int) -> dict:
         kmv_merge,
         kmv_sketch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        replace_state,
+    )
 
     k = 256
     in_dir = make_waves(spark, base, rows, keys)
@@ -163,11 +166,7 @@ def probe_kmv(spark, base: str, rows: int, keys: int) -> dict:
             merged = kmv_merge(prior.unionByName(sk), ["g"], k)
         else:
             merged = sk
-        tmp = state + ".next"
-        merged.coalesce(1).write.mode("overwrite").parquet(tmp)
-        batch_df.sparkSession.read.parquet(tmp).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(state)
+        replace_state(merged, state)
         epoch_walls.append(round(time.monotonic() - t0, 2))
 
     stream = (

@@ -34,6 +34,9 @@ def main() -> None:
     from apache_spark_streaming_project_spark.operators.dedup import (
         streaming_threshold_dedup_batch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
@@ -51,8 +54,7 @@ def main() -> None:
             docs.filter(F.col("epoch") == i), band, text, 0.5, i
         )
         dt = time.time() - t0
-        idx_rows = (spark.read.option("recursiveFileLookup", "true")
-                    .parquet(band).count())
+        idx_rows = read_store(spark, band).count()
         rows.append({"epoch": i, "seconds": round(dt, 2),
                      "index_rows_after": idx_rows})
         print(rows[-1])

@@ -102,6 +102,9 @@ def probe_m14(spark, sf_dir: str, name: str) -> dict:
         streaming_lsh_dedup_batch,
         streaming_threshold_dedup_batch,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     ts, want = _timed(lambda: _rows(QUERIES[name].fn(spark, sf_dir)))
 
@@ -137,7 +140,7 @@ def probe_m14(spark, sf_dir: str, name: str) -> dict:
                     streaming_threshold_dedup_batch(
                         b, band_store, doc_store, _M14B_T, i
                     )
-        out = spark.read.option("recursiveFileLookup", "true").parquet(doc_store)
+        out = read_store(spark, doc_store)
         if name != "m14_streaming_lsh_dedup":
             out = out.filter(F.col("kept"))
         return _rows(
@@ -228,6 +231,9 @@ def probe_m20(spark, sf_dir: str) -> dict:
     from apache_spark_streaming_project_spark.operators.similarity import (
         ivf_index,
     )
+    from apache_spark_streaming_project_spark.streaming.batch_store import (
+        read_store,
+    )
 
     name = "m20_streaming_semantic_dedup"
     ts, want = _timed(lambda: _rows(QUERIES[name].fn(spark, sf_dir)))
@@ -250,11 +256,7 @@ def probe_m20(spark, sf_dir: str) -> dict:
                     b, cell_store, vec_store, centroids, i,
                     threshold=_M20_T,
                 )
-        out = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(vec_store)
-            .filter(F.col("kept"))
-        )
+        out = read_store(spark, vec_store).filter(F.col("kept"))
         return _rows(
             out.select(
                 "vec_id", F.col("epoch").cast("bigint").alias("epoch")
