@@ -35,8 +35,9 @@ from apache_spark_streaming_project_spark.operators import enrich
 from apache_spark_streaming_project_spark.schemas import load_table
 from apache_spark_streaming_project_spark.streaming.batch_store import (
     compact_store,
+    publish_batch,
+    read_state,
     read_store,
-    replace_state,
 )
 
 _log = logging.getLogger(__name__)
@@ -11050,9 +11051,11 @@ def m13_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch table — each batch is sketched (k smallest distinct text
     hashes) and merged into the stored sketch (kmv_merge: union,
     distinct, re-trim), the incremental-rollup-without-rescans shape for
-    corpus cardinality under continuous ingest. The merge step is
-    idempotent (set semantics), so batch replay after a crash cannot
-    corrupt the sketch — the exactly-once recipe sketches get for free.
+    corpus cardinality under continuous ingest. Batch b merges into the
+    newest complete sketch version below b and publishes the result
+    once as version b (streaming/batch_store.py:read_state), so a
+    replay after a crash reads what its first attempt read and a failed
+    write is never read at all.
     Contract: the final stored sketch must equal the DIRECT sketch of
     the whole corpus ROW-FOR-ROW (the KMV merge theorem, asserted
     in-plan as merge_exact), its estimate must land within the measured
@@ -11099,19 +11102,18 @@ def m13_streaming_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_sk = kmv_sketch(
             batch_df.select("text", F.lit(1).alias("g")), ["g"], "text", k
         )
-        if os.path.isdir(state):
-            prior = batch_df.sparkSession.read.parquet(state)
-            merged = kmv_merge(prior.unionByName(batch_sk), ["g"], k)
-        else:
-            merged = batch_sk
-        replace_state(merged, state)
+        prior = read_state(
+            batch_df.sparkSession, state, batch_sk.schema, before=batch_id
+        )
+        merged = kmv_merge(prior.unionByName(batch_sk), ["g"], k)
+        publish_batch(merged, state, batch_id, files=1)
 
     _drain_waves(spark, in_dir, ckpt, upsert_sketch, d.schema)
 
-    stored = spark.read.parquet(state)
     direct = kmv_sketch(
         d.select("text", F.lit(1).alias("g")), ["g"], "text", k
     )
+    stored = read_state(spark, state, direct.schema)
     merge_exact = (
         stored.exceptAll(direct)
         .unionByName(direct.exceptAll(stored))
@@ -12767,10 +12769,13 @@ def m23_streaming_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FOR ROW, and that is exactly what the oracle hash-checks (the
     sample CONTENT, not a summary). The waves OVERLAP on purpose
     (every doc arrives in two of the three waves — the m13 recrawl
-    lesson): replay safety comes from set semantics (distinct before
-    re-rank), and with disjoint waves dropping that distinct would be
-    a fixture no-op; here it is a mutation kill (duplicate winners
-    crowd real ones out of the quota). Arrival order is irrelevant BY
+    lesson): each fold dedups before it re-ranks, and with disjoint
+    waves dropping that distinct would be a fixture no-op; here it is a
+    mutation kill (duplicate winners crowd real ones out of the quota).
+    Replay safety comes from versioned state: batch b folds into the
+    newest complete winner version below b and publishes version b
+    once (streaming/batch_store.py:read_state), so a replayed batch
+    reads what its first attempt read. Arrival order is irrelevant BY
     CONSTRUCTION (the rank never sees arrival time) — the opposite
     contract from m14/m17's keep-first arrival semantics, pinned by
     the permutation pytest.
@@ -12807,13 +12812,18 @@ def m23_streaming_quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def fold_batch(batch_df, batch_id):
         streaming_quota_sample_batch(
-            batch_df.select("doc_id", "lang"), ["lang"], 10, order_key, state
+            batch_df.select("doc_id", "lang"),
+            ["lang"],
+            10,
+            order_key,
+            state,
+            batch_id,
         )
 
     _drain_waves(spark, in_dir, ckpt, fold_batch, d.schema)
 
     return (
-        spark.read.parquet(state)
+        read_state(spark, state, d.select("doc_id", "lang").schema)
         .select("lang", "doc_id")
         .orderBy("lang", "doc_id")
     )

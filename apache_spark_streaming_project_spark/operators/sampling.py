@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from apache_spark_streaming_project_spark.streaming.batch_store import (
     publish_batch,
-    replace_state,
+    read_state,
 )
 
 
@@ -659,6 +659,7 @@ def streaming_quota_sample_batch(
     n_per_stratum: int,
     order_col: Column,
     state_dir: str,
+    batch_id: int,
 ) -> None:
     """m23 per-batch body: exact-quota stratified sample MAINTENANCE
     under ingest — the corpus streams in and a bounded winner table
@@ -674,13 +675,16 @@ def streaming_quota_sample_batch(
     hash-checks exactly that against the full-corpus rank-window
     oracle.
 
-    Replay-safe by SET semantics (the kmv_merge precedent, dedup
-    before re-rank): foreachBatch is at-least-once, and re-delivering
-    a batch unions rows that are already present — ``distinct()``
-    collapses them, so replay is a no-op. Dropping that distinct is
-    the classic corruption (duplicate winners crowd real ones out of
-    the quota) and is a mutation-audit kill. The fold is published
-    with streaming/batch_store.py:replace_state.
+    Replay-safe by versioning: the fold reads the newest complete
+    state version below ``batch_id`` and publishes its result once, as
+    version ``batch_id`` (streaming/batch_store.py:read_state and
+    publish_batch), so an at-least-once redelivery of a batch reads
+    the same input as its first attempt and rewrites the same version.
+    Within a fold, the overlapping waves re-deliver rows that are
+    already among the stored winners: ``distinct()`` collapses them
+    before the re-rank. Dropping that distinct is the classic
+    corruption (duplicate winners crowd real ones out of the quota)
+    and is a mutation-audit kill.
 
     Scale shape: the batch ranks with map-side WindowGroupLimit (at
     most n rows per stratum per task cross the exchange), the state
@@ -688,17 +692,16 @@ def streaming_quota_sample_batch(
     corpus itself is never re-read — the bounded-state lifecycle
     class. At 1000 strata x 1000 quota the state is ~1M rows: still a
     broadcast-sized table."""
-    import os
-
     winners = stratified_sample(
         batch_df, strata_cols, n_per_stratum, order_col
     )
-    if os.path.isdir(state_dir):
-        prior = batch_df.sparkSession.read.parquet(state_dir)
-        winners = stratified_sample(
-            prior.unionByName(winners).distinct(),
-            strata_cols,
-            n_per_stratum,
-            order_col,
-        )
-    replace_state(winners, state_dir)
+    prior = read_state(
+        batch_df.sparkSession, state_dir, winners.schema, before=batch_id
+    )
+    merged = stratified_sample(
+        prior.unionByName(winners).distinct(),
+        strata_cols,
+        n_per_stratum,
+        order_col,
+    )
+    publish_batch(merged, state_dir, batch_id, files=1)

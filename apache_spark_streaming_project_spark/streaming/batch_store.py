@@ -18,14 +18,28 @@ are never compacted and need the writer's batch id (m15, m17, m18, m21)
 are read with a plain ``spark.read.parquet``, whose partition discovery
 turns ``batch=<id>`` into a ``batch`` column.
 
+A state table (m13's sketch, m23's winners) is the same layout read the
+other way: batch b folds the state it reads into its own rows and
+publishes the result once, as state version ``batch=<b>``. ``read_state``
+serves batch b the newest complete version below b (complete: it has
+``_SUCCESS``), so a replay of b reads version b-1 even after its first
+attempt wrote ``batch=<b>``, and a write that failed or was killed leaves
+an incomplete directory that no read sees. Every batch below b is
+committed and never replays, so ``read_state`` deletes the versions older
+than the one it serves, and at most two stay on disk. A state root is
+never read with ``read_store``: a recursive read would union the kept
+versions.
+
 Imports nothing from ``operators/``, so every operator module can use it.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def publish_batch(
@@ -61,12 +75,31 @@ def compact_store(spark: SparkSession, root: str, out: str, files: int) -> None:
     )
 
 
-def replace_state(df: DataFrame, state_dir: str) -> None:
-    """Replace a small state table with ``df``, which may read it: write
-    ``<state_dir>.next``, then rewrite ``state_dir`` from that, so no job
-    reads and overwrites the same files."""
-    tmp = state_dir + ".next"
-    df.coalesce(1).write.mode("overwrite").parquet(tmp)
-    df.sparkSession.read.parquet(tmp).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(state_dir)
+def read_state(
+    spark: SparkSession,
+    root: str,
+    schema: str | StructType,
+    before: int | None = None,
+) -> DataFrame:
+    """The newest state version ``root/batch=<k>`` that has ``_SUCCESS``
+    and ``k < before`` (any ``k`` when ``before`` is None); an empty frame
+    of ``schema`` when there is none. With ``before``, the versions older
+    than the returned one are deleted."""
+
+    def path(v: int) -> str:
+        return os.path.join(root, f"batch={v}")
+
+    names = os.listdir(root) if os.path.isdir(root) else []
+    ids = (int(n[len("batch="):]) for n in names if n.startswith("batch="))
+    complete = sorted(
+        v
+        for v in ids
+        if (before is None or v < before)
+        and os.path.isfile(os.path.join(path(v), "_SUCCESS"))
+    )
+    if not complete:
+        return spark.createDataFrame([], schema)
+    if before is not None:
+        for v in complete[:-1]:
+            shutil.rmtree(path(v))
+    return spark.read.parquet(path(complete[-1]))

@@ -21,7 +21,12 @@ even the torn mixed pair (one compacted, one original) ingests
 identically.
 
 Mirrors the flat-table MERGE path's ``.retired`` crash-recovery story
-(streaming/upsert.py:144) for the batch-keyed dedup stores."""
+(streaming/upsert.py:144) for the batch-keyed dedup stores.
+
+The state-table (m23) counterpart: a state version write that fails
+inside its Spark job leaves a version directory without ``_SUCCESS``,
+which ``read_state`` never serves, and the restarted drain replays the
+batch to the state of a run that never failed."""
 
 from __future__ import annotations
 
@@ -34,9 +39,10 @@ from pyspark.sql import functions as F
 
 from conftest import store_kept, store_rows
 
-from apache_spark_streaming_project_spark.operators import dedup
+from apache_spark_streaming_project_spark.operators import dedup, sampling
 from apache_spark_streaming_project_spark.streaming.batch_store import (
     compact_store,
+    read_state,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -234,6 +240,70 @@ def test_m20_crash_between_publishes_heals_on_retry(spark, tmp_path):
         )
     assert _rows(spark, cell) == _rows(spark, cell2)
     assert _rows(spark, vec) == _rows(spark, vec2)
+
+
+def test_m23_failed_state_write_recovers_on_restart(
+    spark, tmp_path, monkeypatch
+):
+    """An m23 fold drains 3 overlapping waves; the batch-1 state write
+    fails inside its Spark job, after the overwrite has created
+    ``batch=1``. The version left without ``_SUCCESS`` is skipped, so
+    ``read_state`` still serves version 0; the drain restarted from its
+    checkpoint replays batch 1 and ends row-for-row on a clean run's
+    state, with two versions on disk."""
+    from apache_spark_streaming_project_spark.entry_queries import (
+        _drain_waves,
+        _write_waves,
+    )
+
+    d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        "doc_id", "lang"
+    )
+    m = F.col("doc_id") % 3
+    waves = [d.filter((m == i) | (m == (i + 1) % 3)) for i in range(3)]
+    in_dir = str(tmp_path / "in")
+    _write_waves(waves, in_dir)
+    order = F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":m23")))
+    schema = "doc_id long, lang string"
+
+    def drain(state, ckpt):
+        def fold(batch_df, batch_id):
+            sampling.streaming_quota_sample_batch(
+                batch_df, ["lang"], 10, order, state, batch_id
+            )
+
+        _drain_waves(spark, in_dir, ckpt, fold, d.schema)
+
+    def state_rows(state):
+        return sorted(map(tuple, read_state(spark, state, schema).collect()))
+
+    real = sampling.publish_batch
+
+    def boom(row):
+        raise RuntimeError("injected state write failure")
+
+    def failing(df, root, batch_id, files=None):
+        if batch_id == 1:  # a row-wise UDF fails in the write's last stage
+            df = df.filter(F.udf(boom, "boolean")(F.struct(*df.columns)))
+        real(df, root, batch_id, files)
+
+    state, ckpt = str(tmp_path / "winners"), str(tmp_path / "ckpt")
+    monkeypatch.setattr(sampling, "publish_batch", failing)
+    with pytest.raises(Exception, match="injected state write failure"):
+        drain(state, ckpt)
+    monkeypatch.undo()
+
+    torn = os.path.join(state, "batch=1")
+    assert os.path.isdir(torn)
+    assert not os.path.exists(os.path.join(torn, "_SUCCESS"))
+    version0 = sampling.stratified_sample(waves[0], ["lang"], 10, order)
+    assert state_rows(state) == sorted(map(tuple, version0.collect()))
+
+    drain(state, ckpt)
+    clean = str(tmp_path / "clean")
+    drain(clean, str(tmp_path / "clean_ckpt"))
+    assert state_rows(state) == state_rows(clean)
+    assert sorted(os.listdir(state)) == ["batch=1", "batch=2"]
 
 
 def test_maintenance_crash_between_compactions_recovers(spark, tmp_path):

@@ -101,3 +101,39 @@ def test_mutation_catalog_is_not_stale():
         # keeps the gate honest — rc 0 now always means "checked clean".
         pytest.skip("full mutation audit in progress: " + r.stdout.strip())
     assert r.returncode == 0, r.stdout + r.stderr
+
+
+def test_mutation_audit_arguments_and_partial_results(tmp_path):
+    """An argument that is neither an sf directory nor a catalog id
+    exits 2 before Spark starts and leaves the results file alone; a run
+    of named mutations replaces only their entries in it."""
+    import json
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    results = repo / "tools" / "mutation_audit_results.json"
+    before = results.read_bytes()
+    for args in (["--help"], ["no_such_mutation"], ["/no/such/sf"]):
+        r = subprocess.run(
+            [sys.executable, str(repo / "tools" / "mutation_audit.py"), *args],
+            capture_output=True,
+            text=True,
+        )
+        assert r.returncode == 2, (args, r.stdout + r.stderr)
+        assert "Usage:" in r.stderr
+    assert results.read_bytes() == before
+
+    sys.path.insert(0, str(repo / "tools"))
+    import mutation_audit as audit
+
+    a, b = (dict(m, status="ok", killed=True) for m in audit.MUTATIONS[:2])
+    out = tmp_path / "results.json"
+    audit.write_results(out, "sf", [a, b], partial=False)
+    audit.write_results(out, "sf", [dict(b, killed=False)], partial=True)
+    got = json.loads(out.read_text())
+    assert [r["killed"] for r in got["results"]] == [True, False]
+    assert got["kill_rate"] == "1/2"
+    audit.write_results(out, "other_sf", [dict(a, killed=False)], partial=True)
+    assert json.loads(out.read_text()) == got

@@ -29,6 +29,7 @@ from apache_spark_streaming_project_spark.operators.dedup import (
 from apache_spark_streaming_project_spark.streaming.batch_store import (
     compact_store,
     publish_batch,
+    read_state,
     read_store,
 )
 
@@ -197,7 +198,9 @@ def test_batch_store_layout_contract(spark, tmp_path):
     coexist with ``batch=<id>`` subdirectories, a republished batch
     replaces its own directory, and the recursive read ignores directory
     names — the union of the rows, no ``batch`` column. A sink never
-    compacted keeps the hive ``batch`` column under a plain read."""
+    compacted keeps the hive ``batch`` column under a plain read. A
+    state table keeps one version per batch: ``read_state`` serves the
+    newest complete one and leaves at most two on disk."""
     schema = "k long, v string"
 
     def publish(rows, root, batch_id):
@@ -231,3 +234,34 @@ def test_batch_store_layout_contract(spark, tmp_path):
     assert sorted(map(tuple, hive.select("k", "batch").collect())) == [
         (0, 0), (1, 1),
     ]
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    state = str(tmp_path / "state")
+    for b in range(3):  # a fold: each batch adds one row to the state
+        prior = read_state(spark, state, schema, before=b)
+        merged = prior.unionByName(spark.createDataFrame([(b, "s")], schema))
+        publish_batch(merged, state, b, files=1)
+    # no sibling copy beside the root: the state is its root alone
+    assert [n for n in os.listdir(tmp_path) if n.startswith("state")] == [
+        "state"
+    ]
+    assert sorted(os.listdir(state)) == ["batch=1", "batch=2"]
+    assert rows(read_state(spark, state, schema)) == [
+        (0, "s"), (1, "s"), (2, "s"),
+    ]
+
+    # a version without _SUCCESS (a failed or killed write) is skipped
+    publish([(9, "torn")], state, 3)
+    os.remove(os.path.join(state, "batch=3", "_SUCCESS"))
+    assert rows(read_state(spark, state, schema)) == [
+        (0, "s"), (1, "s"), (2, "s"),
+    ]
+    assert rows(read_state(spark, state, schema, before=4)) == [
+        (0, "s"), (1, "s"), (2, "s"),
+    ]
+
+    empty = read_state(spark, str(tmp_path / "no_state"), schema)
+    assert empty.schema.simpleString() == "struct<k:bigint,v:string>"
+    assert empty.count() == 0

@@ -1,7 +1,8 @@
 """m23_streaming_quota_sample (round-13): exact-quota stratified sample
 maintained under ingest. Pins the three contracts the registration's
 docstring claims — streamed fold == direct full-corpus sample (the
-top-k merge theorem), replay idempotence (set semantics), and arrival-
+top-k merge theorem), replay idempotence (a replay of batch b folds the
+state version b-1, streaming/batch_store.py:read_state), and arrival-
 PERMUTATION invariance (the rank key never sees arrival time — the
 opposite contract from m14/m17's keep-first arrival semantics)."""
 
@@ -13,6 +14,10 @@ from apache_spark_streaming_project_spark.entry_queries import QUERIES
 from apache_spark_streaming_project_spark.operators.sampling import (
     stratified_sample,
     streaming_quota_sample_batch,
+)
+from apache_spark_streaming_project_spark.streaming.batch_store import (
+    publish_batch,
+    read_state,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -28,17 +33,19 @@ def _docs(spark):
     )
 
 
-def _state_rows(spark, state):
+def _state_rows(spark, state, before=None):
     return sorted(
         (r["lang"], r["doc_id"])
-        for r in spark.read.parquet(state).collect()
+        for r in read_state(
+            spark, state, "doc_id long, lang string", before
+        ).collect()
     )
 
 
 def _fold(spark, d, state, batch_filters):
     for i, flt in enumerate(batch_filters):
         streaming_quota_sample_batch(
-            d.filter(flt), ["lang"], 10, _order(), state
+            d.filter(flt), ["lang"], 10, _order(), state, i
         )
 
 
@@ -58,14 +65,22 @@ def test_m23_replay_is_a_noop(spark, tmp_path):
     d = _docs(spark)
     state = str(tmp_path / "winners")
     m = F.col("doc_id") % 3
-    _fold(spark, d, state, [m == 0, m == 1, m == 2])
-    before = _state_rows(spark, state)
-    # at-least-once redelivery of the middle batch: set semantics make
-    # the union-distinct-rerank fold a no-op
-    streaming_quota_sample_batch(
-        d.filter(m == 1), ["lang"], 10, _order(), state
+    _fold(spark, d, state, [m == 0, m == 1])
+    first = _state_rows(spark, state)
+    # a version 2 exists: the direct sample over all three waves, which
+    # is what batch 2's fold would publish
+    publish_batch(
+        stratified_sample(d, ["lang"], 10, _order()), state, 2, files=1
     )
-    assert _state_rows(spark, state) == before
+    later = _state_rows(spark, state)
+    assert later != first
+    # redelivery of batch 1 folds version 0, not the newest version 2,
+    # so it rewrites exactly its first attempt's version
+    streaming_quota_sample_batch(
+        d.filter(m == 1), ["lang"], 10, _order(), state, 1
+    )
+    assert _state_rows(spark, state, before=2) == first
+    assert _state_rows(spark, state) == later
 
 
 def test_m23_arrival_permutation_invariance(spark, tmp_path):

@@ -24,9 +24,13 @@ count against the kill rate but are reported.
 Usage:
     python tools/mutation_audit.py [sf_dir] [mutation_id ...]
     # default sf_dir /root/testdata/sf0.01, all mutations
+    python tools/mutation_audit.py --check   # static catalog check
+
+Any other argument exits 2 before Spark starts.
 
 Output: one line per mutation (KILLED <how> / SURVIVED), a summary
-matrix, and ``tools/mutation_audit_results.json``.
+matrix, and ``tools/mutation_audit_results.json``. A run of named
+mutations replaces only their entries in that file.
 """
 
 from __future__ import annotations
@@ -711,8 +715,8 @@ MUTATIONS = [
       "mirror-family oracle-side kill)"),
     M("m23_merge_drops_prior", "m23_streaming_quota_sample",
       f"{PKG}/operators/sampling.py",
-      '            prior.unionByName(winners).distinct(),',
-      '            winners.distinct(),',
+      '        prior.unionByName(winners).distinct(),',
+      '        winners.distinct(),',
       "dropped-clause", "the fold forgets its state: every batch "
       "re-ranks only its own winners, so the final table is the LAST "
       "wave's sample instead of the corpus's (row count ties at "
@@ -720,18 +724,18 @@ MUTATIONS = [
       "value hash kills)"),
     M("m23_merge_distinct_drop", "m23_streaming_quota_sample",
       f"{PKG}/operators/sampling.py",
-      '            prior.unionByName(winners).distinct(),',
-      '            prior.unionByName(winners),',
+      '        prior.unionByName(winners).distinct(),',
+      '        prior.unionByName(winners),',
       "dropped-clause", "set semantics removed from the merge: the "
       "overlapping waves re-deliver rows already in the state, "
       "duplicate winners take successive ranks and crowd real winners "
-      "out of the quota (the replay-corruption bug the distinct "
+      "out of the quota (the duplicate-delivery bug the distinct "
       "exists to prevent; needs overlapping waves to be visible — "
       "the m13 recrawl lesson; value hash kills)"),
     M("m23_quota_constant", "m23_streaming_quota_sample",
       f"{PKG}/entry_queries.py",
-      'batch_df.select("doc_id", "lang"), ["lang"], 10, order_key, state',
-      'batch_df.select("doc_id", "lang"), ["lang"], 9, order_key, state',
+      '            ["lang"],\n            10,\n            order_key,',
+      '            ["lang"],\n            9,\n            order_key,',
       "constant", "per-stratum quota 10 -> 9: every saturated stratum "
       "loses its last winner (45 rows vs the oracle's 50 — rows "
       "kill)"),
@@ -1114,17 +1118,60 @@ def check_catalog() -> int:
     return 1 if bad else 0
 
 
+def _summary(results: list[dict]) -> dict:
+    """Kill rate over the non-probe entries that ran, and the stale
+    (BAD-MUTATION) ids."""
+    hard = [r for r in results if not r.get("probe") and "killed" in r]
+    kills = sum(r["killed"] for r in hard)
+    return {
+        "kill_rate": f"{kills}/{len(hard)}",
+        "bad_mutations": [
+            r["id"] for r in results if r.get("status") == "BAD-MUTATION"
+        ],
+    }
+
+
+def write_results(out: Path, sf_dir: str, results: list[dict],
+                  partial: bool) -> None:
+    """Write the results file. A partial run replaces only its own
+    entries, and only in a file recorded at the same sf_dir."""
+    if partial and out.exists():
+        recorded = json.loads(out.read_text())
+        if recorded["sf_dir"] != sf_dir:
+            print(f"not written: {out} records {recorded['sf_dir']}")
+            return
+        ran = {r["id"] for r in results}
+        order = {m["id"]: i for i, m in enumerate(MUTATIONS)}
+        results = sorted(
+            [r for r in recorded["results"]
+             if r["id"] not in ran and r["id"] in order] + results,
+            key=lambda r: order[r["id"]],
+        )
+    out.write_text(json.dumps(
+        {"sf_dir": sf_dir, "results": results, **_summary(results)},
+        indent=1))
+    print(f"wrote {out}")
+
+
 def main() -> int:
-    from pyspark.sql import SparkSession
-
     args = sys.argv[1:]
-    if "--check" in args:
+    if args == ["--check"]:
         return check_catalog()
-    sf_dir = args[0] if args and "/" in args[0] else "/root/testdata/sf0.01"
-    only = {a for a in args if "/" not in a}
-
     ids = [m["id"] for m in MUTATIONS]
     assert len(ids) == len(set(ids)), "duplicate mutation ids"
+    sf_dir = "/root/testdata/sf0.01"
+    if args and "/" in args[0]:
+        sf_dir, args = args[0], args[1:]
+    only = set(args)
+    unknown = sorted(only - set(ids))
+    if unknown or not os.path.isdir(sf_dir):
+        error = (f"not a mutation id: {' '.join(unknown)}" if unknown
+                 else f"not an sf directory: {sf_dir}")
+        print(error, __doc__[__doc__.index("Usage:"):], sep="\n",
+              file=sys.stderr)
+        return 2
+
+    from pyspark.sql import SparkSession
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "8")
     spark = (
@@ -1190,24 +1237,19 @@ def main() -> int:
     # it from the denominator is exactly the silent-cap anti-pattern the
     # repo forbids — three entries went stale across refactors before
     # this became loud (round-11 code-review finding).
-    bad = [r for r in results if r.get("status") == "BAD-MUTATION"]
-    kills = sum(r["killed"] for r in hard)
-    print(f"\nkill rate (non-probe): {kills}/{len(hard)}")
+    summary = _summary(results)
+    print(f"\nkill rate (non-probe): {summary['kill_rate']}")
     if probes:
         pk = sum(r["killed"] for r in probes)
         print(f"probe kills: {pk}/{len(probes)} "
               "(probes map fixture sensitivity, not gate defects)")
-    if bad:
+    if summary["bad_mutations"]:
         print(f"BAD-MUTATION (stale catalog entries, FIX THESE): "
-              f"{[r['id'] for r in bad]}")
-    out = REPO / "tools" / "mutation_audit_results.json"
-    out.write_text(json.dumps(
-        {"sf_dir": sf_dir, "results": results,
-         "kill_rate": f"{kills}/{len(hard)}",
-         "bad_mutations": [r["id"] for r in bad]}, indent=1))
-    print(f"wrote {out}")
+              f"{summary['bad_mutations']}")
+    write_results(REPO / "tools" / "mutation_audit_results.json", sf_dir,
+                  results, partial=bool(only))
     survivors = [r for r in hard if not r["killed"]]
-    return 1 if survivors or bad else 0
+    return 1 if survivors or summary["bad_mutations"] else 0
 
 
 if __name__ == "__main__":

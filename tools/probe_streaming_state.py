@@ -14,9 +14,10 @@ Paths probed:
   and state size must be flat-per-key across epochs and ~linear in
   keys, with the watermark evicting closed sessions.
 * sketch maintenance (the m13 shape): foreachBatch KMV upsert — the
-  persisted sketch table must stay O(k * groups) BYTES CONSTANT while
-  the ingested corpus grows 100x (that is the point of a sketch), with
-  per-epoch wall ~linear in wave size.
+  persisted sketch table (the two versions kept on disk) must stay
+  O(k * groups) BYTES CONSTANT while the ingested corpus grows 100x
+  (that is the point of a sketch), with per-epoch wall ~linear in wave
+  size.
 
 Scales: rows 20k / 200k / 2M split over 4 epochs; session keys scale
 with rows (1k / 10k / 100k). Deterministic data from spark.range — no
@@ -139,7 +140,8 @@ def probe_kmv(spark, base: str, rows: int, keys: int) -> dict:
         kmv_sketch,
     )
     from apache_spark_streaming_project_spark.streaming.batch_store import (
-        replace_state,
+        publish_batch,
+        read_state,
     )
 
     k = 256
@@ -161,12 +163,11 @@ def probe_kmv(spark, base: str, rows: int, keys: int) -> dict:
             "item",
             k,
         )
-        if os.path.isdir(state):
-            prior = batch_df.sparkSession.read.parquet(state)
-            merged = kmv_merge(prior.unionByName(sk), ["g"], k)
-        else:
-            merged = sk
-        replace_state(merged, state)
+        prior = read_state(
+            batch_df.sparkSession, state, sk.schema, before=batch_id
+        )
+        merged = kmv_merge(prior.unionByName(sk), ["g"], k)
+        publish_batch(merged, state, batch_id, files=1)
         epoch_walls.append(round(time.monotonic() - t0, 2))
 
     stream = (
@@ -185,7 +186,7 @@ def probe_kmv(spark, base: str, rows: int, keys: int) -> dict:
     return {
         "wall_s": round(time.monotonic() - t0, 1),
         "epoch_walls_s": epoch_walls,
-        "sketch_rows": spark.read.parquet(state).count(),
+        "sketch_rows": read_state(spark, state, "g int, hv long").count(),
         "sketch_disk_bytes": du(state),
     }
 
