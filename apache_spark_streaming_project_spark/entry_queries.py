@@ -11195,11 +11195,16 @@ def m14_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     its documents (minhash_signatures_df), bands the signatures
     (lsh_band_rows), probes a persisted parquet band index for earlier
     docs sharing any band bucket, verifies every candidate pair by EXACT
-    shingle-set equality against the persisted kept-corpus texts
-    (shingle_sets_equal — re-crawled/reformatted exact copies, the
-    case/whitespace-insensitive identity), drops verified duplicates,
-    and publishes the survivors' rows + band rows to the two stores
-    (streaming/batch_store.py:publish_batch; replay idempotence is
+    shingle-set equality (re-crawled/reformatted exact copies, the
+    case/whitespace-insensitive identity), and publishes the batch with
+    a kept flag + its band rows to the two stores. This is m14b's body
+    (operators/dedup.py:streaming_threshold_dedup_batch) at t = 1: there
+    the Jaccard verify ``inter / union >= 1`` holds exactly when the two
+    shingle sets are equal, and its ``union > 0`` guard keeps empty sets
+    from ever verifying. Set equality is an equivalence relation whose
+    earliest member precedes every other member, so "dropped if some
+    earlier ARRIVAL is equal" (the pair rule) keeps the same docs as
+    "dropped if some earlier KEPT doc is equal" (replay idempotence is
     pinned by tests/test_store_compaction.py::
     test_streaming_dedup_replay_is_idempotent).
 
@@ -11216,26 +11221,28 @@ def m14_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     and every (17k+2)th carries alpha MINUS its final word: a strict
     shingle SUBSET (est Jaccard ~0.9) that deterministically
     band-collides with alpha yet must be KEPT, pinning verification to
-    set EQUALITY, not containment (the audit mutation that drops one
-    array_except arm reddens exactly here).
+    set EQUALITY, not containment (the audit mutation that swaps the
+    Jaccard denominator for the later doc's size reddens exactly here).
 
     At 100 TB: the band index is the only corpus-lifetime state and
-    carries (band, hash, epoch, key) rows — bounded by kept docs x
-    bands, partition-prunable by band; each batch's work is its own
-    size plus index probes on (band, band_hash) join keys. Candidate
-    verification re-reads only the matched reps' texts. Reference has
-    no streaming dedup at all (parity: extension surface, SURVEY §2
-    X2/S6)."""
+    carries (band, hash, epoch, key) rows, partition-prunable by band;
+    each batch's work is its own size plus index probes on (band,
+    band_hash) join keys. The trade of running the pair-rule body: both
+    stores index EVERY arrival (a kept flag on the text store), so the
+    index is bounded by corpus x bands, not kept x bands; in exchange
+    the verify shingles only the candidate reps' texts, not the whole
+    kept corpus. Reference has no streaming dedup at all (parity:
+    extension surface, SURVEY §2 X2/S6)."""
     import os
 
     from apache_spark_streaming_project_spark.operators.dedup import (
-        streaming_lsh_dedup_batch,
+        streaming_threshold_dedup_batch,
     )
 
     base = _scratch_dir("m14_lsh_dedup_")
     in_dir = os.path.join(base, "in")
     band_store = os.path.join(base, "band_store")
-    corpus_store = os.path.join(base, "corpus_store")
+    text_store = os.path.join(base, "text_store")
     ckpt = os.path.join(base, "ckpt")
 
     d = _m14_docs(spark, sf_dir)
@@ -11246,15 +11253,12 @@ def m14_streaming_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (operators/dedup.py) so tests and the streaming-tax probe
         # replay EXACTLY this code path (the dsir_publish_scored_batch
         # precedent; also the round-11 addPyFile closure lesson)
-        streaming_lsh_dedup_batch(batch_df, band_store, corpus_store, batch_id)
+        streaming_threshold_dedup_batch(
+            batch_df, band_store, text_store, 1.0, batch_id
+        )
 
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
-
-    return (
-        read_store(spark, corpus_store)
-        .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
-        .orderBy("doc_id")
-    )
+    return _kept_docs(spark, text_store)
 
 
 # m14b threshold-dedup plants. The token strings were searched offline so
@@ -11277,9 +11281,11 @@ _M14B_T = 0.5
 
 def _m14_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The m14 planted corpus: epoch = doc_id % 3, template plants
-    (alpha copies / beta copies / alpha-minus-last-word). Shared by the
-    m14 registration and the streaming-tax probe (tools/streaming_tax.py)
-    so the batch-equivalent measurement runs the IDENTICAL fixture."""
+    (alpha copies / beta copies / alpha-minus-last-word, the strict
+    shingle subset kept at m14's t = 1 and dropped at m14b's t). Shared
+    by the m14 registration, m14b's corpus (:func:`_m14b_docs`) and the
+    streaming-tax probe (tools/streaming_tax.py), so the batch-equivalent
+    measurement runs the IDENTICAL fixture."""
     planted = (
         F.when(F.col("doc_id") % 11 == 0, F.lit(_M14_ALPHA))
         .when(F.col("doc_id") % 13 == 5, F.lit(_M14_BETA))
@@ -11305,6 +11311,17 @@ def _m14b_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id long, epoch long, text string",
     )
     return _m14_docs(spark, sf_dir).unionByName(plants)
+
+
+def _kept_docs(spark: SparkSession, text_store: str) -> DataFrame:
+    """The kept set of a keep-first dedup text store (m14, m14b, m16,
+    m19): ``(doc_id, epoch bigint)`` ordered by doc_id."""
+    return (
+        read_store(spark, text_store)
+        .filter(F.col("kept"))
+        .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
+        .orderBy("doc_id")
+    )
 
 
 def _write_epoch_waves(d: DataFrame, in_dir: str) -> None:
@@ -11446,8 +11463,8 @@ def m14b_streaming_threshold_dedup(
 
     Verified-pair scoring reads ONLY matched reps' texts: candidates
     semi-join the text store before shingling, so the per-batch verify
-    cost is O(candidate reps), not O(corpus) — tighter than m14's
-    formulation, where the shingle projection sat corpus-side.
+    cost is O(candidate reps), not O(corpus). m14 runs this same body
+    at t = 1 (set equality).
 
     Plants: m14's template families (alpha J=1 copies, beta copies, and
     alpha-trunc at J=6/7 — KEPT under m14's equality semantics, DROPPED
@@ -11481,13 +11498,7 @@ def m14b_streaming_threshold_dedup(
         )
 
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
-
-    return (
-        read_store(spark, text_store)
-        .filter(F.col("kept"))
-        .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
-        .orderBy("doc_id")
-    )
+    return _kept_docs(spark, text_store)
 
 
 @register(
@@ -11562,12 +11573,7 @@ def m16_store_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         streaming_threshold_dedup_batch(
             d.filter(F.col("epoch") == 2), band_c, text_c, _M14B_T, 2
         )
-    return (
-        read_store(spark, text_c)
-        .filter(F.col("kept"))
-        .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
-        .orderBy("doc_id")
-    )
+    return _kept_docs(spark, text_c)
 
 
 @register(
@@ -11929,13 +11935,7 @@ def m19_streaming_containment_dedup(
         )
 
     _drain_waves(spark, in_dir, ckpt, dedup_batch, d.schema)
-
-    return (
-        read_store(spark, text_store)
-        .filter(F.col("kept"))
-        .select("doc_id", F.col("epoch").cast("bigint").alias("epoch"))
-        .orderBy("doc_id")
-    )
+    return _kept_docs(spark, text_store)
 
 
 # DSIR shared oracle core: hashed-gram explosion, the two corpus counts,

@@ -8,6 +8,8 @@ on the documented keys, no Python row path).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -470,19 +472,6 @@ def lsh_band_rows(
             )
         ).alias("_b"),
     ).select("_key", "_sig", "_b.band", "_b.band_hash")
-
-
-def shingle_sets_equal(a: Column, b: Column) -> Column:
-    """TRUE iff two (distinct-element) shingle arrays are the same SET and
-    non-empty — the content-identity predicate for the dedup verifiers
-    (case/whitespace-insensitive exact duplicate: re-crawls, reformatted
-    copies). Empty sets never verify: an unsignable (sub-n-token) doc is
-    unique by definition, not a duplicate of every other short doc."""
-    return (
-        (F.size(F.array_except(a, b)) == 0)
-        & (F.size(F.array_except(b, a)) == 0)
-        & (F.size(a) > 0)
-    )
 
 
 def minhash_lsh_candidates(
@@ -1356,7 +1345,7 @@ def embedding_near_dups(
 
 
 # ---------------------------------------------------------------------------
-# Streaming dedup per-batch bodies (m14 / m14b)
+# Streaming dedup per-batch bodies (m14 / m14b / m19)
 # ---------------------------------------------------------------------------
 # Importable so that (a) tests and the streaming-tax probe replay the
 # PRODUCTION body — the dsir_publish_scored_batch precedent: a batch
@@ -1367,141 +1356,94 @@ def embedding_near_dups(
 # a pickled closure).
 
 
-def streaming_lsh_dedup_batch(
-    batch_df, band_store: str, corpus_store: str, batch_id: int
-) -> None:
-    """m14 per-batch body: EXACT (shingle-set equality) streaming dedup
-    against a persisted band index. See m14_streaming_lsh_dedup
-    (entry_queries.py) for the full semantics/scale story; kept-only
-    rows are published to both stores via the idempotent batch-keyed
-    overwrite (``publish_batch``)."""
-    ss = batch_df.sparkSession
-    b = batch_df.select("doc_id", "epoch", "text")
-    sig = minhash_signatures_df(b, "doc_id", "text", 32, 3)
-    # the band table feeds the candidate probe AND the survivor append:
-    # without a persist the whole shingle->minhash->band pipeline runs
-    # once per consumer (streaming-tax probe, round 12: the batch bodies
-    # are operator-dominated, tax is 16%, so this is the lever)
-    bands = (
-        lsh_band_rows(sig, 32, 8)
-        .select(F.col("_key").alias("doc_id"), "band", "band_hash")
-        .join(b.select("doc_id", "epoch"), "doc_id")
-    ).persist()
-    # eager seed (round-14): `bands` feeds both the candidate probe and the
-    # index arm (self_reps) inside one action — a lazy cache races under
-    # AQE and the minhash pipeline runs twice concurrently (the round-13
-    # x_simhash_pairs measurement)
-    bands.count()
-    dropped = None
-    try:
-        prior = read_store(
-            ss,
-            band_store,
-            "band int, band_hash long, rep_epoch long, rep_doc_id long",
-        ).select("band", "band_hash", "rep_epoch", "rep_doc_id")
-        self_reps = bands.select(
-            "band",
-            "band_hash",
-            F.col("epoch").alias("rep_epoch"),
-            F.col("doc_id").alias("rep_doc_id"),
-        )
-        index = prior.unionByName(self_reps)
-        cand = (
-            bands.join(index, ["band", "band_hash"])
-            .filter(
-                (F.col("rep_epoch") < F.col("epoch"))
-                | (
-                    (F.col("rep_epoch") == F.col("epoch"))
-                    & (F.col("rep_doc_id") < F.col("doc_id"))
-                )
-            )
-            .select("doc_id", "rep_doc_id")
-            .distinct()
-        )
-        kept_corpus = read_store(
-            ss, corpus_store, "doc_id long, text string"
-        ).select("doc_id", "text")
-        rep_texts = kept_corpus.unionByName(b.select("doc_id", "text"))
-        dropped = (
-            cand.join(
-                b.select("doc_id", word_shingles("text").alias("_sa")),
-                "doc_id",
-            )
-            .join(
-                rep_texts.select(
-                    F.col("doc_id").alias("rep_doc_id"),
-                    word_shingles("text").alias("_sb"),
-                ),
-                "rep_doc_id",
-            )
-            .filter(shingle_sets_equal(F.col("_sa"), F.col("_sb")))
-            .select("doc_id")
-            .distinct()
-        ).persist()  # feeds BOTH store appends: without this the whole
-        # candidate+verify pipeline (incl. the corpus-store re-read and
-        # shingling) runs twice per micro-batch (round-12 review finding)
-        kept = b.join(dropped, "doc_id", "left_anti")
-        publish_batch(kept, corpus_store, batch_id)
-        publish_batch(
-            bands.join(dropped, "doc_id", "left_anti").select(
-                "band",
-                "band_hash",
-                F.col("epoch").alias("rep_epoch"),
-                F.col("doc_id").alias("rep_doc_id"),
-            ),
-            band_store,
-            batch_id,
-        )
-    finally:
-        # a crash anywhere in the batch — including the window between
-        # the two store publishes (tests/test_crash_recovery.py) — must
-        # not leak executor cache into the foreachBatch retry
-        if dropped is not None:
-            dropped.unpersist()
-        bands.unpersist()
+def jaccard_verified(s: Column, rep_s: Column, threshold: float) -> Column:
+    """Exact Jaccard |S ∩ R| / |S ∪ R| >= ``threshold`` over two
+    distinct-element shingle arrays; two empty arrays never verify (an
+    unsignable doc is unique by definition). At threshold 1 this is set
+    equality, m14's exact-duplicate identity."""
+    inter = F.size(F.array_intersect(s, rep_s))
+    un = F.size(F.array_union(s, rep_s))
+    return (un > 0) & (
+        inter.cast("double") / un.cast("double") >= F.lit(threshold)
+    )
 
 
-def streaming_threshold_dedup_batch(
-    batch_df, band_store: str, text_store: str, threshold: float,
+def containment_verified(
+    s: Column, rep_s: Column, threshold: float
+) -> Column:
+    """Containment |S ∩ R| / |S| >= ``threshold`` of the LATER doc's
+    shingles ``s`` in the earlier doc's ``rep_s`` (asymmetric: the
+    denominator is the later doc's count); an empty ``s`` never
+    verifies."""
+    inter = F.size(F.array_intersect(s, rep_s))
+    ns = F.size(s)
+    return (ns > 0) & (
+        inter.cast("double") / ns.cast("double") >= F.lit(threshold)
+    )
+
+
+def _keep_first_dedup_batch(
+    b: DataFrame,
+    keys: DataFrame,
+    index_store: str,
+    text_store: str,
     batch_id: int,
+    n: int,
+    drops: Callable[[Column, Column], Column],
+    posting_cap: int | None = None,
 ) -> None:
-    """m14b per-batch body: THRESHOLD (exact word-3-gram Jaccard >= t)
-    streaming dedup under the pairwise keep-first rule. Both stores index
-    EVERY arrival (kept flag on the text store), published via the
-    idempotent batch-keyed overwrite (``publish_batch``); see
-    m14b_streaming_threshold_dedup (entry_queries.py)."""
-    ss = batch_df.sparkSession
-    b = batch_df.select("doc_id", "epoch", "text")
-    sig = minhash_signatures_df(b, "doc_id", "text", 32, 3)
-    # consumed three times (candidate probe via idx, batch_reps union,
-    # batch_reps append) — persist or the minhash pipeline runs thrice
-    batch_bands = (
-        lsh_band_rows(sig, 32, 8)
-        .select(F.col("_key").alias("doc_id"), "band", "band_hash")
-        .join(b.select("doc_id", "epoch"), "doc_id")
-    ).persist()
-    # eager materialization (round-14, the `_seeded` pattern): batch_bands
-    # has TWO consumers inside one downstream action (the probe side `g` and
-    # the index arm via batch_reps), and concurrent first consumers under
-    # AQE both miss a lazy cache and run the minhash pipeline twice in
-    # parallel (the round-13 x_simhash_pairs measurement)
-    batch_bands.count()
+    """The pairwise keep-first streaming dedup core (m14, m14b, m19).
+
+    ``b`` is the batch ``(doc_id, epoch, text)``, ``keys`` its candidate
+    keys ``(doc_id, epoch, <key columns>)``. A doc is dropped iff SOME
+    earlier arrival (order = (epoch, doc_id); kept or dropped) shares a
+    key with it and ``drops(its shingles, the earlier doc's)`` holds
+    over distinct word ``n``-grams. The candidates come from the
+    persisted ``index_store`` plus the batch's own keys; verify
+    semi-joins the text store to the matched reps BEFORE shingling, so
+    it costs O(candidate reps), never O(corpus). Every arrival is
+    published: the batch with a ``kept`` flag to the text store, then
+    its keys to the index store (``publish_batch``, so a retried batch
+    overwrites its own directory). ``posting_cap`` excludes keys with
+    more postings from candidate generation only (the index still
+    records them)."""
+    ss = b.sparkSession
+    key_cols = [c for c in keys.columns if c not in ("doc_id", "epoch")]
+    # keys feed the probe AND the index arm (self_reps) inside one
+    # publish action: persist and seed eagerly (round-14, the `_seeded`
+    # pattern) — concurrent first consumers under AQE both miss a lazy
+    # cache and run the key pipeline twice in parallel (the round-13
+    # x_simhash_pairs measurement)
+    keys = keys.persist()
     cand = None
     try:
-        prior_rows = read_store(
-            ss,
-            band_store,
-            "band int, band_hash long, rep_epoch long, rep_doc_id long",
-        ).select("band", "band_hash", "rep_epoch", "rep_doc_id")
-        batch_reps = batch_bands.select(
-            "band",
-            "band_hash",
+        keys.count()
+        self_reps = keys.select(
+            *key_cols,
             F.col("epoch").alias("rep_epoch"),
             F.col("doc_id").alias("rep_doc_id"),
         )
-        idx = prior_rows.unionByName(batch_reps)
+        prior = read_store(ss, index_store, self_reps.schema)
+        idx = prior.unionByName(self_reps)
+        probe_idx = idx
+        if posting_cap is not None:
+            # hotness only matters for keys the BATCH probes: the
+            # semi-join narrows the count to those postings (production
+            # would keep an incrementally-maintained posting-count sketch
+            # instead of recounting; hot keys are few by definition, so
+            # the anti-join side broadcasts)
+            hot = (
+                idx.join(
+                    keys.select(*key_cols).distinct(), key_cols, "left_semi"
+                )
+                .groupBy(*key_cols)
+                .count()
+                .filter(F.col("count") > posting_cap)
+                .select(*key_cols)
+            )
+            probe_idx = idx.join(F.broadcast(hot), key_cols, "left_anti")
         cand = (
-            batch_bands.join(idx, ["band", "band_hash"])
+            keys.join(probe_idx, key_cols)
             .filter(
                 (F.col("rep_epoch") < F.col("epoch"))
                 | (
@@ -1519,44 +1461,30 @@ def streaming_threshold_dedup_batch(
             ss, text_store, "doc_id long, text string"
         ).select("doc_id", "text")
         all_texts = earlier_texts.unionByName(b.select("doc_id", "text"))
-        # verify reads ONLY matched reps' texts: semi-join narrows the
-        # store BEFORE the shingle projection — O(candidate reps), never
-        # O(corpus)
         rep_texts = all_texts.join(
             cand.select(F.col("rep_doc_id").alias("doc_id")).distinct(),
             "doc_id",
             "left_semi",
         )
-        inter = F.size(F.array_intersect("_sa", "_sb"))
-        un = F.size(F.array_union("_sa", "_sb"))
         dropped = (
             cand.join(
-                b.select("doc_id", word_shingles("text").alias("_sa")),
+                b.select("doc_id", word_shingles("text", n).alias("_s")),
                 "doc_id",
             )
             .join(
                 rep_texts.select(
                     F.col("doc_id").alias("rep_doc_id"),
-                    word_shingles("text").alias("_sb"),
+                    word_shingles("text", n).alias("_rep_s"),
                 ),
                 "rep_doc_id",
             )
-            .filter(
-                (un > 0)
-                & (inter.cast("double") / un.cast("double")
-                   >= F.lit(threshold))
-            )
+            .filter(drops(F.col("_s"), F.col("_rep_s")))
             .select("doc_id")
             .distinct()
         )
         flagged = b.join(
             dropped.withColumn("_dropped", F.lit(True)), "doc_id", "left"
         )
-        # the pair rule indexes EVERY arrival: both stores publish the
-        # whole batch (kept flag on the text store) into their own
-        # batch subdirs — new files only, never read-and-overwrite
-        # of live data, and a retried micro-batch overwrites its own
-        # subdir (replay is a no-op)
         publish_batch(
             flagged.withColumn("kept", F.col("_dropped").isNull()).drop(
                 "_dropped"
@@ -1564,12 +1492,37 @@ def streaming_threshold_dedup_batch(
             text_store,
             batch_id,
         )
-        publish_batch(batch_reps, band_store, batch_id)
+        publish_batch(self_reps, index_store, batch_id)
     finally:
-        # crash-safe cache release — see tests/test_crash_recovery.py
+        # a crash anywhere in the batch — including the window between
+        # the two store publishes — must not leak executor cache into
+        # the foreachBatch retry
         if cand is not None:
             cand.unpersist()
-        batch_bands.unpersist()
+        keys.unpersist()
+
+
+def streaming_threshold_dedup_batch(
+    batch_df, band_store: str, text_store: str, threshold: float,
+    batch_id: int,
+) -> None:
+    """m14b per-batch body: THRESHOLD (exact word-3-gram Jaccard >= t)
+    streaming dedup under the pairwise keep-first rule, with MinHash
+    band rows (32 hashes / 8 bands) as the candidate keys; see
+    m14b_streaming_threshold_dedup (entry_queries.py). m14 runs this
+    body at t = 1, where the Jaccard verify is shingle-set equality
+    (m14_streaming_lsh_dedup)."""
+    b = batch_df.select("doc_id", "epoch", "text")
+    sig = minhash_signatures_df(b, "doc_id", "text", 32, 3)
+    bands = (
+        lsh_band_rows(sig, 32, 8)
+        .select(F.col("_key").alias("doc_id"), "band", "band_hash")
+        .join(b.select("doc_id", "epoch"), "doc_id")
+    )
+    _keep_first_dedup_batch(
+        b, bands, band_store, text_store, batch_id, 3,
+        lambda s, rep_s: jaccard_verified(s, rep_s, threshold),
+    )
 
 
 def streaming_containment_dedup_batch(
@@ -1591,10 +1544,11 @@ def streaming_containment_dedup_batch(
     SEMANTICS — pairwise keep-first, asymmetric: a doc B is dropped iff
     SOME earlier arrival A (order = (epoch, doc_id); kept or dropped)
     exactly contains it at level t: |S_B ∩ S_A| / |S_B| >= t over
-    distinct word ``n``-gram shingles. The denominator is the LATER
-    doc's gram count — a fragment arriving after its page is dropped; a
-    page arriving after its fragment is kept (its own grams are mostly
-    novel). Docs with zero shingles (< n tokens) are kept by definition.
+    distinct word ``n``-gram shingles (:func:`containment_verified`).
+    The denominator is the LATER doc's gram count — a fragment arriving
+    after its page is dropped; a page arriving after its fragment is
+    kept (its own grams are mostly novel). Docs with zero shingles
+    (< n tokens) are kept by definition.
 
     CANDIDATE GENERATOR — a persisted PER-SHINGLE inverted index
     (``gram_hash -> (rep_epoch, rep_doc_id)``), not LSH bands: any pair
@@ -1603,139 +1557,33 @@ def streaming_containment_dedup_batch(
     equivalent to the all-pairs ground truth, with no recall caveat at
     all (the property m14b's band index cannot give for containment).
     Grams travel as ``xxhash64`` 8-byte keys: a hash collision can only
-    ADD a candidate pair (killed by the exact text-side verify below),
-    never lose one, so exactness survives the key compression.
-
-    Verify reads ONLY matched reps' texts (semi-join narrowed, the m14b
-    seam) and recomputes containment on exact shingle arrays. Publish is
-    the idempotent batch-keyed overwrite (``publish_batch``); the
-    pair rule indexes EVERY arrival, so the gram index is bounded by
-    corpus x grams-per-doc.
+    ADD a candidate pair (killed by the exact text-side verify), never
+    lose one, so exactness survives the key compression. The pair rule
+    indexes EVERY arrival (:func:`_keep_first_dedup_batch`), so the gram
+    index is bounded by corpus x grams-per-doc.
 
     At 100 TB: the index is the heavy store (one row per doc-gram), but
     it shuffles on 8-byte hash keys, partition-prunes by ``gram_hash``
     range, and the probe touches only the batch's own grams. Hot
     boilerplate grams skew the probe join — ``posting_cap`` excludes
     them from candidate generation at an explicit, test-pinned recall
-    cost (the dedup.py DF-cap trade); the registration runs uncapped so
-    the full ground-truth oracle stays honest. Reference has no dedup at all
-    (extension surface, SURVEY §2 X2/S6)."""
-    ss = batch_df.sparkSession
+    cost (the dedup.py DF-cap trade: a pair similar ONLY through capped
+    grams is missed, tests/test_streaming_containment.py::
+    test_posting_cap_trades_boilerplate_recall_for_skew); the
+    registration runs uncapped so the full ground-truth oracle stays
+    honest. Reference has no dedup at all (extension surface, SURVEY §2
+    X2/S6)."""
     b = batch_df.select("doc_id", "epoch", "text")
     # one row per (doc, distinct gram); zero-gram docs drop out here and
     # are therefore never candidates — kept by definition
-    g = (
-        b.select(
-            "doc_id",
-            "epoch",
-            F.explode(word_shingles("text", n)).alias("_gram"),
-        )
-        .select("doc_id", "epoch", F.xxhash64("_gram").alias("gram_hash"))
-    ).persist()  # feeds the probe AND the index publish
-    # eager seed (round-14): the probe side and the index arm (self_reps)
-    # are both consumers of `g` inside one publish action — a lazy cache
-    # races and the shingle explosion runs twice concurrently
-    g.count()
-    cand = None
-    try:
-        prior = read_store(
-            ss, gram_store, "gram_hash long, rep_epoch long, rep_doc_id long"
-        ).select("gram_hash", "rep_epoch", "rep_doc_id")
-        self_reps = g.select(
-            "gram_hash",
-            F.col("epoch").alias("rep_epoch"),
-            F.col("doc_id").alias("rep_doc_id"),
-        )
-        idx = prior.unionByName(self_reps)
-        # posting_cap: the production hot-gram (boilerplate) skew trade,
-        # made code instead of prose — grams whose postings exceed the cap
-        # are excluded from CANDIDATE GENERATION (the index still records
-        # them: hotness is re-decided per batch as the corpus grows). The
-        # trade is explicit and test-pinned: a pair similar ONLY through
-        # capped grams is missed (tests/test_streaming_containment.py::
-        # test_posting_cap_trades_boilerplate_recall_for_skew). The m19
-        # registration runs UNCAPPED so its all-pairs oracle stays a full
-        # ground truth — the same honesty rule the minhash DF cap follows
-        # (capped probe lives outside the oracle-hashed path).
-        if posting_cap is not None:
-            # hotness only matters for grams the BATCH probes: semi-join
-            # narrows the count to those postings (production would keep an
-            # incrementally-maintained posting-count sketch instead of
-            # recounting; hot grams are few by definition, so the anti-join
-            # side broadcasts)
-            hot = (
-                idx.join(
-                    g.select("gram_hash").distinct(), "gram_hash", "left_semi"
-                )
-                .groupBy("gram_hash")
-                .count()
-                .filter(F.col("count") > posting_cap)
-                .select("gram_hash")
-            )
-            probe_idx = idx.join(F.broadcast(hot), "gram_hash", "left_anti")
-        else:
-            probe_idx = idx
-        cand = (
-            g.join(probe_idx, "gram_hash")
-            .filter(
-                (F.col("rep_epoch") < F.col("epoch"))
-                | (
-                    (F.col("rep_epoch") == F.col("epoch"))
-                    & (F.col("rep_doc_id") < F.col("doc_id"))
-                )
-            )
-            .select("doc_id", "rep_doc_id")
-            .distinct()
-        ).persist()  # feeds the reps semi-join AND the verify join
-        # both consumers sit inside ONE publish action — seed eagerly
-        cand.count()
-        earlier_texts = read_store(
-            ss, text_store, "doc_id long, text string"
-        ).select("doc_id", "text")
-        all_texts = earlier_texts.unionByName(b.select("doc_id", "text"))
-        rep_texts = all_texts.join(
-            cand.select(F.col("rep_doc_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_semi",
-        )
-        inter = F.size(F.array_intersect("_sb", "_sa"))
-        nb = F.size("_sb")
-        dropped = (
-            cand.join(
-                b.select("doc_id", word_shingles("text", n).alias("_sb")),
-                "doc_id",
-            )
-            .join(
-                rep_texts.select(
-                    F.col("doc_id").alias("rep_doc_id"),
-                    word_shingles("text", n).alias("_sa"),
-                ),
-                "rep_doc_id",
-            )
-            .filter(
-                (nb > 0)
-                & (inter.cast("double") / nb.cast("double")
-                   >= F.lit(threshold))
-            )
-            .select("doc_id")
-            .distinct()
-        )
-        flagged = b.join(
-            dropped.withColumn("_dropped", F.lit(True)), "doc_id", "left"
-        )
-        publish_batch(
-            flagged.withColumn("kept", F.col("_dropped").isNull()).drop(
-                "_dropped"
-            ),
-            text_store,
-            batch_id,
-        )
-        publish_batch(self_reps, gram_store, batch_id)
-    finally:
-        # crash-safe cache release — see tests/test_crash_recovery.py
-        if cand is not None:
-            cand.unpersist()
-        g.unpersist()
+    grams = b.select(
+        "doc_id", "epoch", F.explode(word_shingles("text", n)).alias("_gram")
+    ).select("doc_id", "epoch", F.xxhash64("_gram").alias("gram_hash"))
+    _keep_first_dedup_batch(
+        b, grams, gram_store, text_store, batch_id, n,
+        lambda s, rep_s: containment_verified(s, rep_s, threshold),
+        posting_cap,
+    )
 
 
 def streaming_semantic_dedup_batch(

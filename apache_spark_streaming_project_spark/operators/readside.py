@@ -35,8 +35,7 @@ def trailing_window(
     ``F.current_timestamp()`` for wall-clock semantics.
 
     The range predicate is a plain comparison -> pushed into the parquet
-    scan (row-group stats pruning); with date-partitioned result tables it
-    becomes partition pruning.
+    scan (row-group stats pruning).
     """
     if now is None:
         bound = df.agg(

@@ -3,7 +3,6 @@ the custom Python Data Source connector (batch + streaming)."""
 
 from apache_spark_streaming_project_spark.sources.files import (
     read_census_stream,
-    read_file_stream,
 )
 from apache_spark_streaming_project_spark.sources.pydatasource import (
     SyntheticCorpusDataSource,
@@ -12,5 +11,4 @@ from apache_spark_streaming_project_spark.sources.pydatasource import (
 __all__ = [
     "SyntheticCorpusDataSource",
     "read_census_stream",
-    "read_file_stream",
 ]

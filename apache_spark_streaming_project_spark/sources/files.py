@@ -2,9 +2,9 @@
 
 The reference tails a directory of headerless CSV micro-batch files with a
 declared 14-column schema and positional binding (reference
-spark_streaming.py:43-46). Same built-in here, plus json/parquet variants and
-the ``rate`` source for load tests. Streaming file sources REQUIRE a declared
-schema; none of these ever infer.
+spark_streaming.py:43-46). Same built-in here (``read_census_stream``), plus
+a PERMISSIVE variant that routes malformed lines to a quarantine stream.
+Streaming file sources REQUIRE a declared schema; neither ever infers.
 """
 
 from __future__ import annotations
@@ -16,33 +16,24 @@ from pyspark.sql import types as T
 from apache_spark_streaming_project_spark.schemas import CENSUS_SCHEMA
 
 
-def read_file_stream(
+def read_census_stream(
     spark: SparkSession,
-    path: str,
-    schema: T.StructType,
-    fmt: str = "csv",
+    input_dir: str,
     max_files_per_trigger: int | None = None,
-    **options: str,
 ) -> DataFrame:
-    """Directory-tailing streaming source. ``max_files_per_trigger`` is the
-    backpressure knob the reference leaves unset (SURVEY.md §2.9) — at scale
-    it bounds per-batch work so one slow trigger can't snowball."""
-    reader = spark.readStream.schema(schema).format(fmt)
-    if fmt == "csv":
-        reader = reader.option("header", "false")
+    """S1 — the census stream: a directory of headerless CSV files,
+    positional binding to the declared 14-col schema (reference
+    spark_streaming.py:43-46). ``max_files_per_trigger`` is the
+    backpressure knob the reference leaves unset (SURVEY.md §2.9) — at
+    scale it bounds per-batch work so one slow trigger can't snowball."""
+    reader = (
+        spark.readStream.schema(CENSUS_SCHEMA)
+        .format("csv")
+        .option("header", "false")
+    )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    for k, v in options.items():
-        reader = reader.option(k, v)
-    return reader.load(path)
-
-
-def read_census_stream(
-    spark: SparkSession, input_dir: str, fmt: str = "csv", **kwargs
-) -> DataFrame:
-    """S1 — the census stream: headerless CSV files, positional binding to
-    the declared 14-col schema (reference spark_streaming.py:43-46)."""
-    return read_file_stream(spark, input_dir, CENSUS_SCHEMA, fmt, **kwargs)
+    return reader.load(input_dir)
 
 
 def read_csv_stream_with_quarantine(

@@ -55,7 +55,7 @@ def publish_batch(
 
 
 def read_store(
-    spark: SparkSession, root: str, schema: str | None = None
+    spark: SparkSession, root: str, schema: str | StructType | None = None
 ) -> DataFrame:
     """Recursive-lookup read of a store; an empty frame of ``schema``
     when given and ``root`` does not exist yet (before the first

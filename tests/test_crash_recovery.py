@@ -2,16 +2,15 @@
 lifecycles (round-12 VERDICT item 3).
 
 Each streaming dedup batch body publishes to TWO corpus-lifetime stores
-in a fixed order (m14: corpus then band; m14b: text then band; m19: text
-then gram). foreachBatch is at-least-once: a crash in the window BETWEEN
+in a fixed order (m14/m14b: text then band; m19: text then gram). foreachBatch is at-least-once: a crash in the window BETWEEN
 the two publishes leaves the stores mutually inconsistent (the first
 store has the batch's subdirectory, the second does not), and the batch
 is re-run after restart. These tests inject a crash exactly in that
 window and prove the retry HEALS: final store contents are
 byte-identical to a never-crashed twin pipeline, even though the retry's
 reads see the torn first-store state (the partial batch's rows come back
-as "earlier texts" / "kept corpus" — the subtle path that makes this
-worth pinning rather than arguing).
+as "earlier texts" — the subtle path that makes this worth pinning
+rather than arguing).
 
 The maintenance (m16) counterpart: a crash between the two store
 compactions leaves one store compacted and one fragmented. Because
@@ -39,6 +38,7 @@ from pyspark.sql import functions as F
 
 from conftest import store_kept, store_rows
 
+from apache_spark_streaming_project_spark.entry_queries import _M14B_T
 from apache_spark_streaming_project_spark.operators import dedup, sampling
 from apache_spark_streaming_project_spark.streaming.batch_store import (
     compact_store,
@@ -83,9 +83,9 @@ def _crash_between_publishes():
         dedup.publish_batch = real
 
 
-def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
+@pytest.mark.parametrize("t", [_M14B_T, 1.0])  # m14b, m14
+def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path, t):
     from apache_spark_streaming_project_spark.entry_queries import (
-        _M14B_T,
         _m14b_docs,
     )
 
@@ -93,7 +93,7 @@ def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
     band, text = str(tmp_path / "band"), str(tmp_path / "text")
     for i in (0, 1):
         dedup.streaming_threshold_dedup_batch(
-            d.filter(F.col("epoch") == i), band, text, _M14B_T, i
+            d.filter(F.col("epoch") == i), band, text, t, i
         )
 
     # crash batch 2 between publishes: text/batch=2 lands, band/batch=2
@@ -101,7 +101,7 @@ def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
     with _crash_between_publishes() as state:
         with pytest.raises(RuntimeError, match="injected crash"):
             dedup.streaming_threshold_dedup_batch(
-                d.filter(F.col("epoch") == 2), band, text, _M14B_T, 2
+                d.filter(F.col("epoch") == 2), band, text, t, 2
             )
     assert state["first_store"] == text
     assert os.path.isdir(os.path.join(text, "batch=2"))
@@ -111,13 +111,13 @@ def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
     # re-reads the text store WITH the torn batch-2 rows present — the
     # batch-keyed overwrite must still converge to the crash-free state.
     dedup.streaming_threshold_dedup_batch(
-        d.filter(F.col("epoch") == 2), band, text, _M14B_T, 2
+        d.filter(F.col("epoch") == 2), band, text, t, 2
     )
 
     band2, text2 = str(tmp_path / "band2"), str(tmp_path / "text2")
     for i in (0, 1, 2):
         dedup.streaming_threshold_dedup_batch(
-            d.filter(F.col("epoch") == i), band2, text2, _M14B_T, i
+            d.filter(F.col("epoch") == i), band2, text2, t, i
         )
     assert _rows(spark, band) == _rows(spark, band2)
     assert _rows(spark, text) == _rows(spark, text2)
@@ -126,43 +126,9 @@ def test_m14b_crash_between_publishes_heals_on_retry(spark, tmp_path):
     wave = d.filter(F.col("epoch") == 0).withColumn(
         "epoch", F.lit(3).cast("bigint")
     )
-    dedup.streaming_threshold_dedup_batch(wave, band, text, _M14B_T, 3)
-    dedup.streaming_threshold_dedup_batch(wave, band2, text2, _M14B_T, 3)
+    dedup.streaming_threshold_dedup_batch(wave, band, text, t, 3)
+    dedup.streaming_threshold_dedup_batch(wave, band2, text2, t, 3)
     assert _kept(spark, text) == _kept(spark, text2)
-
-
-def test_m14_crash_between_publishes_heals_on_retry(spark, tmp_path):
-    from apache_spark_streaming_project_spark.entry_queries import (
-        _m14b_docs,
-    )
-
-    d = _m14b_docs(spark, SF_DIR)
-    band, corpus = str(tmp_path / "band"), str(tmp_path / "corpus")
-    dedup.streaming_lsh_dedup_batch(
-        d.filter(F.col("epoch") == 0), band, corpus, 0
-    )
-
-    # m14 publishes corpus first, band second
-    with _crash_between_publishes() as state:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            dedup.streaming_lsh_dedup_batch(
-                d.filter(F.col("epoch") == 1), band, corpus, 1
-            )
-    assert state["first_store"] == corpus
-    assert os.path.isdir(os.path.join(corpus, "batch=1"))
-    assert not os.path.isdir(os.path.join(band, "batch=1"))
-
-    dedup.streaming_lsh_dedup_batch(
-        d.filter(F.col("epoch") == 1), band, corpus, 1
-    )
-
-    band2, corpus2 = str(tmp_path / "band2"), str(tmp_path / "corpus2")
-    for i in (0, 1):
-        dedup.streaming_lsh_dedup_batch(
-            d.filter(F.col("epoch") == i), band2, corpus2, i
-        )
-    assert _rows(spark, band) == _rows(spark, band2)
-    assert _rows(spark, corpus) == _rows(spark, corpus2)
 
 
 def test_m19_crash_between_publishes_heals_on_retry(spark, tmp_path):
@@ -315,7 +281,6 @@ def test_maintenance_crash_between_compactions_recovers(spark, tmp_path):
     ingests identically, because compaction is content-preserving. Both
     paths end byte-identical to a never-crashed run."""
     from apache_spark_streaming_project_spark.entry_queries import (
-        _M14B_T,
         _m14b_docs,
     )
 

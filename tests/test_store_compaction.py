@@ -18,11 +18,13 @@ import glob
 import os
 import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from conftest import store_kept as _kept
 from conftest import store_rows as _rows
 
+from apache_spark_streaming_project_spark.entry_queries import _M14B_T
 from apache_spark_streaming_project_spark.operators.dedup import (
     streaming_threshold_dedup_batch,
 )
@@ -38,7 +40,6 @@ SF_DIR = "/root/testdata/sf0.001"
 
 def test_m14b_stores_compaction_preserves_results(spark, tmp_path):
     from apache_spark_streaming_project_spark.entry_queries import (
-        _M14B_T,
         _m14b_docs,
     )
 
@@ -93,7 +94,6 @@ def test_retention_prunes_only_dropped_rows(spark, tmp_path):
     dropped epoch-0 texts must not change the kept set, because kept
     rows and the band index are untouched."""
     from apache_spark_streaming_project_spark.entry_queries import (
-        _M14B_T,
         _m14b_docs,
     )
 
@@ -131,36 +131,32 @@ def test_retention_prunes_only_dropped_rows(spark, tmp_path):
     assert _kept(spark, pruned) == _kept(spark, text)
 
 
-def test_streaming_dedup_replay_is_idempotent(spark, tmp_path):
+@pytest.mark.parametrize("t", [_M14B_T, 1.0])  # m14b, m14
+def test_streaming_dedup_replay_is_idempotent(spark, tmp_path, t):
     """Round-12 ADVICE medium item: foreachBatch is at-least-once, so a
     retried micro-batch re-runs the whole batch body. The batch-keyed
     overwrite publish must make the retry a no-op — identical store
-    contents, identical kept set — for BOTH streaming dedup bodies,
-    including a retry that arrives AFTER later batches were planned
-    against the first attempt's state (same batch_id -> same subdir)."""
+    contents, identical kept set — at m14b's threshold and at m14's
+    t = 1, including a retry that arrives AFTER later batches were
+    planned against the first attempt's state (same batch_id -> same
+    subdir)."""
     from apache_spark_streaming_project_spark.entry_queries import (
-        _M14B_T,
         _m14b_docs,
-    )
-    from apache_spark_streaming_project_spark.operators.dedup import (
-        streaming_lsh_dedup_batch,
     )
 
     d = _m14b_docs(spark, SF_DIR)
-
-    # --- threshold body (m14b) ---
     band = str(tmp_path / "band")
     text = str(tmp_path / "text")
     streaming_threshold_dedup_batch(
-        d.filter(F.col("epoch") == 0), band, text, _M14B_T, 0
+        d.filter(F.col("epoch") == 0), band, text, t, 0
     )
     streaming_threshold_dedup_batch(
-        d.filter(F.col("epoch") == 1), band, text, _M14B_T, 1
+        d.filter(F.col("epoch") == 1), band, text, t, 1
     )
     band_once, text_once = _rows(spark, band), _rows(spark, text)
     # retry batch 1 verbatim (at-least-once redelivery)
     streaming_threshold_dedup_batch(
-        d.filter(F.col("epoch") == 1), band, text, _M14B_T, 1
+        d.filter(F.col("epoch") == 1), band, text, t, 1
     )
     assert _rows(spark, band) == band_once
     assert _rows(spark, text) == text_once
@@ -168,28 +164,15 @@ def test_streaming_dedup_replay_is_idempotent(spark, tmp_path):
     band2, text2 = str(tmp_path / "band2"), str(tmp_path / "text2")
     for i in range(2):
         streaming_threshold_dedup_batch(
-            d.filter(F.col("epoch") == i), band2, text2, _M14B_T, i
+            d.filter(F.col("epoch") == i), band2, text2, t, i
         )
     streaming_threshold_dedup_batch(
-        d.filter(F.col("epoch") == 2), band, text, _M14B_T, 2
+        d.filter(F.col("epoch") == 2), band, text, t, 2
     )
     streaming_threshold_dedup_batch(
-        d.filter(F.col("epoch") == 2), band2, text2, _M14B_T, 2
+        d.filter(F.col("epoch") == 2), band2, text2, t, 2
     )
     assert _kept(spark, text) == _kept(spark, text2)
-
-    # --- exact body (m14) ---
-    eband = str(tmp_path / "eband")
-    ecorp = str(tmp_path / "ecorp")
-    streaming_lsh_dedup_batch(
-        d.filter(F.col("epoch") == 0), eband, ecorp, 0
-    )
-    eband_once, ecorp_once = _rows(spark, eband), _rows(spark, ecorp)
-    streaming_lsh_dedup_batch(
-        d.filter(F.col("epoch") == 0), eband, ecorp, 0
-    )
-    assert _rows(spark, eband) == eband_once
-    assert _rows(spark, ecorp) == ecorp_once
 
 
 def test_batch_store_layout_contract(spark, tmp_path):

@@ -12,9 +12,10 @@ from pyspark.sql import functions as F
 
 from apache_spark_streaming_project_spark.entry_queries import QUERIES
 from apache_spark_streaming_project_spark.operators.dedup import (
+    containment_verified,
+    jaccard_verified,
     lsh_band_rows,
     minhash_signatures_df,
-    shingle_sets_equal,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -27,21 +28,31 @@ def _py_shingle_set(text: str, n: int = 3) -> frozenset[str]:
     )
 
 
-def test_shingle_sets_equal_semantics(spark):
+def test_verify_predicates_semantics(spark):
+    """The two keep-first verify predicates at t = 1: Jaccard is set
+    equality (m14), containment holds for a later strict subset; empty
+    arrays never verify under either."""
     rows = [
-        (["a b c", "b c d"], ["b c d", "a b c"], True),   # same set, order
-        (["a b c"], ["a b c", "b c d"], False),           # strict subset
-        ([], [], False),                                   # empty never eq
-        (["a b c"], ["a b c"], True),
+        # sa (later), sb (earlier), want jaccard, want containment
+        (["a b c", "b c d"], ["b c d", "a b c"], True, True),  # same set
+        (["a b c"], ["a b c", "b c d"], False, True),  # strict subset
+        ([], [], False, False),  # empty never verifies
+        (["a b c"], ["a b c"], True, True),
     ]
     df = spark.createDataFrame(
-        rows, "sa array<string>, sb array<string>, want boolean"
+        rows,
+        "sa array<string>, sb array<string>, want_j boolean, "
+        "want_c boolean",
     )
     got = df.select(
-        shingle_sets_equal(F.col("sa"), F.col("sb")).alias("got"), "want"
+        jaccard_verified(F.col("sa"), F.col("sb"), 1.0).alias("j"),
+        containment_verified(F.col("sa"), F.col("sb"), 1.0).alias("c"),
+        "want_j",
+        "want_c",
     ).collect()
     for r in got:
-        assert r["got"] == r["want"]
+        assert r["j"] == r["want_j"]
+        assert r["c"] == r["want_c"]
 
 
 def test_band_rows_equal_signatures_collide_everywhere(spark):

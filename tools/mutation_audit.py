@@ -482,19 +482,23 @@ MUTATIONS = [
       "boundary", "MIRROR-side shingle/zipped family: eligibility "
       "Jaccard threshold 0.85 -> 0.9"),
     # ----- m14: streaming LSH-indexed dedup (round-11) -----
+    # m14, m14b and m19 share one keep-first core
+    # (dedup.py:_keep_first_dedup_batch): its index-union line carries
+    # one mutation per registration, like _PUBLISH_KEY
     M("m14_no_prior_index", "m14_streaming_lsh_dedup",
       f"{PKG}/operators/dedup.py",
-      'index = prior.unionByName(self_reps)',
-      'index = self_reps',
+      'idx = prior.unionByName(self_reps)',
+      'idx = self_reps',
       "dropped-clause", "persisted band index ignored: cross-epoch "
       "template copies are never candidates, later epochs keep their "
       "duplicates (row-count kill)"),
     M("m14_containment_verify", "m14_streaming_lsh_dedup",
       f"{PKG}/operators/dedup.py",
-      '& (F.size(F.array_except(b, a)) == 0)\n        & (F.size(a) > 0)',
-      '& (F.size(a) > 0)',
-      "dropped-clause", "verification degrades to one-sided containment: "
-      "the truncated-alpha plants (strict shingle SUBSET of alpha, "
+      'un = F.size(F.array_union(s, rep_s))',
+      'un = F.size(s)',
+      "wrong-key", "Jaccard denominator |S ∪ R| -> |S|: at m14's t = 1 "
+      "verification degrades to one-sided containment, and the "
+      "truncated-alpha plants (strict shingle SUBSET of alpha, "
       "deterministically band-colliding) get wrongly dropped"),
     M("oracle_m14_rep_order", "m14_streaming_lsh_dedup",
       f"{PKG}/entry_queries.py",
@@ -504,10 +508,8 @@ MUTATIONS = [
       "last doc of the first epoch"),
     M("m14b_threshold_exclusive", "m14b_streaming_threshold_dedup",
       f"{PKG}/operators/dedup.py",
-      '& (inter.cast("double") / un.cast("double")\n'
-      '                   >= F.lit(threshold))',
-      '& (inter.cast("double") / un.cast("double")\n'
-      '                   > F.lit(threshold))',
+      'inter.cast("double") / un.cast("double") >= F.lit(threshold)',
+      'inter.cast("double") / un.cast("double") > F.lit(threshold)',
       "off-by-one", "drop comparator >= t -> > t: the planted HALF pair "
       "sits at J = 0.5 EXACTLY (band-collision searched offline), so "
       "doc -8 is wrongly kept (row-count kill)"),
@@ -520,8 +522,8 @@ MUTATIONS = [
       "comparator is reached) wrongly drops doc -5 (row-count kill)"),
     M("m14b_no_prior_index", "m14b_streaming_threshold_dedup",
       f"{PKG}/operators/dedup.py",
-      'idx = prior_rows.unionByName(batch_reps)',
-      'idx = batch_reps',
+      'idx = prior.unionByName(self_reps)',
+      'idx = self_reps',
       "dropped-clause", "persisted band index ignored: cross-epoch "
       "template copies (and the cross-epoch HALF pair) are never "
       "candidates, later epochs keep their near-dups (row-count kill)"),
@@ -578,16 +580,14 @@ MUTATIONS = [
       "oracle-side kill)"),
     M("m19_threshold_boundary", "m19_streaming_containment_dedup",
       f"{PKG}/operators/dedup.py",
-      '& (inter.cast("double") / nb.cast("double")\n'
-      '                   >= F.lit(threshold))',
-      '& (inter.cast("double") / nb.cast("double")\n'
-      '                   > F.lit(threshold))',
+      'inter.cast("double") / ns.cast("double") >= F.lit(threshold)',
+      'inter.cast("double") / ns.cast("double") > F.lit(threshold)',
       "boundary", "containment comparator >= -> >: the EDGE_F plant at "
       "C = 3/5 = 0.6 EXACTLY is wrongly kept (row-count kill)"),
     M("m19_denominator_flip", "m19_streaming_containment_dedup",
       f"{PKG}/operators/dedup.py",
-      'nb = F.size("_sb")',
-      'nb = F.size("_sa")',
+      'ns = F.size(s)',
+      'ns = F.size(rep_s)',
       "wrong-key", "containment denominator flipped to the EARLIER "
       "doc's gram count — symmetric-ish semantics: the REVERSED plant "
       "pair (PAGE_D after FRAG_C, C = 5/23 keep) flips to 5/5 = 1 "
@@ -602,8 +602,8 @@ MUTATIONS = [
       "kill)"),
     M("m19_verify_gram_length", "m19_streaming_containment_dedup",
       f"{PKG}/operators/dedup.py",
-      'word_shingles("text", n).alias("_sb")',
-      'word_shingles("text", n - 1).alias("_sb")',
+      'word_shingles("text", n).alias("_s")',
+      'word_shingles("text", n - 1).alias("_s")',
       "off-by-one", "later-doc verify shingled at 7 while the oracle "
       "and the rep side stay at 8: containment ratios shift corpus-"
       "wide (intersection of 7-gram vs 8-gram sets is empty -> nothing "

@@ -13,7 +13,7 @@ file-source listing)? This probe answers it once, with numbers:
 2. **Production-body equivalents** for m14 / m14b / m15: identical
    fixture (the same `_m14_docs`/`_m14b_docs` builders the registrations
    call), identical per-batch body (the IMPORTABLE production functions
-   `streaming_lsh_dedup_batch` / `streaming_threshold_dedup_batch` /
+   `streaming_threshold_dedup_batch` (m14 at t = 1) /
    `dsir_publish_scored_batch` — zero reimplementation drift), driven by
    a plain Python loop over the wave parquets instead of
    readStream+foreachBatch. Results are asserted IDENTICAL to the
@@ -84,13 +84,13 @@ def _rows(df) -> list[tuple]:
 
 
 def probe_m14(spark, sf_dir: str, name: str) -> dict:
-    """m14 (exact) / m14b (threshold) with the production per-batch body
-    driven batch-wise; parity-asserted against the streaming result."""
-    from pyspark.sql import functions as F
-
+    """m14 (exact, the threshold body at t = 1) / m14b (threshold) / m19
+    (containment) with the production per-batch body driven batch-wise;
+    parity-asserted against the streaming result."""
     from apache_spark_streaming_project_spark.entry_queries import (
         _M14B_T,
         _M19_T,
+        _kept_docs,
         _m14_docs,
         _m14b_docs,
         _m19_docs,
@@ -99,11 +99,7 @@ def probe_m14(spark, sf_dir: str, name: str) -> dict:
     )
     from apache_spark_streaming_project_spark.operators.dedup import (
         streaming_containment_dedup_batch,
-        streaming_lsh_dedup_batch,
         streaming_threshold_dedup_batch,
-    )
-    from apache_spark_streaming_project_spark.streaming.batch_store import (
-        read_store,
     )
 
     ts, want = _timed(lambda: _rows(QUERIES[name].fn(spark, sf_dir)))
@@ -130,24 +126,16 @@ def probe_m14(spark, sf_dir: str, name: str) -> dict:
             _write_epoch_waves(d, in_dir)
             for i in range(3):
                 b = spark.read.parquet(os.path.join(in_dir, f"wave{i}"))
-                if name == "m14_streaming_lsh_dedup":
-                    streaming_lsh_dedup_batch(b, band_store, doc_store, i)
-                elif name == "m19_streaming_containment_dedup":
+                if name == "m19_streaming_containment_dedup":
                     streaming_containment_dedup_batch(
                         b, band_store, doc_store, _M19_T, i
                     )
                 else:
+                    t = 1.0 if name == "m14_streaming_lsh_dedup" else _M14B_T
                     streaming_threshold_dedup_batch(
-                        b, band_store, doc_store, _M14B_T, i
+                        b, band_store, doc_store, t, i
                     )
-        out = read_store(spark, doc_store)
-        if name != "m14_streaming_lsh_dedup":
-            out = out.filter(F.col("kept"))
-        return _rows(
-            out.select(
-                "doc_id", F.col("epoch").cast("bigint").alias("epoch")
-            ).orderBy("doc_id")
-        )
+        return _rows(_kept_docs(spark, doc_store))
 
     tb, got = _timed(batch_run)
     assert got == want, f"{name}: batch-equivalent diverged from streaming"
