@@ -3265,9 +3265,7 @@ def x_data_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     in ONE partial-aggregatable pass (operators/profile.py) — the
     pre-training data-quality gate a corpus pipeline runs before any
     compute is spent. The long format comes from a driver-free ``stack``
-    unpivot of the single agg row; at corpus scale the library swaps the
-    exact distinct counts for HyperLogLog (``exact=False``) to drop the
-    Expand from the plan."""
+    unpivot of the single agg row."""
     from apache_spark_streaming_project_spark.operators.profile import (
         column_profile,
     )
@@ -3316,8 +3314,7 @@ def x_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     each held-out doc count the distinct word 8-grams that also occur in
     the training split (operators/dedup.py:cross_split_contamination).
     The benchmark-leakage gate between corpus assembly and eval. Shuffle
-    keys are the grams (8-byte hashes via ``hash_grams=True`` at corpus
-    scale; exact strings here for the oracle audit)."""
+    keys are the exact gram strings."""
     from apache_spark_streaming_project_spark.operators.dedup import (
         cross_split_contamination,
     )
@@ -4286,8 +4283,7 @@ def s_rank_distributions(spark: SparkSession, sf_dir: str) -> DataFrame:
     by definition — fine for ranked exports and small result tiers. At
     corpus scale replace them with (a) PERCENTILE BUCKETING — cut
     points from a percentile_approx sketch, broadcast back and compared
-    map-side, exactly what perplexity_buckets(approx_thresholds=True)
-    ships (text.py), ntile becomes threshold membership with no total
+    map-side, so ntile becomes threshold membership with no total
     order anywhere; or (b) RANGE-PARTITIONED RANK COMPOSITION —
     repartitionByRange on the order key, rank within each partition,
     then add the broadcast prefix-count of rows in earlier partitions
@@ -11906,12 +11902,9 @@ def m19_streaming_containment_dedup(
     At 100 TB: the gram index shuffles and prunes on 8-byte xxhash64
     keys; per-batch probe cost is the batch's own gram count joined
     against a hash-partitioned store. Hot boilerplate grams are the
-    skew axis — production passes ``posting_cap`` (implemented in the
-    batch body; the trade is pinned by tests/test_streaming_containment
-    .py::test_posting_cap_trades_boilerplate_recall_for_skew) or leans
-    on AQE skew splitting; the registration runs UNCAPPED so the
-    oracle stays a full ground truth. Reference has no dedup at all
-    (extension surface, SURVEY §2 X2/S6)."""
+    skew axis, left to AQE skew splitting: every gram stays a candidate
+    key, so the oracle stays a full ground truth. Reference has no
+    dedup at all (extension surface, SURVEY §2 X2/S6)."""
     import os
 
     from apache_spark_streaming_project_spark.operators.dedup import (

@@ -680,7 +680,6 @@ def simhash_near_dups(
     shingle_n: int = 2,
     fingerprints: DataFrame | None = None,
     drop_shingles: frozenset[str] | None = None,
-    scheme: str = "pigeonhole",
 ) -> DataFrame:
     """SimHash near-dup pairs within Hamming distance ``max_hamming``.
 
@@ -688,27 +687,6 @@ def simhash_near_dups(
     fingerprint into ``max_hamming + 1`` blocks; any pair within the distance
     budget must agree exactly on >= 1 block, so the self-join key is
     (block_id, block_value) — same bucketed-join scale story as LSH.
-
-    ``scheme="multiprobe"`` trades bucket lookups for candidate volume
-    (``max_hamming <= 3`` required): the fingerprint splits into 2
-    blocks of 32 bits; <= 3 total flips means SOME block carries <= 1,
-    so one join side emits each block's exact value while the other
-    emits the value PLUS its 32 single-bit flips (33 probe rows per
-    block). Completeness is the same theorem; the random-pair residue
-    drops from blocks * N^2 / 2^(64/blocks + 1) at 16-bit blocks to
-    ~2 * 33 * N^2 / 2^33. MEASURED CAVEAT (BASELINE.md round-7
-    multiprobe addendum): on this engine the pigeonhole candidate
-    stream is a codegen'd join + bit_count filter at ~10^8 rows/s/core
-    (~0.01 us/candidate), while the probe side is a 66x-row shuffle at
-    ~15x that per-row cost — so pigeonhole stays FASTER through at
-    least N = 4M fingerprints (40.9 s vs 4.9 s there), with the
-    wall-clock crossover extrapolating to N ~ 3*10^7 in a single
-    partition space. Prefer pigeonhole until profiling says otherwise;
-    multiprobe earns its inflation when the per-candidate verify is
-    much heavier than a bit_count (payload-carrying candidates) or when
-    the join's output volume, not time, is the binding constraint.
-    Both schemes share the exact Hamming verify and return identical
-    verified pair sets (property-tested).
 
     Pass ``fingerprints`` (a ``simhash_df`` result, schema (_key, _fp)) to
     reuse an already-computed — typically cached or persisted — fingerprint
@@ -726,38 +704,24 @@ def simhash_near_dups(
     the fingerprint alone does not help: for a fixed cosine threshold the
     expected Hamming distance is bits * theta/pi, so the design radius
     scales with the width and block width stays ~bits/(r+1). Past
-    N ~ 10^7 the remedies are (a) a cheap prefilter (length or
-    gram-count band) on candidate pairs before the exact Hamming check,
-    or (b) WIDER blocks with multi-probe lookups: 2 blocks of 32 bits
-    catch radius 3 when each block bucket is probed at its exact value
-    plus all 32 single-bit flips (<= 3 flips total means SOME block has
-    <= 1), cutting the random-pair residue to ~2 * 33 * N^2 / 2^33 —
-    three orders below the 16-bit-block term at the cost of 33x bucket
-    lookups, the classic candidates-vs-probes trade.
+    N ~ 10^7 the remedy is a cheap prefilter (length or gram-count band)
+    on candidate pairs before the exact Hamming check; BASELINE.md's
+    round-7 multiprobe addendum measured 2 x 32-bit multi-probe blocking
+    slower than pigeonhole through N = 4M on this engine.
     """
-    if scheme not in ("pigeonhole", "multiprobe"):
-        raise ValueError(f"unknown scheme: {scheme!r}")
-    if scheme == "multiprobe":
-        if max_hamming > 3:
-            raise ValueError(
-                "multiprobe covers <= 1 flip per 32-bit block: 2 blocks "
-                "bound max_hamming at 3 (pigeonhole has no radius cap)"
-            )
-        blocks = 2
-    else:
-        if not 1 <= max_hamming <= 15:
-            # 0 needs a 64-bit mask literal (doesn't fit a JVM long —
-            # join on _fp equality directly for exact-dup checks); past
-            # 15 the 64 // (r+1)-bit blocks are <= 3 bits wide and the
-            # bucket space degenerates toward one global bucket (a
-            # silent O(N^2) self-join at 64+)
-            raise ValueError(
-                "pigeonhole blocking supports 1 <= max_hamming <= 15 on "
-                f"64-bit fingerprints, got {max_hamming}; for 0 join on "
-                "fingerprint equality, for wider radii use a wider "
-                "fingerprint or candidate prefilter"
-            )
-        blocks = max_hamming + 1
+    if not 1 <= max_hamming <= 15:
+        # 0 needs a 64-bit mask literal (doesn't fit a JVM long —
+        # join on _fp equality directly for exact-dup checks); past
+        # 15 the 64 // (r+1)-bit blocks are <= 3 bits wide and the
+        # bucket space degenerates toward one global bucket (a
+        # silent O(N^2) self-join at 64+)
+        raise ValueError(
+            "pigeonhole blocking supports 1 <= max_hamming <= 15 on "
+            f"64-bit fingerprints, got {max_hamming}; for 0 join on "
+            "fingerprint equality, for wider radii use a wider "
+            "fingerprint or candidate prefilter"
+        )
+    blocks = max_hamming + 1
     bits_per = 64 // blocks
     # both self-join sides read the fingerprint table — persist (see
     # minhash_lsh_candidates)
@@ -783,27 +747,7 @@ def simhash_near_dups(
             )
         ).alias("_b"),
     ).select("_key", "_fp", "_b.block", "_b.block_val")
-    if scheme == "multiprobe":
-        # probe side: each block value plus its 32 single-bit flips. A
-        # pair with <= 1 flip in some block matches exact(a) x probes(b)
-        # whichever direction the flip went (x ^ bit = y <=> y ^ bit = x).
-        probes = banded.select(
-            "_key",
-            "_fp",
-            "block",
-            F.explode(
-                F.array(
-                    F.col("block_val"),
-                    *[
-                        F.col("block_val").bitwiseXOR(F.lit(1 << j))
-                        for j in range(bits_per)
-                    ],
-                )
-            ).alias("block_val"),
-        )
-        a, b = banded.alias("a"), probes.alias("b")
-    else:
-        a, b = banded.alias("a"), banded.alias("b")
+    a, b = banded.alias("a"), banded.alias("b")
     xor = F.col("a._fp").bitwiseXOR(F.col("b._fp"))
     hamming = F.bit_count(xor)
     return (
@@ -921,7 +865,6 @@ def cross_split_contamination(
     key_col: str = "doc_id",
     text_col: str = "text",
     n: int = 8,
-    hash_grams: bool = False,
 ) -> DataFrame:
     """Train/eval decontamination (benchmark-leakage check): for every
     held-out document, count its distinct word ``n``-grams that also occur
@@ -934,10 +877,7 @@ def cross_split_contamination(
     partial aggregation (shuffle carries one row per distinct gram per
     partition); the membership check is one gram-keyed left join (train
     grams are distinct, so no row multiplication); the per-doc rollup
-    shuffles only held-out keys. With ``hash_grams=True`` every exchanged
-    gram is replaced by its ``xxhash64`` — 8-byte shuffle keys instead of
-    ~50-byte strings for corpus-scale runs (collision odds 2^-64 per pair,
-    the standard trade; keep strings for oracle-exact audits).
+    shuffles only held-out keys.
 
     No reference equivalent — this is the decontamination op every
     LLM-training pipeline runs between corpus assembly and eval.
@@ -951,13 +891,6 @@ def cross_split_contamination(
         F.coalesce(is_train.cast("boolean"), F.lit(False)).alias("_train"),
         gram,
     )
-    if hash_grams:
-        # xxhash64(NULL) is the seed hash, NOT null — guard so zero-gram
-        # docs (explode_outer's null row) keep counting as zero grams
-        grams = grams.withColumn(
-            "gram",
-            F.when(F.col("gram").isNotNull(), F.xxhash64("gram")),
-        )
     train_set = (
         grams.filter(F.col("_train"))
         .filter(F.col("gram").isNotNull())
@@ -1165,7 +1098,6 @@ def dedup_keep_representatives(
     key_col: str = "doc_id",
     key_a: str = "key_a",
     key_b: str = "key_b",
-    broadcast_drop: bool = False,
 ) -> DataFrame:
     """Collapse near-dup clusters: keep ONE row per connected component (the
     min-key member — swap the ordering for a quality-score argmax), plus
@@ -1176,16 +1108,12 @@ def dedup_keep_representatives(
     default: crawl corpora routinely have a LARGE near-dup fraction
     (30%+), so the drop set is not reliably driver/broadcast-sized, and a
     forced hint fails outright instead of degrading. AQE broadcasts it at
-    runtime when it measures small; pass ``broadcast_drop=True`` only when
-    the caller KNOWS the dup fraction is tiny and wants to pin the plan
-    (e.g. stats are unavailable and the shuffle must be avoided).
+    runtime when it measures small.
     """
     clusters = near_dup_clusters(pairs, key_a, key_b)
     drop = clusters.filter(F.col("key") != F.col("cluster_id")).select(
         F.col("key").alias(key_col)
     )
-    if broadcast_drop:
-        drop = F.broadcast(drop)
     return df.join(drop, key_col, "left_anti")
 
 
@@ -1390,7 +1318,6 @@ def _keep_first_dedup_batch(
     batch_id: int,
     n: int,
     drops: Callable[[Column, Column], Column],
-    posting_cap: int | None = None,
 ) -> None:
     """The pairwise keep-first streaming dedup core (m14, m14b, m19).
 
@@ -1404,9 +1331,7 @@ def _keep_first_dedup_batch(
     it costs O(candidate reps), never O(corpus). Every arrival is
     published: the batch with a ``kept`` flag to the text store, then
     its keys to the index store (``publish_batch``, so a retried batch
-    overwrites its own directory). ``posting_cap`` excludes keys with
-    more postings from candidate generation only (the index still
-    records them)."""
+    overwrites its own directory)."""
     ss = b.sparkSession
     key_cols = [c for c in keys.columns if c not in ("doc_id", "epoch")]
     # keys feed the probe AND the index arm (self_reps) inside one
@@ -1425,25 +1350,8 @@ def _keep_first_dedup_batch(
         )
         prior = read_store(ss, index_store, self_reps.schema)
         idx = prior.unionByName(self_reps)
-        probe_idx = idx
-        if posting_cap is not None:
-            # hotness only matters for keys the BATCH probes: the
-            # semi-join narrows the count to those postings (production
-            # would keep an incrementally-maintained posting-count sketch
-            # instead of recounting; hot keys are few by definition, so
-            # the anti-join side broadcasts)
-            hot = (
-                idx.join(
-                    keys.select(*key_cols).distinct(), key_cols, "left_semi"
-                )
-                .groupBy(*key_cols)
-                .count()
-                .filter(F.col("count") > posting_cap)
-                .select(*key_cols)
-            )
-            probe_idx = idx.join(F.broadcast(hot), key_cols, "left_anti")
         cand = (
-            keys.join(probe_idx, key_cols)
+            keys.join(idx, key_cols)
             .filter(
                 (F.col("rep_epoch") < F.col("epoch"))
                 | (
@@ -1532,7 +1440,6 @@ def streaming_containment_dedup_batch(
     threshold: float,
     batch_id: int,
     n: int = 8,
-    posting_cap: int | None = None,
 ) -> None:
     """m19 per-batch body: CONTAINMENT-mode streaming dedup — the
     doc-inside-doc fragment shape (a quoted article, a boilerplate-
@@ -1565,14 +1472,10 @@ def streaming_containment_dedup_batch(
     At 100 TB: the index is the heavy store (one row per doc-gram), but
     it shuffles on 8-byte hash keys, partition-prunes by ``gram_hash``
     range, and the probe touches only the batch's own grams. Hot
-    boilerplate grams skew the probe join — ``posting_cap`` excludes
-    them from candidate generation at an explicit, test-pinned recall
-    cost (the dedup.py DF-cap trade: a pair similar ONLY through capped
-    grams is missed, tests/test_streaming_containment.py::
-    test_posting_cap_trades_boilerplate_recall_for_skew); the
-    registration runs uncapped so the full ground-truth oracle stays
-    honest. Reference has no dedup at all (extension surface, SURVEY §2
-    X2/S6)."""
+    boilerplate grams skew the probe join, but every gram stays a
+    candidate key: dropping hot grams would lose the recall-1 property
+    the full ground-truth oracle relies on. Reference has no dedup at
+    all (extension surface, SURVEY §2 X2/S6)."""
     b = batch_df.select("doc_id", "epoch", "text")
     # one row per (doc, distinct gram); zero-gram docs drop out here and
     # are therefore never candidates — kept by definition
@@ -1582,7 +1485,6 @@ def streaming_containment_dedup_batch(
     _keep_first_dedup_batch(
         b, grams, gram_store, text_store, batch_id, n,
         lambda s, rep_s: containment_verified(s, rep_s, threshold),
-        posting_cap,
     )
 
 
@@ -1641,7 +1543,7 @@ def streaming_semantic_dedup_batch(
     ``centroid_id`` so the per-cell groupBy co-locates. Worst-case cell
     size bounds executor memory in the kernel: occupancy x n_assign
     rows x dim floats (k-means keeps cells balanced-ish; a pathological
-    hot cell is the posting_cap analogue and splits by raising k).
+    hot cell splits by raising k).
     Reference has no dedup at all (extension surface, SURVEY §2 X2/S6).
     """
     from apache_spark_streaming_project_spark.operators.similarity import (
@@ -1818,9 +1720,7 @@ def streaming_decontaminate_batch(
     Scale shape: shingling is map-only; the benchmark gram table is
     SMALL by nature (eval suites, not corpora) so the membership probe
     is a broadcast join — no shuffle of the stream; the per-doc rollup
-    shuffles batch keys only. Exact gram strings here for oracle parity;
-    ``cross_split_contamination(hash_grams=True)`` documents the 8-byte
-    key trade for corpus-scale runs."""
+    shuffles batch keys only. Exact gram strings here for oracle parity."""
     ss = batch_df.sparkSession
     bench = ss.read.parquet(bench_grams_dir).withColumn("_hit", F.lit(1))
     g = batch_df.select(

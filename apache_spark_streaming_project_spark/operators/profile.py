@@ -14,12 +14,11 @@ Scale design (100 TB):
   so the shuffle carries one row per partition, never data rows. The
   long-format output is produced by a driver-free ``stack`` unpivot of
   the single agg row.
-* Exact multi-column ``count_distinct`` makes Catalyst plan an Expand
-  (one input row replicated per distinct-agg) — acceptable when profiles
-  run over a handful of columns, and required for oracle-exact output.
-  At full corpus scale pass ``exact=False`` to use
-  ``approx_count_distinct`` (HyperLogLog++, single pass, NO Expand);
-  every other metric is unchanged.
+* Distinct counts are exact (oracle-exact output): each column's
+  ``count_distinct`` runs as its own column-pruned branch instead of one
+  multi-column aggregate, which Catalyst would plan as an Expand (one
+  input row replicated per distinct-agg). ``s_approx_distinct`` is the
+  HyperLogLog++ registration.
 * :func:`expect` turns a profile into a boolean gate without collecting
   anything: expectations evaluate in-plan and the operator returns the
   violated rows, so an empty result means "ship it".
@@ -56,17 +55,13 @@ def _as_string(c: Column, dtype: str) -> Column:
     return c.cast("string")
 
 
-def column_profile(
-    df: DataFrame, cols: list[str] | None = None, exact: bool = True
-) -> DataFrame:
+def column_profile(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
     """Long-format per-column profile: one output row per column with
     ``(column, n_rows, n_nulls, n_distinct, min_value, max_value)``.
 
-    ``exact=False`` (the corpus-scale mode) computes everything in ONE
-    aggregation pass with HyperLogLog distinct sketches — no Expand in
-    the plan. ``exact=True`` keeps the non-distinct stats in that single
-    pass but computes each column's exact distinct count as its own
-    column-pruned partial-agg branch cross-joined back (1-row sides):
+    The non-distinct stats come from ONE aggregation pass; each column's
+    exact distinct count is its own column-pruned partial-agg branch
+    cross-joined back (1-row sides):
     putting k countDistincts in one aggregate compiles to an Expand that
     replicates every input row k+1 times before the shuffle, while k
     single-column branches each scan one parquet column with map-side
@@ -85,19 +80,16 @@ def column_profile(
             _as_string(F.min(col), dtypes[c]).alias(f"{c}__min"),
             _as_string(F.max(col), dtypes[c]).alias(f"{c}__max"),
         ]
-        if not exact:
-            aggs.append(F.approx_count_distinct(col).alias(f"{c}__distinct"))
     one = df.agg(*aggs)
-    if exact:
-        for c in cols:
-            # countDistinct semantics: distinct NON-NULL values
-            branch = (
-                df.filter(F.col(c).isNotNull())
-                .select(c)
-                .distinct()
-                .agg(F.count(F.lit(1)).alias(f"{c}__distinct"))
-            )
-            one = one.crossJoin(branch)
+    for c in cols:
+        # countDistinct semantics: distinct NON-NULL values
+        branch = (
+            df.filter(F.col(c).isNotNull())
+            .select(c)
+            .distinct()
+            .agg(F.count(F.lit(1)).alias(f"{c}__distinct"))
+        )
+        one = one.crossJoin(branch)
     stack_args = ", ".join(
         f"'{c}', `{c}__nulls`, `{c}__distinct`, `{c}__min`, `{c}__max`"
         for c in cols

@@ -548,7 +548,6 @@ def lsh_batch_top_k(
     vec_col: str = "embedding",
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch ANN: top-k for MANY query vectors in one plan.
 
@@ -557,9 +556,7 @@ def lsh_batch_top_k(
     (Hamming <= ``multiprobe_hamming`` bit flips), and broadcast-joins the
     indexed table on ``bucket`` — so each query only scans its probe
     buckets, and the scan side never shuffles. The broadcast bound is
-    |queries| x probes-per-query; for query batches too large for that
-    (offline all-vs-all retrieval), pass ``broadcast_queries=False`` to
-    fall back to a bucket-keyed shuffled join. Top-k per query via a
+    |queries| x probes-per-query. Top-k per query via a
     row_number window partitioned by query (the only shuffle, keyed on
     query_id, proportional to candidate volume not table size).
     """
@@ -584,9 +581,7 @@ def lsh_batch_top_k(
             F.array(*[F.col("_qbucket").bitwiseXOR(F.lit(m)) for m in masks])
         ).alias("bucket"),
     )
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    cand = indexed.join(probes, "bucket")
+    cand = indexed.join(F.broadcast(probes), "bucket")
     sim = cosine_similarity(F.col(vec_col), F.col(query_vec_col)).alias("cosine")
     w = Window.partitionBy(query_key_col).orderBy(
         F.col("cosine").desc(), F.col(key_col).asc()
@@ -609,15 +604,13 @@ def ivf_batch_top_k(
     vec_col: str = "embedding",
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch ANN over the IVF index: each query scores the centroid-literal
     array in-plan, keeps its ``nprobe`` nearest cells (array_sort on
     (dist, cid) structs), and broadcast-joins the assigned table on
     ``centroid_id`` — partition pruning when the table is stored
-    partitioned by cell. Broadcast bound is |queries| x nprobe; pass
-    ``broadcast_queries=False`` for query batches beyond it (cell-keyed
-    shuffled join instead). Top-k per query via a query-keyed window."""
+    partitioned by cell. Broadcast bound is |queries| x nprobe. Top-k
+    per query via a query-keyed window."""
     from pyspark.sql import Window
 
     def probe_cells(qc: Column) -> Column:
@@ -648,9 +641,7 @@ def ivf_batch_top_k(
         query_vec_col,
         F.explode(probe_cells(F.col(query_vec_col))).alias("centroid_id"),
     )
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    cand = assigned.join(probes, "centroid_id")
+    cand = assigned.join(F.broadcast(probes), "centroid_id")
     sim = cosine_similarity(F.col(vec_col), F.col(query_vec_col)).alias("cosine")
     w = Window.partitionBy(query_key_col).orderBy(
         F.col("cosine").desc(), F.col(key_col).asc()
@@ -673,7 +664,6 @@ def ivfpq_batch_top_k(
     key_col: str = "vec_id",
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch ANN over the IVF-PQ index (X8 x X3) — completes the batch
     matrix next to ``lsh_batch_top_k``/``ivf_batch_top_k``/
@@ -751,9 +741,7 @@ def ivfpq_batch_top_k(
             )
         ).alias("_p"),
     ).select(query_key_col, "_p.centroid_id", "_p._adc")
-    if broadcast_queries:
-        probes = F.broadcast(probes)
-    cand = indexed.join(probes, "centroid_id")
+    cand = indexed.join(F.broadcast(probes), "centroid_id")
     dist = F.aggregate(
         F.sequence(F.lit(1), F.lit(m)),
         F.lit(0.0),
@@ -1088,7 +1076,6 @@ def pq_batch_top_k(
     key_col: str = "vec_id",
     query_key_col: str = "query_id",
     query_vec_col: str = "qvec",
-    broadcast_queries: bool = True,
 ) -> DataFrame:
     """Batch ANN over PQ codes (X8 x X3): every query's ADC lookup table
     (m x n_centroids distances to the codebook literals) is computed
@@ -1099,12 +1086,10 @@ def pq_batch_top_k(
     partition top-k BEFORE the query-keyed shuffle).
 
     Exhaustive ADC scores EVERY (code, query) pair by definition, so the
-    join is a semantic cross product: with ``broadcast_queries=True``
-    (default) it runs as a BroadcastNestedLoopJoin streaming the code
-    table once; ``broadcast_queries=False`` merely switches to Spark's
-    shuffle-replicate NL when the batch exceeds the broadcast bound. For
-    genuinely huge batches route through ``ivfpq_index`` + per-cell
-    probing instead — sublinear candidate selection, not a bigger cross
+    join is a semantic cross product: it runs as a
+    BroadcastNestedLoopJoin streaming the code table once. For genuinely
+    huge batches route through ``ivfpq_index`` + per-cell probing
+    instead — sublinear candidate selection, not a bigger cross
     product."""
     from pyspark.sql import Window
 
@@ -1134,9 +1119,7 @@ def pq_batch_top_k(
             for j in range(m)
         ]
     )
-    q = queries.select(F.col(query_key_col), adc.alias("_adc"))
-    if broadcast_queries:
-        q = F.broadcast(q)
+    q = F.broadcast(queries.select(F.col(query_key_col), adc.alias("_adc")))
     dist = F.aggregate(
         F.sequence(F.lit(1), F.lit(m)),
         F.lit(0.0),

@@ -253,8 +253,8 @@ def streaming_pack_publish(
     alone). Pinned by tests/test_streaming_packing.py::
     test_wave_permutation_pins_arrival_order_contract. A deployment that
     needs event-time packs must impose that order upstream — sort the
-    shard manifest, or watermark + quarantine late docs like
-    read_csv_stream_with_quarantine — because packing is a running fill:
+    shard manifest, or watermark and set late docs aside before packing —
+    because packing is a running fill:
     admitting a late doc into an already-published pack would re-shift
     every later pack id in the group (state = one total per group stays
     O(groups) precisely because published packs are immutable)."""
@@ -1064,7 +1064,6 @@ def remove_common_lines(
     text_col: str = "text",
     min_df: int = 10,
     min_line_chars: int = 8,
-    fingerprint: bool = False,
 ) -> DataFrame:
     """The REMOVAL companion to :func:`gram_boilerplate_signal` (which
     only measures): strip every line whose trimmed text appears in at
@@ -1083,41 +1082,24 @@ def remove_common_lines(
     trimmed line text (exact — no hash-collision removals), and one
     groupBy re-assembly via array_sort on (pos, line) structs. No
     broadcast hint on the common-lines side: its size is corpus-driven,
-    AQE decides.
-
-    ``fingerprint=True`` keys the document-frequency table and the
-    anti-join on ``xxhash64(trimmed line)`` instead of the line text:
-    the corpus-wide distinct + agg exchanges carry 8-byte keys instead
-    of full line strings — the scale path when the line-df exchange
-    dominates (see BASELINE.md for the measured law). The trade is a
-    ~2^-64-per-pair hash-collision chance of removing a non-common
-    ELIGIBLE line (length >= ``min_line_chars``); lines below the
-    threshold are exactly immune in both modes — they join with a NULL
-    key, so no collision can touch them. The default stays exact."""
+    AQE decides."""
     pos_line = df.select(
         key_col,
         F.posexplode(F.split(F.col(text_col), "\n")).alias("pos", "line"),
     )
     line_t = F.trim(F.col("line"))
-    line_key = F.xxhash64(line_t) if fingerprint else line_t
     eligible = pos_line.filter(F.length(line_t) >= min_line_chars)
     common = (
-        eligible.select(line_key.alias("line_k"), key_col)
+        eligible.select(line_t.alias("line_k"), key_col)
         .distinct()
         .groupBy("line_k")
         .agg(F.count(F.lit(1)).alias("df"))
         .filter(F.col("df") >= min_df)
         .select("line_k")
     )
-    # short lines are immune by CONSTRUCTION, not by key parity: they
-    # get a NULL join key, and NULL never equi-matches, so the anti-join
-    # keeps them unconditionally. (In exact mode trimmed equality alone
-    # already implied immunity; in fingerprint mode it did NOT — an
-    # xxhash64 collision could match a short line to a common line's
-    # fingerprint and delete it. Round-10 ADVICE fix; also skips
-    # hashing short lines at all.)
-    guarded_key = F.when(F.length(line_t) >= min_line_chars, line_key)
-    kept = pos_line.withColumn("line_k", guarded_key).join(
+    # short lines are immune: every common key is an eligible line's
+    # trimmed text, which no shorter trimmed line can equal
+    kept = pos_line.withColumn("line_k", line_t).join(
         common, "line_k", "left_anti"
     )
     rebuilt = kept.groupBy(key_col).agg(
@@ -1460,7 +1442,6 @@ def perplexity_buckets(
     lang_col: str | None = None,
     n_buckets: int = 3,
     alpha: float = 0.5,
-    approx_thresholds: bool = False,
 ) -> DataFrame:
     """CCNet-style perplexity bucketing: score every document with the
     corpus-trained :func:`bigram_lm_score`, then split each language's
@@ -1478,20 +1459,11 @@ def perplexity_buckets(
     0-based from the head and ``bucket`` the CCNet names for 3 buckets
     (``b0``..``bk`` otherwise).
 
-    Two bucketing modes:
-
-    - Default (exact): ``ntile(n_buckets)`` over a per-language window
-      ordered by (lm_score DESC, key ASC — deterministic tie-break).
-      Bucket sizes are exact rank thirds. The per-language total sort is
-      fine up to snapshot scale, but a 100 TB single-language corpus
-      serializes into one window partition — use the approx mode there.
-    - ``approx_thresholds=True`` (the scale path): per-language score
-      cut points from ``percentile_approx`` (a mergeable KLL-style
-      sketch — one tiny agg row per language), broadcast back and
-      compared map-side. No total order anywhere; bucket sizes are
-      approximate within the sketch's rank-error bound, which is the
-      published CCNet shape (they too bucket by threshold comparison,
-      not by exact rank). Ties AT a cut point land head-ward (``>=``).
+    Buckets are ``ntile(n_buckets)`` over a per-language window ordered
+    by (lm_score DESC, key ASC — deterministic tie-break), so bucket
+    sizes are exact rank thirds. Each language sorts in one window
+    partition; BASELINE.md records the measured sketch-threshold
+    alternative.
     """
     if n_buckets < 2:
         raise ValueError("n_buckets must be >= 2")
@@ -1500,32 +1472,15 @@ def perplexity_buckets(
         F.col(lang_col) if lang_col else language_id(F.col(text_col))
     )
     langs = df.select(key_col, lang_expr.alias("lang"))
-    j = scored.join(langs, key_col).select(key_col, "lang", "lm_score")
-    if approx_thresholds:
-        fracs = [i / n_buckets for i in range(1, n_buckets)]
-        cuts = j.groupBy("lang").agg(
-            F.percentile_approx(
-                "lm_score", [1.0 - f for f in fracs], 10_000
-            ).alias("_cuts")
-        )
-        # _cuts descend from the head cut; bucket_idx = number of cuts
-        # the score fails to reach (score >= cut stays head-ward)
-        idx = F.size(
-            F.filter(F.col("_cuts"), lambda c: F.col("lm_score") < c)
-        )
-        j = j.join(F.broadcast(cuts), "lang").select(
-            key_col, "lang", "lm_score", idx.alias("bucket_idx")
-        )
-    else:
-        w = Window.partitionBy("lang").orderBy(
-            F.col("lm_score").desc(), F.col(key_col).asc()
-        )
-        j = j.select(
-            key_col,
-            "lang",
-            "lm_score",
-            (F.ntile(n_buckets).over(w) - 1).alias("bucket_idx"),
-        )
+    w = Window.partitionBy("lang").orderBy(
+        F.col("lm_score").desc(), F.col(key_col).asc()
+    )
+    j = scored.join(langs, key_col).select(
+        key_col,
+        "lang",
+        "lm_score",
+        (F.ntile(n_buckets).over(w) - 1).alias("bucket_idx"),
+    )
     names = (
         ["head", "middle", "tail"]
         if n_buckets == 3

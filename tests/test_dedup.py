@@ -496,79 +496,6 @@ def test_apply_changelog_deletes_and_reinserts(spark):
     assert snap(again) == want
 
 
-def test_simhash_multiprobe_matches_pigeonhole(spark):
-    """scheme='multiprobe' (2 x 32-bit blocks, value + single-bit-flip
-    probes) must return EXACTLY the pigeonhole scheme's verified pair
-    set at the same radius — both are complete for max_hamming <= 3 and
-    share the exact Hamming verify."""
-    from pyspark.sql import functions as F
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").select(
-        "doc_id", "text"
-    )
-    pert = docs.select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" zzqx")).alias("text"),
-    )
-    corpus = docs.unionByName(pert)
-    fp = dd.simhash_df(corpus, "doc_id", "text", 2).cache()
-    want = sorted(
-        (r.key_a, r.key_b, r.hamming)
-        for r in dd.simhash_near_dups(
-            corpus, "doc_id", "text", max_hamming=3, fingerprints=fp
-        ).collect()
-    )
-    got = sorted(
-        (r.key_a, r.key_b, r.hamming)
-        for r in dd.simhash_near_dups(
-            corpus,
-            "doc_id",
-            "text",
-            max_hamming=3,
-            fingerprints=fp,
-            scheme="multiprobe",
-        ).collect()
-    )
-    assert len(want) > 0  # the planted perturbations put pairs in radius
-    assert got == want
-
-
-def test_simhash_multiprobe_completeness_on_synthetic_flips(spark):
-    """Direct theorem check on hand-built fingerprints: every pair within
-    Hamming 3 of a base fingerprint must surface, including flips spread
-    2+1 across the two 32-bit halves and a 3-flip single half."""
-    base = 0x0123456789ABCDEF
-    rows = [
-        (0, base),
-        (1, base ^ (1 << 5)),                       # 1 flip, low block
-        (2, base ^ (1 << 40)),                      # 1 flip, high block
-        (3, base ^ (1 << 3) ^ (1 << 7) ^ (1 << 50)),  # 2 low + 1 high
-        (4, base ^ (1 << 33) ^ (1 << 60) ^ (1 << 2)),  # 2 high + 1 low
-        (5, base ^ (1 << 10) ^ (1 << 11) ^ (1 << 12)),  # 3 in one block
-        (6, ~base),                                 # far away
-    ]
-    fp = spark.createDataFrame(rows, ["_key", "_fp"])
-    out = dd.simhash_near_dups(
-        None, fingerprints=fp, max_hamming=3, scheme="multiprobe"
-    ).collect()
-    found = {(r.key_a, r.key_b) for r in out}
-    for k in (1, 2, 3, 4, 5):
-        assert (0, k) in found, k
-    assert all(6 not in pair for pair in found)
-
-
-def test_simhash_multiprobe_rejects_wide_radius_and_bad_scheme(spark):
-    import pytest as _pytest
-
-    fp = spark.createDataFrame([(0, 1)], ["_key", "_fp"])
-    with _pytest.raises(ValueError, match="max_hamming"):
-        dd.simhash_near_dups(
-            None, fingerprints=fp, max_hamming=4, scheme="multiprobe"
-        )
-    with _pytest.raises(ValueError, match="unknown scheme"):
-        dd.simhash_near_dups(None, fingerprints=fp, scheme="banded")
-
-
 def test_exact_dedup_reference_path_collapses_identical_rows(spark):
     """Round-7 self-review: two FULLY identical rows (same cols, same
     key) both matched the min-key semi join — the reference path must

@@ -814,11 +814,10 @@ def test_partitioned_pack_documents_matches_per_partition_reference(
     ),
 )
 def test_simhash_schemes_match_quadratic_reference(spark, bases, flips):
-    """Both candidate schemes (4x16-bit pigeonhole and 2x32-bit
-    multiprobe) must return EXACTLY the brute-force all-pairs
-    Hamming <= 3 set — including planted neighbors at distances
-    0..5 straddling the radius, where an off-by-one in blocking or
-    probing would show."""
+    """The 4x16-bit pigeonhole candidate scheme must return EXACTLY the
+    brute-force all-pairs Hamming <= 3 set — including planted
+    neighbors at distances 0..5 straddling the radius, where an
+    off-by-one in blocking would show."""
     from apache_spark_streaming_project_spark.operators.dedup import (
         simhash_near_dups,
     )
@@ -841,14 +840,13 @@ def test_simhash_schemes_match_quadratic_reference(spark, bases, flips):
         if bin((af ^ bf) & mask).count("1") <= 3
     )
     fp_df = spark.createDataFrame(rows, "_key long, _fp long")
-    for scheme in ("pigeonhole", "multiprobe"):
-        got = sorted(
-            (r.key_a, r.key_b)
-            for r in simhash_near_dups(
-                None, fingerprints=fp_df, max_hamming=3, scheme=scheme
-            ).collect()
-        )
-        assert got == want, (scheme, got, want)
+    got = sorted(
+        (r.key_a, r.key_b)
+        for r in simhash_near_dups(
+            None, fingerprints=fp_df, max_hamming=3
+        ).collect()
+    )
+    assert got == want, (got, want)
 
 
 @settings(max_examples=5, deadline=None, derandomize=True)

@@ -103,6 +103,93 @@ def test_mutation_catalog_is_not_stale():
     assert r.returncode == 0, r.stdout + r.stderr
 
 
+def _stale_package_calls(paths):
+    """(file:line, problem) for every package name a script imports that
+    no longer exists, and every keyword it passes to an imported package
+    callable (``name(...)`` or ``module_alias.name(...)``) that the
+    callable's signature does not accept."""
+    import ast
+    import importlib
+    import inspect
+
+    pkg = "apache_spark_streaming_project_spark"
+    problems = []
+    for path in paths:
+        tree = ast.parse(path.read_text(), str(path))
+        bound: dict[str, list] = {}
+        for node in ast.walk(tree):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and (node.module or "").split(".")[0] == pkg
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for a in node.names:
+                if hasattr(mod, a.name):
+                    obj = getattr(mod, a.name)
+                else:
+                    try:
+                        obj = importlib.import_module(f"{node.module}.{a.name}")
+                    except ImportError:
+                        problems.append(
+                            (f"{path.name}:{node.lineno}",
+                             f"{node.module} has no {a.name}")
+                        )
+                        continue
+                bound.setdefault(a.asname or a.name, []).append(obj)
+
+        def targets(func):
+            if isinstance(func, ast.Name):
+                return func.id, bound.get(func.id, [])
+            if isinstance(func, ast.Attribute) and isinstance(func.value, ast.Name):
+                mods = [
+                    m for m in bound.get(func.value.id, [])
+                    if inspect.ismodule(m)
+                ]
+                name = f"{func.value.id}.{func.attr}"
+                if mods and not any(hasattr(m, func.attr) for m in mods):
+                    problems.append((f"{path.name}:{func.lineno}", f"no {name}"))
+                return name, [getattr(m, func.attr) for m in mods
+                              if hasattr(m, func.attr)]
+            return None, []
+
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            name, objs = targets(node.func)
+            sigs = []
+            for o in objs:
+                try:
+                    sigs.append(inspect.signature(o).parameters)
+                except (TypeError, ValueError):
+                    pass  # not a callable with an inspectable signature
+            if not sigs or any(
+                p.kind is p.VAR_KEYWORD for ps in sigs for p in ps.values()
+            ):
+                continue
+            for kw in node.keywords:
+                if kw.arg is not None and not any(kw.arg in ps for ps in sigs):
+                    problems.append(
+                        (f"{path.name}:{node.lineno}",
+                         f"{name}() takes no keyword {kw.arg!r}")
+                    )
+    return problems
+
+
+def test_tools_and_perfbench_call_live_package_signatures():
+    """Scripts under tools/ and perfbench/ are not imported by the suite,
+    so an option deleted from a package function would leave a script
+    that fails only when someone next runs it: every package name they
+    import must exist and every keyword they pass must be accepted."""
+    from pathlib import Path
+
+    repo = Path(__file__).resolve().parent.parent
+    paths = sorted([*repo.glob("tools/*.py"), *repo.glob("perfbench/*.py")])
+    assert paths
+    assert _stale_package_calls(paths) == []
+
+
 def test_mutation_audit_arguments_and_partial_results(tmp_path):
     """An argument that is neither an sf directory nor a catalog id
     exits 2 before Spark starts and leaves the results file alone; a run

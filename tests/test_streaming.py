@@ -382,42 +382,6 @@ def test_dedup_within_watermark_suppresses_redelivery(spark, tmp_path):
     assert sorted(r.event_id for r in out) == [1, 2]
 
 
-def test_csv_quarantine_splits_clean_and_corrupt(spark, tmp_path):
-    """PERMISSIVE CSV source: unparseable lines land in the quarantine
-    stream; clean rows parse fully; neither is lost."""
-    from apache_spark_streaming_project_spark.sources.files import (
-        read_csv_stream_with_quarantine,
-    )
-    from pyspark.sql import types as T
-
-    src = tmp_path / "src"
-    src.mkdir()
-    schema = T.StructType(
-        [
-            T.StructField("k", T.IntegerType()),
-            T.StructField("v", T.DoubleType()),
-        ]
-    )
-    (src / "batch0.csv").write_text("1,2.5\nnot_an_int,oops\n3,4.0\n")
-
-    clean, quarantined = read_csv_stream_with_quarantine(
-        spark, str(src), schema
-    )
-    for df, name in ((clean, "q_clean"), (quarantined, "q_bad")):
-        q = (
-            df.writeStream.outputMode("append")
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / f"ck_{name}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    good = sorted((r.k, r.v) for r in spark.sql("SELECT * FROM q_clean").collect())
-    bad = spark.sql("SELECT * FROM q_bad").collect()
-    assert good == [(1, 2.5), (3, 4.0)]
-    assert [r["_corrupt_record"] for r in bad] == ["not_an_int,oops"]
-
 
 def test_pipeline_reports_observed_metrics(spark, tmp_path):
     """S6 observability: every micro-batch progress must carry the

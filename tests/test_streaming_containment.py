@@ -182,48 +182,3 @@ def test_m19_store_compaction_preserves_results(spark, tmp_path):
 
     assert kept(text_c) == kept(text)
 
-
-def test_posting_cap_trades_boilerplate_recall_for_skew(spark, tmp_path):
-    """The production hot-gram cap, pinned as an EXPLICIT trade: under
-    posting_cap, a doc similar only through a boilerplate gram (one
-    shared by more docs than the cap) is KEPT (candidate never
-    generated), while genuine fragment pairs sharing rare grams are
-    still dropped — and the uncapped run drops both. The registration
-    runs uncapped so its all-pairs oracle stays a full ground truth."""
-    # 12 docs share one boilerplate 8-token sentence plus unique tails;
-    # doc -50 is EXACTLY the boilerplate sentence (1 gram, C = 1 vs any
-    # earlier boilerplate carrier); docs -30/-29 are a rare-gram
-    # fragment pair.
-    boiler = " ".join(f"bp{i:02d}" for i in range(1, 9))
-    rows = []
-    for i in range(12):
-        rows.append(
-            (100 + i, 0, boiler + f" tail{i:02d}a tail{i:02d}b")
-        )
-    rows.append((-50, 1, boiler))  # boilerplate-only containment
-    page = " ".join(f"rare{i:02d}" for i in range(1, 21))
-    frag = " ".join(f"rare{i:02d}" for i in range(5, 15))
-    rows.append((-30, 0, page))
-    rows.append((-29, 1, frag))  # C = 1 vs -30 through rare grams
-    d = spark.createDataFrame(rows, "doc_id long, epoch long, text string")
-
-    def run(cap, tag):
-        gram = str(tmp_path / f"gram_{tag}")
-        text = str(tmp_path / f"text_{tag}")
-        for e in (0, 1):
-            streaming_containment_dedup_batch(
-                d.filter(F.col("epoch") == e), gram, text, 0.6, e,
-                posting_cap=cap,
-            )
-        return {doc_id for doc_id, _ in store_kept(spark, text)}
-
-    exact = run(None, "exact")
-    capped = run(10, "capped")
-    # genuine fragment pair: dropped under BOTH
-    assert -29 not in exact and -29 not in capped
-    # boilerplate-only containment: dropped exactly, KEPT under the cap
-    # (12 postings > cap 10 -> the gram never generates candidates)
-    assert -50 not in exact
-    assert -50 in capped
-    # the trade is surgical: everything else agrees
-    assert exact | {-50} == capped

@@ -82,8 +82,8 @@ def test_wave_permutation_pins_arrival_order_contract(spark, tmp_path):
     floor((total_tokens - 1) / budget), a function of the total alone;
     (c) individual pack assignments genuinely differ between arrival
     orders — which is exactly why arrival order is part of the contract
-    (a deployment that needs event-time packs must sort or quarantine
-    upstream, the read_csv_stream_with_quarantine pattern)."""
+    (a deployment that needs event-time packs must sort, or set late
+    docs aside, upstream)."""
     budget = 256
 
     def run(order):

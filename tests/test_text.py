@@ -353,40 +353,12 @@ class TestRemoveCommonLines:
         docs = [(i, "shared banner line here\nbody " + str(i)) for i in range(10)]
         docs.append((99, None))
         df = spark.createDataFrame(docs, "doc_id long, text string")
-        for fp in (False, True):
-            out = {
-                r.doc_id: r.text
-                for r in remove_common_lines(
-                    df, min_df=10, min_line_chars=8, fingerprint=fp
-                ).collect()
-            }
-            assert out[99] is None, f"fingerprint={fp}"
-            assert out[0] == "body 0"  # banner removed, NULL row inert
-
-    def test_fingerprint_variant_matches_exact(self, spark):
-        """fingerprint=True (xxhash64 line keys — the 8-byte-exchange
-        scale path) must produce the exact path's output row-for-row on
-        every fixture shape: removal, boundaries, immunity, emptied
-        docs."""
-        from apache_spark_streaming_project_spark.operators.text import (
-            remove_common_lines,
-        )
-
-        df = self._corpus(spark)
-        for min_df in (2, 10):
-            exact = {
-                r.doc_id: r.text
-                for r in remove_common_lines(
-                    df, min_df=min_df, min_line_chars=8
-                ).collect()
-            }
-            fp = {
-                r.doc_id: r.text
-                for r in remove_common_lines(
-                    df, min_df=min_df, min_line_chars=8, fingerprint=True
-                ).collect()
-            }
-            assert fp == exact, f"min_df={min_df}"
+        out = {
+            r.doc_id: r.text
+            for r in remove_common_lines(df, min_df=10, min_line_chars=8).collect()
+        }
+        assert out[99] is None
+        assert out[0] == "body 0"  # banner removed, NULL row inert
 
 
 class TestDedupParagraphs:
@@ -801,8 +773,7 @@ class TestPerplexityBuckets:
     """CCNet head/middle/tail bucketing over the corpus bigram LM:
     per-doc assignment pinned to an independent Python reference
     (rank thirds, DESC score, doc_id tie-break) on a score-separated
-    corpus; the approx-threshold scale mode must agree away from the
-    cut points."""
+    corpus."""
 
     # two languages, score-separated by construction: repeated fluent
     # docs rank above one-off scrambles under the corpus's own LM
@@ -892,36 +863,6 @@ class TestPerplexityBuckets:
             nxt = by.get((lg, idx + 1))
             if nxt:
                 assert min(scores) >= max(nxt)
-
-    def test_approx_mode_agrees_off_boundary(self, spark):
-        from apache_spark_streaming_project_spark.operators.text import (
-            perplexity_buckets,
-        )
-
-        df = spark.createDataFrame(
-            self.DOCS, "doc_id long, lang string, text string"
-        )
-        exact = {
-            r.doc_id: r.bucket_idx
-            for r in perplexity_buckets(
-                df, "doc_id", "text", lang_col="lang"
-            ).collect()
-        }
-        approx = {
-            r.doc_id: r.bucket_idx
-            for r in perplexity_buckets(
-                df, "doc_id", "text", lang_col="lang", approx_thresholds=True
-            ).collect()
-        }
-        assert set(exact) == set(approx)
-        # threshold comparison can only disagree by one tier, and the
-        # clear cases (the 4 duplicate fluent docs = en head; the 'zz
-        # qq' scramble = en tail) must agree exactly
-        for d in exact:
-            assert abs(exact[d] - approx[d]) <= 1
-        for d in range(4):
-            assert approx[d] == 0
-        assert approx[20] == 2
 
     def test_rejects_bad_bucket_count(self, spark):
         import pytest as _pytest

@@ -2,19 +2,15 @@
 item 4). The existing decade probes grow suffix-varied replicas —
 roughly UNIFORM token growth. Real crawl corpora are power-law: a few
 tokens dominate, and template/boilerplate lines appear in every
-document. This probe re-runs MinHash-LSH and remove_common_lines at
-1x/10x/100x under an adversarial Zipfian corpus and records the law,
-proving the two skew defenses hold exactly where they are claimed to:
-
-* ``max_shingle_df`` (dedup.py minhash_signatures_df): template
-  shingles with df ~= N otherwise dominate every document's min-hashes
-  and collapse sub-threshold pairs into mega-buckets (a global O(N^2)
-  self-join). Measured both WITH the cap (three decades, including
-  planted-near-dup recall under the skew) and WITHOUT it (1x/10x only
-  — the uncapped candidate count IS the quadratic blowup, shown then
-  avoided).
-* fingerprint mode (text.py remove_common_lines): the corpus-wide line
-  df table under boilerplate at df=N.
+document. This probe re-runs MinHash-LSH at 1x/10x/100x under an
+adversarial Zipfian corpus and records the law, proving the skew
+defense holds exactly where it is claimed to: ``max_shingle_df``
+(dedup.py minhash_signatures_df). Template shingles with df ~= N
+otherwise dominate every document's min-hashes and collapse
+sub-threshold pairs into mega-buckets (a global O(N^2) self-join).
+Measured both WITH the cap (three decades, including planted-near-dup
+recall under the skew) and WITHOUT it (1x/10x only — the uncapped
+candidate count IS the quadratic blowup, shown then avoided).
 
 Corpus (fully deterministic, no RNG): N docs; each doc = 3 boilerplate
 lines shared by ALL docs (df = N) interleaved with 3 content lines of
@@ -24,10 +20,6 @@ mega-token + heavy head + long tail", the published crawl token shape.
 Every 100th doc is a PLANTED near-dup of its predecessor (same content
 lines + one extra token), so capped recall is measurable under skew.
 
-Timing is a noop-format write (count() is NOT a valid timer here:
-remove_common_lines ends in a left join against a provably-unique
-aggregate, which Catalyst ELIMINATES under a bare count — the first
-draft of this probe measured 0.2 s flat at every scale that way).
 Failures are caught and recorded, not crashed on: an OOM at scale IS a
 result. Driver heap is raised to 8g: the first draft OOMed at the 100x
 capped point under the default 1g local heap — measured root cause is
@@ -97,12 +89,6 @@ def corpus(spark, n: int):
     return d.select("doc_id", text.alias("text"))
 
 
-def timed_noop(df) -> float:
-    t0 = time.monotonic()
-    df.write.format("noop").mode("overwrite").save()
-    return time.monotonic() - t0
-
-
 def main() -> int:
     out_path = sys.argv[1] if len(sys.argv) > 1 else "tools/probe_skewed_dedup.json"
     spark = (
@@ -116,12 +102,7 @@ def main() -> int:
     from apache_spark_streaming_project_spark.operators.dedup import (
         minhash_lsh_candidates,
     )
-    from apache_spark_streaming_project_spark.operators.text import (
-        remove_common_lines,
-    )
-
-    results = {"remove_common_lines_fp": [], "minhash_capped": [],
-               "minhash_uncapped": []}
+    results = {"minhash_capped": [], "minhash_uncapped": []}
 
     def run(bucket: str, n: int, fn):
         try:
@@ -135,12 +116,6 @@ def main() -> int:
     for n in SCALES:
         c = corpus(spark, n).cache()
         c.count()
-
-        def rcl():
-            w = timed_noop(remove_common_lines(c, min_df=10, fingerprint=True))
-            return {"wall_s": round(w, 1)}
-
-        run("remove_common_lines_fp", n, rcl)
 
         def capped():
             t0 = time.monotonic()
